@@ -5,6 +5,17 @@ import org.apache.spark.sql.SparkSession
 /** Session factory with the engine's scale-minded defaults. On a real
   * cluster the same settings apply; only master/memory change. */
 object GraftSession {
+
+  /** Local `file:` writes go through [[ForkFreeLocalFileSystem]]: Hadoop's
+    * default forks a `chmod` per permission set (every mkdirs and every
+    * file or `.crc` create) when libhadoop is absent, which made process
+    * forks the largest fixed cost of a small sink write. `Verify` takes it
+    * from here too, so tests, bench and oracle run on the same file
+    * system. A `file:` FileSystem already cached in the JVM before the
+    * session is built is reused as-is; build the session first. */
+  val LocalFsConf: Map[String, String] =
+    Map("spark.hadoop.fs.file.impl" -> classOf[ForkFreeLocalFileSystem].getName)
+
   def local(cores: Int = 32, shufflePartitions: Int = 32): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
@@ -21,6 +32,7 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       // analyzer rule serving DV-carrying TxLog snapshots through SQL
       .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config(LocalFsConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Spark's default useV1SourceList reserves the name "avro" for the

@@ -19,6 +19,7 @@ object Verify {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config(GraftSession.LocalFsConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

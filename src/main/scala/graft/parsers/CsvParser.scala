@@ -1,6 +1,12 @@
 package graft.parsers
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.TaskAttemptID
+import org.apache.hadoop.mapreduce.lib.input.{FileSplit, LineRecordReader}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.{CSVUtils, TextInputCSVDataSource}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.domain.ParserConfig
 import graft.ports.RecordParser
@@ -24,44 +30,56 @@ import graft.ports.RecordParser
   */
 object CsvParser extends RecordParser {
 
+  /** The schema comes from one line read on the driver, never from a Spark
+    * job: a header (or `_c{i}` names) is Spark's header-inference result
+    * for the first non-blank line, and the rule-header width is the field
+    * count of the first physical line. Spark's own header inference and a
+    * `limit(1)` probe each launched a job per file — a large part of a
+    * small drop's wall time — just to read that line. The scan then runs
+    * with the schema given, so it is the only job. `path` names one file. */
   override def parse(spark: SparkSession, path: String, config: Option[ParserConfig]): DataFrame = {
     val delimiter = config.flatMap(_.delimiter).getOrElse(",")
     val customHeaders = config.flatMap(_.headers)
     val hasHeaders = config.flatMap(_.hasHeaders).getOrElse(customHeaders.isEmpty)
+    val options = Map(
+      "header" -> hasHeaders.toString, // headers supplied: first row is data unless told otherwise
+      "delimiter" -> delimiter,
+      "inferSchema" -> "false", // all-strings, matching csv_parser.rs:55
+      "mode" -> "FAILFAST")
 
-    customHeaders match {
+    val schema = customHeaders match {
       case Some(headers) =>
-        // Width of the widest row decides how many column_{i} overflow
-        // names we need. One cheap pass over the first rows is enough when
-        // the file is well-formed (FAILFAST rejects ragged rows anyway),
-        // so probe the header/first line only.
-        val width = probeWidth(spark, path, delimiter)
+        // Width of the first line decides how many column_{i} overflow
+        // names we need (FAILFAST rejects ragged rows anyway).
+        val width = withLines(spark, path)(_.nextOption()).map(countFields(_, delimiter)).getOrElse(0)
         val names = headers ++ (headers.size until width).map(i => s"column_$i")
-        val schema = StructType(names.map(n => StructField(n, StringType, nullable = true)))
-        spark.read
-          .option("header", hasHeaders.toString) // headers supplied: first row is data unless told otherwise
-          .option("delimiter", delimiter)
-          .option("mode", "FAILFAST")
-          .schema(schema)
-          .csv(path)
+        StructType(names.map(n => StructField(n, StringType, nullable = true)))
       case None =>
-        spark.read
-          .option("header", hasHeaders.toString)
-          .option("delimiter", delimiter)
-          .option("inferSchema", "false") // all-strings, matching csv_parser.rs:55
-          .option("mode", "FAILFAST")
-          .csv(path)
+        val csvOptions = new CSVOptions(options, columnPruning = true,
+          spark.conf.get("spark.sql.session.timeZone"))
+        val first = withLines(spark, path)(lines =>
+          CSVUtils.filterCommentAndEmpty(lines, csvOptions).nextOption())
+        TextInputCSVDataSource.inferFromDataset(
+          spark, spark.emptyDataset[String](Encoders.STRING), first, csvOptions)
     }
+    spark.read.options(options).schema(schema).csv(path)
   }
 
-  /** Field count of the first line — determines overflow column_{i} names.
-    * Reads one line only (limit(1) prunes the scan). Quote-aware: a quoted
-    * field containing the delimiter (`"a,b",c`) counts as ONE field, so the
-    * probed width matches what the CSV scan will actually parse. */
-  private def probeWidth(spark: SparkSession, path: String, delimiter: String): Int = {
-    val first = spark.read.textFile(path).limit(1).collect()
-    if (first.isEmpty) 0
-    else countFields(first.head, delimiter)
+  /** The lines of a file as Spark's text scan splits them (LF, CR or CRLF;
+    * a leading UTF-8 BOM dropped), read on the driver through the Hadoop
+    * FS. The codec comes from the file name (`CompressionCodecFactory`),
+    * so `.csv.gz` reads like `.csv`. Only the lines `f` pulls are read. */
+  private def withLines[T](spark: SparkSession, path: String)(f: Iterator[String] => T): T = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val len = p.getFileSystem(conf).getFileStatus(p).getLen
+    val reader = new LineRecordReader()
+    try {
+      reader.initialize(new FileSplit(p, 0, len, Array.empty[String]),
+        new TaskAttemptContextImpl(conf, new TaskAttemptID()))
+      f(Iterator.continually(reader.nextKeyValue()).takeWhile(identity)
+        .map(_ => reader.getCurrentValue.toString))
+    } finally reader.close()
   }
 
   /** RFC-4180 field count: delimiters inside double-quoted fields don't

@@ -1,7 +1,9 @@
 package graft.parsers
 
+import com.fasterxml.jackson.core.{JsonFactory, JsonProcessingException, JsonToken}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.domain.ParserConfig
+import graft.domain.IngestionError.ParseError
 import graft.ports.RecordParser
 
 /** JSON scan (reference: src/infrastructure/parsers/json_parser.rs:4-27):
@@ -13,7 +15,10 @@ import graft.ports.RecordParser
   * semantics for objects/arrays-of-objects. A top-level *scalar* (e.g.
   * `42`) — which the reference wrapped as a bare document — has no natural
   * DataFrame shape; it is surfaced as a single `value` column (documented
-  * deviation).
+  * deviation). Spark's reader also lands a malformed file there (all
+  * `_corrupt_record`), so the fallback checks the text first: only one
+  * well-formed top-level scalar or array of scalars is wrapped; anything
+  * else fails with a ParseError.
   */
 object JsonParser extends RecordParser {
 
@@ -43,7 +48,28 @@ object JsonParser extends RecordParser {
             "(not a top-level-scalar document; would buffer on the driver)")
       import spark.implicits._
       val raw = spark.read.textFile(path).collect().mkString("\n").trim
+      if (!isScalarDocument(raw))
+        throw ParseError(s"$path is malformed JSON, or JSON that is neither objects " +
+          "nor a top-level scalar or array of scalars")
       Seq(raw).toDF("value")
     } else df
+  }
+
+  private val jsonFactory = new JsonFactory()
+
+  /** True when `text` is exactly one JSON scalar, or one array whose
+    * elements are all scalars, with nothing after it. */
+  private def isScalarDocument(text: String): Boolean = {
+    val p = jsonFactory.createParser(text)
+    try {
+      val ok = p.nextToken() match {
+        case JsonToken.START_ARRAY =>
+          Iterator.continually(p.nextToken()).takeWhile(_ != JsonToken.END_ARRAY)
+            .forall(t => t != null && t.isScalarValue)
+        case t => t != null && t.isScalarValue
+      }
+      ok && p.nextToken() == null
+    } catch { case _: JsonProcessingException => false }
+    finally p.close()
   }
 }

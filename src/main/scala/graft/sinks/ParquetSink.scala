@@ -23,6 +23,13 @@ import graft.ports.DataSink
   * insert_many returns inserted counts) comes from an observed metric on
   * the SAME write job — the plan executes exactly once, never a separate
   * count() pass (at 100 TB a pre-count would be a second full scan).
+  *
+  * Fixed cost: a write to a local directory makes about 8 permission sets
+  * (the job, task and table directories, each part file and its `.crc`).
+  * Hadoop's local FS forks a `chmod` for each when libhadoop is absent,
+  * which cost more than writing a small file's rows; sessions from
+  * [[graft.GraftSession]] set them in-process instead
+  * ([[graft.ForkFreeLocalFileSystem]]), with the same modes and `.crc`s.
   */
 final class ParquetSink(baseDir: String, metricWaitSeconds: Long = 120) extends DataSink {
 

@@ -1,5 +1,9 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.core.{JsonFactoryBuilder, JsonProcessingException}
+import com.fasterxml.jackson.core.json.JsonReadFeature
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -130,24 +134,41 @@ object EventLoop {
 
   /** Parses a batch of raw envelope bodies (one per queue message) into
     * per-message file lists, preserving which message each file came from
-    * (the poller acks per message). One Spark job for the whole batch;
-    * malformed bodies or records yield no files. */
-  def parseBodies(spark: SparkSession, bodies: Seq[String]): Map[Int, Seq[FileToProcess]] = {
-    import spark.implicits._
-    if (bodies.isEmpty) Map.empty
-    else {
-      val rows = bodies.zipWithIndex.toDF("body", "idx")
-        .select(col("idx"), from_json(col("body"), envelopeSchema).as("env"))
-        .select(col("idx"), explode(col("env.Records")).as("r"))
-        .select(col("idx"),
-          col("r.s3.bucket.name").as("bucket"),
-          col("r.s3.object.key").as("key"))
-        .filter(col("bucket").isNotNull && col("key").isNotNull)
-        .collect()
-      rows.groupBy(_.getInt(0)).view
-        .mapValues(_.toSeq.map(r => FileToProcess(r.getString(1), r.getString(2)))).toMap
+    * (the poller acks per message). A poll brings at most 10 small bodies,
+    * so they are parsed on the driver, with no Spark job. Same result as
+    * `from_json` with [[envelopeSchema]]: a body that is malformed, is not
+    * a JSON object, or has a Records entry that is neither an object nor
+    * null yields no files; a record yields a file when it has both a
+    * bucket name and an object key, and a non-string value is taken as its
+    * JSON text. */
+  def parseBodies(bodies: Seq[String]): Map[Int, Seq[FileToProcess]] =
+    bodies.zipWithIndex.flatMap { case (body, i) =>
+      Some(envelopeFiles(body)).filter(_.nonEmpty).map(i -> _)
+    }.toMap
+
+  /** Spark's JSON reader dialect: single quotes and NaN/Infinity allowed. */
+  private val envelopeJson = new ObjectMapper(new JsonFactoryBuilder()
+    .enable(JsonReadFeature.ALLOW_SINGLE_QUOTES)
+    .enable(JsonReadFeature.ALLOW_NON_NUMERIC_NUMBERS)
+    .build())
+
+  private def envelopeFiles(body: String): Seq[FileToProcess] = {
+    val root = try envelopeJson.readTree(body) catch { case _: JsonProcessingException => null }
+    val records = Option(root).filter(_.isObject).flatMap(r => Option(r.get("Records")))
+      .filter(_.isArray).map(_.elements().asScala.toSeq).getOrElse(Nil)
+    // As in from_json, a record that is neither an object nor null voids
+    // the whole Records array.
+    if (!records.forall(r => r.isObject || r.isNull)) Nil
+    else records.flatMap { r =>
+      for (bucket <- text(r.at("/s3/bucket/name")); key <- text(r.at("/s3/object/key")))
+        yield FileToProcess(bucket, key)
     }
   }
+
+  private def text(n: JsonNode): Option[String] =
+    if (n.isMissingNode || n.isNull) None
+    else if (n.isTextual) Some(n.textValue)
+    else Some(n.toString)
 }
 
 /** Streaming analytics twins of the batch event queries: the same

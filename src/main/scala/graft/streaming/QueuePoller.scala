@@ -22,7 +22,7 @@ import graft.ports.QueueSource
   * blocks the ack.
   *
   * Scale: the poll loop is control-plane (≤10 tiny JSON envelopes per
-  * round-trip, parsed in one Spark job per batch); each file it dispatches
+  * round-trip, parsed on the driver); each file it dispatches
   * becomes a fully distributed pipeline job, exactly like the streaming
   * EventLoop. Run many pollers against one queue for higher notification
   * throughput — SQS visibility timeouts make concurrent consumers safe.
@@ -42,7 +42,7 @@ final class QueuePoller(
   def pollOnce(spark: SparkSession): Int = {
     val msgs = queue.receive(maxMessages, waitSeconds)
     if (msgs.nonEmpty) {
-      val filesByMsg = EventLoop.parseBodies(spark, msgs.map(_.body))
+      val filesByMsg = EventLoop.parseBodies(msgs.map(_.body))
       msgs.zipWithIndex.foreach { case (m, i) =>
         val files = filesByMsg.getOrElse(i, Seq.empty)
         val anyFailed = files.map { f =>

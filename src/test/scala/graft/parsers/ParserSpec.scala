@@ -93,6 +93,18 @@ class ParserSpec extends SparkSpec {
     assert(ex.getMessage.contains("scalar fallback refuses"))
   }
 
+  test("json: malformed file fails with ParseError; scalars keep the value wrap") {
+    // the truncated array the benchmark's malformed-json drop plants
+    val truncated = """[{"id": 1, "name": "x"}, {"id": 2, "na"""
+    Seq(truncated, """{"n": "A",""", """[[1, 2]]""", "42 43", "").foreach { body =>
+      intercept[ParseError](JsonParser.parse(spark, tmpFile("bad.json", body), None))
+    }
+    Seq("42", "\"x\"", "[1, \"a\", null]", "[]").foreach { body =>
+      val rows = JsonParser.parse(spark, tmpFile("s.json", body), None).collect()
+      assert(rows.map(_.getString(0)).toSeq == Seq(body))
+    }
+  }
+
   // --- TXT (reference txt_parser.rs) ---
 
   test("txt: 1-based line numbers in file order") {
