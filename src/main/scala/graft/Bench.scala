@@ -16,7 +16,10 @@ import org.apache.spark.sql.SparkSession
   * by every other untrusted query's rerun, which decorrelates them from
   * any one burst window. A genuinely fast query proves itself in one run.
   * The line also records /proc/loadavg before and after the sweep so a
-  * noisy-neighbor window is visible in the artifact itself.
+  * noisy-neighbor window is visible in the artifact itself. A query
+  * that throws is listed by name under `failed`, never timed, and kept
+  * out of the total. The session is `GraftSession.local()`, as in
+  * `Verify`.
   */
 object Bench {
 
@@ -29,25 +32,18 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Partitioning stays `$cpus` + DEFAULT AQE coalescing (VERDICT r16
-      // item 2 was investigated, measured, and deliberately NOT "fixed"
-      // by forcing size-based coalescing: an A/B with
-      // coalescePartitions.parallelismFirst=false + advisory 64m
-      // regressed the CPU-heavy byte-small shuffles — er05 +52%,
-      // er06 +12%, c09 +14% — because their exchanges carry a few MB
-      // that AQE then serialized onto 1-2 reducers. Default AQE already
-      // merges sub-minPartitionSize reducers, which is the only
-      // overhead the tiny metadata shuffles pay; the flat 8-vs-32-core
-      // ratios on the slow list are the driver-bound floor, documented
-      // per-gate in OPTIMIZATION_r17.md.)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Partitioning stays one shuffle partition per core + DEFAULT AQE
+    // coalescing (VERDICT r16 item 2 was investigated, measured, and
+    // deliberately NOT "fixed" by forcing size-based coalescing: an A/B
+    // with coalescePartitions.parallelismFirst=false + advisory 64m
+    // regressed the CPU-heavy byte-small shuffles — er05 +52%, er06
+    // +12%, c09 +14% — because their exchanges carry a few MB that AQE
+    // then serialized onto 1-2 reducers. Default AQE already merges
+    // sub-minPartitionSize reducers, which is the only overhead the tiny
+    // metadata shuffles pay; the flat 8-vs-32-core ratios on the slow
+    // list are the driver-bound floor, documented per-gate in
+    // OPTIMIZATION_r17.md.)
+    val spark = GraftSession.local()
     val loadBefore = load1()
     // Hadoop-FS + codegen warmup so the first measured query doesn't
     // absorb one-time JVM initialization.
@@ -58,23 +54,29 @@ object Bench {
       sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val named = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => return -1.0 }
-      (System.nanoTime() - t0) / 1e9
-    }
+    // A failing query is reported by name and never timed: its runs stop,
+    // and it stays out of `queries`, `total` and `n_queries`.
+    val failed = scala.collection.mutable.SortedSet.empty[String]
     val best = scala.collection.mutable.Map.empty[String, Double]
     val runCounts = scala.collection.mutable.Map.empty[String, Int]
-    named.foreach { case (name, fn) => best(name) = once(fn); runCounts(name) = 1 }
-    var pass = 1
-    while (pass < MaxPasses && named.exists { case (n, _) => best(n) > TrustSec }) {
-      named.foreach { case (name, fn) =>
-        if (best(name) > TrustSec) {
-          val t = once(fn)
-          if (t >= 0 && t < best(name)) best(name) = t
-          runCounts(name) += 1
-        }
+    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {
+      runCounts(name) = runCounts.getOrElse(name, 0) + 1
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).count()
+        val t = (System.nanoTime() - t0) / 1e9
+        if (t < best.getOrElse(name, Double.MaxValue)) best(name) = t
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: $e")
+        failed += name
+        best -= name
       }
+    }
+    def untrusted(name: String): Boolean = best.get(name).exists(_ > TrustSec)
+    named.foreach { case (name, fn) => once(name, fn) }
+    var pass = 1
+    while (pass < MaxPasses && named.exists { case (n, _) => untrusted(n) }) {
+      named.foreach { case (name, fn) => if (untrusted(name)) once(name, fn) }
       pass += 1
     }
     // HONEST ACCOUNTING for shared build families (optimization r17,
@@ -92,6 +94,7 @@ object Bench {
     def fmt(v: Double): String = f"$v%.2f"
     def qmap(m: Seq[(String, Double)]): String =
       m.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
+    def names(ns: Iterable[String]): String = ns.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     // Full per-query detail goes to a file; stdout gets ONE short JSON
     // line. The driver keeps only the LAST 2000 chars of stdout (minus
@@ -99,18 +102,22 @@ object Bench {
     // well under that or it is truncated head-first and never parses —
     // rounds 1-3 all recorded "parsed": null for exactly this reason.
     val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
-      s""""queries":${qmap(results.toSeq.sortBy(_._1))},""" +
+      s""""queries":${qmap(results.toSeq.sortBy(_._1))},"failed":${names(failed)},""" +
       s""""runs":${runCounts.toSeq.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")},""" +
       s""""load_before":$loadBefore,"load_after":$loadAfter,"sf":"$sfDir"}"""
     try {
       val w = new java.io.PrintWriter("bench_full.json")
       try w.println(full) finally w.close()
     } catch { case _: Throwable => () }
-    // Slowest queries only, biggest first, until the line nears the cap.
+    // Failures by name (past the first 20, the rest as a count: names
+    // run to ~35 chars), then the slowest queries, biggest first, until
+    // the line nears the cap.
     val budget = 1600
+    val failedField = names(failed.take(20) ++
+      Option(failed.size - 20).filter(_ > 0).map(n => s"+$n more"))
     val slowest = results.toSeq.sortBy(-_._2)
     val head = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${best.size},""" +
-      s""""load_before":$loadBefore,"load_after":$loadAfter,"sf":"$sfDir","queries":"""
+      s""""load_before":$loadBefore,"load_after":$loadAfter,"sf":"$sfDir","failed":$failedField,"queries":"""
     val entries = scala.collection.mutable.ArrayBuffer.empty[String]
     var len = head.length + 2
     slowest.foreach { case (k, v) =>

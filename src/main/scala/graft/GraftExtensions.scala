@@ -2,15 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 
-/** The engine's single `spark.sql.extensions` entry point — set by
-  * GraftSession/Verify/Bench at session build (and the production
-  * `spark-submit --conf spark.sql.extensions=graft.GraftExtensions`
-  * path). Composes the two extension surfaces:
+/** The engine's one session extension. `GraftSession` sets it at session
+  * build, and `spark-submit --conf spark.sql.extensions=graft.GraftExtensions`
+  * is the production path. It installs:
   *
-  *  - [[graft.functions.GraftExtensions]]: the native expression
-  *    registry (vector_dot, vector_cosine, simhash_bits, heavy_hitters,
-  *    bloom_agg/bloom_contains, ...) so SQL-only clients get the
-  *    codegen'd kernels without a driver-side registerAll;
+  *  - every function of [[graft.functions.EngineFunctions]] (vector_dot,
+  *    vector_cosine, simhash_bits, heavy_hitters, bloom_agg, ...), so
+  *    SQL-only clients get the codegen'd kernels without a driver-side
+  *    registerAll;
   *  - [[graft.catalog.ResolveDvSnapshots]]: the analyzer rule that
   *    serves deletion-vector-carrying TxLog snapshots through the SQL
   *    catalog by swapping the relation for the merge-on-read plan at
@@ -18,7 +17,8 @@ import org.apache.spark.sql.SparkSessionExtensions
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    new graft.functions.GraftExtensions().apply(ext)
+    graft.functions.EngineFunctions.all.foreach(f =>
+      ext.injectFunction((f.id, f.info, f.builder)))
     ext.injectResolutionRule(graft.catalog.ResolveDvSnapshots.apply)
   }
 }

@@ -2,21 +2,19 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the engine's scale-minded defaults. On a real
-  * cluster the same settings apply; only master/memory change. */
+/** The engine's one session factory: tests, `Verify`, `Bench`, the dev
+  * tools and the runners all build their session here, so they measure
+  * the same engine. On a real cluster the same settings apply; only
+  * master/memory change, and `spark.sql.extensions=graft.GraftExtensions`
+  * is the one extension to set. */
 object GraftSession {
 
-  /** Local `file:` writes go through [[ForkFreeLocalFileSystem]]: Hadoop's
-    * default forks a `chmod` per permission set (every mkdirs and every
-    * file or `.crc` create) when libhadoop is absent, which made process
-    * forks the largest fixed cost of a small sink write. `Verify` takes it
-    * from here too, so tests, bench and oracle run on the same file
-    * system. A `file:` FileSystem already cached in the JVM before the
-    * session is built is reused as-is; build the session first. */
-  val LocalFsConf: Map[String, String] =
-    Map("spark.hadoop.fs.file.impl" -> classOf[ForkFreeLocalFileSystem].getName)
+  /** Task slots (and shuffle partitions) of `local()`: `SPARK_GRAFT_CPUS`
+    * when set, else the machine's processor count. */
+  private val DefaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
 
-  def local(cores: Int = 32, shufflePartitions: Int = 32): SparkSession = {
+  def local(cores: Int = DefaultCores, shufflePartitions: Int = DefaultCores): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName("graft")
@@ -30,19 +28,21 @@ object GraftSession {
         s"${System.getProperty("java.io.tmpdir")}/graft-warehouse-${ProcessHandle.current().pid()}")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // analyzer rule serving DV-carrying TxLog snapshots through SQL
+      // function table + the analyzer rule serving DV-carrying TxLog
+      // snapshots through SQL
       .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config(LocalFsConf)
+      // Local `file:` writes go through ForkFreeLocalFileSystem: Hadoop's
+      // default forks a `chmod` per permission set (every mkdirs and every
+      // file or `.crc` create) when libhadoop is absent, which made process
+      // forks the largest fixed cost of a small sink write. A `file:`
+      // FileSystem already cached in the JVM before the session is built
+      // is reused as-is; build the session first.
+      .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Spark's default useV1SourceList reserves the name "avro" for the
-    // (absent) spark-avro connector and would force our DSv2 Avro source
-    // (graft.sources.AvroDataSource) through a V1 resolution path it
-    // cannot satisfy; dropping it lets `format("avro")` resolve via the
-    // ServiceLoader registration. Runtime conf -> applies to an already
-    // -created session too (getOrCreate reuse).
-    spark.conf.set("spark.sql.sources.useV1SourceList",
-      "csv,json,kafka,orc,parquet,text")
+    // frees the name "avro" for graft's DSv2 source; runtime conf, so it
+    // also applies to a reused (getOrCreate) session
+    graft.sources.AvroDataSource.enable(spark)
     spark
   }
 }

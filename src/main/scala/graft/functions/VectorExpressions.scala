@@ -396,83 +396,22 @@ case class NearestCid(left: Expression, right: Expression) extends BinaryExpress
     copy(left = l, right = r)
 }
 
-/** Column API + SQL registration for the vector expressions. Spark 4's
-  * public Column API no longer wraps raw Expressions, so the Column form
-  * goes through the function registry + call_function. */
+/** Column API + runtime registration for the engine's functions. Spark
+  * 4's public Column API no longer wraps raw Expressions, so the Column
+  * form goes through the function registry + call_function. */
 object VectorFunctions {
 
-  /** Registers vector_dot / vector_cosine for spark.sql + Column use.
-    * Idempotent AND quiet: query defs call it defensively before every
-    * run, so re-registration is skipped entirely once the sentinel
-    * function exists in this session's registry — otherwise each call
-    * emits a `SimpleFunctionRegistry: ... replaced` warning per function
-    * and a 166-query bench log buries real warnings under ~2k of them. */
+  /** Registers the [[EngineFunctions]] entries this session lacks, for
+    * spark.sql + Column use. A session built with `graft.GraftExtensions`
+    * already has them all, so this is a few registry lookups; query defs
+    * call it defensively before every run. Registering only what is
+    * missing also keeps the log free of `SimpleFunctionRegistry: ...
+    * replaced` warnings. */
   def registerAll(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    // short-circuit invariant: kmv_distinct exists only if EITHER a
-    // previous registerAll completed OR the graft.GraftExtensions
-    // session extension injected its function set — which is kept a
-    // SUPERSET of this list (GraftExtensionsSpec pins that), so either
-    // way every function below is already available. Do NOT sentinel
-    // on a function the extension injects but this list lacks.
-    if (registry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("kmv_distinct"))) return
-    registry.createOrReplaceTempFunction("vector_dot",
-      exprs => DotProduct(exprs.head, exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction("vector_cosine",
-      exprs => CosineSimilarity(exprs.head, exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction("nearest_cid",
-      exprs => NearestCid(exprs.head, exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction("simhash_bits",
-      exprs => SimhashBits(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction("shingles",
-      exprs => Shingles(exprs.head, litInt(exprs, 1)), "built-in")
-    registry.createOrReplaceTempFunction("shingle_hashes",
-      exprs => ShingleHashes(exprs.head, litInt(exprs, 1)), "built-in")
-    registry.createOrReplaceTempFunction("minhash_sig",
-      exprs => MinhashSig(exprs.head, litInt(exprs, 1)), "built-in")
-    registry.createOrReplaceTempFunction("gram_hashes",
-      exprs => GramHashes(exprs.head, litInt(exprs, 1)), "built-in")
-    registry.createOrReplaceTempFunction("window_mins",
-      exprs => WindowMins(exprs.head, litInt(exprs, 1)), "built-in")
-    // Spark ships Bloom-filter expressions for its own runtime join
-    // pruning but does not expose them in SQL; register them so corpus
-    // screens (cont02) can build/probe a filter without UDFs or driver
-    // state: bloom_agg(hash, n_items) -> binary, bloom_contains(bloom,
-    // hash) -> boolean (bloom side must be a constant/scalar subquery).
-    registry.createOrReplaceTempFunction("heavy_hitters",
-      exprs => {
-        if (exprs.length != 2) throw new IllegalArgumentException(
-          s"heavy_hitters expects exactly 2 arguments (column, k), got ${exprs.length}")
-        HeavyHittersAgg(exprs.head, litInt(exprs, 1))
-      }, "built-in")
-    registry.createOrReplaceTempFunction("kmv_distinct",
-      exprs => {
-        if (exprs.length != 2) throw new IllegalArgumentException(
-          s"kmv_distinct expects exactly 2 arguments (hash48, k), got ${exprs.length}")
-        KmvDistinctAgg(exprs.head, litInt(exprs, 1))
-      }, "built-in")
-    registry.createOrReplaceTempFunction("topk_pairs",
-      exprs => {
-        if (exprs.length != 3) throw new IllegalArgumentException(
-          s"topk_pairs expects exactly 3 arguments (key, id, k), got ${exprs.length}")
-        TopKAgg(exprs.head, exprs(1), litInt(exprs, 2))
-      }, "built-in")
-    registry.createOrReplaceTempFunction("bloom_agg",
-      exprs => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        exprs.head, exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction("bloom_contains",
-      exprs => org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        exprs.head, exprs(1)), "built-in")
-  }
-
-  /** The shingle/minhash kernels take their width as a literal int. */
-  private def litInt(exprs: Seq[Expression], i: Int): Int = exprs.lift(i) match {
-    case Some(Literal(v: Int, IntegerType)) => v
-    case None => throw new IllegalArgumentException(
-      s"expected at least ${i + 1} arguments, got ${exprs.length}")
-    case Some(other) => throw new IllegalArgumentException(
-      s"argument ${i + 1} must be a literal int, got $other")
+    EngineFunctions.all.foreach { f =>
+      if (!registry.functionExists(f.id)) registry.registerFunction(f.id, f.info, f.builder)
+    }
   }
 
   def vectorDot(spark: SparkSession, a: Column, b: Column): Column = {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.Ann
@@ -19,13 +18,7 @@ object AnnAb {
     val path = args.lift(0).getOrElse("/tmp/graft_scale/x30/embeddings.parquet")
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
     val factor = args.lift(2).map(_.toInt).getOrElse(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.VectorFunctions.registerAll(spark)
+    val spark = graft.GraftSession.local()
     val raw = if (factor <= 1) spark.read.parquet(path)
       else graft.ScaleBench.expandEmbeddings(spark, path, factor)
     val emb = raw

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** Dev profiler: runs selected queries under a job listener so the time
@@ -9,20 +8,16 @@ import graft.SparkEntry
   * attributes to individual Spark jobs — the local-mode stand-in for the
   * UI's Jobs page (optimization guide §1/§7). Prints, per query run, each
   * job's duration + callsite so the expensive phase is visible, plus the
-  * gap (driver-side) time no job covers. */
+  * gap (driver-side) time no job covers. Each query runs twice: run 1's
+  * wall carries cold start (planning, codegen, JIT), run 2's is steady
+  * state. */
 object JobProfile {
   private final case class Job(id: Int, desc: String, start: Long, var end: Long)
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq else Seq("q01_pricing_summary")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.{BloomIndex, TextIndex, TxLog}
@@ -13,10 +12,11 @@ import graft.queries.{DedupQueries, SimilarityQueries}
   * tix01-04 tokenize the corpus, er05/06 run three scoring passes for
   * their equivalence proofs), so the per-round bench artifact mixes
   * amortized build cost into numbers whose production meaning is
-  * serving latency. This tool generalizes ServeAb/TextServeAb: every
-  * persisted-index lifecycle family builds ONCE, then its serving plan
-  * alone is timed over decorrelated repetitions (min wins — co-tenant
-  * bursts only ever inflate). Output is one row per lane plus a
+  * serving latency. Here every persisted-index lifecycle family builds
+  * ONCE, then its serving plan alone is timed over decorrelated
+  * repetitions (min wins — co-tenant bursts only ever inflate); the
+  * ivfadc and text_search lanes also check their row counts. Output is
+  * one row per lane plus a
   * markdown table and one JSON line for BENCH.md's round-over-round
   * regression scan: compare the `serve` column, not the gate totals.
   *
@@ -39,13 +39,7 @@ object LifecycleBench {
   def main(args: Array[String]): Unit = {
     val dir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.VectorFunctions.registerAll(spark)
+    val spark = graft.GraftSession.local()
     val work = Files.createTempDirectory("graft_lifecycle")
 
     final case class Lane(name: String, build: Double, serve: Double, rows: Long)
@@ -68,7 +62,9 @@ object LifecycleBench {
     // ---- ivfadc (knn06/knn07 serving)
     var ivf: (java.nio.file.Path, java.nio.file.Path, java.nio.file.Path, java.nio.file.Path) = null
     lane("ivfadc") { ivf = SimilarityQueries.buildLakeIvfPq(spark, dir) } {
-      SimilarityQueries.serveLakeIvfAdc(spark, dir, ivf._1, ivf._2, ivf._3, ivf._4).count()
+      val n = SimilarityQueries.serveLakeIvfAdc(spark, dir, ivf._1, ivf._2, ivf._3, ivf._4).count()
+      require(n == 40, s"ivfadc: expected 4 queries x top-10, got $n")
+      n
     }
 
     // ---- text index (tix01-04 serving)
@@ -81,7 +77,9 @@ object LifecycleBench {
       TxLog.append(spark, docs, corpus, "doc_id", nParts = 8)
       TextIndex.ensureIndexed(spark, corpus, tix): Unit
     } {
-      TextIndex.searchBm25(spark, tix, Seq("spark", "join", "filter"), 20).count()
+      val n = TextIndex.searchBm25(spark, tix, Seq("spark", "join", "filter"), 20).count()
+      require(n == 20, s"text_search: expected top-20, got $n")
+      n
     }
     lane("text_fetch") { () } {
       TextIndex.fetchTopDocs(spark, corpus, tix, Seq("spark", "join", "filter"), 5).count()

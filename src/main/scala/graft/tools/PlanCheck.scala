@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** Dev tool: print formatted physical plans for selected queries —
@@ -10,13 +9,7 @@ object PlanCheck {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q05_region_revenue", "q06_revenue_delta", "dd04_lsh_candidates", "sim01_cosine_topk")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -38,7 +38,7 @@ class VectorExpressionsSpec extends SparkSpec {
 
   test("GraftExtensions registers both functions without error") {
     val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext) // would throw on a malformed FunctionDescription
+    new graft.GraftExtensions().apply(ext) // would throw on a malformed FunctionDescription
   }
 
   test("null inputs propagate null") {
