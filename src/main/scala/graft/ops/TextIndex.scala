@@ -1,6 +1,7 @@
 package graft.ops
 
 import java.nio.file.Path
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -26,6 +27,20 @@ import org.apache.spark.sql.functions._
   * one DuckDB oracle cross-gates the scan path and the index path.
   * Query cost tracks the query terms' posting lists, not the corpus —
   * the property that makes retrieval over 100 TB feasible.
+  *
+  * SERVING ON THE DRIVER: a top-k query reads a few footer-pruned files
+  * and ranks a few thousand postings, which a Spark job turns into
+  * mostly scheduling and driver gaps. [[searchBm25BlockMax]] (and
+  * [[fetchTopDocs]]'s ranking) therefore runs wholly on the driver —
+  * parquet-mr reads via [[TxLog.readLocal]], the driver twin of the
+  * BM25 readout, a local-relation result, zero Spark jobs — whenever
+  * the on-disk bytes of the query terms' dictionary files plus their
+  * full postings file set are at most the session's
+  * `spark.sql.autoBroadcastJoinThreshold`: the amount Spark would
+  * collect to the driver anyway to broadcast. With the threshold at -1
+  * the same plan runs through Spark. [[searchBm25]] always runs on
+  * Spark: it is the independent exact reference the others are checked
+  * against.
   *
   * Maintenance: [[ensureIndexed]] indexes corpus files not yet in the
   * watermark, anti-joined on doc_id against the already-indexed docs so
@@ -251,8 +266,10 @@ object TextIndex {
   }
 
   /** The ONE BM25 readout (arithmetic, rounding, tie-break) — shared by
-    * every search mode so a bounds-pruned ranking cannot drift from the
-    * full-scoring one by so much as an ulp. */
+    * every Spark search mode so a bounds-pruned ranking cannot drift from
+    * the full-scoring one by so much as an ulp. Its driver twin is
+    * [[bm25RankLocal]], the same operations in the same order;
+    * BlockMaxServeSpec pins the two to equal rows and schema. */
   private def bm25Rank(posts: DataFrame, dfRel: DataFrame, st: DataFrame,
       k: Int): DataFrame =
     posts.join(broadcast(dfRel), "term")
@@ -268,6 +285,47 @@ object TextIndex {
       .agg(round(sum(col("part")), 6).as("score"))
       .orderBy(col("score").desc, col("doc_id").asc)
       .limit(k)
+
+  /** [[bm25Rank]]'s output schema: a driver-served ranking and an empty
+    * one carry it too. */
+  private val RankSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("doc_id",
+      org.apache.spark.sql.types.LongType, nullable = true),
+    org.apache.spark.sql.types.StructField("score",
+      org.apache.spark.sql.types.DoubleType, nullable = true)))
+
+  private def emptyRanking(spark: SparkSession): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      RankSchema)
+
+  /** One posting as the driver readout sees it. */
+  private final case class Posting(term: String, docId: Long, tf: Long, dl: Long)
+
+  /** [[bm25Rank]]'s idf, as Spark evaluates it: the long subtraction
+    * first, and `StrictMath.log` (what Spark's `log` calls). */
+  private def bm25Idf(nDocs: Long, df: Long): Double =
+    StrictMath.log(((nDocs - df).toDouble + 0.5) / (df.toDouble + 0.5) + 1.0)
+
+  /** [[bm25Rank]]'s round(_, 6): HALF_UP on the double's decimal form. */
+  private def round6(v: Double): Double =
+    BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** [[bm25Rank]] on the driver, operation for operation: each posting
+    * of a term with a df contributes idf * tf / (tf + 1.2 * (1 - 0.75 +
+    * 0.75 * dl / avgdl)) in that multiply/divide order, a doc's parts
+    * sum from 0.0, the sum rounds HALF_UP to 6 places, and the top k
+    * sort by score desc, doc_id asc. */
+  private def bm25RankLocal(posts: Seq[Posting], df: Map[String, Long], nDocs: Long,
+      avgdl: Double, k: Int): Seq[(Long, Double)] = {
+    val sums = scala.collection.mutable.LinkedHashMap.empty[Long, Double]
+    posts.foreach(p => df.get(p.term).foreach { d =>
+      sums(p.docId) = sums.getOrElse(p.docId, 0.0) + bm25Idf(nDocs, d) * p.tf.toDouble /
+        (p.tf.toDouble + 1.2 * (1.0 - 0.75 + 0.75 * p.dl.toDouble / avgdl))
+    })
+    sums.toSeq.map { case (id, s) => (id, round6(s)) }
+      .sortWith((a, b) => if (a._2 != b._2) a._2 > b._2 else a._1 < b._1)
+      .take(k)
+  }
 
   /** CONJUNCTIVE (AND) retrieval: only documents containing EVERY query
     * term rank, scored by the same BM25 arithmetic as [[searchBm25]].
@@ -458,7 +516,15 @@ object TextIndex {
     *     multi-increment index serve like a maintained one.
     *
     * Safety mirrors searchBm25MaxScore: no dictionary, or a
-    * pre-slice_ver dictionary, falls back to exact full scoring. */
+    * pre-slice_ver dictionary, falls back to exact full scoring.
+    *
+    * EXECUTION: when the query terms' dictionary and postings files fit
+    * under `spark.sql.autoBroadcastJoinThreshold` ([[servesOnDriver]]),
+    * every read above goes through [[TxLog.readLocal]] and the ranking
+    * through [[bm25RankLocal]], and the k rows come back as a local
+    * relation — zero Spark jobs, the call plus its collect included.
+    * Otherwise the same plan runs as Spark reads and [[bm25Rank]]. Unit
+    * selection, file choice and the report are the same either way. */
   def searchBm25BlockMax(spark: SparkSession, index: Path, terms: Seq[String],
       k: Int): (DataFrame, BlockMaxReport) = {
     require(terms.nonEmpty, "searchBm25BlockMax needs at least one query term")
@@ -474,6 +540,9 @@ object TextIndex {
     import spark.implicits._
     val snap = TxLog.snapshotAt(index)
     val byPath = snap.files.map(f => f.path -> f).toMap
+    // WHERE the call runs, decided once from driver metadata: the same
+    // plan below either reads and ranks on the driver or through Spark
+    val onDriver = servesOnDriver(spark, index, snap, distinct)
     // corpus scalars from driver metadata (scalarsOf): no Spark job
     val stVals = scalarsOf(spark, statsDir(index), Seq("n_docs", "total_len"))
     val nDocs = stVals(0)
@@ -481,19 +550,28 @@ object TextIndex {
     // ---- dictionary rows, VERSION-KEYED per-JVM cached (the Lucene
     // shape: the term dictionary lives in serving memory) — a term's
     // slices are immutable for a given _tstats version, so steady-state
-    // serving pays ZERO dictionary jobs; any dictionary commit (new
+    // serving pays ZERO dictionary reads; any dictionary commit (new
     // slice, maintain rebuild) changes the version and drops the key
     val dictVer = TxLog.latestVersion(tstatsDir(index))
     val dictKeyBase = s"${tstatsDir(index).toAbsolutePath}@$dictVer#"
     val misses = distinct.filter(t => !dictCache.containsKey(dictKeyBase + t))
     if (misses.nonEmpty) {
-      val fetched = misses.map { term =>
-        val h = termHash(term)
-        TxLog.readAt(spark, tstatsDir(index), range = Some(("term_hash", h, h)))
-          .filter(col("term") === lit(term))
-          .select(col("term"), col("df"), col("tf_bound"), col("top_pairs"),
-            col("slice_ver"))
-      }.reduce(_ unionByName _).collect().toSeq.map { r =>
+      val fetchCols = Seq("term", "df", "tf_bound", "top_pairs", "slice_ver")
+      val rows: Seq[org.apache.spark.sql.Row] =
+        if (onDriver) {
+          val tsnap = TxLog.snapshotAt(tstatsDir(index))
+          misses.flatMap { term =>
+            val h = termHash(term)
+            TxLog.readLocal(spark, tstatsDir(index), TxLog.pruneFiles(tsnap, h, h),
+              fetchCols, eq = Some(("term_hash", h))).filter(_.getString(0) == term)
+          }
+        } else misses.map { term =>
+          val h = termHash(term)
+          TxLog.readAt(spark, tstatsDir(index), range = Some(("term_hash", h, h)))
+            .filter(col("term") === lit(term))
+            .select(fetchCols.map(col): _*)
+        }.reduce(_ unionByName _).collect().toSeq
+      val fetched = rows.map { r =>
         val pairs =
           if (r.isNullAt(3)) Seq.empty[(Long, Long)]
           else r.getSeq[org.apache.spark.sql.Row](3)
@@ -513,11 +591,26 @@ object TextIndex {
     def pointRead(t: String, h: Long) =
       TxLog.readAt(spark, index, range = Some(("term_hash", h, h)))
         .filter(col("term") === lit(t))
+    // the driver path's postings of one term in `files`, DVs applied
+    def readPostings(t: String, h: Long, files: Seq[TxLog.AddFile]): Vector[Posting] =
+      TxLog.readLocal(spark, index, files, Seq("term", "doc_id", "tf", "dl"),
+        eq = Some(("term_hash", h)))
+        .collect { case r if r.getString(0) == t =>
+          Posting(t, r.getLong(1), r.getAs[Number](2).longValue, r.getAs[Number](3).longValue)
+        }
     // ---- staleness (the searchBm25MaxScore rule: counter OR DVs)
     val (nDel, refreshedAt) = readTstatsMeta(spark, index)
     val stale = nDel != refreshedAt || snap.files.exists(_.dv.isDefined)
+    // stale driver path: each term's live pruned list, read once for
+    // both the df recount and θ̂
+    lazy val fullLists: Map[String, Vector[Posting]] = distinct.map { t =>
+      val h = termHash(t)
+      t -> readPostings(t, h, TxLog.pruneFiles(snap, h, h))
+    }.toMap
     val dfExact: Map[String, Long] =
       if (!stale) units.groupBy(_.term).view.mapValues(_.map(_.df).sum).toMap
+      else if (onDriver)
+        fullLists.collect { case (t, ps) if ps.nonEmpty => t -> ps.size.toLong }
       else distinct.map(t => pointRead(t, termHash(t)))
         .reduce(_ unionByName _)
         .groupBy(col("term")).agg(count(lit(1)).as("df"))
@@ -526,36 +619,33 @@ object TextIndex {
     val filesFull = distinct.map(t =>
       TxLog.pruneFiles(snap, termHash(t), termHash(t)).size).sum
     if (live.isEmpty)
-      return (TxLog.readAt(spark, index).filter(lit(false))
-        .select(col("doc_id"), lit(0.0).as("score")),
+      return (emptyRanking(spark),
         BlockMaxReport(units.size, 0, filesFull, 0, 0,
           fellBack = false, dfRecounted = stale, thetaFromDict = false))
-    val idf: Map[String, Double] = dfExact.collect { case (t, df) if df > 0 =>
-      t -> math.log((nDocs - df + 0.5) / (df + 0.5) + 1.0)
-    }.toMap
-    val dfRel = broadcast(
-      idf.keys.toSeq.sorted.map(t => (t, dfExact(t))).toDF("term", "df"))
-    val stDf = broadcast(Seq((nDocs, avgdl)).toDF("n_docs", "avgdl"))
-    // ---- θ̂
-    def round6(v: Double): Double =
-      BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    def partial(t: String, tf: Long, dl: Long): Double =
-      idf(t) * tf.toDouble /
-        (tf.toDouble + 1.2 * (1.0 - 0.75 + 0.75 * dl.toDouble / avgdl))
+    val dfLive: Map[String, Long] = dfExact.filter(_._2 > 0)
+    val idf: Map[String, Double] = dfLive.map { case (t, df) => t -> bm25Idf(nDocs, df) }
+    lazy val dfRel = broadcast(dfLive.toSeq.sorted.toDF("term", "df"))
+    lazy val stDf = broadcast(Seq((nDocs, avgdl)).toDF("n_docs", "avgdl"))
+    // ---- θ̂: the k-th best of the one readout over one term's postings
+    def kth(ranked: Seq[(Long, Double)]): Double =
+      if (ranked.size < k) Double.NegativeInfinity else ranked(k - 1)._2
     val thetaFromDict = !stale
     val theta: Double =
       if (thetaFromDict)
         live.groupBy(_.term).map { case (t, us) =>
-          val ps = us.flatMap(_.pairs).map { case (tf, dl) => round6(partial(t, tf, dl)) }
-            .sorted(Ordering[Double].reverse)
-          if (ps.size >= k) ps(k - 1) else Double.NegativeInfinity
+          // stored pairs carry no doc ids: each pair ranks as its own doc
+          kth(bm25RankLocal(us.flatMap(_.pairs).zipWithIndex.map { case ((tf, dl), i) =>
+            Posting(t, i.toLong, tf, dl) }, dfLive, nDocs, avgdl, k))
         }.max
       else {
         val top = live.minBy(u => (-(idf(u.term) * u.bound), u.term, u.ver))
-        val row = bm25Rank(pointRead(top.term, top.h), dfRel, stDf, k)
-          .agg(count(lit(1)).as("n"), coalesce(min(col("score")), lit(0.0)).as("kth"))
-          .head
-        if (row.getLong(0) < k) Double.NegativeInfinity else row.getDouble(1)
+        if (onDriver) kth(bm25RankLocal(fullLists(top.term), dfLive, nDocs, avgdl, k))
+        else {
+          val row = bm25Rank(pointRead(top.term, top.h), dfRel, stDf, k)
+            .agg(count(lit(1)).as("n"), coalesce(min(col("score")), lit(0.0)).as("kth"))
+            .head
+          if (row.getLong(0) < k) Double.NegativeInfinity else row.getDouble(1)
+        }
       }
     // ---- greedy unit peel (driver-side, |terms × slices| work)
     val ordered = live.sortBy(u => (-(idf(u.term) * u.bound), u.term, u.ver))
@@ -585,14 +675,17 @@ object TextIndex {
       bound.getOrElse(TxLog.pruneFiles(snap, u.h, u.h))
     }
     val essFiles: Seq[(U, Vector[TxLog.AddFile])] = ess.map(u => (u, unitFiles(u)))
-    val essPosts = essFiles.map { case (u, fs) =>
-      TxLog.readFiles(spark, index, fs)
-        .filter(col("term_hash") === u.h && col("term") === lit(u.term))
-    }.reduce(_ unionByName _)
+    // one read per term over the DISTINCT union of its essential units'
+    // files: units that fall back to the hash range (unbound or
+    // rewritten slices) name the same files, and reading each unit's
+    // set on its own would count those postings twice
+    val essByTerm: Seq[(String, Long, Vector[TxLog.AddFile])] =
+      ess.map(_.term).distinct.map { t =>
+        (t, termHash(t), essFiles.filter(_._1.term == t).flatMap(_._2)
+          .distinctBy(_.path).toVector)
+      }
     val essPathsByTerm: Map[String, Set[String]] =
-      essFiles.groupBy(_._1.term).view
-        .mapValues(us => us.flatMap(_._2.map(_.path): Seq[String]).toSet).toMap
-    val cands = essPosts.select("doc_id").distinct()
+      essByTerm.map { case (t, _, fs) => t -> fs.map(_.path).toSet }.toMap
     // candidate doc_id SPAN from the essential files' footer stats —
     // driver metadata, no job; a file-level superset of the true span,
     // so pruning on it is conservative and correctness-free
@@ -606,9 +699,7 @@ object TextIndex {
     // ---- probes: candidates' remaining postings, file-pruned twice
     // (hash range minus already-read, then the candidate span vs each
     // file's recorded doc_id footer range)
-    val candsRel =
-      if (essFilesAll.map(_.rows).sum <= (1L << 22)) broadcast(cands) else cands
-    val probes: Seq[(DataFrame, Int)] =
+    val probeFiles: Seq[(String, Long, Vector[TxLog.AddFile])] =
       if (essFilesAll.isEmpty) Nil
       else live.map(_.term).distinct.flatMap { t =>
         val h = termHash(t)
@@ -618,17 +709,51 @@ object TextIndex {
           .filter(f => candSpan.forall { case (clo, chi) =>
             f.cols.get("doc_id").forall { case (lo, hi) => hi >= clo && lo <= chi }
           })
-        if (rem.isEmpty) None
-        else Some((TxLog.readFiles(spark, index, rem)
-          .filter(col("term_hash") === h && col("term") === lit(t))
-          .join(candsRel, Seq("doc_id"), "left_semi"), rem.size))
+        if (rem.isEmpty) None else Some((t, h, rem))
       }
-    val filesRead = essFiles.map(_._2.size).sum + probes.map(_._2).sum
-    val posts = (essPosts +: probes.map(_._1)).reduce(_ unionByName _)
-    (bm25Rank(posts, dfRel, stDf, k),
-      BlockMaxReport(units.size, essN, filesFull, filesRead,
-        probes.map(_._2).sum, fellBack = false, dfRecounted = stale,
-        thetaFromDict = thetaFromDict))
+    val filesProbed = probeFiles.map(_._3.size).sum
+    val report = BlockMaxReport(units.size, essN, filesFull,
+      essFiles.map(_._2.size).sum + filesProbed, filesProbed, fellBack = false,
+      dfRecounted = stale, thetaFromDict = thetaFromDict)
+    if (onDriver) {
+      val essPosts = essByTerm.flatMap { case (t, h, fs) => readPostings(t, h, fs) }
+      val cands: Set[Long] = essPosts.iterator.map(_.docId).toSet
+      val probePosts = probeFiles.flatMap { case (t, h, fs) =>
+        readPostings(t, h, fs).filter(p => cands(p.docId))
+      }
+      val ranked = bm25RankLocal(essPosts ++ probePosts, dfLive, nDocs, avgdl, k)
+      return (spark.createDataFrame(
+        ranked.map { case (id, s) => org.apache.spark.sql.Row(id, s) }.asJava, RankSchema),
+        report)
+    }
+    def postsIn(t: String, h: Long, fs: Seq[TxLog.AddFile]) =
+      TxLog.readFiles(spark, index, fs)
+        .filter(col("term_hash") === h && col("term") === lit(t))
+    val essPosts = essByTerm.map { case (t, h, fs) => postsIn(t, h, fs) }
+      .reduce(_ unionByName _)
+    val cands = essPosts.select("doc_id").distinct()
+    val candsRel =
+      if (essFilesAll.map(_.rows).sum <= (1L << 22)) broadcast(cands) else cands
+    val posts = (essPosts +: probeFiles.map { case (t, h, fs) =>
+      postsIn(t, h, fs).join(candsRel, Seq("doc_id"), "left_semi")
+    }).reduce(_ unionByName _)
+    (bm25Rank(posts, dfRel, stDf, k), report)
+  }
+
+  /** Whether a [[searchBm25BlockMax]] call serves ON THE DRIVER: the
+    * on-disk bytes of the query terms' dictionary files plus their full
+    * postings file set (footer-pruned, driver metadata) are at most the
+    * session's `spark.sql.autoBroadcastJoinThreshold` — no more than
+    * Spark itself collects to the driver to broadcast a relation. A
+    * threshold of -1 (broadcasts off) keeps the Spark path. */
+  private def servesOnDriver(spark: SparkSession, index: Path, snap: TxLog.Snapshot,
+      terms: Seq[String]): Boolean = {
+    val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
+    def bytes(table: Path, s: TxLog.Snapshot): Long = terms
+      .flatMap { t => val h = termHash(t); TxLog.pruneFiles(s, h, h) }
+      .distinctBy(_.path).map(f => java.nio.file.Files.size(table.resolve(f.path))).sum
+    limit >= 0 &&
+      bytes(tstatsDir(index), TxLog.snapshotAt(tstatsDir(index))) + bytes(index, snap) <= limit
   }
 
   /** The end-user search shape: BM25 rank from the INDEX, then fetch
@@ -636,11 +761,13 @@ object TextIndex {
     * driver-held by construction) turn into a stats-pruned corpus read
     * ([min,max] key range + an isin residual that pushes into the
     * parquet scan), so the corpus pays a point-fetch, never a scan.
-    * Returns the corpus columns + `score`, ranked. */
+    * The ranking is [[searchBm25BlockMax]]'s — equal to [[searchBm25]]'s
+    * by contract (tix11), and served on the driver when the query's
+    * files are small. Returns the corpus columns + `score`, ranked. */
   def fetchTopDocs(spark: SparkSession, corpus: Path, index: Path,
       terms: Seq[String], k: Int, idCol: String = "doc_id"): DataFrame = {
     import spark.implicits._
-    val top = searchBm25(spark, index, terms, k).collect() // k rows, by contract
+    val top = searchBm25BlockMax(spark, index, terms, k)._1.collect() // k rows, by contract
     if (top.isEmpty)
       return TxLog.readAt(spark, corpus).filter(lit(false))
         .withColumn("score", lit(0.0))

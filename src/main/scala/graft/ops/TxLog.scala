@@ -1167,7 +1167,8 @@ object TxLog {
           // replicate whatever the marker now says (ours or a racing
           // resolver's) so abort resolution is also sibling-independent
           val decided = try new String(Files.readAllBytes(markerDir.resolve("outcome")),
-            java.nio.charset.StandardCharsets.UTF_8) catch { case _: Throwable => null }
+            java.nio.charset.StandardCharsets.UTF_8)
+            catch { case _: java.io.IOException => null }
           if (decided != null)
             claimed.foreach(x => replicateOutcome(x._1.table,
               markerDir.getFileName.toString, decided))
@@ -1259,7 +1260,7 @@ object TxLog {
     val vd = versionDir(table, v)
     if (Files.isDirectory(vd) && !Files.exists(vd.resolve("commit.json"))) {
       val age = try System.currentTimeMillis() -
-        Files.getLastModifiedTime(vd).toMillis catch { case _: Throwable => 0L }
+        Files.getLastModifiedTime(vd).toMillis catch { case _: java.io.IOException => 0L }
       if (age > StaleClaimMs) publishAbandoned(table, vd, v)
       else Thread.sleep(25)
     }
@@ -1732,6 +1733,101 @@ object TxLog {
       }
       writer.write(g)
     } finally writer.close()
+  }
+
+  /** [[readFiles]]'s driver-local twin, the read side of [[appendLocal]]:
+    * `files` of `table` read ON THE DRIVER with parquet-mr's Group reader
+    * — no Spark job — for serving paths whose whole input is a few
+    * footer-pruned files. Only `columns` (logical names) are read, under
+    * their physical names; `eq` (a long column, a value) is pushed into
+    * the reader (row-group stats, then record level); each file's
+    * deletion vector drops its rows exactly as the merge-on-read scan's
+    * per-file keyed anti-join does. Rows come back under the logical
+    * names, null where a file predates a column. Supported types:
+    * [[appendLocal]]'s flat ones plus [[graft.functions.TopKAgg]]'s pair
+    * array; any other column is refused by name. */
+  def readLocal(spark: SparkSession, table: Path, files: Seq[AddFile],
+      columns: Seq[String], eq: Option[(String, Long)] = None): Vector[org.apache.spark.sql.Row] = {
+    import org.apache.parquet.example.data.Group
+    import org.apache.parquet.filter2.compat.FilterCompat
+    import org.apache.parquet.filter2.predicate.FilterApi
+    import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType, LongType, StringType}
+    val schema = tableSchema(table).getOrElse(throw new IllegalStateException(
+      s"readLocal: no recorded schema for $table"))
+    def field(name: String): StructField = schema.fields.find(_.name == name)
+      .getOrElse(throw new IllegalArgumentException(s"readLocal: no column '$name' in $table"))
+    val flat = Set[DataType](LongType, IntegerType, DoubleType, BooleanType, StringType)
+    val fields = columns.map(field)
+    fields.foreach(f => if (!flat(f.dataType) && f.dataType != graft.functions.TopKAgg.resultType)
+      throw new IllegalArgumentException(s"readLocal supports long/int/double/boolean/" +
+        s"string and top-k pair columns; '${f.name}' is ${f.dataType} — use readFiles"))
+    val eqPhys = eq.map { case (c, v) =>
+      require(field(c).dataType == LongType, s"readLocal: eq column '$c' must be a long")
+      (ColumnMapping.physical(field(c)), v)
+    }
+    val dvs: Map[String, (String, Set[Long])] = files.flatMap(f =>
+      dvKeysFor(table, f).map { case (kc, keys) => f.path -> ((kc, keys.toSet)) }).toMap
+    val wanted = (fields.map(ColumnMapping.physical) ++ eqPhys.map(_._1) ++
+      dvs.values.map(_._1)).toSet
+    def value(g: Group, name: String, dt: DataType): Any =
+      if (!g.getType.containsField(name) || g.getFieldRepetitionCount(name) == 0) null
+      else dt match {
+        case LongType => g.getLong(name, 0)
+        case IntegerType => g.getInteger(name, 0)
+        case DoubleType => g.getDouble(name, 0)
+        case BooleanType => g.getBoolean(name, 0)
+        case StringType => g.getString(name, 0)
+        case org.apache.spark.sql.types.ArrayType(st: StructType, _) =>
+          // Spark's 3-level list: a repeated group holding the element
+          val list = g.getGroup(name, 0)
+          (0 until list.getFieldRepetitionCount(0)).map { i =>
+            val elem = list.getGroup(0, i).getGroup(0, 0)
+            new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+              st.fields.map(sf => value(elem, sf.name, sf.dataType)), st)
+          }
+        case other => throw new IllegalArgumentException(s"readLocal: '$name' is $other")
+      }
+    def key(g: Group, name: String): Option[Long] =
+      if (!g.getType.containsField(name) || g.getFieldRepetitionCount(name) == 0) None
+      else g.getType.getType(name).asPrimitiveType.getPrimitiveTypeName match {
+        case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT32 =>
+          Some(g.getInteger(name, 0).toLong)
+        case _ => Some(g.getLong(name, 0))
+      }
+    val out = StructType(fields.map(_.copy(metadata = org.apache.spark.sql.types.Metadata.empty)))
+    val conf = spark.sessionState.newHadoopConf()
+    val filter = eqPhys.fold(FilterCompat.NOOP) { case (c, v) =>
+      FilterCompat.get(FilterApi.eq(FilterApi.longColumn(c), java.lang.Long.valueOf(v)))
+    }
+    files.toVector.flatMap { f =>
+      val reader = org.apache.parquet.hadoop.ParquetReader
+        .builder(new ProjectedGroupRead(wanted), new HPath(table.resolve(f.path).toString))
+        .withConf(conf).withFilter(filter).useRecordFilter().build()
+      val dv = dvs.get(f.path)
+      try Iterator.continually(reader.read()).takeWhile(_ != null)
+        .filter(g => dv.forall { case (kc, keys) => !key(g, kc).exists(keys) })
+        .map(g => new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+          fields.map(sf => value(g, ColumnMapping.physical(sf), sf.dataType)).toArray, out))
+        .toVector
+      finally reader.close()
+    }
+  }
+
+  /** Group read support projecting each file onto the wanted physical
+    * columns IT has — a column the file predates is simply absent (read
+    * back as null), never a schema-mismatch failure. */
+  private final class ProjectedGroupRead(wanted: Set[String])
+      extends org.apache.parquet.hadoop.example.GroupReadSupport {
+    override def init(ctx: org.apache.parquet.hadoop.api.InitContext)
+        : org.apache.parquet.hadoop.api.ReadSupport.ReadContext = {
+      val fs = ctx.getFileSchema
+      val have = fs.getFields.asScala.filter(f => wanted(f.getName))
+      // a projection onto none of the file's columns still needs one
+      // column to count its rows by
+      val cols = if (have.nonEmpty) have else fs.getFields.asScala.find(_.isPrimitive).toSeq
+      new org.apache.parquet.hadoop.api.ReadSupport.ReadContext(
+        new org.apache.parquet.schema.MessageType(fs.getName, cols.asJava))
+    }
   }
 
   /** Create an EMPTY table: version 0 is a pure-metadata commit carrying
@@ -3109,7 +3205,7 @@ object TxLog {
       .filter(p => Files.isRegularFile(p) && (p.getFileName.toString.endsWith(".parquet")
         || p.getFileName.toString.endsWith(".dv.json")))
       .filter(p => (try Files.getLastModifiedTime(p).toMillis
-        catch { case _: Throwable => Long.MaxValue }) <= cutoff)
+        catch { case _: java.io.IOException => Long.MaxValue }) <= cutoff)
       .map(_.getFileName.toString)
     val doomed = onDisk.filterNot(referenced).sorted
     doomed.foreach(f => Files.deleteIfExists(table.resolve(f)))
@@ -3134,7 +3230,7 @@ object TxLog {
         listDir(txnOutDir)
           .filter(p => folded.contains(p.getFileName.toString))
           .filter(p => (try Files.getLastModifiedTime(p).toMillis
-            catch { case _: Throwable => Long.MaxValue }) <= cutoff)
+            catch { case _: java.io.IOException => Long.MaxValue }) <= cutoff)
           .map { p => Files.deleteIfExists(p); s"_txnout/${p.getFileName}" }
           .sorted
       }

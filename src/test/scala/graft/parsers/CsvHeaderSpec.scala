@@ -1,11 +1,8 @@
 package graft.parsers
 
 import java.nio.file.Files
-import java.util.UUID
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import java.util.zip.GZIPOutputStream
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 import graft.SparkSpec
@@ -16,40 +13,6 @@ import graft.domain.ParserConfig
   * the same schema (de-duplicated and `_c{i}` names included) and the
   * same rows, with no Spark job before the scan. */
 class CsvHeaderSpec extends SparkSpec {
-
-  /** Spark jobs started while `body` runs. Sentinel jobs before and after
-    * it mark the window: the listener bus delivers events in order. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val started = new LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        started.put(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    def sentinel(): String = {
-      val tag = s"sentinel-${UUID.randomUUID()}"
-      sc.setJobDescription(tag)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      tag
-    }
-    def jobsUntil(tag: String): Int = {
-      var n = 0
-      var d = started.poll(60, TimeUnit.SECONDS)
-      while (d != tag) {
-        assert(d != null, s"no job-start event for $tag")
-        n += 1
-        d = started.poll(60, TimeUnit.SECONDS)
-      }
-      n
-    }
-    sc.addSparkListener(listener)
-    try {
-      jobsUntil(sentinel())
-      body
-      jobsUntil(sentinel())
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def file(name: String, body: String): String = {
     val p = Files.createTempDirectory("csv_header").resolve(name)
