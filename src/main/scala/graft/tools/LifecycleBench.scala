@@ -129,12 +129,12 @@ object LifecycleBench {
     // disjunctive top-k, now the BLOCK-MAX variant — θ̂ from the
     // dictionary's stored pairs (no postings job), unit-granular
     // essential selection, candidate-span file pruning. When the query
-    // terms' dictionary and postings files fit under
-    // spark.sql.autoBroadcastJoinThreshold the whole call reads and
-    // ranks on the driver (zero Spark jobs; the count below runs on a
-    // local relation), so this lane measures that path whenever the
-    // index is that small. Must stay at-or-under the full-scoring
-    // text_search lane.
+    // terms' dictionary and postings files total at most
+    // TextIndex.DriverServeBytes (1 MiB) the whole call reads and ranks
+    // on the driver (zero Spark jobs; the count below runs on a local
+    // relation), so this lane measures that path whenever the index is
+    // that small. Must stay at-or-under the full-scoring text_search
+    // lane.
     lane("text_maxscore") { () } {
       TextIndex.searchBm25BlockMax(spark, tix, Seq("dup", "join", "filter"), 10)
         ._1.count()

@@ -10,10 +10,10 @@ import org.apache.spark.sql.types.StructType
 import graft.SparkSpec
 
 /** Block-max top-k served on the driver against the same plan run
-  * through Spark (`spark.sql.autoBroadcastJoinThreshold=-1` forces it)
-  * and against `searchBm25`, the exact full-scoring reference: equal
-  * rows, equal schema, equal `BlockMaxReport` between the two block-max
-  * paths, and zero Spark jobs for a driver-served call plus its collect.
+  * through Spark (a driver byte limit of -1 forces it) and against
+  * `searchBm25`, the exact full-scoring reference: equal rows, equal
+  * schema, equal `BlockMaxReport` between the two block-max paths, and
+  * zero Spark jobs for a driver-served call plus its collect.
   * Random corpora of 1–4 increments are walked through every index state
   * the serving path distinguishes: fresh, stale after `pruneDeleted`,
   * deletion vectors from a direct `deleteMor` on the index, maintained,
@@ -34,18 +34,16 @@ class BlockMaxServeSpec extends SparkSpec {
     }.toDF("doc_id", "text")
   }
 
-  private def withSparkPath[T](body: => T): T = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try body finally spark.conf.set(key, old)
-  }
-
   private final case class Served(rows: Seq[Row], schema: StructType,
       report: TextIndex.BlockMaxReport)
 
-  private def blockMax(index: Path, terms: Seq[String], k: Int): Served = {
-    val (df, rep) = TextIndex.searchBm25BlockMax(spark, index, terms, k)
+  /** The public call, or (`viaSpark`) the same plan with no file set
+    * small enough to serve on the driver. */
+  private def blockMax(index: Path, terms: Seq[String], k: Int,
+      viaSpark: Boolean = false): Served = {
+    val (df, rep) =
+      if (viaSpark) TextIndex.searchBm25BlockMax(spark, index, terms, k, driverMaxBytes = -1L)
+      else TextIndex.searchBm25BlockMax(spark, index, terms, k)
     Served(df.collect().toSeq, df.schema, rep)
   }
 
@@ -56,15 +54,12 @@ class BlockMaxServeSpec extends SparkSpec {
       Seq(s"w${r.nextInt(Vocab)}", s"w${r.nextInt(Vocab)}", Ghost),
       Seq(s"w${r.nextInt(8)}", s"w${8 + r.nextInt(Vocab - 8)}"),
       Seq(Ghost))
-    for ((terms, qi) <- queries.zipWithIndex; k <- Seq(1, 5, 10)) {
+    for (terms <- queries; k <- Seq(1, 5, 10)) {
       val what = s"$state, terms ${terms.mkString(" ")}, k=$k"
-      // the first call of a query set fetches its dictionary rows: let
-      // each path be the one that fetches them for every other set
-      val sparkFirst = if (qi % 2 == 1) Some(withSparkPath(blockMax(index, terms, k))) else None
       var driver: Served = null
       val jobs = jobsDuring { driver = blockMax(index, terms, k) }
       assert(jobs == 0, s"$what: a driver-served call ran $jobs Spark jobs")
-      val viaSpark = sparkFirst.getOrElse(withSparkPath(blockMax(index, terms, k)))
+      val viaSpark = blockMax(index, terms, k, viaSpark = true)
       val exact = TextIndex.searchBm25(spark, index, terms, k)
       val exactRows = exact.collect().toSeq
       assert(driver.rows == exactRows, s"$what: driver ranking differs from searchBm25")
