@@ -904,10 +904,6 @@ object TextIndex {
     pushed.join(broadcast(t.select("term")), Seq("term"), "left_semi")
   }
 
-  /** Remove the postings of deleted documents — churn-sized merge-on-
-    * read deletes keyed on doc_id (the caller supplies the deleted keys;
-    * the right-to-be-forgotten flow has them in hand). Stats shrink by
-    * the removed docs' contribution so avgdl stays honest. */
   /** The stats contribution (docs, total length) the given keys STILL
     * hold in the live postings — what [[pruneDeleted]] (and
     * [[graft.ops.Forget]]'s post-transaction catch-up) must shrink the
@@ -940,6 +936,10 @@ object TextIndex {
     }
   }
 
+  /** Remove the postings of deleted documents — churn-sized merge-on-
+    * read deletes keyed on doc_id (the caller supplies the deleted keys;
+    * the right-to-be-forgotten flow has them in hand). Stats shrink by
+    * the removed docs' contribution so avgdl stays honest. */
   def pruneDeleted(spark: SparkSession, index: Path, deletedKeys: DataFrame,
       idCol: String = "doc_id"): Long = Jobs.labeled(spark, "text pruneDeleted") {
     import spark.implicits._

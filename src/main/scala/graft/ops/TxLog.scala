@@ -83,7 +83,7 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   *    check on an already-parsed node — no extra I/O, ever;
   *  - a txn-flagged commit resolves its marker ONCE per JVM (the
   *    single `outcome` file is created create-exclusive, so it is
-  *    immutable and cacheable — [[resolveTxn]]);
+  *    immutable and cacheable — [[outcomeOf]]);
   *  - orphaned coordinators cannot wedge readers: a pending marker
   *    older than [[StaleClaimMs]] is aborted by the first reader to
   *    link the outcome file, the same lease discipline as stale
@@ -167,14 +167,18 @@ object TxLog {
 
   private val CheckpointEvery = 10
 
-  /** Live-set size above which a checkpoint SHARDS its file list:
-    * `checkpoint.json` keeps every scalar fold (protocol, batchMax,
-    * tags, constraints, txn outcomes) but carries `filesRef` — a list
-    * of `checkpoint.d/part-NNNNN.jsonl` shards, one AddFile JSON per
-    * line — instead of the inline `files` array. At 100 TB (~10^6
-    * AddFiles) a single-document checkpoint is a driver-memory and
-    * single-threaded-parse bottleneck on BOTH ends; shards stream out
-    * bounded and parse back in parallel. The first sharded checkpoint
+  /** Live-set size above which a checkpoint SHARDS its file list.
+    * A checkpoint is the log folded at its version ([[stateAt]]): the
+    * live files plus the scalar fields protocol, tags, constraints,
+    * batchMax and partitionCols, and the txn outcomes decided so far.
+    * A sharded `checkpoint.json` keeps every scalar but carries
+    * `filesRef` — a list of `checkpoint.d/part-NNNNN.jsonl` shards,
+    * one AddFile JSON per line — instead of the inline `files` array.
+    * At 100 TB (~10^6 AddFiles) a single-document checkpoint is a
+    * driver-memory and single-threaded-parse bottleneck on BOTH ends;
+    * shards stream out bounded and parse back in parallel. A checkpoint
+    * missing `batchMax` or `partitionCols` (both always written) predates
+    * those fields and never seeds the fold. The first sharded checkpoint
     * grows the table protocol with the `shardedCheckpoint`
     * reader+writer feature IN THE SAME COMMIT (tx26's gate machinery),
     * so a pre-upgrade engine refuses the table by name instead of
@@ -219,6 +223,10 @@ object TxLog {
       ++ (if (a.part.isEmpty) Map.empty[String, Object]
           else Map("part" -> (a.part.asJava: Object)))).asJava
 
+  /** A JSON string array as a Seq; empty when the field is absent. */
+  private def strings(n: com.fasterxml.jackson.databind.JsonNode): Seq[String] =
+    Option(n).fold(Seq.empty[String])(_.elements().asScala.map(_.asText).toSeq)
+
   private def nodeToAdd(n: com.fasterxml.jackson.databind.JsonNode): AddFile = {
     val cols = Option(n.get("cols")).map { cn =>
       cn.fields().asScala.map { e =>
@@ -246,37 +254,38 @@ object TxLog {
     * file is created exactly once (create-exclusive hardlink) and never
     * changes, so a resolved entry is immutable — after first resolution
     * a txn commit costs readers a map lookup, nothing more. Unlike the
-    * path-keyed node/snapshot/protocol caches this needs NO re-creation
-    * stamp guard: the marker path ends in a fresh `UUID.randomUUID()`
-    * per transaction, so the same key can never name two transactions
+    * path-keyed node and state caches this needs NO re-creation stamp
+    * guard: the marker path ends in a fresh `UUID.randomUUID()` per
+    * transaction, so the same key can never name two transactions
     * within (or across) JVM lifetimes. */
   private val txnOutcomes = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** Test hook: drop the per-JVM outcome cache so a spec can exercise
-    * cold resolution (e.g. after the marker-hosting table is dropped). */
-  private[ops] def forgetTxnOutcomesForTest(): Unit = txnOutcomes.clear()
+  /** Test hook: drop every per-JVM log cache (txn outcomes, resolved
+    * commits, folded states) so a spec can exercise cold resolution,
+    * e.g. after the marker-hosting table is dropped. */
+  private[ops] def forgetTxnOutcomesForTest(): Unit = {
+    txnOutcomes.clear(); nodeCache.clear(); stateCache.clear()
+  }
 
-  /** The transaction's outcome ("committed" | "aborted"), resolving the
-    * in-doubt window exactly like stale commit claims: a PENDING marker
-    * younger than [[StaleClaimMs]] is an in-flight coordinator — wait
-    * briefly; older (or vanished) means a crashed coordinator — any
-    * reader may abort it by create-exclusive'ing the single `outcome`
-    * file. Whoever links first decides; the loser reads the decision.
-    * The coordinator publishes every participant commit BEFORE trying
+  private def readUtf8(f: Path): String =
+    new String(Files.readAllBytes(f), java.nio.charset.StandardCharsets.UTF_8)
+
+  /** The transaction's outcome ("committed" | "aborted") from its
+    * marker, resolving the in-doubt window exactly like stale commit
+    * claims: a PENDING marker younger than [[StaleClaimMs]] is an
+    * in-flight coordinator — wait briefly; older (or vanished) means a
+    * crashed coordinator — any reader may abort it by
+    * create-exclusive'ing the single `outcome` file. Whoever links
+    * first decides; the loser reads the decision. The coordinator
+    * publishes every participant commit BEFORE trying
     * outcome=committed, so "aborted" can never void a partially-read
-    * transaction: either all participant commits are no-ops or none. */
+    * transaction: either all participant commits are no-ops or none.
+    * Readers go through [[outcomeOf]], which asks the marker last. */
   private def resolveTxn(markerDir: Path): String = {
-    val key = markerDir.toString
-    val cached = txnOutcomes.get(key)
-    if (cached != null) return cached
     val outcomeF = markerDir.resolve("outcome")
     val deadline = System.currentTimeMillis() + StaleClaimMs + 60_000L
     while (true) {
-      if (Files.exists(outcomeF)) {
-        val o = new String(Files.readAllBytes(outcomeF), java.nio.charset.StandardCharsets.UTF_8)
-        txnOutcomes.put(key, o)
-        return o
-      }
+      if (Files.exists(outcomeF)) return readUtf8(outcomeF)
       val pendingF = markerDir.resolve("pending")
       // exists-then-mtime is a TOCTOU pair: pending may vanish between
       // the two calls (coordinator cleanup / table drop) — a vanished
@@ -327,17 +336,34 @@ object TxLog {
     * in-flight sibling transaction. */
   private def peekOutcome(table: Path, markerDir: Path): Option[String] = {
     val localF = txnOutLocal(table, markerDir.getFileName.toString)
+    val of = markerDir.resolve("outcome")
     try {
-      if (Files.exists(localF))
-        Some(new String(Files.readAllBytes(localF), java.nio.charset.StandardCharsets.UTF_8))
-      else {
-        val of = markerDir.resolve("outcome")
-        if (Files.exists(of))
-          Some(new String(Files.readAllBytes(of), java.nio.charset.StandardCharsets.UTF_8))
-        else None
-      }
+      if (Files.exists(localF)) Some(readUtf8(localF))
+      else if (Files.exists(of)) Some(readUtf8(of))
+      else None
     } catch { case scala.util.control.NonFatal(_) => None }
   }
+
+  /** Commit `v` exactly as published — no txn resolution. */
+  private def rawCommit(table: Path, v: Long): com.fasterxml.jackson.databind.JsonNode =
+    mapper.readTree(Files.readAllBytes(versionDir(table, v).resolve("commit.json")))
+
+  /** The newest checkpoint among `vs` at or below `v` that `usable`
+    * accepts, with its parsed `checkpoint.json` — the one place the log
+    * looks for and reads a checkpoint manifest. */
+  private def newestCheckpoint(table: Path, vs: Vector[Long], v: Long,
+      usable: com.fasterxml.jackson.databind.JsonNode => Boolean = _ => true)
+      : Option[(Long, com.fasterxml.jackson.databind.JsonNode)] =
+    vs.reverseIterator
+      .filter(cv => cv <= v && Files.exists(versionDir(table, cv).resolve("checkpoint.json")))
+      .map(cv => cv -> mapper.readTree(
+        Files.readAllBytes(versionDir(table, cv).resolve("checkpoint.json"))))
+      .find(c => usable(c._2))
+
+  /** A checkpoint's folded txn outcomes, txnId -> outcome. */
+  private def foldedOutcomes(ck: com.fasterxml.jackson.databind.JsonNode): Map[String, String] =
+    Option(ck.get("txnOutcomes")).fold(Map.empty[String, String])(
+      _.fields().asScala.map(e => e.getKey -> e.getValue.asText).toMap)
 
   /** Folded txn outcomes at or below `v` (the batch-id-watermark
     * precedent applied to `_txnout` growth): the newest checkpoint's
@@ -350,31 +376,15 @@ object TxLog {
     * durable state and [[vacuum]] reclaims it; time travel to the
     * pre-checkpoint txn commit stays sibling-independent through the
     * folded record. */
-  private def txnOutcomesUpTo(table: Path, v: Long): (Map[String, String], Vector[String]) = {
-    val vs = versions(table).filter(_ <= v)
-    val ckpt = vs.reverse.find(cv =>
-      Files.exists(versionDir(table, cv).resolve("checkpoint.json")))
-    val (baseMap, basePending, from) = ckpt match {
-      case Some(cv) =>
-        val node = mapper.readTree(
-          Files.readAllBytes(versionDir(table, cv).resolve("checkpoint.json")))
-        val m = Option(node.get("txnOutcomes")).map { n =>
-          val b = Map.newBuilder[String, String]
-          n.fields().asScala.foreach(e => b += (e.getKey -> e.getValue.asText))
-          b.result()
-        }.getOrElse(Map.empty[String, String])
-        val p = Option(node.get("txnPending"))
-          .map(_.elements().asScala.map(_.asText).toVector)
-          .getOrElse(Vector.empty[String])
-        (m, p, cv + 1)
-      case None => (Map.empty[String, String], Vector.empty[String], 0L)
-    }
-    val fresh = vs.filter(_ >= from).flatMap { cv =>
-      val node = mapper.readTree(
-        Files.readAllBytes(versionDir(table, cv).resolve("commit.json")))
-      Option(node.get("txn")).map(_.asText)
-    }
-    var resolved = baseMap
+  private def txnOutcomesUpTo(table: Path, vs: Vector[Long],
+      v: Long): (Map[String, String], Vector[String]) = {
+    val ck = newestCheckpoint(table, vs, v)
+    val basePending = ck.flatMap(c => Option(c._2.get("txnPending")))
+      .fold(Vector.empty[String])(_.elements().asScala.map(_.asText).toVector)
+    val from = ck.fold(0L)(_._1 + 1)
+    val fresh = vs.filter(cv => cv >= from && cv <= v)
+      .flatMap(cv => Option(rawCommit(table, cv).get("txn")).map(_.asText))
+    var resolved = ck.fold(Map.empty[String, String])(c => foldedOutcomes(c._2))
     val stillPending = Vector.newBuilder[String]
     (basePending ++ fresh).distinct.foreach { mp =>
       val markerDir = java.nio.file.Paths.get(mp)
@@ -386,47 +396,37 @@ object TxLog {
     (resolved, stillPending.result())
   }
 
-  /** Per-JVM cache of parsed checkpoint folds, keyed by the checkpoint
-    * file identity — a fold is immutable once written. */
-  private val foldCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[String, String]]()
-
-  /** `txnId`'s outcome from this table's NEWEST checkpoint fold, if that
-    * checkpoint folded it — the resolution tier between the (possibly
-    * vacuumed) `_txnout` replica and the (possibly dropped) sibling
-    * marker table. */
-  private def foldedOutcome(table: Path, txnId: String): Option[String] = {
-    val ckv = versions(table).reverse.find(cv =>
-      Files.exists(versionDir(table, cv).resolve("checkpoint.json")))
-    ckv.flatMap { cv =>
-      val ckFile = versionDir(table, cv).resolve("checkpoint.json")
-      val key = ckFile.toString
-      var m = foldCache.get(key)
-      if (m == null) {
-        val node = mapper.readTree(Files.readAllBytes(ckFile))
-        val b = Map.newBuilder[String, String]
-        Option(node.get("txnOutcomes")).foreach(
-          _.fields().asScala.foreach(e => b += (e.getKey -> e.getValue.asText)))
-        m = b.result()
-        foldCache.put(key, m)
-      }
-      m.get(txnId)
-    }
+  /** The outcome of the transaction at `markerDir`, as `table` resolves
+    * it: (1) the once-per-JVM cache, (2) THIS table's own `_txnout`
+    * replica, (3) its newest checkpoint's fold — the record left when
+    * vacuum reclaimed the replica — and only then (4) the marker
+    * directory, whose answer is replicated into (2). So the sibling
+    * table hosting the marker is consulted at most once per table per
+    * transaction, and never once a replica or fold records it (a
+    * dropped sibling must not turn a committed transfer into an abort).
+    * Every reader of txn commits resolves through here. */
+  private def outcomeOf(table: Path, markerDir: Path): String = {
+    val key = markerDir.toString
+    val cached = txnOutcomes.get(key)
+    if (cached != null) return cached
+    val txnId = markerDir.getFileName.toString
+    val localF = txnOutLocal(table, txnId)
+    val o =
+      if (Files.exists(localF)) readUtf8(localF)
+      else newestCheckpoint(table, versions(table), Long.MaxValue)
+        .flatMap(c => foldedOutcomes(c._2).get(txnId))
+        .getOrElse {
+          val r = resolveTxn(markerDir)
+          replicateOutcome(table, txnId, r)
+          r
+        }
+    txnOutcomes.put(key, o)
+    o
   }
 
-  /** Read commit `v` with multi-table-transaction resolution applied: a
-    * commit carrying a `txn` marker reference is effective only once its
-    * transaction committed; an aborted one reads as an empty no-op
-    * (op "txn-aborted" — the multi-table sibling of "abandoned").
-    * Ordinary commits pay a single null field check, nothing else —
-    * the reader tax the design doc above requires to be zero.
-    * Resolution order: (1) once-per-JVM cache, (2) THIS table's own
-    * `_txnout` replica, (3) the marker directory — and a marker-resolved
-    * outcome is replicated into (2) so the sibling-table dependency is
-    * paid at most once per table per transaction. */
   // ---- per-JVM resolved-commit cache (optimization r16, guide §5 "the
-  // driver should do almost no data work"): every snapshot replay,
-  // schema resolution and protocol gate re-reads + re-parses the same
+  // driver should do almost no data work"): every state replay, schema
+  // resolution and history scan re-reads + re-parses the same
   // commit.json trees — on a lifecycle gate that is hundreds of driver-
   // side parses per query. A PUBLISHED commit is immutable
   // (create-exclusive hard link) and a resolved txn outcome is durable,
@@ -441,50 +441,27 @@ object TxLog {
     (a.size(), a.lastModifiedTime().toMillis)
   }
 
+  /** Read commit `v` with multi-table-transaction resolution applied: a
+    * commit carrying a `txn` marker reference is effective only once its
+    * transaction committed ([[outcomeOf]]); an aborted one reads as an
+    * empty no-op (op "txn-aborted" — the multi-table sibling of
+    * "abandoned"). Ordinary commits pay a single null field check,
+    * nothing else — the reader tax the design doc above requires to be
+    * zero. */
   private def commitNode(table: Path, v: Long): com.fasterxml.jackson.databind.JsonNode = {
-    val f = versionDir(table, v).resolve("commit.json")
     val key = table.toAbsolutePath.toString + "#" + v
-    val stamp = commitStamp(f)
+    val stamp = commitStamp(versionDir(table, v).resolve("commit.json"))
     val hit = nodeCache.get(key)
     if (hit != null && (hit._1, hit._2) == stamp) return hit._3
-    val resolved = commitNode0(f)
+    val node = rawCommit(table, v)
+    val resolved = Option(node.get("txn")) match {
+      case Some(m) if outcomeOf(table, java.nio.file.Paths.get(m.asText)) != "committed" =>
+        mapper.readTree(commitBytes(v, "txn-aborted", Nil, Nil, None, None, Map.empty))
+      case _ => node
+    }
     if (nodeCache.size > 200000) nodeCache.clear() // runaway backstop
     nodeCache.put(key, (stamp._1, stamp._2, resolved))
     resolved
-  }
-
-  private def commitNode0(f: Path): com.fasterxml.jackson.databind.JsonNode = {
-    val table = f.getParent.getParent.getParent
-    val v = f.getParent.getFileName.toString.drop(1).toLong
-    val node = mapper.readTree(Files.readAllBytes(f))
-    Option(node.get("txn")) match {
-      case None => node
-      case Some(m) =>
-        val markerDir = java.nio.file.Paths.get(m.asText)
-        val txnId = markerDir.getFileName.toString
-        val cached = txnOutcomes.get(markerDir.toString)
-        val outcome =
-          if (cached != null) cached
-          else {
-            val localF = txnOutLocal(table, txnId)
-            val o =
-              if (Files.exists(localF))
-                new String(Files.readAllBytes(localF), java.nio.charset.StandardCharsets.UTF_8)
-              else foldedOutcome(table, txnId) match {
-                // replica vacuumed after the checkpoint folded it: the
-                // fold IS the durable sibling-independent record
-                case Some(f) => f
-                case None =>
-                  val r = resolveTxn(markerDir)
-                  replicateOutcome(table, txnId, r)
-                  r
-              }
-            txnOutcomes.put(markerDir.toString, o)
-            o
-          }
-        if (outcome == "committed") node
-        else mapper.readTree(commitBytes(v, "txn-aborted", Nil, Nil, None, None, Map.empty))
-    }
   }
 
   /** The files ADDED by commit `v` — log metadata only, one commit
@@ -547,12 +524,8 @@ object TxLog {
 
   private def protocolOfNode(
       n: com.fasterxml.jackson.databind.JsonNode): Option[Protocol] =
-    Option(n.get("protocol")).map { p =>
-      def names(field: String): Set[String] =
-        Option(p.get(field)).map(_.elements().asScala.map(_.asText).toSet)
-          .getOrElse(Set.empty)
-      Protocol(names("readerFeatures"), names("writerFeatures"))
-    }
+    Option(n.get("protocol")).map(p =>
+      Protocol(strings(p.get("readerFeatures")).toSet, strings(p.get("writerFeatures")).toSet))
 
   private def protocolToNode(p: Protocol): Object =
     Map[String, Object](
@@ -561,49 +534,12 @@ object TxLog {
 
   /** Protocol in force AT `version` (latest when None) — per-version,
     * so time travel to a pre-upgrade snapshot works under the old
-    * contract. Newest checkpoint's fold + the commits after it; a table
-    * with no protocol action (every pre-upgrade log) is Empty and
-    * readable by anything. */
-  def protocolAt(table: Path, version: Option[Long] = None): Protocol = {
-    val vs = versions(table)
-    if (vs.isEmpty) return Protocol.Empty
-    val target = version.getOrElse(vs.last)
-    // per-JVM incremental cache: the writer gate runs on EVERY commit,
-    // and a published commit is immutable, so a cached (version,
-    // protocol) only ever needs the commits SINCE it replayed on top —
-    // the steady-state cost is one commit read, not a checkpoint window.
-    // STAMP-GUARDED (optimization r17, VERDICT r16 item 7): the cached
-    // version's commit stamp must still match, or a table re-created at
-    // the same path would replay on a foreign protocol base.
-    val key = table.toAbsolutePath.toString
-    val cached = protocolCache.get(key)
-    if (cached != null && cached._1 <= target && vs.contains(cached._1) &&
-        versionStamp(table, cached._1) == cached._2) {
-      var p = cached._3
-      vs.filter(v => v > cached._1 && v <= target).foreach { v =>
-        protocolOfNode(commitNode(table, v)).foreach(np => p = np)
-      }
-      if (target == vs.last)
-        protocolCache.put(key, (target, versionStamp(table, target), p))
-      return p
-    }
-    val ckpt = vs.filter(_ <= target).reverse
-      .find(v => Files.exists(versionDir(table, v).resolve("checkpoint.json")))
-    var p = ckpt.flatMap { v =>
-      protocolOfNode(mapper.readTree(Files.readAllBytes(
-        versionDir(table, v).resolve("checkpoint.json"))))
-    }.getOrElse(Protocol.Empty)
-    val from = ckpt.map(_ + 1).getOrElse(0L)
-    vs.filter(v => v >= from && v <= target).foreach { v =>
-      protocolOfNode(commitNode(table, v)).foreach(np => p = np) // writers only grow it
-    }
-    if (target == vs.last)
-      protocolCache.put(key, (target, versionStamp(table, target), p))
-    p
-  }
-
-  private val protocolCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, (Long, Long), Protocol)]()
+    * contract; a table with no protocol action (every pre-upgrade log)
+    * is Empty and readable by anything. A field of the log fold
+    * ([[stateAt]]), with no reader gate: the reader and writer gates
+    * read it, and each refuses an unknown feature by name. */
+  def protocolAt(table: Path, version: Option[Long] = None): Protocol =
+    stateOf(table, version).protocol
 
   /** Refuse-by-name reader gate, called on every snapshot replay. */
   private def requireReadable(table: Path, version: Long, p: Protocol): Unit = {
@@ -664,16 +600,97 @@ object TxLog {
         out.toVector.flatten
     }
 
-  /** Replay the log up to `version` (latest when None). Starts from the
-    * newest checkpoint at or below the target, then applies at most the
-    * commits after it — O(checkpoint interval) commit reads. */
-  // one snapshot per table path (optimization r16): replay is pure
-  // metadata over immutable published commits, so the last-resolved
-  // (version, Snapshot) per table is reusable until the table advances;
-  // the target commit's (size, mtime) stamp guards same-path
-  // re-creation exactly like the node cache above.
-  private val snapCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, (Long, Long), Snapshot)]()
+  // ------------------------------------------------------------- log fold
+
+  /** The log folded at `snapshot.version`: the live files plus every
+    * scalar a checkpoint carries. Snapshot, protocol, tags, constraints,
+    * the streaming batch watermark and the partitioning are all fields
+    * of this one fold ([[stateAt]]); the public readers are accessors. */
+  private final case class State(snapshot: Snapshot, protocol: Protocol,
+      tags: Map[String, Long], constraints: Map[String, String],
+      batchMax: Option[Long], partitionCols: Seq[String])
+
+  private val EmptyState =
+    State(Snapshot(-1L, Vector.empty), Protocol.Empty, Map.empty, Map.empty, None, Nil)
+
+  /** One folded state per table path — the newest resolved (an older
+    * time-travel read never displaces it) — with its version's commit
+    * (size, mtime) stamp. It is the BASE of the next fold: a later
+    * version replays only the commits since, so a read after a commit
+    * costs one commit read, not a checkpoint parse. A stamp mismatch (a
+    * table deleted and re-created at the same path) or a vanished
+    * version refolds from a checkpoint. */
+  private val stateCache = new java.util.concurrent.ConcurrentHashMap[
+    String, ((Long, Long), State)]()
+
+  /** The state after every committed version in `vs` at or below `v`
+    * (EmptyState when there is none). The seed is the cached state when
+    * its stamp matches and it is not newer; else the newest checkpoint
+    * that records `batchMax` and `partitionCols` (in an older one their
+    * absence would read as "no batch committed" / "unpartitioned", so
+    * such a checkpoint is skipped for the next older one or v0). The
+    * commits after the seed replay through [[commitNode]], so the fold
+    * is txn-resolved, and a fresh and an incremental fold apply the same
+    * commits in the same order: identical `files`, same order. */
+  private def stateAt(table: Path, vs: Vector[Long], v: Long): State = {
+    val upTo = vs.filter(_ <= v)
+    if (upTo.isEmpty) return EmptyState
+    val target = upTo.last
+    val key = table.toAbsolutePath.toString
+    val cached = Option(stateCache.get(key)).collect {
+      case (stamp, s) if vs.contains(s.snapshot.version) &&
+        versionStamp(table, s.snapshot.version) == stamp => s
+    }
+    val base = cached.filter(_.snapshot.version <= target)
+    if (base.exists(_.snapshot.version == target)) return base.get
+    val seed = base.getOrElse(newestCheckpoint(table, vs, target,
+        ck => ck.has("batchMax") && ck.has("partitionCols")) match {
+      case Some((cv, ck)) =>
+        State(Snapshot(cv, checkpointFiles(table, cv, ck)),
+          protocolOfNode(ck).getOrElse(Protocol.Empty),
+          Option(ck.get("tags")).fold(Map.empty[String, Long])(
+            _.fields().asScala.map(e => e.getKey -> e.getValue.asLong).toMap),
+          Option(ck.get("constraints")).fold(Map.empty[String, String])(
+            _.fields().asScala.map(e => e.getKey -> e.getValue.asText).toMap),
+          Some(ck.get("batchMax").asLong).filter(_ >= 0L), strings(ck.get("partitionCols")))
+      case None => EmptyState
+    })
+    // the live map is built only once a replayed commit touches files
+    var live: scala.collection.mutable.LinkedHashMap[String, AddFile] = null
+    var s = seed
+    upTo.filter(_ > seed.snapshot.version).foreach { cv =>
+      val n = commitNode(table, cv)
+      val (removes, adds) = (n.get("removes"), n.get("adds"))
+      if (!removes.isEmpty || !adds.isEmpty) {
+        if (live == null) live = scala.collection.mutable.LinkedHashMap.from(
+          seed.snapshot.files.iterator.map(a => a.path -> a))
+        removes.elements().asScala.foreach(r => live -= r.asText)
+        adds.elements().asScala.foreach { f => val a = nodeToAdd(f); live += (a.path -> a) }
+      }
+      s = State(s.snapshot, protocolOfNode(n).getOrElse(s.protocol), // writers only grow it
+        Option(n.get("tagName")).fold(s.tags)(t =>
+          s.tags + (t.asText -> n.get("tagVersion").asLong)),
+        Option(n.get("constraintName")).fold(s.constraints)(c =>
+          s.constraints + (c.asText -> n.get("constraintExpr").asText)),
+        Option(n.get("batchId")).map(_.asLong).fold(s.batchMax)(b =>
+          Some(s.batchMax.fold(b)(math.max(_, b)))),
+        n.get("op").asText match {
+          // the create-time declaration, then Iceberg-style evolution
+          case "create" if cv == 0L => strings(n.get("partitionCols"))
+          case "set-partitioning" => strings(n.get("partitionCols"))
+          case _ => s.partitionCols
+        })
+    }
+    val out = s.copy(snapshot =
+      Snapshot(target, if (live == null) seed.snapshot.files else live.values.toVector))
+    if (!cached.exists(_.snapshot.version > target))
+      stateCache.put(key, (versionStamp(table, target), out))
+    out
+  }
+
+  /** [[stateAt]] at `version` (latest when None). */
+  private def stateOf(table: Path, version: Option[Long]): State =
+    stateAt(table, versions(table), version.getOrElse(Long.MaxValue))
 
   // ---- cached tiny-metadata reads (optimization r16): index bindings
   // (1-row _meta tables) and watermarks (file-name lists) are read at
@@ -683,7 +700,7 @@ object TxLog {
   // only the no-op/refresh calls (the common case: streaming drains,
   // idempotent CALL re-issues, maintain passes) skip the job.
   // STAMP-GUARDED (optimization r17, VERDICT r16 item 7): like
-  // nodeCache/snapCache, the latest commit's (size, mtime) rides along
+  // nodeCache/stateCache, the latest commit's (size, mtime) rides along
   // so a table deleted and re-created at the same path with the same
   // latest version (spec fixtures, clone targets) can never serve a
   // stale row/set — one stat() instead of a Spark job.
@@ -735,50 +752,18 @@ object TxLog {
     strSetCache.put(table.toAbsolutePath.toString + "#" + colName,
       (v, versionStamp(table, v), s)): Unit
 
+  /** The live files at `version` (latest when None): the log fold
+    * ([[stateAt]]) behind the refuse-by-name reader gate. */
   def snapshotAt(table: Path, version: Option[Long] = None): Snapshot = {
     val vs = versions(table)
     require(vs.nonEmpty, s"no committed versions in $table")
     val target = version.getOrElse(vs.last)
     require(vs.contains(target), s"version $target not in log (have ${vs.mkString(",")})")
-    val key = table.toAbsolutePath.toString
-    val stamp = commitStamp(versionDir(table, target).resolve("commit.json"))
-    val hit = snapCache.get(key)
-    if (hit != null && hit._1 == target && hit._2 == stamp) return hit._3
-    val snap = snapshotAt0(table, vs, target)
-    snapCache.put(key, (target, stamp, snap))
-    snap
+    val s = stateAt(table, vs, target)
+    requireReadable(table, target, s.protocol)
+    s.snapshot
   }
 
-  private def snapshotAt0(table: Path, vs: Vector[Long], target: Long): Snapshot = {
-    val ckpt = vs.filter(_ <= target).reverse
-      .find(v => Files.exists(versionDir(table, v).resolve("checkpoint.json")))
-    var live = scala.collection.mutable.LinkedHashMap.empty[String, AddFile]
-    // the protocol gate rides the SAME replay — the nodes are already
-    // in hand, so refusing an unsupported table costs no extra IO
-    var proto = Protocol.Empty
-    ckpt.foreach { v =>
-      val node = mapper.readTree(Files.readAllBytes(versionDir(table, v).resolve("checkpoint.json")))
-      checkpointFiles(table, v, node).foreach(a => live += (a.path -> a))
-      protocolOfNode(node).foreach(proto = _)
-    }
-    val from = ckpt.map(_ + 1).getOrElse(0L)
-    vs.filter(v => v >= from && v <= target).foreach { v =>
-      val node = commitNode(table, v) // txn-resolved: an aborted txn replays as a no-op
-      node.get("removes").elements().asScala.foreach(r => live -= r.asText)
-      node.get("adds").elements().asScala.foreach { f =>
-        val a = nodeToAdd(f); live += (a.path -> a)
-      }
-      protocolOfNode(node).foreach(proto = _)
-    }
-    requireReadable(table, target, proto)
-    Snapshot(target, live.values.toVector)
-  }
-
-  /** Claim exactly version `v`; false if someone else got there first.
-    * `batchId` tags the commit with a streaming batch id (see
-    * [[streamingAppend]]); `schema` records the table schema as of this
-    * commit (the metadata the reads resolve against — see
-    * [[tableSchema]]). */
   /** Publish `bytes` as `target` with CREATE-EXCLUSIVE semantics: the
     * content is fully written to a temp file first, then hard-LINKED
     * into place — link(2) is atomic and FAILS if the target exists,
@@ -818,7 +803,7 @@ object TxLog {
       adds: Seq[AddFile], removes: Seq[String], batchId: Option[Long],
       schema: Option[StructType], extra: Map[String, Object] = Map.empty,
       // a multi-table coordinator publishes with checkpoint=false: the
-      // checkpoint's snapshotAt would block on its OWN pending marker
+      // checkpoint's fold would block on its OWN pending marker
       checkpoint: Boolean = true): Boolean = {
     // AUTO-DECLARATION: a commit that first USES a gated capability
     // grows the protocol in the SAME commit (no extra version — version
@@ -826,13 +811,10 @@ object TxLog {
     // add nothing.
     // sharding decision made BEFORE publish so the protocol feature
     // lands in the same commit the sharded checkpoint belongs to; the
-    // projected live count replays the prior snapshot (checkpoint
-    // commits only — every 10th — so the extra replay amortizes)
+    // projected live count reads the prior state (the cached head)
     val willCheckpoint = checkpoint && v % CheckpointEvery == 0 && v > 0
     val willShard = willCheckpoint && {
-      val prior = versions(table).filter(_ < v).lastOption
-        .map(pv => snapshotAt(table, Some(pv)).files.map(_.path).toSet)
-        .getOrElse(Set.empty)
+      val prior = stateAt(table, versions(table), v - 1).snapshot.files.map(_.path).toSet
       (prior -- removes ++ adds.map(_.path)).size > CheckpointInlineMax
     }
     val implied = (if (adds.exists(_.dv.isDefined)) Set("deletionVectors") else Set.empty[String]) ++
@@ -850,7 +832,9 @@ object TxLog {
     val ok = publishExclusive(vd.resolve("commit.json"),
       commitBytes(v, op, adds, removes, batchId, schema, extraP))
     if (ok && willCheckpoint) {
-      val snap = snapshotAt(table, Some(v))
+      val vs = versions(table)
+      val st = stateAt(table, vs, v)
+      val snap = st.snapshot
       // file list: inline for small tables, sharded JSONL above the
       // threshold (shards written BEFORE the manifest — a crash in
       // between leaves no checkpoint, and replay-from-commits is
@@ -872,79 +856,34 @@ object TxLog {
           Map("filesRef" -> (refs.asJava: Object),
             "filesCount" -> (java.lang.Long.valueOf(snap.files.size): Object))
         }
-      // the checkpoint also folds the streaming BATCH-ID WATERMARK
-      // (Delta's txn appId/version pattern): batch ids are monotone per
-      // query, so the max at checkpoint time lets restart dedup read
-      // <= CheckpointEvery commits instead of the whole history
-      // ...and the accumulated CHECK constraints, so constraint replay
-      // (like state replay) reads <= CheckpointEvery commits
-      val cons = constraintsUpTo(table, v)
-      // ...and the tag refs, same replay-bound discipline
-      val tgs = tags(table, Some(v))
-      // batchMax is ALWAYS written (-1 = "no batch commits below"), so
-      // an absent field unambiguously means a pre-upgrade checkpoint
-      // and readers know to fall back to scanning the commits below it
-      // ...and the RESOLVED multi-table txn outcomes (with the still-
-      // pending markers carried forward for the next checkpoint to
-      // retry), making pre-checkpoint `_txnout` replicas vacuumable
-      val (txo, txp) = txnOutcomesUpTo(table, v)
+      // the scalar fields of the fold, so every one of them replays at
+      // most CheckpointEvery commits. batchMax (Delta's txn
+      // appId/version watermark; -1 = no batch commits below) and
+      // partitionCols are ALWAYS written: their absence marks a
+      // checkpoint that predates them, which the fold never seeds from.
+      // The RESOLVED multi-table txn outcomes (with the still-pending
+      // markers carried forward for the next checkpoint to retry) make
+      // pre-checkpoint `_txnout` replicas vacuumable.
+      val (txo, txp) = txnOutcomesUpTo(table, vs, v)
       val ck = (fileEntries
         ++ Map[String, Object]("version" -> java.lang.Long.valueOf(v),
-        "batchMax" -> java.lang.Long.valueOf(maxBatchIdUpTo(table, v).getOrElse(-1L)),
-        // ...and the partitioning in force (partition evolution replay
-        // bound; ALWAYS written — absent = pre-upgrade checkpoint)
-        "partitionCols" -> (partitionColsOf(table, Some(v)).asJava: Object))
-        ++ (if (cons.isEmpty) Map.empty[String, Object]
-            else Map("constraints" -> (cons.asJava: Object)))
-        ++ (if (tgs.isEmpty) Map.empty[String, Object]
-            else Map("tags" -> (tgs.view.mapValues(java.lang.Long.valueOf(_): Object)
+        "batchMax" -> java.lang.Long.valueOf(st.batchMax.getOrElse(-1L)),
+        "partitionCols" -> (st.partitionCols.asJava: Object))
+        ++ (if (st.constraints.isEmpty) Map.empty[String, Object]
+            else Map("constraints" -> (st.constraints.asJava: Object)))
+        ++ (if (st.tags.isEmpty) Map.empty[String, Object]
+            else Map("tags" -> (st.tags.view.mapValues(java.lang.Long.valueOf(_): Object)
               .toMap.asJava: Object)))
         ++ (if (txo.isEmpty) Map.empty[String, Object]
             else Map("txnOutcomes" -> (txo.asJava: Object)))
         ++ (if (txp.isEmpty) Map.empty[String, Object]
             else Map("txnPending" -> (txp.asJava: Object)))
-        // ...and the protocol in force, so feature gates survive
-        // checkpoint-bounded replay (absent = Empty, the pre-upgrade shape)
-        ++ {
-          val p = protocolAt(table, Some(v))
-          if (p.isEmpty) Map.empty[String, Object]
-          else Map("protocol" -> protocolToNode(p))
-        }).asJava
+        // absent protocol = Empty, the pre-upgrade shape
+        ++ (if (st.protocol.isEmpty) Map.empty[String, Object]
+            else Map("protocol" -> protocolToNode(st.protocol)))).asJava
       writeJsonAtomic(vd.resolve("checkpoint.json"), mapper.writeValueAsBytes(ck))
     }
     ok
-  }
-
-  /** Max committed batch id at or below `v`: newest checkpoint's
-    * watermark + the commits after it — O(checkpoint interval) reads.
-    * A checkpoint WITHOUT a batchMax field predates the watermark
-    * (pre-upgrade table); trusting it as "no batches" would let
-    * [[isBatchCommitted]] report a committed batch as uncommitted and
-    * re-commit a redelivery, so such checkpoints fall back to scanning
-    * every commit at/below them. New checkpoints always record the
-    * field (-1 sentinel = genuinely no batch commits below). */
-  private def maxBatchIdUpTo(table: Path, v: Long): Option[Long] = {
-    val vs = versions(table).filter(_ <= v)
-    val ckpt = vs.reverse.find(cv =>
-      Files.exists(versionDir(table, cv).resolve("checkpoint.json")))
-    val ckptField = ckpt.flatMap { cv =>
-      val node = mapper.readTree(
-        Files.readAllBytes(versionDir(table, cv).resolve("checkpoint.json")))
-      Option(node.get("batchMax")).map(_.asLong)
-    }
-    val fromCkpt = ckptField.filter(_ >= 0L)
-    // pre-upgrade checkpoint (field absent): no trustworthy watermark —
-    // scan the full history below it, exactly the old committedBatchIds path
-    val from = if (ckpt.isDefined && ckptField.isEmpty) 0L
-      else ckpt.map(_ + 1).getOrElse(0L)
-    val tail = vs.filter(_ >= from).flatMap { cv =>
-      // txn-resolved: an ABORTED multi-table transaction's batch tag
-      // must not advance the watermark (the batch would be skipped on
-      // redelivery and silently lost); ordinary commits pay a null check
-      val node = commitNode(table, cv)
-      Option(node.get("batchId")).map(_.asLong)
-    }
-    (fromCkpt.toVector ++ tail).maxOption
   }
 
   /** Resolve an orphan claim by publishing an EMPTY no-op commit into
@@ -954,6 +893,11 @@ object TxLog {
   private def publishAbandoned(table: Path, vd: Path, v: Long): Unit =
     publishCommit(table, vd, v, "abandoned", Nil, Nil, None, None): Unit
 
+  /** Claim exactly version `v`; false if someone else got there first.
+    * `batchId` tags the commit with a streaming batch id (see
+    * [[streamingAppend]]); `schema` records the table schema as of this
+    * commit (the metadata the reads resolve against — see
+    * [[tableSchema]]). */
   def tryCommit(table: Path, v: Long, op: String,
       adds: Seq[AddFile], removes: Seq[String], batchId: Option[Long] = None,
       schema: Option[StructType] = None,
@@ -1144,11 +1088,10 @@ object TxLog {
       val won = publishExclusive(markerDir.resolve("outcome"),
         "committed".getBytes(java.nio.charset.StandardCharsets.UTF_8))
       val outcome = if (won) "committed"
-        else new String(Files.readAllBytes(markerDir.resolve("outcome")),
-          java.nio.charset.StandardCharsets.UTF_8)
+        else readUtf8(markerDir.resolve("outcome"))
       if (outcome != "committed") throw new IllegalStateException(
         "transact: aborted by a lease-expiry resolver before the decision landed")
-      txnOutcomes.put(markerDir.toString, "committed")
+      txnOutcomes.put(markerRef, "committed")
       // replicate the decision into EVERY participant's own log before
       // returning: a transaction that completed can then never be
       // retroactively voided by the marker-hosting table being dropped,
@@ -1166,8 +1109,7 @@ object TxLog {
         if (markerDir != null) {
           // replicate whatever the marker now says (ours or a racing
           // resolver's) so abort resolution is also sibling-independent
-          val decided = try new String(Files.readAllBytes(markerDir.resolve("outcome")),
-            java.nio.charset.StandardCharsets.UTF_8)
+          val decided = try readUtf8(markerDir.resolve("outcome"))
             catch { case _: java.io.IOException => null }
           if (decided != null)
             claimed.foreach(x => replicateOutcome(x._1.table,
@@ -1406,62 +1348,15 @@ object TxLog {
         "tagVersion" -> (java.lang.Long.valueOf(version): Object)))(_ => true)
   }
 
-  /** The tags in force at `version` (latest when None): checkpoint map
-    * + the set-tag commits after it — <= CheckpointEvery reads. */
-  def tags(table: Path, version: Option[Long] = None): Map[String, Long] = {
-    val vs = versions(table)
-    if (vs.isEmpty) return Map.empty
-    val target = version.getOrElse(vs.last)
-    val upTo = vs.filter(_ <= target)
-    val ckpt = upTo.reverse.find(v =>
-      Files.exists(versionDir(table, v).resolve("checkpoint.json")))
-    val seed = ckpt.map { v =>
-      val node = mapper.readTree(
-        Files.readAllBytes(versionDir(table, v).resolve("checkpoint.json")))
-      Option(node.get("tags")).map { c =>
-        c.fields().asScala.map(e => e.getKey -> e.getValue.asLong).toMap
-      }.getOrElse(Map.empty[String, Long])
-    }.getOrElse(Map.empty[String, Long])
-    val from = ckpt.map(_ + 1).getOrElse(0L)
-    upTo.filter(_ >= from).foldLeft(seed) { (acc, v) =>
-      val node = mapper.readTree(
-        Files.readAllBytes(versionDir(table, v).resolve("commit.json")))
-      Option(node.get("tagName")) match {
-        case Some(n) => acc + (n.asText -> node.get("tagVersion").asLong)
-        case None => acc
-      }
-    }
-  }
+  /** The tags in force at `version` (latest when None): a field of the
+    * log fold ([[stateAt]]). */
+  def tags(table: Path, version: Option[Long] = None): Map[String, Long] =
+    stateOf(table, version).tags
 
-  /** The constraints in force at `version` (latest when None):
-    * checkpoint map + the set-constraint commits after it — the same
-    * <= CheckpointEvery replay bound as snapshot state. */
-  def constraints(table: Path, version: Option[Long] = None): Map[String, String] = {
-    val vs = versions(table)
-    if (vs.isEmpty) return Map.empty
-    constraintsUpTo(table, version.getOrElse(vs.last))
-  }
-
-  private def constraintsUpTo(table: Path, target: Long): Map[String, String] = {
-    val vs = versions(table).filter(_ <= target)
-    val ckpt = vs.reverse.find(v =>
-      Files.exists(versionDir(table, v).resolve("checkpoint.json")))
-    val seed = ckpt.map { v =>
-      val node = mapper.readTree(Files.readAllBytes(
-        versionDir(table, v).resolve("checkpoint.json")))
-      Option(node.get("constraints")).map { c =>
-        c.fields().asScala.map(e => e.getKey -> e.getValue.asText).toMap
-      }.getOrElse(Map.empty[String, String])
-    }.getOrElse(Map.empty[String, String])
-    val from = ckpt.map(_ + 1).getOrElse(0L)
-    vs.filter(_ >= from).foldLeft(seed) { (acc, v) =>
-      val node = mapper.readTree(Files.readAllBytes(versionDir(table, v).resolve("commit.json")))
-      Option(node.get("constraintName")) match {
-        case Some(n) => acc + (n.asText -> node.get("constraintExpr").asText)
-        case None => acc
-      }
-    }
-  }
+  /** The constraints in force at `version` (latest when None): a field
+    * of the log fold ([[stateAt]]). */
+  def constraints(table: Path, version: Option[Long] = None): Map[String, String] =
+    stateOf(table, version).constraints
 
   /** Validate a write's NEW rows against the table's constraints — ONE
     * combined filter pass over the WRITE-sized delta (never the table),
@@ -1846,44 +1741,11 @@ object TxLog {
   }
 
   /** The partition columns in force at `version` (latest when None):
-    * the newest `set-partitioning` commit wins, seeded from the
-    * checkpoint's folded field, falling back to the [[create]]-time
-    * declaration — the Iceberg PARTITION EVOLUTION resolution shape.
-    * <= CheckpointEvery reads on post-upgrade tables; a pre-upgrade
-    * checkpoint (field absent) falls back to scanning below it. */
-  def partitionColsOf(table: Path, version: Option[Long] = None): Seq[String] = {
-    val vs = versions(table)
-    if (vs.isEmpty) return Seq.empty
-    val target = version.getOrElse(vs.last)
-    val upTo = vs.filter(_ <= target)
-    val ckpt = upTo.reverse.find(v =>
-      Files.exists(versionDir(table, v).resolve("checkpoint.json")))
-    def setAt(v: Long): Option[Seq[String]] = {
-      val node = commitNode(table, v)
-      if (node.get("op").asText != "set-partitioning") None
-      else Some(Option(node.get("partitionCols"))
-        .map(_.elements().asScala.map(_.asText).toSeq).getOrElse(Seq.empty))
-    }
-    def createDecl: Seq[String] =
-      upTo.headOption.filter(_ == 0L).map { _ =>
-        val node = mapper.readTree(
-          Files.readAllBytes(versionDir(table, 0L).resolve("commit.json")))
-        if (node.get("op").asText != "create") Seq.empty[String]
-        else Option(node.get("partitionCols"))
-          .map(_.elements().asScala.map(_.asText).toSeq).getOrElse(Seq.empty)
-      }.getOrElse(Seq.empty)
-    val from = ckpt.map(_ + 1).getOrElse(0L)
-    upTo.filter(_ >= from).reverse.iterator.flatMap(setAt(_)).nextOption()
-      .orElse(ckpt.flatMap { cv =>
-        val node = mapper.readTree(Files.readAllBytes(
-          versionDir(table, cv).resolve("checkpoint.json")))
-        // absent field = pre-upgrade checkpoint: scan below it
-        Option(node.get("partitionCols"))
-          .map(_.elements().asScala.map(_.asText).toSeq)
-          .orElse(upTo.filter(_ < from).reverse.iterator.flatMap(setAt(_)).nextOption())
-      })
-      .getOrElse(createDecl)
-  }
+    * the newest `set-partitioning` commit wins, else the [[create]]-time
+    * declaration — the Iceberg PARTITION EVOLUTION resolution shape. A
+    * field of the log fold ([[stateAt]]). */
+  def partitionColsOf(table: Path, version: Option[Long] = None): Seq[String] =
+    stateOf(table, version).partitionCols
 
   /** PARTITION EVOLUTION (the Iceberg `ALTER TABLE ... [ADD|DROP]
     * PARTITION FIELD` capability, identity transforms): re-declare the
@@ -2472,8 +2334,7 @@ object TxLog {
   /** The CDC sidecar a copy-on-write commit recorded, if any — what
     * lets the streaming change feed replay COW commits exactly. */
   def commitCdcFile(table: Path, v: Long): Option[String] = {
-    val node = mapper.readTree(Files.readAllBytes(versionDir(table, v).resolve("commit.json")))
-    Option(node.get("cdcFile")).map(_.asText)
+    Option(rawCommit(table, v).get("cdcFile")).map(_.asText)
   }
 
   def mergeCow(spark: SparkSession, table: Path, updates: DataFrame, keyCol: String,
@@ -2943,19 +2804,9 @@ object TxLog {
     * in-flight txn resolves (aborts) it rather than blocking forever. */
   def txnCommits(table: Path): Seq[(Long, String, String, String)] =
     versions(table).flatMap { v =>
-      val node = mapper.readTree(
-        Files.readAllBytes(versionDir(table, v).resolve("commit.json")))
+      val node = rawCommit(table, v)
       Option(node.get("txn")).map { m =>
-        val marker = m.asText
-        val markerDir = java.nio.file.Paths.get(marker)
-        // this table's own _txnout replica first — same sibling-
-        // independent resolution order as commitNode
-        val localF = txnOutLocal(table, markerDir.getFileName.toString)
-        val outcome =
-          if (Files.exists(localF))
-            new String(Files.readAllBytes(localF), java.nio.charset.StandardCharsets.UTF_8)
-          else resolveTxn(markerDir)
-        (v, node.get("op").asText, marker, outcome)
+        (v, node.get("op").asText, m.asText, outcomeOf(table, java.nio.file.Paths.get(m.asText)))
       }
     }
 
@@ -2986,12 +2837,11 @@ object TxLog {
     * committed can only be above the watermark, because batch n+1 is
     * only delivered after batch n's sink call returned). A 100k-commit
     * streaming table answers this from <= CheckpointEvery file reads,
-    * not 100k. */
-  def isBatchCommitted(table: Path, batchId: Long): Boolean = {
-    val vs = versions(table)
-    if (vs.isEmpty) return false
-    maxBatchIdUpTo(table, vs.last).exists(batchId <= _)
-  }
+    * not 100k. The watermark is the log fold's `batchMax`, txn-resolved:
+    * an ABORTED multi-table transaction's batch tag never advances it
+    * (the batch would be skipped on redelivery and silently lost). */
+  def isBatchCommitted(table: Path, batchId: Long): Boolean =
+    stateOf(table, None).batchMax.exists(batchId <= _)
 
   /** Shared claim-fenced exactly-once commit loop for streaming sinks.
     * CLAIM-FENCED duplicate check: only after holding the claim on
@@ -3219,14 +3069,8 @@ object TxLog {
     val reclaimed: Vector[String] =
       if (!Files.isDirectory(txnOutDir)) Vector.empty
       else {
-        val folded = versions(table).reverse.find(cv =>
-            Files.exists(versionDir(table, cv).resolve("checkpoint.json")))
-          .map { cv =>
-            val node = mapper.readTree(Files.readAllBytes(
-              versionDir(table, cv).resolve("checkpoint.json")))
-            Option(node.get("txnOutcomes")).map(
-              _.fieldNames().asScala.toSet).getOrElse(Set.empty[String])
-          }.getOrElse(Set.empty[String])
+        val folded = newestCheckpoint(table, versions(table), Long.MaxValue)
+          .fold(Set.empty[String])(c => foldedOutcomes(c._2).keySet)
         listDir(txnOutDir)
           .filter(p => folded.contains(p.getFileName.toString))
           .filter(p => (try Files.getLastModifiedTime(p).toMillis
@@ -3247,8 +3091,8 @@ object TxLog {
   def deleteTree(p: Path): Unit = {
     deleteRecursively(p)
     // a table recreated at this path is a NEW incarnation: a cached
-    // (version, protocol) from the old one must not seed its replay
+    // state from the old one must not seed its fold
     val prefix = p.toAbsolutePath.toString
-    protocolCache.keySet.removeIf(k => k == prefix || k.startsWith(prefix + "/"))
+    stateCache.keySet.removeIf(k => k == prefix || k.startsWith(prefix + "/"))
   }
 }

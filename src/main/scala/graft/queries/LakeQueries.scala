@@ -2407,8 +2407,8 @@ object LakeQueries {
     // table, EXACTLY-ONCE: the audit append carries the batch id, the
     // driver checks the watermark BEFORE staging, and a redelivered
     // batch skips the whole transaction. The watermark resolves with
-    // the transaction (an aborted txn's tag never advances it — the
-    // maxBatchIdUpTo fix this round), so the skip can never lose a
+    // the transaction (an aborted txn's tag never advances it: the log
+    // fold's batch watermark is txn-resolved), so the skip can never lose a
     // batch. Proven through a full REDELIVERY: the stream re-runs with
     // a wiped engine checkpoint and both tables' versions and contents
     // are unchanged. The oracle replays the net state.

@@ -343,8 +343,11 @@ class TxnSpec extends SparkSpec {
     assert(TxLog.history(b).map(_._2) == Seq("append", "append"))
   }
 
-  test("a folded txn outcome outlives its vacuumed replica: the " +
-      "checkpoint fold alone resolves pre-checkpoint time travel") {
+  /** A committed transfer a -> b (the marker lives in a's log), folded
+    * by b's v10 checkpoint, b's `_txnout` replica vacuumed, then a
+    * DROPPED and every per-JVM log cache forgotten: the fold is the only
+    * record of the decision anywhere. Returns (a, b). */
+  private def foldedTxnAfterVacuum(): (Path, Path) = {
     val base = Files.createTempDirectory("graft_txnspec")
     // 'a' sorts first canonically, so the txn marker lives in a's log
     val a = base.resolve("a"); val b = base.resolve("b")
@@ -369,16 +372,32 @@ class TxnSpec extends SparkSpec {
     val reclaimed = TxLog.vacuum(b, minAgeMs = 0L)
     assert(reclaimed.exists(_.startsWith("_txnout/")), reclaimed.toString)
     assert(replicas().isEmpty, "the folded replica must be reclaimed")
-    // drop the marker-hosting table AND the JVM outcome cache: the fold
-    // is now the ONLY record of the decision anywhere
     deleteRec(a)
     TxLog.forgetTxnOutcomesForTest()
+    (a, b)
+  }
+
+  test("a folded txn outcome outlives its vacuumed replica: the " +
+      "checkpoint fold alone resolves pre-checkpoint time travel") {
+    val (_, b) = foldedTxnAfterVacuum()
     // pre-checkpoint time travel: v1 IS the txn commit, replayed from
     // raw commits (no checkpoint at or below it) — its resolution must
     // come from the v10 checkpoint's folded outcome
     assert(TxLog.readAt(spark, b, Some(1L)).select("doc_id").collect()
       .map(_.getLong(0)).sorted.toSeq == Seq(2L, 5L, 100L, 101L, 102L))
     assert(TxLog.history(b).map(_._2).take(2) == Seq("append", "append"))
+  }
+
+  test("listing $txns cold resolves a vacuumed replica through the fold: " +
+      "committed, the rows stay, the dropped marker table is not recreated") {
+    val (a, b) = foldedTxnAfterVacuum()
+    // skipping the fold tier, $txns would find no marker, recreate a's
+    // marker directory to publish 'aborted' and cache that — and the
+    // read after it would lose the transferred rows
+    val listed = TxLog.txnCommits(b)
+    assert(listed.map(t => (t._1, t._2, t._4)) == Seq((1L, "append", "committed")))
+    assert(!Files.exists(a), "resolution recreated the dropped marker-hosting table")
+    assert(ids(b) == Seq(2L, 5L, 100L, 101L, 102L) ++ (202L to 210L))
   }
 
   test("an ABORTED transaction's append cannot establish or advance " +
