@@ -206,8 +206,7 @@ object BloomIndex {
     val stale = rows.filter(r => !live.contains(r._1))
       .map(_._2).distinct.filterNot(liveHashes.contains)
     if (stale.isEmpty) return 0
-    import spark.implicits._
-    TxLog.deleteMor(spark, index, stale.toSeq.toDF("file_hash"), "file_hash"): Unit
+    TxLog.deleteMor(spark, index, stale, "file_hash"): Unit
     stale.length
   }
 

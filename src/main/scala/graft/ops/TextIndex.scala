@@ -3,8 +3,9 @@ package graft.ops
 import java.nio.file.Path
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 /** PERSISTED INVERTED TEXT INDEX over a TxLog corpus table — the
   * sparse-retrieval (Lucene-shaped) architecture re-expressed as lake
@@ -780,24 +781,32 @@ object TextIndex {
     * the winners' FULL ROWS from the corpus — the top-k ids (k-sized,
     * driver-held by construction) turn into a stats-pruned corpus read
     * ([min,max] key range + an isin residual that pushes into the
-    * parquet scan), so the corpus pays a point-fetch, never a scan.
-    * The ranking is [[searchBm25BlockMax]]'s — equal to [[searchBm25]]'s
-    * by contract (tix11), and served on the driver when the query's
-    * files are small. Returns the corpus columns + `score`, ranked. */
+    * parquet scan), so the corpus pays a point-fetch, never a scan: one
+    * Spark job, whose ≤ k rows get their scores and their order on the
+    * driver. The ranking is [[searchBm25BlockMax]]'s — equal to
+    * [[searchBm25]]'s by contract (tix11), and served on the driver when
+    * the query's files are small. Returns a local relation of the id
+    * column, the other corpus columns and `score`, ordered by score
+    * desc, id asc. */
   def fetchTopDocs(spark: SparkSession, corpus: Path, index: Path,
       terms: Seq[String], k: Int, idCol: String = "doc_id"): DataFrame = {
-    import spark.implicits._
     val top = searchBm25BlockMax(spark, index, terms, k)._1.collect() // k rows, by contract
     if (top.isEmpty)
       return TxLog.readAt(spark, corpus).filter(lit(false))
         .withColumn("score", lit(0.0))
+    val scoreOf = top.map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val ids = top.map(_.getLong(0))
-    val scores = top.map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      .toDF(idCol, "score")
-    TxLog.readAt(spark, corpus, range = Some((idCol, ids.min, ids.max)))
+    val hits = TxLog.readAt(spark, corpus, range = Some((idCol, ids.min, ids.max)))
       .filter(col(idCol).isin(ids.map(Long.box).toSeq: _*))
-      .join(broadcast(scores), idCol)
-      .orderBy(col("score").desc, col(idCol).asc)
+    val at = hits.schema.fieldIndex(idCol)
+    val rest = hits.schema.indices.filter(_ != at)
+    val schema = StructType((at +: rest).map(hits.schema.fields) :+
+      StructField("score", DoubleType, nullable = false))
+    val rows = hits.collect().map { r =>
+      val id = r.getAs[Number](at).longValue
+      (scoreOf(id), id, Row.fromSeq((at +: rest).map(r.get) :+ scoreOf(id)))
+    }.sortWith { case ((s1, i1, _), (s2, i2, _)) => s1 > s2 || (s1 == s2 && i1 < i2) }
+    spark.createDataFrame(rows.map(_._3).toSeq.asJava, schema)
   }
 
   private def posDir(index: Path): Path = index.resolveSibling(index.getFileName + "_pos")
@@ -905,19 +914,22 @@ object TextIndex {
   }
 
   /** The stats contribution (docs, total length) the given keys STILL
-    * hold in the live postings — what [[pruneDeleted]] (and
-    * [[graft.ops.Forget]]'s post-transaction catch-up) must shrink the
-    * 1-row stats table by. Zero for already-deleted keys, so both
-    * callers stay idempotent under redelivery. */
+    * hold in the live postings — what [[graft.ops.Forget]] must shrink
+    * the 1-row stats table by after its transaction. It is the index's
+    * merge-on-read probe with no commit (one Spark job); zero for
+    * already-deleted keys, so the caller stays idempotent under
+    * redelivery. */
   def deletedContribution(spark: SparkSession, index: Path,
-      deletedKeys: DataFrame, idCol: String = "doc_id"): (Long, Long) = {
-    val keys = deletedKeys.select(col(idCol).cast("long").as("doc_id"))
-    val gone = TxLog.readAt(spark, index)
-      .join(broadcast(keys), Seq("doc_id"), "left_semi")
-      .groupBy("doc_id").agg(first(col("dl")).as("dl"))
-      .agg(coalesce(count(lit(1)), lit(0L)).as("n"),
-        coalesce(sum(col("dl")), lit(0L)).as("len")).head
-    (gone.getLong(0), gone.getLong(1))
+      deletedKeys: DataFrame, idCol: String = "doc_id"): (Long, Long) =
+    contribution(TxLog.morProbe(spark, index, TxLog.snapshotAt(index),
+      TxLog.morKeys(deletedKeys, idCol), "doc_id", Seq("dl")))
+
+  /** (docs, total length) of a postings probe's (file, doc_id, dl) rows:
+    * the distinct doc_ids and the sum of one `dl` per doc (every posting
+    * of a doc carries the same dl). */
+  private def contribution(probed: Array[Row]): (Long, Long) = {
+    val dlOf = probed.map(r => r.getLong(1) -> r.getAs[Number](2).longValue).toMap
+    (dlOf.size.toLong, dlOf.values.sum)
   }
 
   /** Settle the derived scalars after `nGone` docs (carrying `lenGone`
@@ -939,35 +951,32 @@ object TextIndex {
   /** Remove the postings of deleted documents — churn-sized merge-on-
     * read deletes keyed on doc_id (the caller supplies the deleted keys;
     * the right-to-be-forgotten flow has them in hand). Stats shrink by
-    * the removed docs' contribution so avgdl stays honest. */
+    * the removed docs' contribution so avgdl stays honest. One Spark job
+    * per table: the keys are collected to the driver (no job for a local
+    * key frame), and the index's delete probe carries `dl`, so the same
+    * rows give the DV matches and the stats shrink. */
   def pruneDeleted(spark: SparkSession, index: Path, deletedKeys: DataFrame,
       idCol: String = "doc_id"): Long = Jobs.labeled(spark, "text pruneDeleted") {
-    import spark.implicits._
-    // ONE action over the caller's key plan (optimization r17): the
-    // keys are churn-sized by contract (and every consumer below
-    // broadcasts them anyway), so collect once — an insert-only CDF
-    // micro-batch (the common streaming case) now exits after a single
-    // churn-sized job instead of paying an index-wide contribution
-    // aggregate plus sibling-delete probes for an empty set.
-    val keyArr = deletedKeys.select(col(idCol).cast("long").as("doc_id"))
-      .filter(col("doc_id").isNotNull).distinct().collect().map(_.getLong(0))
-    if (keyArr.isEmpty) return 0L
-    val keys = keyArr.toSeq.toDF("doc_id") // LocalRelation: free to re-probe
-    // the removed docs' length contribution, BEFORE the postings go
-    val (nGone, lenGone) = deletedContribution(spark, index, keys)
+    // an insert-only CDF micro-batch (the common streaming case) exits
+    // here, after at most the key collect
+    val keys = TxLog.morKeys(deletedKeys, idCol)
+    if (keys.isEmpty) return 0L
     // the positional sibling (if built) carries the same documents'
     // occurrence rows — a phrase query must not resurrect deleted docs.
-    // Pruned BEFORE the empty-freq early return: a crash between the two
-    // deletes redelivers with nGone == 0, and the sibling must still
-    // catch up (re-deleting already-DV'd keys is a cheap no-op).
+    // Pruned whatever the index probe finds: a crash between the two
+    // deletes redelivers with nothing left in the index, and the sibling
+    // must still catch up (re-deleting already-DV'd keys is a no-op).
     if (TxLog.versions(posDir(index)).nonEmpty)
       TxLog.deleteMor(spark, posDir(index), keys, "doc_id"): Unit
+    // the removed docs' length contribution, read by the delete's probe
+    // BEFORE the postings go
+    val d = TxLog.deleteMor(spark, index, keys, "doc_id", carry = Seq("dl"))
+    val (nGone, lenGone) = contribution(d.probed)
     if (nGone == 0) return 0L
-    val (v, _, _, _) = TxLog.deleteMor(spark, index, keys, "doc_id")
     // stats shrink + dictionary stale-HIGH marker (the bounded search
     // modes recount live dfs until maintain folds the dictionary)
     noteDeleted(spark, index, nGone, lenGone)
-    v
+    d.version
   }
 
   /** Stored (tf, dl) pairs per dictionary slice — enough for any

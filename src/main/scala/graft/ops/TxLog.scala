@@ -8,7 +8,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
@@ -1053,17 +1053,12 @@ object TxLog {
           // new rows are invisible to it, so the DVs cover exactly the
           // pre-merge holders of the merged keys
           val snap = snapshotAt(m.table)
-          val matches = morMatches(spark, m.table, snap,
-            m.df.select(col(m.keyCol)), m.keyCol)
-          (m: TxnOp, v, vd,
-            extendDvs(m.table, snap, matches, m.keyCol) ++ staged(m),
-            "merge-mor", Some(schemaNow))
+          val d = morDelta(spark, m.table, snap, morKeys(m.df, m.keyCol), m.keyCol)
+          (m: TxnOp, v, vd, d.dvAdds ++ staged(m), "merge-mor", Some(schemaNow))
         case (d: TxnDeleteMor, v, vd) =>
           val snap = snapshotAt(d.table) // frozen: we hold the next-version claim
-          val matches = morMatches(spark, d.table, snap,
-            d.keys.select(col(d.keyCol)), d.keyCol)
-          (d: TxnOp, v, vd, extendDvs(d.table, snap, matches, d.keyCol),
-            "delete-mor", None)
+          val delta = morDelta(spark, d.table, snap, morKeys(d.keys, d.keyCol), d.keyCol)
+          (d: TxnOp, v, vd, delta.dvAdds, "delete-mor", None)
       }
       // ---- 4. marker PENDING in the first participant's log
       markerDir = logDir(actions.head._1.table)
@@ -2634,56 +2629,65 @@ object TxLog {
     * must still be live with the SAME dv we based the union on (a
     * concurrent DV writer's keys must not be lost), and no file added
     * since our base snapshot may contain an affected key (same clause as
-    * [[rewriteValidator]]). */
-  private def morValidator(base: Snapshot, touched: Set[String], keyCol: String,
-      lo: Long, hi: Long): Option[Snapshot] => Boolean = {
+    * [[rewriteValidator]]; the key range is the driver-held keys'). */
+  private def morValidator(base: Snapshot, touched: Set[String], table: Path,
+      keyCol: String, keys: Array[Long]): Option[Snapshot] => Boolean = {
     val basePaths = base.files.map(_.path).toSet
     val baseDv = base.files.map(f => f.path -> f.dv).toMap
+    val pk = physName(table, keyCol)
+    val (lo, hi) = (keys.min, keys.max)
     (snap: Option[Snapshot]) => snap match {
       case None => false
       case Some(s) =>
         val liveDv = s.files.map(f => f.path -> f.dv).toMap
         touched.forall(p => liveDv.get(p).contains(baseDv.getOrElse(p, None))) &&
           !s.files.exists(f => !basePaths(f.path) &&
-            f.cols.get(keyCol).forall { case (mn, mx) => mx >= lo && mn <= hi })
+            f.cols.get(pk).forall { case (mn, mx) => mx >= lo && mn <= hi })
     }
   }
 
-  /** The delta's distinct non-null keys, collected ONCE to the driver
-    * (optimization r17): a MOR write used to run a min/max job over the
-    * delta plan AND a broadcast build over the same plan — two actions
-    * re-evaluating a possibly expensive delta. The keys are churn-sized
-    * by the MOR contract and were already collected for the broadcast,
-    * so driver-holding them adds no new scale limit; one collect now
-    * supplies the bounds AND the probe set. */
-  private def morKeys(changeKeys: DataFrame, keyCol: String): Array[Long] =
-    changeKeys.select(col(keyCol).cast("long").as("__k"))
-      .filter(col("__k").isNotNull).distinct()
-      .collect().map(_.getLong(0))
-
-  /** Distinct (file, key) matches of the collected delta keys against
-    * the snapshot's DV-aware live rows — the probe both MOR writes
-    * share. The key set rides in as a LocalRelation broadcast (built
-    * driver-side, no extra job). */
-  private def morMatchesKeys(spark: SparkSession, table: Path, snap: Snapshot,
-      keyArr: Array[Long], keyCol: String): Map[String, Vector[Long]] = {
-    if (keyArr.isEmpty) return Map.empty
-    val candidates = pruneFilesOn(snap, physName(table, keyCol),
-      keyArr.min, keyArr.max)
-    if (candidates.isEmpty) return Map.empty
-    val cand = scanFiles(spark, table, candidates, fileCol = Some("__file"))
-    import spark.implicits._
-    val probe = keyArr.toSeq.toDF("__k")
-    cand.select(col(keyCol).cast("long").as("__k"), col("__file"))
-      .join(broadcast(probe), "__k")
-      .distinct().collect()
-      .map(r => (r.getString(1), r.getLong(0)))
-      .groupBy(_._1).view.mapValues(_.map(_._2).toVector.sorted).toMap
+  /** The delta's distinct non-null keys, sorted, held on the driver. The
+    * keys are churn-sized by the MOR contract, so the collect takes the
+    * cast, non-null key column as is and the dedup runs on the driver (a
+    * Spark `distinct` would add a shuffle job). A local key frame folds
+    * to a LocalRelation and collects with no Spark job at all. */
+  private[ops] def morKeys(changeKeys: DataFrame, keyCol: String): Array[Long] = {
+    val keys = changeKeys.select(col(keyCol).cast("long").as("__k"))
+      .filter(col("__k").isNotNull).collect().map(_.getLong(0)).distinct
+    java.util.Arrays.sort(keys)
+    keys
   }
 
-  private def morMatches(spark: SparkSession, table: Path, snap: Snapshot,
-      changeKeys: DataFrame, keyCol: String): Map[String, Vector[Long]] =
-    morMatchesKeys(spark, table, snap, morKeys(changeKeys, keyCol), keyCol)
+  /** The probe every merge-on-read write shares: the snapshot's live
+    * (DV-applied) rows whose key is in `keys`, as distinct rows of
+    * (file, key, `carry` columns...). ONE Spark job: the candidate files
+    * are pruned on the key column's footer range, the key set filters
+    * the scan as an `isin` (Catalyst makes it an InSet and pushes it into
+    * the parquet reader), and the churn-sized result is deduplicated on
+    * the driver. */
+  private[ops] def morProbe(spark: SparkSession, table: Path, snap: Snapshot,
+      keys: Array[Long], keyCol: String, carry: Seq[String] = Nil): Array[Row] = {
+    if (keys.isEmpty || snap.files.isEmpty) return Array.empty
+    val candidates = pruneFilesOn(snap, physName(table, keyCol), keys.min, keys.max)
+    if (candidates.isEmpty) return Array.empty
+    scanFiles(spark, table, candidates, fileCol = Some("__file"))
+      .filter(col(keyCol).cast("long").isin(keys.map(Long.box).toSeq: _*))
+      .select(col("__file") +: col(keyCol).cast("long") +: carry.map(col): _*)
+      .collect().distinct
+  }
+
+  /** The DV re-adds and the touched files of a merge-on-read write of
+    * `keys` against `snap`, with the probed rows they came from. */
+  private final case class MorDelta(probed: Array[Row], dvAdds: Vector[AddFile],
+      touched: Set[String])
+
+  private def morDelta(spark: SparkSession, table: Path, snap: Snapshot,
+      keys: Array[Long], keyCol: String, carry: Seq[String] = Nil): MorDelta = {
+    val probed = morProbe(spark, table, snap, keys, keyCol, carry)
+    val matches = probed.groupBy(_.getString(0)).view
+      .mapValues(_.map(_.getLong(1)).distinct.sorted.toVector).toMap
+    MorDelta(probed, extendDvs(table, snap, matches, keyCol), matches.keySet)
+  }
 
   /** Extend each matched file's deletion vector with its matched keys:
     * new immutable sidecar = old DV keys ∪ new keys; the returned
@@ -2702,29 +2706,42 @@ object TxLog {
     }
   }
 
+  /** What a merge-on-read delete did: the commit version (the base
+    * snapshot's when no live row held a key), the files whose deletion
+    * vector it extended, the live file count, and the probed rows —
+    * (file, key, carried columns...) per distinct live row that held a
+    * deleted key, read before the delete. */
+  final case class MorDelete(version: Long, dvFiles: Int, filesTotal: Int,
+      probed: Array[Row])
+
   /** Merge-on-READ delete: instead of copy-on-write rewriting every file
     * that contains a deleted key ([[deleteKeys]]), write a churn-sized
     * deletion-vector sidecar per affected file and re-commit the file
     * entries with the new dv — a 1-row delete against a 100 TB table
     * writes O(1) bytes of data and rewrites ZERO files; readers apply
     * the vectors, and the next [[compact]] folds them in. The key column
-    * must be integral (same domain as the footer stats). Returns
+    * must be integral (same domain as the footer stats). The keys are
+    * driver-held, so the whole delete is one Spark job (the probe);
+    * `carry` names columns of the deleted rows to return with them
+    * (the text index takes each deleted doc's length this way). No live
+    * row holding a key = no commit. */
+  def deleteMor(spark: SparkSession, table: Path, keys: Array[Long], keyCol: String,
+      carry: Seq[String] = Nil): MorDelete =
+      Jobs.labeled(spark, s"txlog deleteMor ${table.getFileName}") {
+    val snap = snapshotAt(table)
+    val d = morDelta(spark, table, snap, keys, keyCol, carry)
+    if (d.dvAdds.isEmpty) return MorDelete(snap.version, 0, snap.files.size, d.probed)
+    val v = commitRetry(table, "delete-mor", d.dvAdds, Nil)(
+      morValidator(snap, d.touched, table, keyCol, keys))
+    MorDelete(v, d.dvAdds.size, snap.files.size, d.probed)
+  }
+
+  /** [[deleteMor]] of a key frame's distinct non-null keys. Returns
     * (version, filesRewritten = 0, dvFilesTouched, filesTotal). */
   def deleteMor(spark: SparkSession, table: Path, keys: DataFrame, keyCol: String):
       (Long, Int, Int, Int) = Jobs.labeled(spark, s"txlog deleteMor ${table.getFileName}") {
-    val snap = snapshotAt(table)
-    // ONE action over the delta plan: the collected keys supply the
-    // bounds, the probe set, and the validator range (was: a min/max
-    // job plus a broadcast build over the same plan)
-    val keyArr = morKeys(keys, keyCol)
-    if (keyArr.isEmpty) return (snap.version, 0, 0, snap.files.size)
-    val matches = morMatchesKeys(spark, table, snap, keyArr, keyCol)
-    if (matches.isEmpty) return (snap.version, 0, 0, snap.files.size)
-    val dvAdds = extendDvs(table, snap, matches, keyCol)
-    val v = commitRetry(table, "delete-mor", dvAdds, Nil)(
-      morValidator(snap, matches.keySet, physName(table, keyCol),
-        keyArr.min, keyArr.max))
-    (v, 0, dvAdds.size, snap.files.size)
+    val d = deleteMor(spark, table, morKeys(keys, keyCol), keyCol)
+    (d.version, 0, d.dvFiles, d.filesTotal)
   }
 
   /** Merge-on-READ MERGE (upsert): same result as [[mergeCow]] — update
@@ -2738,17 +2755,15 @@ object TxLog {
     val snap = snapshotAt(table)
     validateSchema(tableSchema(table), updates.schema, allowEvolution = false): Unit
     enforceConstraints(table, updates)
-    val keyArr = morKeys(updates, keyCol)
-    if (keyArr.isEmpty) return (snap.version, 0, 0, snap.files.size) // empty delta
-    val matches = morMatchesKeys(spark, table, snap, keyArr, keyCol)
-    val dvAdds = extendDvs(table, snap, matches, keyCol)
+    val keys = morKeys(updates, keyCol)
+    if (keys.isEmpty) return (snap.version, 0, 0, snap.files.size) // empty delta
+    val d = morDelta(spark, table, snap, keys, keyCol)
     val stage = table.resolve(s".stage-${UUID.randomUUID()}")
     phys(updates, table).repartition(nParts).write.mode("overwrite").parquet(stage.toString)
     val adds = promoteStaged(spark, stage, table, statsCol)
-    val v = commitRetry(table, "merge-mor", dvAdds ++ adds, Nil)(
-      morValidator(snap, matches.keySet, physName(table, keyCol),
-        keyArr.min, keyArr.max))
-    (v, 0, dvAdds.size, snap.files.size)
+    val v = commitRetry(table, "merge-mor", d.dvAdds ++ adds, Nil)(
+      morValidator(snap, d.touched, table, keyCol, keys))
+    (v, 0, d.dvAdds.size, snap.files.size)
   }
 
   /** TIMESTAMP AS OF resolution, Delta's rule (Armbrust VLDB 2020 §2):
@@ -2936,27 +2951,23 @@ object TxLog {
     val upserts = batch.filter(col(opCol) =!= "delete").drop(opCol)
     validateSchema(tableSchema(table), upserts.schema, allowEvolution = false): Unit
     enforceConstraints(table, upserts)
-    // one collect supplies bounds + probe set (the deleteMor discipline)
-    val keyArr = morKeys(batch, keyCol)
-    val matches =
-      if (keyArr.isEmpty || baseSnap.files.isEmpty) Map.empty[String, Vector[Long]]
-      else morMatchesKeys(spark, table, baseSnap, keyArr, keyCol)
-    val dvAdds = extendDvs(table, baseSnap, matches, keyCol)
+    // driver-held keys supply bounds + probe set (the deleteMor discipline)
+    val keys = morKeys(batch, keyCol)
+    val d = morDelta(spark, table, baseSnap, keys, keyCol)
     val stage = table.resolve(s".stage-${UUID.randomUUID()}")
     phys(upserts, table).repartition(math.max(nParts, 1))
       .write.mode("overwrite").parquet(stage.toString)
     val adds = promoteStaged(spark, stage, table, statsCol)
     val validator: Option[Snapshot] => Boolean =
-      if (keyArr.isEmpty) _ => true
+      if (keys.isEmpty) _ => true
       else {
-        val mor = morValidator(baseSnap, matches.keySet, physName(table, keyCol),
-          keyArr.min, keyArr.max)
+        val mor = morValidator(baseSnap, d.touched, table, keyCol, keys)
         // claiming v0 over an EMPTY base is the expected first-commit
         // state, not a conflict (morValidator's None=conflict rule is
         // for bases that HAD commits when the write began)
         snapNow => (baseSnap.version == -1L && snapNow.isEmpty) || mor(snapNow)
       }
-    streamingCommit(table, batchId, "streaming-merge", dvAdds ++ adds,
+    streamingCommit(table, batchId, "streaming-merge", d.dvAdds ++ adds,
       validateSchema(tableSchema(table), upserts.schema, allowEvolution = false),
       validator,
       // a redelivered batch's orphans are the NEW artifacts only: the
@@ -2964,7 +2975,7 @@ object TxLog {
       // paths, which are the table's own live files
       () => {
         adds.foreach(a => Files.deleteIfExists(table.resolve(a.path)): Unit)
-        dvAdds.foreach(_.dv.foreach(d => Files.deleteIfExists(table.resolve(d)): Unit))
+        d.dvAdds.foreach(_.dv.foreach(dv => Files.deleteIfExists(table.resolve(dv)): Unit))
       })
   }
 
