@@ -126,6 +126,11 @@ private[catalog] object GraftMetaTable {
     StructField("name", StringType, nullable = false),
     StructField("version", LongType, nullable = false)))
 
+  /** `` t$props ``: the table properties in force at the head. */
+  val PropsSchema: StructType = StructType(Seq(
+    StructField("key", StringType, nullable = false),
+    StructField("value", StringType, nullable = false)))
+
   val TxnsSchema: StructType = StructType(Seq(
     StructField("version", LongType, nullable = false),
     StructField("op", StringType, nullable = false),
@@ -147,11 +152,12 @@ private[catalog] object GraftMetaTable {
     case "history" => HistorySchema
     case "files" => FilesSchema
     case "tags" => TagsSchema
+    case "props" => PropsSchema
     case "txns" => TxnsSchema
     case "schema" => SchemaSchema
     case other => throw new IllegalArgumentException(
       s"unknown metadata table '$$$other' " +
-      "(have: $history, $files, $tags, $txns, $schema)")
+      "(have: $history, $files, $tags, $props, $txns, $schema)")
   }
 
   /** The rows, computed from log metadata only. */
@@ -171,6 +177,10 @@ private[catalog] object GraftMetaTable {
       case "tags" =>
         TxLog.tags(t.dir).toSeq.sortBy(_._1).map { case (n, v) =>
           InternalRow(UTF8String.fromString(n), v)
+        }
+      case "props" =>
+        TxLog.propsAt(t.dir).toSeq.sortBy(_._1).map { case (k, v) =>
+          InternalRow(UTF8String.fromString(k), UTF8String.fromString(v))
         }
       case "txns" =>
         TxLog.txnCommits(t.dir).map { case (v, op, marker, outcome) =>

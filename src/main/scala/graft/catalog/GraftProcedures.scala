@@ -235,10 +235,10 @@ private[catalog] object GraftProcedures {
       // re-calls after appends index only the new files).
       // PERSISTED INVERTED TEXT INDEX from SQL: `CALL <cat>.text_index
       // ('t', 'text')` materializes/refreshes the postings as the
-      // sibling catalog table `t_text_ix` (+ `t_text_ix_stats`,
-      // `t_text_ix_files`) — ordinary SQL relations, so BM25 is
-      // computable in PURE SQL over them (sql24 proves it reproduces
-      // t14's ranking).
+      // sibling catalog table `t_text_ix` (+ `t_text_ix_files`, and its
+      // corpus statistics as the `t_text_ix$props` metadata table) —
+      // ordinary SQL relations, so BM25 is computable in PURE SQL over
+      // them (sql24 proves it reproduces t14's ranking).
       case "text_index" => new GraftProc("text_index",
         Array(param("table", StringType), param("column", StringType)),
         StructType(Seq(
@@ -494,17 +494,17 @@ private[catalog] object GraftProcedures {
           } finally siblings.close()
           // ...and the text-index sibling (<table>_text_ix, the CALL
           // text_index convention): new corpus files get indexed (the
-          // meta table carries the id/text binding), then the postings
-          // re-cluster into range-disjoint term_hash files with DV
-          // sidecars folded in — without this, a long-lived index pays
+          // index's properties carry the id/text binding), then the
+          // postings re-cluster into range-disjoint term_hash files with
+          // DV sidecars folded in — without this, a long-lived index pays
           // one file per increment per term lookup (TextIndex.maintain)
           // ...but only when the index is self-describing: a legacy
-          // index without the _meta binding is SKIPPED (maintaining it
-          // under guessed columns would corrupt postings — the owner
-          // backfills _meta via ensureIndexed first)
+          // index without the binding is SKIPPED (maintaining it under
+          // guessed columns would corrupt postings — the owner records
+          // the binding via ensureIndexed first)
           val tix = base.resolve(s"${dir.getFileName}_text_ix")
           if (Files.isDirectory(tix.resolve("_graft_log")) &&
-              graft.ops.TextIndex.hasMeta(tix))
+              graft.ops.TextIndex.hasBinding(tix))
             graft.ops.TextIndex.maintain(spark, dir, tix,
               vacuumKeep = math.max(1, input.getInt(3)),
               vacuumMinAgeMs = input.getLong(4)): Unit
@@ -513,10 +513,10 @@ private[catalog] object GraftProcedures {
           // assignments re-clustered to one file per inverted list with
           // DV sidecars folded — without this a long-lived index pays
           // one file per increment per probed list (AnnIndex.maintain).
-          // Same legacy fence: no _meta binding → skipped, never guessed.
+          // Same legacy fence: no binding → skipped, never guessed.
           val aix = base.resolve(s"${dir.getFileName}_ann_ix")
           if (Files.isDirectory(aix.resolve("_graft_log")) &&
-              graft.ops.AnnIndex.hasMeta(aix))
+              graft.ops.AnnIndex.hasBinding(aix))
             graft.ops.AnnIndex.maintain(spark, dir, aix,
               vacuumKeep = math.max(1, input.getInt(3)),
               vacuumMinAgeMs = input.getLong(4)): Unit

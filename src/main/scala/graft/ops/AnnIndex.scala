@@ -16,7 +16,12 @@ import org.apache.spark.sql.functions._
   *                   footer [min,max] on cent_id IS the list boundary,
   *                   so a probe's candidate read prunes to exactly the
   *                   probed lists — FAISS's per-list storage re-expressed
-  *                   as parquet + stats instead of a custom format.
+  *                   as parquet + stats instead of a custom format. Its
+  *                   properties ([[TxLog.propsAt]]) carry the binding
+  *                   `id_col`, `emb_col`, `n_clusters`, set by the first
+  *                   assignments commit — same contract as TextIndex:
+  *                   maintenance REFUSES a legacy index without it
+  *                   rather than guess and corrupt.
   *   - `<ix>_cent`   the trained coarse quantizer `(cent_id, cent_emb)`,
   *                   corpus-scaled C, seeded + one integer-quantized
   *                   Lloyd update (bit-deterministic: exact int64 sums,
@@ -24,9 +29,10 @@ import org.apache.spark.sql.functions._
   *                   the creating batch; a trained artifact never
   *                   invalidates, increments assign against it.
   *   - `<ix>_files`  corpus watermark (files already assigned).
-  *   - `<ix>_meta`   the binding `(id_col, emb_col, n_clusters)` — same
-  *                   contract as TextIndex: maintenance REFUSES a legacy
-  *                   index without it rather than guess and corrupt.
+  *   - `<ix>_cb`, `<ix>_codes`, `<ix>_codes_files` the optional PQ
+  *                   sibling ([[ensurePq]]): codebook, codes (binding
+  *                   `id_col`, `emb_col`, `dims`, `m` in their
+  *                   properties) and watermark.
   *
   * Degradation + cure (the tix05 disease, vector edition): each
   * incremental [[ensureIndexed]] appends its own per-list file-set, so
@@ -50,11 +56,8 @@ object AnnIndex {
 
   private def centDir(index: Path): Path = index.resolveSibling(index.getFileName + "_cent")
   private def filesDir(index: Path): Path = index.resolveSibling(index.getFileName + "_files")
-  private def metaDir(index: Path): Path = index.resolveSibling(index.getFileName + "_meta")
   private def cbDir(index: Path): Path = index.resolveSibling(index.getFileName + "_cb")
   private def codesDir(index: Path): Path = index.resolveSibling(index.getFileName + "_codes")
-  private def codesMetaDir(index: Path): Path =
-    index.resolveSibling(index.getFileName + "_codes_meta")
   private def codesFilesDir(index: Path): Path =
     index.resolveSibling(index.getFileName + "_codes_files")
 
@@ -72,25 +75,22 @@ object AnnIndex {
   private def cosExpr(a: String, b: String): String =
     s"round(vector_cosine($a, $b), 6)"
 
-  /** The index's self-describing binding; None when the _meta sidecar
-    * is absent — maintenance must NOT guess (same contract as
-    * TextIndex.readMeta, hardened this round). */
-  private def readMeta(spark: SparkSession, index: Path): Option[(String, String, Int)] =
-    if (TxLog.versions(metaDir(index)).isEmpty) None
-    else {
-      val r = TxLog.cachedHeadRow(spark, metaDir(index))
-      Some((r.getString(r.fieldIndex("id_col")), r.getString(r.fieldIndex("emb_col")),
-        r.getInt(r.fieldIndex("n_clusters"))))
-    }
+  /** The index's self-describing binding, from the assignments table's
+    * properties; None when no commit set it — maintenance must NOT
+    * guess (same contract as TextIndex's binding). */
+  private def binding(index: Path): Option[(String, String, Int)] = {
+    val p = TxLog.propsAt(index)
+    p.get("id_col").map(id => (id, p("emb_col"), p("n_clusters").toInt))
+  }
 
   /** Whether the index carries its binding — checked by CALL maintain's
     * sibling pass before driving [[maintain]]. */
-  def hasMeta(index: Path): Boolean = TxLog.versions(metaDir(index)).nonEmpty
+  def hasBinding(index: Path): Boolean = binding(index).isDefined
 
-  /** The id column the index is bound to (None for a meta-less legacy
-    * index) — what [[graft.ops.Forget]] keys the atomic erasure on. */
-  def boundIdCol(spark: SparkSession, index: Path): Option[String] =
-    readMeta(spark, index).map(_._1)
+  /** The id column the index is bound to (None for a legacy index
+    * without the binding) — what [[graft.ops.Forget]] keys the atomic
+    * erasure on. */
+  def boundIdCol(index: Path): Option[String] = binding(index).map(_._1)
 
   /** Coarse quantizer: C = max(16, ceil(n/125)) LOWEST-ID seeds BY RANK,
     * one quantized Lloyd update — the exact rule of the sim07/knn06
@@ -175,15 +175,17 @@ object AnnIndex {
       nClusters: Int = 8): Long = Jobs.labeled(spark, "ann ensureIndexed") {
     import spark.implicits._
     graft.functions.VectorFunctions.registerAll(spark)
-    readMeta(spark, index).foreach { case (i0, e0, n0) =>
+    val bound = binding(index)
+    bound.foreach { case (i0, e0, n0) =>
       require(i0 == idCol && e0 == embCol && n0 == nClusters,
         s"index at $index is bound to (id=$i0, emb=$e0, clusters=$n0); " +
           s"ensureIndexed called with ($idCol, $embCol, $nClusters)")
     }
-    if (TxLog.versions(metaDir(index)).isEmpty)
-      // driver-local write: 3 driver-held values need no distributed job
-      TxLog.appendLocal(spark, metaDir(index), "n_clusters", MetaSchema,
-        Seq(Seq(idCol, embCol, nClusters))): Unit
+    val bind = Map("id_col" -> idCol, "emb_col" -> embCol, "n_clusters" -> nClusters.toString)
+    // a legacy index gets the binding on any call; a fresh one's rides
+    // its first assignments commit
+    val built = TxLog.versions(index).nonEmpty
+    if (built && bound.isEmpty) TxLog.setProps(index, bind): Unit
     val snap = TxLog.snapshotAt(corpus)
     val indexed: Set[String] =
       TxLog.cachedStringSet(spark, filesDir(index), "file_name")
@@ -218,7 +220,8 @@ object AnnIndex {
         "(zero trained centroids?) — refusing to advance the watermark")
     if (n > 0)
       TxLog.appendClustered(spark, assigned, index,
-        "cent_id", clusterCol = col("cent_id"), nClusters = nClusters): Unit
+        "cent_id", clusterCol = col("cent_id"), nClusters = nClusters,
+        props = if (built) Map.empty else bind): Unit
     // watermark: driver-local write + in-place cache seed (the
     // TextIndex.ensureIndexed discipline)
     val wmV = TxLog.appendLocal(spark, filesDir(index), "file_name",
@@ -231,24 +234,6 @@ object AnnIndex {
   private val WatermarkSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("file_name",
       org.apache.spark.sql.types.StringType, nullable = true)))
-
-  private val MetaSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("id_col",
-      org.apache.spark.sql.types.StringType, nullable = true),
-    org.apache.spark.sql.types.StructField("emb_col",
-      org.apache.spark.sql.types.StringType, nullable = true),
-    org.apache.spark.sql.types.StructField("n_clusters",
-      org.apache.spark.sql.types.IntegerType, nullable = false)))
-
-  private val PqMetaSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("id_col",
-      org.apache.spark.sql.types.StringType, nullable = true),
-    org.apache.spark.sql.types.StructField("emb_col",
-      org.apache.spark.sql.types.StringType, nullable = true),
-    org.apache.spark.sql.types.StructField("dims",
-      org.apache.spark.sql.types.IntegerType, nullable = false),
-    org.apache.spark.sql.types.StructField("m",
-      org.apache.spark.sql.types.IntegerType, nullable = false)))
 
   /** Files a single list's probe must touch — the pruning-power audit,
     * decided from driver metadata alone, no data read. */
@@ -274,14 +259,14 @@ object AnnIndex {
   /** Whether the index carries the PQ (IVFADC) sibling — what folds
     * its maintenance into [[maintain]] behind the same no-guessing
     * fence as the flat index. */
-  def hasPq(index: Path): Boolean = TxLog.versions(codesMetaDir(index)).nonEmpty
+  def hasPq(index: Path): Boolean = pqBinding(index).isDefined
 
-  private def readPqMeta(spark: SparkSession, index: Path): Option[(String, String)] =
-    if (TxLog.versions(codesMetaDir(index)).isEmpty) None
-    else {
-      val r = TxLog.cachedHeadRow(spark, codesMetaDir(index))
-      Some((r.getString(r.fieldIndex("id_col")), r.getString(r.fieldIndex("emb_col"))))
-    }
+  /** The PQ sibling's (id, emb) binding, from the codes table's
+    * properties. */
+  private def pqBinding(index: Path): Option[(String, String)] = {
+    val p = TxLog.propsAt(codesDir(index))
+    p.get("id_col").map(id => (id, p("emb_col")))
+  }
 
   /** PQ-encode every live corpus file not yet in the codes watermark —
     * the `pq => true` half of `CALL ann_index` (round-15 verdict #5:
@@ -300,14 +285,16 @@ object AnnIndex {
       Jobs.labeled(spark, "ann ensurePq") {
     import spark.implicits._
     graft.functions.VectorFunctions.registerAll(spark)
-    readPqMeta(spark, index).foreach { case (i0, e0) =>
+    val bound = pqBinding(index)
+    bound.foreach { case (i0, e0) =>
       require(i0 == idCol && e0 == embCol,
         s"PQ sibling at ${codesDir(index)} is bound to (id=$i0, emb=$e0); " +
           s"ensurePq called with ($idCol, $embCol)")
     }
-    if (TxLog.versions(codesMetaDir(index)).isEmpty)
-      TxLog.appendLocal(spark, codesMetaDir(index), "dims", PqMetaSchema,
-        Seq(Seq(idCol, embCol, PqDims, PqM))): Unit
+    val bind = Map("id_col" -> idCol, "emb_col" -> embCol, "dims" -> PqDims.toString,
+      "m" -> PqM.toString)
+    val built = TxLog.versions(codesDir(index)).nonEmpty
+    if (built && bound.isEmpty) TxLog.setProps(codesDir(index), bind): Unit
     val snap = TxLog.snapshotAt(corpus)
     val coded: Set[String] =
       TxLog.cachedStringSet(spark, codesFilesDir(index), "file_name")
@@ -343,7 +330,8 @@ object AnnIndex {
         } else Pq.encode(vecs, TxLog.readAt(spark, cbDir(index)),
           idCol, embCol, dims = PqDims, m = PqM)
       TxLog.appendClustered(spark, codes, codesDir(index), idCol,
-        clusterCol = col("sub"), nClusters = PqSubClusters): Unit
+        clusterCol = col("sub"), nClusters = PqSubClusters,
+        props = if (built) Map.empty else bind): Unit
     }
     val wmV = TxLog.appendLocal(spark, codesFilesDir(index), "file_name",
       WatermarkSchema, newFiles.map(f => Seq(f.path)))
@@ -356,20 +344,21 @@ object AnnIndex {
       filesAfter: Long, dvsBefore: Long, dvsAfter: Long, reclaimed: Long)
 
   /** One idempotent pass returning the index to the freshly-built
-    * shape: (1) assign corpus files not yet in the watermark (the meta
-    * binding supplies the columns — a meta-less legacy index REFUSES);
+    * shape: (1) assign corpus files not yet in the watermark (the
+    * binding properties supply the columns — a legacy index without
+    * them REFUSES);
     * (2) re-cluster ALL assignments to one file per list, DVs folded,
     * one atomic commit; (3) fold the watermark; (4) vacuum every
     * sibling. The trained quantizer is never retrained — serving
     * through the rewrite is row-identical. */
   def maintain(spark: SparkSession, corpus: Path, index: Path,
       vacuumKeep: Int = 1, vacuumMinAgeMs: Long = 0L): MaintainReport = {
-    val (idCol, embCol, nClusters) = readMeta(spark, index).getOrElse {
+    val (idCol, embCol, nClusters) = binding(index).getOrElse {
       if (TxLog.versions(index).isEmpty) ("vec_id", "embedding", 8) // fresh: maintain IS the build
       else throw new IllegalStateException(
-        s"ANN index at $index predates the _meta sidecar — its binding is unknown " +
+        s"ANN index at $index has no id_col binding property — its binding is unknown " +
           "and maintenance will not guess one. Run AnnIndex.ensureIndexed once with " +
-          "the original idCol/embCol/nClusters to backfill _meta, then maintain.")
+          "the original idCol/embCol/nClusters to record it, then maintain.")
     }
     val indexedNew = ensureIndexed(spark, corpus, index, idCol, embCol, nClusters)
     val snap0 = TxLog.snapshotAt(index)
@@ -383,8 +372,8 @@ object AnnIndex {
     // corpus files that arrived since, re-cluster the codes back to
     // their per-subspace layout with DVs folded, fold its watermark.
     // Behind the same no-guessing fence: only a self-describing codes
-    // sibling (its _meta binding) is maintained.
-    readPqMeta(spark, index).foreach { case (pqId, pqEmb) =>
+    // sibling (its binding properties) is maintained.
+    pqBinding(index).foreach { case (pqId, pqEmb) =>
       ensurePq(spark, corpus, index, pqId, pqEmb): Unit
       if (TxLog.snapshotAt(codesDir(index)).files.nonEmpty)
         TxLog.compactClustered(spark, codesDir(index), pqId,
@@ -392,8 +381,8 @@ object AnnIndex {
       if (TxLog.snapshotAt(codesFilesDir(index)).files.size > 1)
         TxLog.compact(spark, codesFilesDir(index), "file_name", nParts = 1): Unit
     }
-    val reclaimed = Seq(index, centDir(index), filesDir(index), metaDir(index),
-        cbDir(index), codesDir(index), codesMetaDir(index), codesFilesDir(index))
+    val reclaimed = Seq(index, centDir(index), filesDir(index), cbDir(index),
+        codesDir(index), codesFilesDir(index))
       .map { t =>
         if (TxLog.versions(t).isEmpty) 0
         else TxLog.vacuum(t, keepVersions = math.max(1, vacuumKeep),

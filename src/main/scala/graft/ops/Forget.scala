@@ -23,13 +23,11 @@ import org.apache.spark.sql.functions._
   * answers may stale-true; the lookup always re-checks the corpus,
   * whose row is gone in the same atomic flip).
   *
-  * Post-transaction bookkeeping — the text index's (n_docs, total_len)
-  * shrink and the MaxScore staleness counter — runs AFTER the commit
-  * and is pure catch-up: a crash in between leaves rankings EXACT
-  * anyway, because DV presence on the index forces the scan-only
-  * live-df recount (TextIndex round-16 staleness rule) and the next
-  * maintain rebuilds stats from live postings. Atomicity is spent
-  * where erasure demands it: the data rows.
+  * The text index's derived scalars — the (n_docs, total_len) shrink
+  * and the dictionary staleness counter — ride the index's own
+  * participant commit as properties, computed from the probe taken
+  * under the transaction's claim fence: they flip with the postings,
+  * and no crash leaves them behind.
   *
   * Reference behavior anchor: the reference pipeline has no deletion
   * story at all (inserts only, mongodb/data_repo.rs); the semantics
@@ -47,7 +45,7 @@ object Forget {
   /** Discovered sibling participants of `corpus` under `base`, with
     * each one's key column: the text index keys on the cast `doc_id`
     * postings column; the ANN index (and its PQ codes sibling) keys on
-    * the id column its _meta binding records. */
+    * the id column its binding property records. */
   private def siblings(spark: SparkSession, base: Path,
       name: String): Seq[(Path, String)] = {
     def live(p: Path): Boolean =
@@ -56,7 +54,7 @@ object Forget {
     val pos = base.resolve(s"${name}_text_ix_pos")
     val aix = base.resolve(s"${name}_ann_ix")
     val codes = base.resolve(s"${name}_ann_ix_codes")
-    val annId = if (live(aix)) AnnIndex.boundIdCol(spark, aix) else None
+    val annId = if (live(aix)) AnnIndex.boundIdCol(aix) else None
     (if (live(tix)) Seq((tix, "doc_id")) else Nil) ++
       (if (live(pos)) Seq((pos, "doc_id")) else Nil) ++
       annId.map(id => (aix, id)).toSeq ++
@@ -64,10 +62,10 @@ object Forget {
   }
 
   /** Erase `keys` (cast to the corpus key column) from the corpus AND
-    * every keyed index sibling in one atomic transaction; then settle
-    * the text index's derived scalars. Idempotent under redelivery:
-    * re-deleting already-DV'd keys is a no-op per table, and the stats
-    * shrink is computed from what the keys still touched. */
+    * every keyed index sibling in one atomic transaction, the text
+    * index's derived scalars settled in its commit. Idempotent under
+    * redelivery: re-deleting already-DV'd keys is a no-op per table, and
+    * the stats shrink is computed from what the keys still touched. */
   def forget(spark: SparkSession, base: Path, tableName: String,
       keys: DataFrame, keyCol: String): ForgetReport = {
     val corpus = base.resolve(tableName)
@@ -78,26 +76,22 @@ object Forget {
     val nKeys = k.count()
     val parts = siblings(spark, base, tableName)
     val tix = base.resolve(s"${tableName}_text_ix")
-    // the text index's stats contribution of the still-live postings
-    // these keys hold — measured BEFORE the atomic flip (the single-
-    // maintainer contract makes this exact), applied after it
-    val textGone: Option[(Long, Long)] =
-      if (!parts.exists(_._1 == tix)) None
-      else Some(TextIndex.deletedContribution(spark, tix,
-        k.withColumnRenamed(keyCol, "doc_id")))
     val ops: Seq[TxLog.TxnOp] =
       TxLog.TxnDeleteMor(corpus, k, keyCol) +:
         parts.map { case (table, idCol) =>
-          TxLog.TxnDeleteMor(table, k.withColumnRenamed(keyCol, idCol), idCol)
+          val keyed = k.withColumnRenamed(keyCol, idCol)
+          // the text index's probe carries each doc's length: its
+          // commit shrinks the statistics by what the keys still held
+          if (table == tix) TxLog.TxnDeleteMor(table, keyed, idCol, carry = Seq("dl"),
+            props = TextIndex.deletedProps(tix))
+          else TxLog.TxnDeleteMor(table, keyed, idCol)
         }
     val versions = TxLog.transact(spark, ops)
-    // catch-up scalars (see scaladoc: exactness never depends on these
-    // landing — DV-presence staleness guards the window)
-    textGone.foreach { case (nGone, lenGone) =>
-      TextIndex.noteDeleted(spark, tix, nGone, lenGone)
+    // the docs the text index lost: its n_docs before and at its commit
+    val textGone = versions.get(tix).fold(0L) { v =>
+      TextIndex.corpusStats(tix, Some(v - 1))._1 - TextIndex.corpusStats(tix, Some(v))._1
     }
     ForgetReport(versions(corpus.toRealPath()),
-      parts.map(_._1.getFileName.toString),
-      nKeys, textGone.map(_._1).getOrElse(0L))
+      parts.map(_._1.getFileName.toString), nKeys, textGone)
   }
 }

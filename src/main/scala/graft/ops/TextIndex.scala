@@ -16,13 +16,22 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   *    term_hash so a query term's postings resolve through the log's
   *    footer [min,max] pruning to ~one file — the posting-list seek of
   *    an inverted index, expressed as ordinary stats skipping;
-  *  - `<index>_stats`: one row (n_docs, total_len) — the corpus-global
-  *    scalars BM25 needs (N, avgdl), maintained incrementally;
+  *    The postings table's properties ([[TxLog.propsAt]]) carry the
+  *    corpus-global scalars BM25 needs — `n_docs` and `total_len` (N,
+  *    avgdl) — and `n_deleted`, the docs deletes removed since the
+  *    build, each set by the postings commit that changes it; and the
+  *    corpus binding `id_col`, `text_col`, `n_clusters`, set by the
+  *    first postings commit. A crash can never leave them disagreeing
+  *    with the postings of any version;
+  *  - `<index>_tstats`: the term dictionary the bounded search modes
+  *    prune with; its `refreshed_at` property is the index's
+  *    `n_deleted` as of the postings its exact rebuild read;
   *  - `<index>_files`: the indexed corpus files (names), the
   *    incremental-maintenance watermark ([[BloomIndex]]'s discipline).
   *
   * SERVING never touches the corpus: [[searchBm25]] reads the query
-  * terms' pruned postings + the 1-row stats table and produces EXACTLY
+  * terms' pruned postings + N and avgdl from the same postings version,
+  * and produces EXACTLY
   * the ranking of the in-query BM25 (t14 — same tokenizer, same
   * always-positive idf, same k1/b, same round-6 + doc_id tie-break), so
   * one DuckDB oracle cross-gates the scan path and the index path.
@@ -69,12 +78,8 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   */
 object TextIndex {
 
-  private def statsDir(index: Path): Path = index.resolveSibling(index.getFileName + "_stats")
   private def filesDir(index: Path): Path = index.resolveSibling(index.getFileName + "_files")
-  private def metaDir(index: Path): Path = index.resolveSibling(index.getFileName + "_meta")
   private def tstatsDir(index: Path): Path = index.resolveSibling(index.getFileName + "_tstats")
-  private def tstatsMetaDir(index: Path): Path =
-    index.resolveSibling(index.getFileName + "_tstats_meta")
 
   /** Range-MONOTONE cluster bucket of term_hash. Clustering by the raw
     * column would hash-partition it (repartition's exchange), giving
@@ -87,45 +92,92 @@ object TextIndex {
     expr(s"int(((shiftright(term_hash, 32) + 2147483648L) * ${n}L) div 4294967296L)")
 
   /** The index's self-describing corpus binding (id/text column, cluster
-    * count), written once at creation so lifecycle maintenance can
-    * re-index new corpus files without the caller re-stating them.
-    * None when the _meta sidecar is absent — maintenance must NOT guess
-    * a binding (a legacy index built with non-default columns would be
-    * silently re-indexed under the wrong one, corrupting postings). */
-  private def readMeta(spark: SparkSession, index: Path): Option[(String, String, Int)] =
-    if (TxLog.versions(metaDir(index)).isEmpty) None
-    else {
-      val r = TxLog.cachedHeadRow(spark, metaDir(index))
-      Some((r.getString(r.fieldIndex("id_col")), r.getString(r.fieldIndex("text_col")),
-        r.getInt(r.fieldIndex("n_clusters"))))
-    }
+    * count), set by the first postings commit so lifecycle maintenance
+    * can re-index new corpus files without the caller re-stating them.
+    * None when no commit set it — maintenance must NOT guess a binding
+    * (a legacy index built with non-default columns would be silently
+    * re-indexed under the wrong one, corrupting postings). */
+  private def binding(index: Path): Option[(String, String, Int)] = {
+    val p = TxLog.propsAt(index)
+    p.get("id_col").map(id => (id, p("text_col"), p("n_clusters").toInt))
+  }
 
   /** Whether the index carries its self-describing binding — the gate
     * auto-maintenance must check before driving [[maintain]]. */
-  def hasMeta(index: Path): Boolean = TxLog.versions(metaDir(index)).nonEmpty
+  def hasBinding(index: Path): Boolean = binding(index).isDefined
+
+  /** The index's corpus scalars at one postings version. */
+  private final case class Scalars(nDocs: Long, totalLen: Long, nDeleted: Long)
+
+  /** [[Scalars]] from the index's properties at `version` (latest when
+    * None). An index with postings but no `n_docs` property was built
+    * with the scalars in sidecar tables, which are not read: refused by
+    * name. */
+  private def scalarsAt(index: Path, version: Option[Long] = None): Scalars = {
+    val p = TxLog.propsAt(index, version)
+    def long(k: String): Long = p.get(k).map(_.toLong).getOrElse(
+      throw new IllegalStateException(s"text index at $index has no '$k' property: it " +
+        "was built with its scalars in sidecar tables, which are no longer read — rebuild it"))
+    Scalars(long("n_docs"), long("total_len"), p.get("n_deleted").fold(0L)(_.toLong))
+  }
+
+  /** The index's (n_docs, total_len) at `version` (latest when None):
+    * BM25's N and N * avgdl over the live postings of that version. */
+  def corpusStats(index: Path, version: Option[Long] = None): (Long, Long) = {
+    val s = scalarsAt(index, version)
+    (s.nDocs, s.totalLen)
+  }
+
+  /** The properties of a postings delete whose probe read `probed`
+    * (file, doc_id, dl) rows: the statistics shrink by the distinct
+    * docs and one `dl` per doc (every posting of a doc carries the same
+    * dl), and the dictionary's staleness counter `n_deleted` advances by
+    * the docs, so the bounded search modes recount live dfs until
+    * [[maintain]] rebuilds the dictionary. Read from the index's head,
+    * which [[TxLog.transact]]'s claim fence freezes. */
+  private[ops] def deletedProps(index: Path)(probed: Array[Row]): Map[String, String] = {
+    val dlOf = probed.map(r => r.getLong(1) -> r.getAs[Number](2).longValue).toMap
+    if (dlOf.isEmpty) Map.empty
+    else {
+      val s = scalarsAt(index)
+      Map("n_docs" -> (s.nDocs - dlOf.size).toString,
+        "total_len" -> (s.totalLen - dlOf.values.sum).toString,
+        "n_deleted" -> (s.nDeleted + dlOf.size).toString)
+    }
+  }
+
+  /** The refresh mark of the index's dictionary: the index's
+    * `n_deleted` as of the postings its last exact rebuild read (-1, so
+    * stale, when unset). */
+  private def refreshedAt(index: Path): Long =
+    TxLog.propsAt(tstatsDir(index)).get("refreshed_at").fold(-1L)(_.toLong)
 
   /** Index every live corpus file not yet in the watermark: postings
-    * range-clustered by term_hash, stats and watermark advanced, each
-    * step one commit. Returns the number of newly indexed documents.
-    * First call on an empty index IS the build. */
+    * range-clustered by term_hash with the statistics advanced in the
+    * same commit, then the dictionary slice and the watermark, one
+    * commit each. Returns the number of newly indexed documents. First
+    * call on an empty index IS the build. */
   def ensureIndexed(spark: SparkSession, corpus: Path, index: Path,
       idCol: String = "doc_id", textCol: String = "text",
       nClusters: Int = 8): Long = Jobs.labeled(spark, "text ensureIndexed") {
     import spark.implicits._
     // args-vs-binding consistency: an index already bound to one
     // (id, text, clusters) triple must not ingest under another
-    readMeta(spark, index).foreach { case (i0, t0, n0) =>
+    val bound = binding(index)
+    bound.foreach { case (i0, t0, n0) =>
       require(i0 == idCol && t0 == textCol && n0 == nClusters,
         s"index at $index is bound to (id=$i0, text=$t0, clusters=$n0); " +
           s"ensureIndexed called with ($idCol, $textCol, $nClusters)")
     }
-    // backfill the binding even on a no-op call, so a legacy
-    // (pre-_meta) index becomes maintainable after one explicit
-    // ensureIndexed with its original arguments (driver-local write:
-    // 3 driver-held values need no distributed job)
-    if (TxLog.versions(metaDir(index)).isEmpty)
-      TxLog.appendLocal(spark, metaDir(index), "n_clusters", MetaSchema,
-        Seq(Seq(idCol, textCol, nClusters))): Unit
+    val bind = Map("id_col" -> idCol, "text_col" -> textCol, "n_clusters" -> nClusters.toString)
+    val built = TxLog.versions(index).nonEmpty
+    val st0 = if (built) scalarsAt(index) else Scalars(0L, 0L, 0L)
+    // backfill the binding even on a no-op call, so a legacy index (no
+    // binding property) becomes maintainable after one explicit
+    // ensureIndexed with its original arguments. A fresh index's
+    // binding rides its first postings commit: a separate commit would
+    // count as a prior postings version below
+    if (built && bound.isEmpty) TxLog.setProps(index, bind): Unit
     val snap = TxLog.snapshotAt(corpus)
     val indexed: Set[String] =
       TxLog.cachedStringSet(spark, filesDir(index), "file_name")
@@ -169,7 +221,10 @@ object TextIndex {
     val lenNew = om.get("len").map(_.asInstanceOf[Long]).getOrElse(0L)
     if (nNew > 0) {
       val pv = TxLog.appendClustered(spark, mat, index, "term_hash",
-        clusterBucket(nClusters), nClusters)
+        clusterBucket(nClusters), nClusters,
+        props = (if (built) Map.empty[String, String] else bind) ++ Map(
+          "n_docs" -> (st0.nDocs + nNew).toString,
+          "total_len" -> (st0.totalLen + lenNew).toString))
       // the _tstats dictionary delta (per-term df, the dl-free impact
       // ceiling max tf/(tf+k1(1-b)), the slice's top (tf, dl) pairs,
       // and the postings-commit binding): LOG-STRUCTURED — each
@@ -181,7 +236,9 @@ object TextIndex {
       // otherwise carry a silently PARTIAL dictionary and misrank
       // every query touching the uncovered terms; such a write spans
       // many commits' files, so its slice binding is -1 (unbound:
-      // block-max falls back to hash-range reads for it).
+      // block-max falls back to hash-range reads for it). A created
+      // dictionary is exact for the postings at pv: its refresh mark is
+      // their n_deleted.
       val creating = TxLog.versions(tstatsDir(index)).isEmpty
       upgradeTstatsSchema(spark, index)
       // creating on a FRESH index (no postings commit before pv): the
@@ -191,23 +248,12 @@ object TextIndex {
       // second corpus-sized pass on the build path). Only a mid-life
       // upgrade (prior postings commits exist) must read the full index.
       val hadPrior = TxLog.versions(index).exists(_ < pv)
-      val dictSrc = if (creating && hadPrior) TxLog.readAt(spark, index) else mat
+      val dictSrc = if (creating && hadPrior) TxLog.readAt(spark, index, Some(pv)) else mat
       val sliceVer = if (creating && hadPrior) -1L else pv
       TxLog.appendClustered(spark, tstatsDelta(spark, dictSrc, sliceVer),
-        tstatsDir(index), "term_hash", clusterBucket(nClusters), nClusters): Unit
-      if (TxLog.versions(tstatsMetaDir(index)).isEmpty)
-        writeTstatsMeta(spark, index, (0L, 0L))
+        tstatsDir(index), "term_hash", clusterBucket(nClusters), nClusters,
+        props = if (creating) Map("refreshed_at" -> st0.nDeleted.toString) else Map.empty): Unit
     }
-    // stats: one-row overwrite (versioned like everything else; the
-    // first increment is the creating append). Prior scalars resolve
-    // from driver footer metadata (scalarsOf) — the increment path pays
-    // no Spark job to read a 1-row table it wrote itself.
-    writeStats(spark, index,
-      if (TxLog.versions(statsDir(index)).isEmpty) (nNew, lenNew)
-      else {
-        val s = scalarsOf(spark, statsDir(index), Seq("n_docs", "total_len"))
-        (s(0) + nNew, s(1) + lenNew)
-      })
     // watermark advance: a driver-held name list — local write, and the
     // cached set is seeded in place so the NEXT lifecycle call pays no
     // Spark job to re-read rows this JVM just wrote
@@ -222,47 +268,36 @@ object TextIndex {
     org.apache.spark.sql.types.StructField("file_name",
       org.apache.spark.sql.types.StringType, nullable = true)))
 
-  private val MetaSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("id_col",
-      org.apache.spark.sql.types.StringType, nullable = true),
-    org.apache.spark.sql.types.StructField("text_col",
-      org.apache.spark.sql.types.StringType, nullable = true),
-    org.apache.spark.sql.types.StructField("n_clusters",
-      org.apache.spark.sql.types.IntegerType, nullable = false)))
-
-  private val TwoLongSchema: (String, String) => org.apache.spark.sql.types.StructType =
-    (a, b) => org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(a,
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField(b,
-        org.apache.spark.sql.types.LongType, nullable = false)))
-
   /** BM25 top-k served from the INDEX ALONE — per query term one
     * footer-pruned point read of the postings (range on term_hash, the
     * exact term re-checked so a 64-bit hash collision costs nothing),
     * document frequency from the pruned postings themselves, N/avgdl
-    * from the 1-row stats table. Identical arithmetic, rounding, and
-    * tie-break to the in-query t14 ranking. */
+    * from the same postings version's properties. Identical arithmetic,
+    * rounding, and tie-break to the in-query t14 ranking. */
   def searchBm25(spark: SparkSession, index: Path, terms: Seq[String],
       k: Int): DataFrame = {
     require(terms.nonEmpty, "searchBm25 needs at least one query term")
-    val posts = terms.distinct.map { term =>
-      val h = termHash(term)
-      TxLog.readAt(spark, index, range = Some(("term_hash", h, h)))
-        .filter(col("term") === lit(term))
-    }.reduce(_ unionByName _)
+    val v = TxLog.latestVersion(index)
+    val posts = terms.distinct.map(t => pointRead(spark, index, v, t)).reduce(_ unionByName _)
     val dfRel = posts.groupBy("term").agg(count(lit(1)).as("df"))
-    bm25Rank(posts, dfRel, statsRel(spark, index), k)
+    bm25Rank(posts, dfRel, statsRel(spark, index, v), k)
   }
 
-  /** The 1-row (n_docs, avgdl) relation BM25 serving cross-joins in:
-    * resolved from DRIVER footer metadata (scalarsOf — zero Spark jobs
-    * for the 1-row stats table; the searchBm25BlockMax discipline,
-    * identical IEEE division, tix gates pin hash-equality). */
-  private def statsRel(spark: SparkSession, index: Path): DataFrame = {
+  /** One query term's postings at version `v`: the footer-pruned
+    * term_hash range, the exact term re-checked. */
+  private def pointRead(spark: SparkSession, index: Path, v: Long, term: String): DataFrame = {
+    val h = termHash(term)
+    TxLog.readAt(spark, index, Some(v), range = Some(("term_hash", h, h)))
+      .filter(col("term") === lit(term))
+  }
+
+  /** The 1-row (n_docs, avgdl) relation BM25 serving cross-joins in,
+    * from the properties of postings version `v` (driver metadata, no
+    * Spark job; identical IEEE division, tix gates pin hash-equality). */
+  private def statsRel(spark: SparkSession, index: Path, v: Long): DataFrame = {
     import spark.implicits._
-    val s = scalarsOf(spark, statsDir(index), Seq("n_docs", "total_len"))
-    Seq((s(0), s(1).toDouble / s(0).toDouble)).toDF("n_docs", "avgdl")
+    val s = scalarsAt(index, Some(v))
+    Seq((s.nDocs, s.totalLen.toDouble / s.nDocs.toDouble)).toDF("n_docs", "avgdl")
   }
 
   /** The ONE BM25 readout (arithmetic, rounding, tie-break) — shared by
@@ -338,18 +373,15 @@ object TextIndex {
       k: Int): DataFrame = {
     require(terms.nonEmpty, "searchBm25All needs at least one query term")
     val distinct = terms.distinct
-    val posts = distinct.map { term =>
-      val h = termHash(term)
-      TxLog.readAt(spark, index, range = Some(("term_hash", h, h)))
-        .filter(col("term") === lit(term))
-    }.reduce(_ unionByName _)
+    val v = TxLog.latestVersion(index)
+    val posts = distinct.map(t => pointRead(spark, index, v, t)).reduce(_ unionByName _)
     val all = posts.groupBy("doc_id")
       .agg(countDistinct(col("term")).as("__nt"))
       .filter(col("__nt") === distinct.size)
       .select("doc_id")
     val dfRel = posts.groupBy("term").agg(count(lit(1)).as("df"))
     bm25Rank(posts.join(broadcast(all), Seq("doc_id"), "left_semi"), dfRel,
-      statsRel(spark, index), k)
+      statsRel(spark, index, v), k)
   }
 
   /** What a [[searchBm25MaxScore]] call decided: which lists were
@@ -392,11 +424,10 @@ object TextIndex {
       MaxScoreReport(distinct, Nil, -1L, -1L, fellBack = true,
         dfRecounted = false))
     if (TxLog.versions(tstatsDir(index)).isEmpty) return fallback
-    val (nDel, refreshedAt) = readTstatsMeta(spark, index)
-    val nDocs = scalarsOf(spark, statsDir(index), Seq("n_docs"))(0)
-    def pointRead(t: String, h: Long) =
-      TxLog.readAt(spark, index, range = Some(("term_hash", h, h)))
-        .filter(col("term") === lit(t))
+    val v = TxLog.latestVersion(index)
+    val sc = scalarsAt(index, Some(v))
+    val nDocs = sc.nDocs
+    def postings(t: String) = pointRead(spark, index, v, t)
     // dictionary point reads: per term one footer-pruned file, all
     // terms unioned into ONE job, reduced to (df, bound) — |terms| rows
     // on the driver, never a posting; absent terms simply yield no row
@@ -427,52 +458,51 @@ object TextIndex {
     // [[maintain]] is the one supported DV-folding rewrite, and it
     // rebuilds the dictionary in the same pass — so "no DVs and
     // counters equal" genuinely implies an exact dictionary.
-    val dvsPresent = TxLog.snapshotAt(index).files.exists(_.dv.isDefined)
-    val dfRecounted = nDel != refreshedAt || dvsPresent
+    val dvsPresent = TxLog.snapshotAt(index, Some(v)).files.exists(_.dv.isDefined)
+    val dfRecounted = sc.nDeleted != refreshedAt(index) || dvsPresent
     val dfExact: Map[String, Long] =
       if (!dfRecounted) stored.map(s => s._1 -> s._2).toMap
-      else distinct.map(t => pointRead(t, termHash(t)))
-        .reduce(_ unionByName _)
+      else distinct.map(postings).reduce(_ unionByName _)
         .groupBy(col("term")).agg(count(lit(1)).as("df"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val dict = stored.flatMap { case (t, _, b) =>
-      dfExact.get(t).filter(_ > 0).map(df => (t, termHash(t), df, b))
+      dfExact.get(t).filter(_ > 0).map(df => (t, df, b))
     }
     if (dict.isEmpty)
-      return (TxLog.readAt(spark, index).filter(lit(false))
+      return (TxLog.readAt(spark, index, Some(v)).filter(lit(false))
         .select(col("doc_id"), lit(0.0).as("score")),
         MaxScoreReport(Nil, distinct, 0L, 0L, fellBack = false, dfRecounted))
-    val ceil = dict.map { case (t, h, df, b) =>
-      (t, h, df, math.log((nDocs - df + 0.5) / (df + 0.5) + 1.0) * b)
-    }.sortBy { case (t, _, _, u) => (-u, t) }
-    val st = statsRel(spark, index)
+    val ceil = dict.map { case (t, df, b) =>
+      (t, df, math.log((nDocs - df + 0.5) / (df + 0.5) + 1.0) * b)
+    }.sortBy { case (t, _, u) => (-u, t) }
+    val st = statsRel(spark, index, v)
     import spark.implicits._
-    val dfRel = broadcast(ceil.map(c => (c._1, c._3)).toDF("term", "df"))
+    val dfRel = broadcast(ceil.map(c => (c._1, c._2)).toDF("term", "df"))
     // θ̂: the k-th best single-list partial of the top-impact list —
     // every such doc's TRUE score only grows, so θ_true >= θ̂
-    val (t1, h1, _, _) = ceil.head
-    val thetaRow = bm25Rank(pointRead(t1, h1), dfRel, st, k)
+    val t1 = ceil.head._1
+    val thetaRow = bm25Rank(postings(t1), dfRel, st, k)
       .agg(count(lit(1)).as("n"), coalesce(min(col("score")), lit(0.0)).as("kth")).head
     val theta =
       if (thetaRow.getLong(0) < k) Double.NegativeInfinity else thetaRow.getDouble(1)
     // essential = minimal prefix whose complement's ceiling-sum cannot
     // reach θ̂ (strictly, with the rounding margin)
-    val suffix = ceil.map(_._4).scanRight(0.0)(_ + _).tail // suffix(i) = Σ_{j>i} u_j
+    val suffix = ceil.map(_._3).scanRight(0.0)(_ + _).tail // suffix(i) = Σ_{j>i} u_j
     val nEss = (1 to ceil.size).find(j => suffix(j - 1) < theta - 1e-5)
       .getOrElse(ceil.size)
     val (ess, rest) = ceil.splitAt(nEss)
-    val essPosts = ess.map(c => pointRead(c._1, c._2)).reduce(_ unionByName _)
+    val essPosts = ess.map(c => postings(c._1)).reduce(_ unionByName _)
     val posts =
       if (rest.isEmpty) essPosts
       else {
         val cands = essPosts.select("doc_id").distinct()
         essPosts.unionByName(
-          rest.map(c => pointRead(c._1, c._2)).reduce(_ unionByName _)
+          rest.map(c => postings(c._1)).reduce(_ unionByName _)
             .join(cands, Seq("doc_id"), "left_semi"))
       }
     (bm25Rank(posts, dfRel, st, k),
       MaxScoreReport(ess.map(_._1), rest.map(_._1),
-        ceil.map(_._3).sum, ess.map(_._3).sum, fellBack = false, dfRecounted))
+        ceil.map(_._2).sum, ess.map(_._2).sum, fellBack = false, dfRecounted))
   }
 
   /** What a [[searchBm25BlockMax]] call decided: unit (term × slice)
@@ -551,10 +581,10 @@ object TextIndex {
     // WHERE the call runs, decided once from driver metadata: the same
     // plan below either reads and ranks on the driver or through Spark
     val onDriver = servesOnDriver(index, snap, distinct, driverMaxBytes)
-    // corpus scalars from driver metadata (scalarsOf): no Spark job
-    val stVals = scalarsOf(spark, statsDir(index), Seq("n_docs", "total_len"))
-    val nDocs = stVals(0)
-    val avgdl = stVals(1).toDouble / nDocs.toDouble
+    // corpus scalars of the snapshot's own version: no Spark job
+    val sc = scalarsAt(index, Some(snap.version))
+    val nDocs = sc.nDocs
+    val avgdl = sc.totalLen.toDouble / nDocs.toDouble
     // ---- dictionary rows, VERSION-KEYED per-JVM cached (the Lucene
     // shape: the term dictionary lives in serving memory) — a term's
     // slices are immutable for a given _tstats version, so steady-state
@@ -589,9 +619,7 @@ object TextIndex {
     val units: Seq[U] = distinct
       .flatMap(t => Option(dictCache.get(dictKeyBase + t)).getOrElse(Nil))
       .map(d => U(d.term, termHash(d.term), d.df, d.bound, d.pairs, d.ver))
-    def pointRead(t: String, h: Long) =
-      TxLog.readAt(spark, index, range = Some(("term_hash", h, h)))
-        .filter(col("term") === lit(t))
+    def postings(t: String) = pointRead(spark, index, snap.version, t)
     // the driver path's postings of one term in `files`, DVs applied
     def readPostings(t: String, h: Long, files: Seq[TxLog.AddFile]): Vector[Posting] =
       TxLog.readLocal(spark, index, files, Seq("term", "doc_id", "tf", "dl"),
@@ -600,8 +628,7 @@ object TextIndex {
           Posting(t, r.getLong(1), r.getAs[Number](2).longValue, r.getAs[Number](3).longValue)
         }
     // ---- staleness (the searchBm25MaxScore rule: counter OR DVs)
-    val (nDel, refreshedAt) = readTstatsMeta(spark, index)
-    val stale = nDel != refreshedAt || snap.files.exists(_.dv.isDefined)
+    val stale = sc.nDeleted != refreshedAt(index) || snap.files.exists(_.dv.isDefined)
     // stale driver path: each term's live pruned list, read once for
     // the df recount, θ̂ and the ranking
     lazy val fullLists: Map[String, Vector[Posting]] = distinct.map { t =>
@@ -612,8 +639,7 @@ object TextIndex {
       if (!stale) units.groupBy(_.term).view.mapValues(_.map(_.df).sum).toMap
       else if (onDriver)
         fullLists.collect { case (t, ps) if ps.nonEmpty => t -> ps.size.toLong }
-      else distinct.map(t => pointRead(t, termHash(t)))
-        .reduce(_ unionByName _)
+      else distinct.map(postings).reduce(_ unionByName _)
         .groupBy(col("term")).agg(count(lit(1)).as("df"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val live = units.filter(u => dfExact.getOrElse(u.term, 0L) > 0)
@@ -642,7 +668,7 @@ object TextIndex {
         val top = live.minBy(u => (-(idf(u.term) * u.bound), u.term, u.ver))
         if (onDriver) kth(bm25RankLocal(fullLists(top.term), dfLive, nDocs, avgdl, k))
         else {
-          val row = bm25Rank(pointRead(top.term, top.h), dfRel, stDf, k)
+          val row = bm25Rank(postings(top.term), dfRel, stDf, k)
             .agg(count(lit(1)).as("n"), coalesce(min(col("score")), lit(0.0)).as("kth"))
             .head
           if (row.getLong(0) < k) Double.NegativeInfinity else row.getDouble(1)
@@ -913,48 +939,14 @@ object TextIndex {
     pushed.join(broadcast(t.select("term")), Seq("term"), "left_semi")
   }
 
-  /** The stats contribution (docs, total length) the given keys STILL
-    * hold in the live postings — what [[graft.ops.Forget]] must shrink
-    * the 1-row stats table by after its transaction. It is the index's
-    * merge-on-read probe with no commit (one Spark job); zero for
-    * already-deleted keys, so the caller stays idempotent under
-    * redelivery. */
-  def deletedContribution(spark: SparkSession, index: Path,
-      deletedKeys: DataFrame, idCol: String = "doc_id"): (Long, Long) =
-    contribution(TxLog.morProbe(spark, index, TxLog.snapshotAt(index),
-      TxLog.morKeys(deletedKeys, idCol), "doc_id", Seq("dl")))
-
-  /** (docs, total length) of a postings probe's (file, doc_id, dl) rows:
-    * the distinct doc_ids and the sum of one `dl` per doc (every posting
-    * of a doc carries the same dl). */
-  private def contribution(probed: Array[Row]): (Long, Long) = {
-    val dlOf = probed.map(r => r.getLong(1) -> r.getAs[Number](2).longValue).toMap
-    (dlOf.size.toLong, dlOf.values.sum)
-  }
-
-  /** Settle the derived scalars after `nGone` docs (carrying `lenGone`
-    * total tokens) left the index by an EXTERNAL delete (Forget's
-    * transaction): stats shrink so avgdl stays honest, and the
-    * dictionary's staleness counter advances so the bounded search
-    * modes recount live dfs until maintain folds the dictionary. */
-  def noteDeleted(spark: SparkSession, index: Path, nGone: Long,
-      lenGone: Long): Unit = {
-    if (nGone == 0) return
-    val s = scalarsOf(spark, statsDir(index), Seq("n_docs", "total_len"))
-    writeStats(spark, index, (s(0) - nGone, s(1) - lenGone))
-    if (TxLog.versions(tstatsDir(index)).nonEmpty) {
-      val (n, at) = readTstatsMeta(spark, index)
-      writeTstatsMeta(spark, index, (n + nGone, at))
-    }
-  }
-
   /** Remove the postings of deleted documents — churn-sized merge-on-
     * read deletes keyed on doc_id (the caller supplies the deleted keys;
-    * the right-to-be-forgotten flow has them in hand). Stats shrink by
-    * the removed docs' contribution so avgdl stays honest. One Spark job
-    * per table: the keys are collected to the driver (no job for a local
-    * key frame), and the index's delete probe carries `dl`, so the same
-    * rows give the DV matches and the stats shrink. */
+    * the right-to-be-forgotten flow has them in hand). The statistics
+    * shrink by the removed docs' contribution in the same commit, so
+    * avgdl stays honest and no crash leaves them behind the postings.
+    * One Spark job per table: the keys are collected to the driver (no
+    * job for a local key frame), and the index's delete probe carries
+    * `dl`, so the same rows give the DV matches and the shrink. */
   def pruneDeleted(spark: SparkSession, index: Path, deletedKeys: DataFrame,
       idCol: String = "doc_id"): Long = Jobs.labeled(spark, "text pruneDeleted") {
     // an insert-only CDF micro-batch (the common streaming case) exits
@@ -968,15 +960,9 @@ object TextIndex {
     // must still catch up (re-deleting already-DV'd keys is a no-op).
     if (TxLog.versions(posDir(index)).nonEmpty)
       TxLog.deleteMor(spark, posDir(index), keys, "doc_id"): Unit
-    // the removed docs' length contribution, read by the delete's probe
-    // BEFORE the postings go
-    val d = TxLog.deleteMor(spark, index, keys, "doc_id", carry = Seq("dl"))
-    val (nGone, lenGone) = contribution(d.probed)
-    if (nGone == 0) return 0L
-    // stats shrink + dictionary stale-HIGH marker (the bounded search
-    // modes recount live dfs until maintain folds the dictionary)
-    noteDeleted(spark, index, nGone, lenGone)
-    d.version
+    val d = TxLog.deleteMor(spark, index, keys, "doc_id", carry = Seq("dl"),
+      props = deletedProps(index))
+    if (d.dvFiles == 0) 0L else d.version
   }
 
   /** Stored (tf, dl) pairs per dictionary slice — enough for any
@@ -1029,40 +1015,6 @@ object TextIndex {
       TxLog.addColumn(t, "slice_ver", org.apache.spark.sql.types.LongType): Unit
   }
 
-  /** 1-row scalar sidecars (_stats, _tstats_meta) read from DRIVER
-    * metadata alone: the single live 1-row file's per-column footer
-    * [min,max] IS the value (min == max), so the serving hot path pays
-    * zero Spark jobs for them. Any other shape (multi-file, DV'd,
-    * missing column stats) falls back to the Spark read. */
-  private def scalarsOf(spark: SparkSession, table: Path, names: Seq[String]): Seq[Long] = {
-    val snap = TxLog.snapshotAt(table)
-    if (snap.files.size == 1 && snap.files.head.rows == 1 &&
-        snap.files.head.dv.isEmpty) {
-      val c = snap.files.head.cols
-      if (names.forall(n => c.get(n).exists(p => p._1 == p._2)))
-        return names.map(n => c(n)._1)
-    }
-    val r = TxLog.readAt(spark, table).head
-    names.map(n => r.getLong(r.fieldIndex(n)))
-  }
-
-  private def readTstatsMeta(spark: SparkSession, index: Path): (Long, Long) =
-    if (TxLog.versions(tstatsMetaDir(index)).isEmpty) (0L, 0L)
-    else {
-      val s = scalarsOf(spark, tstatsMetaDir(index), Seq("n_deleted", "refreshed_at"))
-      (s(0), s(1))
-    }
-
-  private def writeTstatsMeta(spark: SparkSession, index: Path, v: (Long, Long)): Unit = {
-    // driver-local 1-row write: no Spark job for two driver-held longs
-    val schema = TwoLongSchema("n_deleted", "refreshed_at")
-    if (TxLog.versions(tstatsMetaDir(index)).isEmpty)
-      TxLog.appendLocal(spark, tstatsMetaDir(index), "n_deleted", schema,
-        Seq(Seq(v._1, v._2))): Unit
-    else TxLog.overwriteLocal(spark, tstatsMetaDir(index), "n_deleted", schema,
-      Seq(Seq(v._1, v._2))): Unit
-  }
-
   /** What [[maintain]] did: docs newly indexed, postings files and DV
     * sidecars before/after the re-cluster, dead files reclaimed. */
   final case class MaintainReport(docsIndexed: Long, filesBefore: Long,
@@ -1075,9 +1027,9 @@ object TextIndex {
     * lookup pays ~one file per increment), and [[pruneDeleted]] leaves
     * DV sidecars whose anti-join every read replays. This folds both
     * back to the freshly-built shape:
-    *   1. index corpus files not yet in the watermark (meta table
-    *      supplies the id/text binding; the doc_id anti-join keeps a
-    *      compaction-rewritten corpus from doubling postings);
+    *   1. index corpus files not yet in the watermark (the binding
+    *      properties supply the id/text columns; the doc_id anti-join
+    *      keeps a compaction-rewritten corpus from doubling postings);
     *   2. re-cluster ALL postings into nClusters range-DISJOINT files
     *      with DVs folded in (one distributed compactClustered job,
     *      one atomic commit — readers never block), restoring the
@@ -1089,12 +1041,12 @@ object TextIndex {
     * per-term file count returns to the clustered bound. */
   def maintain(spark: SparkSession, corpus: Path, index: Path,
       vacuumKeep: Int = 1, vacuumMinAgeMs: Long = 0L): MaintainReport = {
-    val (idCol, textCol, nClusters) = readMeta(spark, index).getOrElse {
+    val (idCol, textCol, nClusters) = binding(index).getOrElse {
       if (TxLog.versions(index).isEmpty) ("doc_id", "text", 8) // fresh index: maintain IS the build
       else throw new IllegalStateException(
-        s"text index at $index predates the _meta sidecar — its id/text binding is " +
+        s"text index at $index has no id_col binding property — its id/text binding is " +
           "unknown and maintenance will not guess one. Run TextIndex.ensureIndexed " +
-          "once with the original idCol/textCol/nClusters to backfill _meta, then maintain.")
+          "once with the original idCol/textCol/nClusters to record it, then maintain.")
     }
     val indexedNew = ensureIndexed(spark, corpus, index, idCol, textCol, nClusters)
     val snap0 = TxLog.snapshotAt(index)
@@ -1115,7 +1067,10 @@ object TextIndex {
     // the _tstats dictionary: increments appended log-structured slices
     // and pruneDeleted left its df counts stale-high — rebuild it EXACT
     // from the live (DV-folded) postings, restore the range clustering,
-    // and reset the staleness counter so MaxScore's fast path reopens
+    // and mark it refreshed so MaxScore's fast path reopens. The mark is
+    // the n_deleted of the postings version the rebuild read, set by the
+    // rebuild's own commit: a crash before it leaves the old mark, so a
+    // stale dictionary never reads as fresh
     if (TxLog.versions(tstatsDir(index)).nonEmpty) {
       upgradeTstatsSchema(spark, index)
       // one slice, bound to the freshly-compacted postings commit —
@@ -1123,11 +1078,10 @@ object TextIndex {
       // clustered file. ONE clustered overwrite: the old overwrite +
       // compactClustered pair rewrote the dictionary twice for the
       // same final layout.
-      TxLog.overwriteClustered(spark,
-        tstatsDelta(spark, TxLog.readAt(spark, index), TxLog.latestVersion(index)),
-        tstatsDir(index), "term_hash", clusterBucket(nClusters), nClusters): Unit
-      val (n, _) = readTstatsMeta(spark, index)
-      writeTstatsMeta(spark, index, (n, n))
+      val v = TxLog.latestVersion(index)
+      TxLog.overwriteClustered(spark, tstatsDelta(spark, TxLog.readAt(spark, index, Some(v)), v),
+        tstatsDir(index), "term_hash", clusterBucket(nClusters), nClusters,
+        props = Map("refreshed_at" -> scalarsAt(index, Some(v)).nDeleted.toString)): Unit
     }
     // the positional sibling (if built) degrades the same two ways —
     // fold its increments and watermark back too
@@ -1139,8 +1093,8 @@ object TextIndex {
       if (TxLog.snapshotAt(posFilesDir(index)).files.size > 1)
         TxLog.compact(spark, posFilesDir(index), "file_name", nParts = 1): Unit
     }
-    val reclaimed = Seq(index, statsDir(index), filesDir(index), metaDir(index),
-        tstatsDir(index), tstatsMetaDir(index), posDir(index), posFilesDir(index))
+    val reclaimed = Seq(index, filesDir(index), tstatsDir(index), posDir(index),
+        posFilesDir(index))
       .map { t =>
         if (TxLog.versions(t).isEmpty) 0
         else TxLog.vacuum(t, keepVersions = math.max(1, vacuumKeep),
@@ -1177,15 +1131,5 @@ object TextIndex {
   def filesForTerm(spark: SparkSession, index: Path, term: String): Int = {
     val h = termHash(term)
     TxLog.pruneFiles(TxLog.snapshotAt(index), h, h).size
-  }
-
-  private def writeStats(spark: SparkSession, index: Path, v: (Long, Long)): Unit = {
-    // driver-local 1-row write: no Spark job for two driver-held longs
-    val schema = TwoLongSchema("n_docs", "total_len")
-    if (TxLog.versions(statsDir(index)).isEmpty)
-      TxLog.appendLocal(spark, statsDir(index), "n_docs", schema,
-        Seq(Seq(v._1, v._2))): Unit
-    else TxLog.overwriteLocal(spark, statsDir(index), "n_docs", schema,
-      Seq(Seq(v._1, v._2))): Unit
   }
 }

@@ -170,7 +170,8 @@ object TxLog {
   /** Live-set size above which a checkpoint SHARDS its file list.
     * A checkpoint is the log folded at its version ([[stateAt]]): the
     * live files plus the scalar fields protocol, tags, constraints,
-    * batchMax and partitionCols, and the txn outcomes decided so far.
+    * batchMax, partitionCols and props (the table properties, written
+    * when any are set), and the txn outcomes decided so far.
     * A sharded `checkpoint.json` keeps every scalar but carries
     * `filesRef` — a list of `checkpoint.d/part-NNNNN.jsonl` shards,
     * one AddFile JSON per line — instead of the inline `files` array.
@@ -178,8 +179,9 @@ object TxLog {
     * driver-memory and single-threaded-parse bottleneck on BOTH ends;
     * shards stream out bounded and parse back in parallel. A checkpoint
     * missing `batchMax` or `partitionCols` (both always written) predates
-    * those fields and never seeds the fold. The first sharded checkpoint
-    * grows the table protocol with the `shardedCheckpoint`
+    * those fields and never seeds the fold. A missing `props` means no
+    * properties: no commit that sets one predates the field. The first
+    * sharded checkpoint grows the table protocol with the `shardedCheckpoint`
     * reader+writer feature IN THE SAME COMMIT (tx26's gate machinery),
     * so a pre-upgrade engine refuses the table by name instead of
     * misreading it. Inline checkpoints remain the format for small
@@ -604,14 +606,15 @@ object TxLog {
 
   /** The log folded at `snapshot.version`: the live files plus every
     * scalar a checkpoint carries. Snapshot, protocol, tags, constraints,
-    * the streaming batch watermark and the partitioning are all fields
-    * of this one fold ([[stateAt]]); the public readers are accessors. */
+    * the streaming batch watermark, the partitioning and the table
+    * properties are all fields of this one fold ([[stateAt]]); the
+    * public readers are accessors. */
   private final case class State(snapshot: Snapshot, protocol: Protocol,
       tags: Map[String, Long], constraints: Map[String, String],
-      batchMax: Option[Long], partitionCols: Seq[String])
+      batchMax: Option[Long], partitionCols: Seq[String], props: Map[String, String])
 
-  private val EmptyState =
-    State(Snapshot(-1L, Vector.empty), Protocol.Empty, Map.empty, Map.empty, None, Nil)
+  private val EmptyState = State(Snapshot(-1L, Vector.empty), Protocol.Empty, Map.empty,
+    Map.empty, None, Nil, Map.empty)
 
   /** One folded state per table path — the newest resolved (an older
     * time-travel read never displaces it) — with its version's commit
@@ -652,7 +655,8 @@ object TxLog {
             _.fields().asScala.map(e => e.getKey -> e.getValue.asLong).toMap),
           Option(ck.get("constraints")).fold(Map.empty[String, String])(
             _.fields().asScala.map(e => e.getKey -> e.getValue.asText).toMap),
-          Some(ck.get("batchMax").asLong).filter(_ >= 0L), strings(ck.get("partitionCols")))
+          Some(ck.get("batchMax").asLong).filter(_ >= 0L), strings(ck.get("partitionCols")),
+          upsertProps(Map.empty, ck.get("props")))
       case None => EmptyState
     })
     // the live map is built only once a replayed commit touches files
@@ -679,7 +683,8 @@ object TxLog {
           case "create" if cv == 0L => strings(n.get("partitionCols"))
           case "set-partitioning" => strings(n.get("partitionCols"))
           case _ => s.partitionCols
-        })
+        },
+        upsertProps(s.props, n.get("props")))
     }
     val out = s.copy(snapshot =
       Snapshot(target, if (live == null) seed.snapshot.files else live.values.toVector))
@@ -688,24 +693,34 @@ object TxLog {
     out
   }
 
+  /** `props` with a commit's or checkpoint's `props` object applied:
+    * each key is set to its value, and a null value removes the key. */
+  private def upsertProps(props: Map[String, String],
+      n: com.fasterxml.jackson.databind.JsonNode): Map[String, String] =
+    if (n == null) props
+    else n.fields().asScala.foldLeft(props) { (m, e) =>
+      if (e.getValue.isNull) m - e.getKey else m + (e.getKey -> e.getValue.asText)
+    }
+
+  /** A commit's `extra` entry carrying `props` (none when empty). */
+  private def propsExtra(props: Map[String, String]): Map[String, Object] =
+    if (props.isEmpty) Map.empty else Map("props" -> (props.asJava: Object))
+
   /** [[stateAt]] at `version` (latest when None). */
   private def stateOf(table: Path, version: Option[Long]): State =
     stateAt(table, versions(table), version.getOrElse(Long.MaxValue))
 
-  // ---- cached tiny-metadata reads (optimization r16): index bindings
-  // (1-row _meta tables) and watermarks (file-name lists) are read at
-  // the top of EVERY lifecycle call — each read is a full Spark job
-  // over a table of a few rows. Both are version-keyed: a cached value
-  // is valid exactly while the table's latest version is unchanged, so
-  // only the no-op/refresh calls (the common case: streaming drains,
-  // idempotent CALL re-issues, maintain passes) skip the job.
-  // STAMP-GUARDED (optimization r17, VERDICT r16 item 7): like
-  // nodeCache/stateCache, the latest commit's (size, mtime) rides along
-  // so a table deleted and re-created at the same path with the same
-  // latest version (spec fixtures, clone targets) can never serve a
-  // stale row/set — one stat() instead of a Spark job.
-  private val headRowCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, (Long, Long), org.apache.spark.sql.Row)]()
+  // ---- cached watermark reads (optimization r16): index watermarks
+  // (file-name lists) are read at the top of EVERY lifecycle call — each
+  // read is a full Spark job over a table of a few rows. The cache is
+  // version-keyed: a cached set is valid exactly while the table's
+  // latest version is unchanged, so only the no-op/refresh calls (the
+  // common case: streaming drains, idempotent CALL re-issues, maintain
+  // passes) skip the job. STAMP-GUARDED (optimization r17, VERDICT r16
+  // item 7): like nodeCache/stateCache, the latest commit's (size,
+  // mtime) rides along so a table deleted and re-created at the same
+  // path with the same latest version (spec fixtures, clone targets)
+  // can never serve a stale set — one stat() instead of a Spark job.
   private val strSetCache = new java.util.concurrent.ConcurrentHashMap[
     String, (Long, (Long, Long), Set[String])]()
 
@@ -714,19 +729,6 @@ object TxLog {
   private def versionStamp(table: Path, v: Long): (Long, Long) =
     try commitStamp(versionDir(table, v).resolve("commit.json"))
     catch { case _: java.io.IOException => (-1L, -1L) }
-
-  /** The single row of a 1-row metadata table, cached per (version,
-    * commit stamp). */
-  def cachedHeadRow(spark: SparkSession, table: Path): org.apache.spark.sql.Row = {
-    val v = latestVersion(table)
-    val key = table.toAbsolutePath.toString
-    val stamp = versionStamp(table, v)
-    val hit = headRowCache.get(key)
-    if (hit != null && hit._1 == v && hit._2 == stamp) return hit._3
-    val r = readAt(spark, table).head
-    headRowCache.put(key, (v, stamp, r))
-    r
-  }
 
   /** One string column of a small metadata table as a Set, cached per
     * (version, commit stamp) (the index-watermark read shape). */
@@ -874,6 +876,7 @@ object TxLog {
         ++ (if (st.tags.isEmpty) Map.empty[String, Object]
             else Map("tags" -> (st.tags.view.mapValues(java.lang.Long.valueOf(_): Object)
               .toMap.asJava: Object)))
+        ++ propsExtra(st.props)
         ++ (if (txo.isEmpty) Map.empty[String, Object]
             else Map("txnOutcomes" -> (txo.asJava: Object)))
         ++ (if (txp.isEmpty) Map.empty[String, Object]
@@ -922,9 +925,13 @@ object TxLog {
   final case class TxnAppend(table: Path, df: DataFrame, statsCol: String,
       nParts: Int = 1, batchId: Option[Long] = None) extends TxnOp
   /** Atomic merge-on-read delete of `keys` from `table` (DV sidecars,
-    * no file rewrite — the same pipeline as [[deleteMor]]). */
-  final case class TxnDeleteMor(table: Path, keys: DataFrame, keyCol: String)
-    extends TxnOp
+    * no file rewrite — the same pipeline as [[deleteMor]], `carry` and
+    * `props` included: `props` runs on the probe taken under the claim
+    * fence, so the properties it derives from the frozen head are
+    * exact). */
+  final case class TxnDeleteMor(table: Path, keys: DataFrame, keyCol: String,
+      carry: Seq[String] = Nil,
+      props: Array[Row] => Map[String, String] = _ => Map.empty) extends TxnOp
   /** Atomic MERGE (upsert) of `df` into `table` as a transaction
     * participant: rows whose `keyCol` already exists are replaced
     * (merge-on-read — the old versions are DV'd out, zero files
@@ -1045,7 +1052,7 @@ object TxLog {
         case (a: TxnAppend, v, vd) =>
           val schemaNow = validateSchema(tableSchema(a.table), a.df.schema,
             allowEvolution = false)
-          (a: TxnOp, v, vd, staged(a), "append", Some(schemaNow))
+          (a: TxnOp, v, vd, staged(a), "append", Some(schemaNow), Map.empty[String, Object])
         case (m: TxnMerge, v, vd) =>
           val schemaNow = validateSchema(tableSchema(m.table), m.df.schema,
             allowEvolution = false)
@@ -1054,17 +1061,19 @@ object TxLog {
           // pre-merge holders of the merged keys
           val snap = snapshotAt(m.table)
           val d = morDelta(spark, m.table, snap, morKeys(m.df, m.keyCol), m.keyCol)
-          (m: TxnOp, v, vd, d.dvAdds ++ staged(m), "merge-mor", Some(schemaNow))
+          (m: TxnOp, v, vd, d.dvAdds ++ staged(m), "merge-mor", Some(schemaNow),
+            Map.empty[String, Object])
         case (d: TxnDeleteMor, v, vd) =>
           val snap = snapshotAt(d.table) // frozen: we hold the next-version claim
-          val delta = morDelta(spark, d.table, snap, morKeys(d.keys, d.keyCol), d.keyCol)
-          (d: TxnOp, v, vd, delta.dvAdds, "delete-mor", None)
+          val delta = morDelta(spark, d.table, snap, morKeys(d.keys, d.keyCol), d.keyCol,
+            d.carry)
+          (d: TxnOp, v, vd, delta.dvAdds, "delete-mor", None, propsExtra(d.props(delta.probed)))
       }
       // ---- 4. marker PENDING in the first participant's log
       markerDir = logDir(actions.head._1.table)
         .resolve("_txn").resolve(UUID.randomUUID().toString)
       Files.createDirectories(markerDir)
-      val participants = actions.map { case (op, v, _, _, _, _) =>
+      val participants = actions.map { case (op, v, _, _, _, _, _) =>
         Map[String, Object]("table" -> op.table.toAbsolutePath.normalize.toString,
           "version" -> java.lang.Long.valueOf(v)).asJava
       }.asJava
@@ -1072,10 +1081,10 @@ object TxLog {
         mapper.writeValueAsBytes(Map("participants" -> participants).asJava)): Unit
       // ---- 5. publish every participant commit, txn-flagged
       val markerRef = markerDir.toAbsolutePath.normalize.toString
-      actions.foreach { case (op, v, vd, adds, opName, schemaNow) =>
+      actions.foreach { case (op, v, vd, adds, opName, schemaNow, props) =>
         val bid = op match { case a: TxnAppend => a.batchId; case _ => None }
         val ok = publishCommit(op.table, vd, v, opName, adds, Nil, bid, schemaNow,
-          extra = Map("txn" -> markerRef), checkpoint = false)
+          extra = props + ("txn" -> markerRef), checkpoint = false)
         if (!ok) throw new IllegalStateException(
           s"transact: publish lost its claim on ${op.table} v$v (stalled past the lease)")
       }
@@ -1353,6 +1362,22 @@ object TxLog {
   def constraints(table: Path, version: Option[Long] = None): Map[String, String] =
     stateOf(table, version).constraints
 
+  /** TABLE PROPERTIES (Delta's `metaData.configuration`): string
+    * key/values that ride the commits they describe. A commit's `props`
+    * object upserts its keys (a null value removes one), the checkpoint
+    * records the folded map, and the state at a version is a field of
+    * the log fold ([[stateAt]]) — so a derived artifact's scalars (a
+    * text index's corpus statistics, an index's column binding) are
+    * read from the same snapshot version as the rows they describe, and
+    * change in the same atomic commit. Empty for a table that never set
+    * one. */
+  def propsAt(table: Path, version: Option[Long] = None): Map[String, String] =
+    stateOf(table, version).props
+
+  /** A commit that changes only properties (op `set-props`, no files). */
+  def setProps(table: Path, props: Map[String, String]): Long =
+    commitRetry(table, "set-props", Nil, Nil, extra = propsExtra(props))(_ => true)
+
   /** Validate a write's NEW rows against the table's constraints — ONE
     * combined filter pass over the WRITE-sized delta (never the table),
     * however many constraints are set. Violation = expression FALSE
@@ -1527,9 +1552,9 @@ object TxLog {
   /** Write `rows` as ONE parquet file on the DRIVER (parquet-mr Group
     * writer — zero Spark jobs) and commit them as an atomic append.
     *
-    * The 1-row stats sidecars and few-row watermark tables every index
-    * lifecycle call maintains were each paying a full distributed job
-    * (schedule + task launch + stage + commit, ~100 ms of pure overhead
+    * The few-row watermark tables every index lifecycle call maintains
+    * were each paying a full distributed job (schedule + task launch +
+    * stage + commit, ~100 ms of pure overhead
     * in local mode and worse on a cluster) to move a handful of
     * DRIVER-HELD values into a file (optimization r17, guide §5 — a
     * Spark job for one row is driver work with extra steps; production
@@ -1551,27 +1576,6 @@ object TxLog {
     enforceConstraintsStaged(spark, table, stage)
     val adds = promoteStaged(spark, stage, table, statsCol)
     commitRetry(table, "append", adds, Nil, schema = Some(declared))(_ => true)
-  }
-
-  /** [[overwrite]]'s driver-local sibling — same OCC commit semantics
-    * (one atomic replace of the live set, validated against the
-    * captured base), same [[appendLocal]] staging. The 1-row stats
-    * overwrite shape. */
-  def overwriteLocal(spark: SparkSession, table: Path, statsCol: String,
-      schema: StructType, rows: Seq[Seq[Any]]): Long = {
-    Files.createDirectories(table)
-    val declared = validateSchema(tableSchema(table), schema, allowEvolution = false)
-    val stage = table.resolve(s".stage-${UUID.randomUUID()}")
-    Files.createDirectories(stage)
-    writeLocalParquet(spark, stage.resolve("part-local.parquet"), table, schema, rows)
-    enforceConstraintsStaged(spark, table, stage)
-    val adds = promoteStaged(spark, stage, table, statsCol)
-    val base = snapshotAt(table)
-    commitRetry(table, "overwrite", adds, base.files.map(_.path),
-      schema = Some(declared)) {
-      case Some(s) => s.version == base.version
-      case None => base.version == -1L
-    }
   }
 
   /** One flat parquet file from driver-held rows, under the table's
@@ -1904,9 +1908,11 @@ object TxLog {
     * maintenance rebuild shape (e.g. the text dictionary fold), which
     * previously paid a plain overwrite AND a compactClustered rewrite:
     * two full passes over the same rows for one final layout
-    * (optimization r16, guide §1.2 "remove unnecessary passes"). */
+    * (optimization r16, guide §1.2 "remove unnecessary passes").
+    * `props` upserts table properties in the same commit. */
   def overwriteClustered(spark: SparkSession, df: DataFrame, table: Path,
-      statsCol: String, clusterCol: Column, nClusters: Int): Long =
+      statsCol: String, clusterCol: Column, nClusters: Int,
+      props: Map[String, String] = Map.empty): Long =
       Jobs.labeled(spark, s"txlog overwriteClustered ${table.getFileName}") {
     Files.createDirectories(table)
     validateSchema(tableSchema(table), df.schema, allowEvolution = false): Unit
@@ -1922,7 +1928,8 @@ object TxLog {
     deleteRecursively(stage)
     val base = snapshotAt(table)
     commitRetry(table, "overwrite", adds, base.files.map(_.path),
-      schema = Some(validateSchema(tableSchema(table), df.schema, allowEvolution = false))) {
+      schema = Some(validateSchema(tableSchema(table), df.schema, allowEvolution = false)),
+      extra = propsExtra(props)) {
       case Some(s) => s.version == base.version
       case None => base.version == -1L
     }
@@ -1936,9 +1943,10 @@ object TxLog {
     * range-derived cluster key each file's footer [min,max] is exactly
     * its cluster's key range, which is what makes [[pruneFiles]] sharp.
     * The cluster column is layout metadata (derivable from the data) and
-    * is not stored in the files. */
+    * is not stored in the files. `props` upserts table properties in the
+    * same commit ([[propsAt]]). */
   def appendClustered(spark: SparkSession, df: DataFrame, table: Path, statsCol: String,
-      clusterCol: Column, nClusters: Int): Long =
+      clusterCol: Column, nClusters: Int, props: Map[String, String] = Map.empty): Long =
       Jobs.labeled(spark, s"txlog appendClustered ${table.getFileName}") {
     Files.createDirectories(table)
     validateSchema(tableSchema(table), df.schema, allowEvolution = false): Unit // fail fast
@@ -1953,7 +1961,8 @@ object TxLog {
     val adds = promoteParts(spark, parts, table, statsCol)
     deleteRecursively(stage)
     commitRetry(table, "append", adds, Nil,
-      schema = Some(validateSchema(tableSchema(table), df.schema, allowEvolution = false)))(
+      schema = Some(validateSchema(tableSchema(table), df.schema, allowEvolution = false)),
+      extra = propsExtra(props))(
       _ => true)
   }
 
@@ -2395,8 +2404,8 @@ object TxLog {
     * bytes moved; DV sidecars included). The clone is immediately
     * independent: each table's later commits, compactions, and vacuums
     * touch only its own links (unlink decrements the refcount, the
-    * other table's link keeps the inode alive). Schema and partition
-    * columns carry over; CHECK constraints and tags are table-local
+    * other table's link keeps the inode alive). Schema, partition
+    * columns and properties carry over; CHECK constraints and tags are table-local
     * history and deliberately do NOT copy (set them on the clone if
     * wanted — the Delta position for properties is the same). On an
     * object store the analog is server-side copy or a manifest-level
@@ -2414,8 +2423,9 @@ object TxLog {
     val partCols = partitionColsOf(src)
     commitRetry(dst, "clone", snap.files, Nil,
       schema = tableSchema(src, Some(snap.version)),
-      extra = if (partCols.isEmpty) Map.empty
-        else Map("partitionCols" -> (partCols.asJava: Object)))(_.isEmpty)
+      extra = propsExtra(propsAt(src, Some(snap.version))) ++
+        (if (partCols.isEmpty) Map.empty
+         else Map("partitionCols" -> (partCols.asJava: Object))))(_.isEmpty)
   }
 
   /** Commit a GROUP-REPLACING rewrite whose new files were already
@@ -2595,8 +2605,9 @@ object TxLog {
     * vectors), removes drop everything the target didn't have. History
     * is preserved: time travel still sees every version including the
     * pre-restore state, and the restore itself is one more auditable
-    * commit. The target's SCHEMA is restored with it; CHECK
-    * constraints are table properties and stay (Delta semantics).
+    * commit. The target's SCHEMA and properties ([[propsAt]]) are
+    * restored with it; CHECK constraints and tags stay (Delta
+    * semantics).
     * Fails fast if any restored file was vacuumed away, and under
     * strict OCC (any concurrent commit re-derives the diff). */
   def restore(spark: SparkSession, table: Path, toVersion: Long): Long = {
@@ -2616,8 +2627,12 @@ object TxLog {
     // snapshot replay, so a path in both lists resolves to the target's
     val adds = target.files.filterNot(f => baseBy.get(f.path).contains(f))
     val removes = base.files.filterNot(f => targetBy.get(f.path).contains(f)).map(_.path)
+    // the target's properties, and a null (remove) for each key set since
+    val (targetProps, baseProps) = (propsAt(table, Some(toVersion)), propsAt(table, Some(base.version)))
+    val props = targetProps.filter { case (k, v) => !baseProps.get(k).contains(v) } ++
+      (baseProps.keySet -- targetProps.keySet).map(_ -> (null: String))
     commitRetry(table, "restore", adds, removes,
-      schema = tableSchema(table, Some(toVersion))) {
+      schema = tableSchema(table, Some(toVersion)), extra = propsExtra(props)) {
       case Some(s) => s.version == base.version
       case None => base.version == -1L
     }
@@ -2723,15 +2738,19 @@ object TxLog {
     * must be integral (same domain as the footer stats). The keys are
     * driver-held, so the whole delete is one Spark job (the probe);
     * `carry` names columns of the deleted rows to return with them
-    * (the text index takes each deleted doc's length this way). No live
-    * row holding a key = no commit. */
+    * (the text index takes each deleted doc's length this way), and
+    * `props` maps the probed rows to the table properties the delete
+    * commit upserts ([[propsAt]]; the text index's statistics shrink in
+    * the commit that deletes the postings). No live row holding a key =
+    * no commit. */
   def deleteMor(spark: SparkSession, table: Path, keys: Array[Long], keyCol: String,
-      carry: Seq[String] = Nil): MorDelete =
+      carry: Seq[String] = Nil,
+      props: Array[Row] => Map[String, String] = _ => Map.empty): MorDelete =
       Jobs.labeled(spark, s"txlog deleteMor ${table.getFileName}") {
     val snap = snapshotAt(table)
     val d = morDelta(spark, table, snap, keys, keyCol, carry)
     if (d.dvAdds.isEmpty) return MorDelete(snap.version, 0, snap.files.size, d.probed)
-    val v = commitRetry(table, "delete-mor", d.dvAdds, Nil)(
+    val v = commitRetry(table, "delete-mor", d.dvAdds, Nil, extra = propsExtra(props(d.probed)))(
       morValidator(snap, d.touched, table, keyCol, keys))
     MorDelete(v, d.dvAdds.size, snap.files.size, d.probed)
   }

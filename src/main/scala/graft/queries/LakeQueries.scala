@@ -74,8 +74,8 @@ object LakeQueries {
   // r16): the identical deterministic builds several gates open with,
   // built once per JVM and cloned (zero-copy) for mutating consumers.
   // Family layout is the catalog-sibling convention (`tbl`,
-  // `tbl_text_ix`, + stats/files/meta/tstats[/pos] siblings), so both
-  // CALL-driven and direct-ops gates resolve the same names.
+  // `tbl_text_ix`, + files/tstats[/pos] siblings), so both CALL-driven
+  // and direct-ops gates resolve the same names.
 
   /** text1: two-append corpus + ONE-SHOT frequency index — the opening
     * build of tix01, tix04, tix06 and sql24. */
@@ -1416,7 +1416,8 @@ object LakeQueries {
 
     // ---- sql24: BM25 in PURE SQL over the text index's catalog
     // tables — `CALL lake.text_index('t','text')` materializes the
-    // postings/stats as ordinary SQL relations, and a plain SQL query
+    // postings as an ordinary SQL relation and the corpus statistics as
+    // the index's `$props` metadata table, and a plain SQL query
     // (term_hash IN pushes into the parquet scan's row-group stats)
     // reproduces t14's exact ranking: the index is not a private
     // artifact but queryable lake state, the sql17/sql18 discipline
@@ -1434,9 +1435,13 @@ object LakeQueries {
            |                      xxhash64('filter'))
            |    AND term IN ('spark', 'join', 'filter')),
            |d AS (SELECT term, count(*) AS df FROM p GROUP BY term),
+           |s0 AS (SELECT
+           |        CAST(max(CASE WHEN key = 'n_docs' THEN value END) AS BIGINT) AS n_docs,
+           |        CAST(max(CASE WHEN key = 'total_len' THEN value END) AS BIGINT) AS total_len
+           |      FROM $cat.`tbl_text_ix$$props`),
            |s AS (SELECT n_docs,
            |        CAST(total_len AS DOUBLE) / n_docs AS avgdl
-           |      FROM $cat.tbl_text_ix_stats)
+           |      FROM s0)
            |SELECT p.doc_id,
            |  round(SUM(
            |    ln((s.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0) *
@@ -1830,7 +1835,7 @@ object LakeQueries {
     // so each query term's posting list resolves through footer
     // [min,max] pruning — the posting-list seek of an inverted index as
     // ordinary stats skipping. searchBm25 reads ONLY the pruned
-    // postings + the 1-row stats table (never the corpus text) and must
+    // postings + their version's statistics (never the corpus text) and must
     // reproduce t14's exact top-20 — same tokenizer, idf, k1/b,
     // round-6, tie-break — under t14's own DuckDB oracle. Query cost
     // tracks the query terms' posting lists, not the corpus: the
@@ -2011,8 +2016,7 @@ object LakeQueries {
         .localCheckpoint(true)
       val reference = TextIndex.searchBm25(spark, rebuilt, terms, 20)
       val same = SharedBases.multisetEqual(served, reference)
-      val nLive = TxLog.readAt(spark, fam.resolve("tbl_text_ix_stats"))
-        .head.getLong(0)
+      val nLive = TextIndex.corpusStats(index)._1
       served.select(col("doc_id"), col("score"),
         lit(nLive).as("n_docs_live"),
         lit(same).as("matches_rebuild"))
@@ -2272,8 +2276,7 @@ object LakeQueries {
       val inIx = TxLog.readAt(spark, index).select("doc_id").distinct()
       val inPos = TxLog.readAt(spark, fam.resolve("tbl_text_ix_pos"))
         .select("doc_id").distinct()
-      val stats = TxLog.readAt(spark, fam.resolve("tbl_text_ix_stats"))
-        .select(col("n_docs"))
+      val statsDocs = TextIndex.corpusStats(index)._1
       // ONE doc_id-keyed pass computes every anti-join zero (full-outer
       // membership join + conditional counts): the four separate
       // count() actions each re-shuffled live/index/positional — at
@@ -2292,8 +2295,7 @@ object LakeQueries {
             .as("positional_stranded"),
           count(when(col("__l").isNotNull && col("__p").isNull, 1))
             .as("docs_unpositioned"))
-        .crossJoin(broadcast(stats))
-        .select(col("corpus_docs"), col("n_docs").as("stats_docs"),
+        .select(col("corpus_docs"), lit(statsDocs).as("stats_docs"),
           col("postings_stranded"), col("docs_unindexed"),
           col("positional_stranded"), col("docs_unpositioned"))
     }),

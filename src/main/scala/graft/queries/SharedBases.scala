@@ -31,7 +31,7 @@ import graft.ops.TxLog
   * bench/oracle invocation recomputes the builds from the parquet
   * inputs. A FAMILY is a base directory holding the corpus table and
   * every sibling artifact under their canonical names (`tbl`,
-  * `tbl_text_ix`, `tbl_text_ix_stats`, ...), so sibling resolution and
+  * `tbl_text_ix`, `tbl_text_ix_tstats`, ...), so sibling resolution and
   * catalog registration work identically on the canonical base and on
   * any clone.
   */

@@ -1439,14 +1439,13 @@ object SimilarityQueries {
       }
       val m = headTxn(corpus)
       val atomic = m.nonEmpty && m == headTxn(tix) && m == headTxn(aix)
-      val statsRow = graft.ops.TxLog.readAt(spark,
-        base.resolve("tbl_text_ix_stats")).head
+      val statsDocs = graft.ops.TextIndex.corpusStats(tix)._1
       import org.apache.spark.sql.functions.{count => cnt}
       graft.ops.TxLog.readAt(spark, corpus)
         .agg(cnt(lit(1)).as("corpus_docs"),
           sum(when(col("doc_id") % 9 === 8, 1).otherwise(0))
             .cast("bigint").as("erased_in_corpus"))
-        .withColumn("stats_docs", lit(statsRow.getLong(0)))
+        .withColumn("stats_docs", lit(statsDocs))
         .crossJoin(broadcast(
           graft.ops.TxLog.readAt(spark, tix)
             .select(col("doc_id")).distinct()

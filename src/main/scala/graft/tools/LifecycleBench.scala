@@ -24,7 +24,7 @@ import graft.queries.{DedupQueries, SimilarityQueries}
   *  - ivfadc    (knn06/knn07): probe 2 coarse lists, ADC, rerank — all
   *                from lake tables;
   *  - text_search (tix01-03, sql24): BM25 from pruned postings + the
-  *                1-row stats table;
+  *                index's statistics properties;
   *  - text_fetch  (tix04, c08): BM25 + the winners' stats-pruned
   *                corpus point-fetch;
   *  - pq        (sim10/sim11): ADC + rerank from the persisted

@@ -81,18 +81,24 @@ class AnnIndexSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       AnnIndex.ensureIndexed(spark, corpus, index) // defaults != (id, emb, 8)
     }
-    val metaLog = base.resolve("ix_meta")
-    val hidden = base.resolve("ix_meta_hidden")
-    Files.move(metaLog, hidden)
-    val ex = intercept[IllegalStateException](AnnIndex.maintain(spark, corpus, index))
-    assert(ex.getMessage.contains("_meta"))
-    Files.move(hidden, metaLog)
+    // a legacy index (a log whose commits carry no binding property)
+    // must refuse maintenance outright
+    val legacy = base.resolve("lx")
+    TxLog.append(spark, TxLog.readAt(spark, index), legacy, "cent_id"): Unit
+    Seq("_cent", "_files").foreach(s =>
+      TxLog.cloneTable(spark, base.resolve("ix" + s), base.resolve("lx" + s)): Unit)
+    assert(!AnnIndex.hasBinding(legacy))
+    val ex = intercept[IllegalStateException](AnnIndex.maintain(spark, corpus, legacy))
+    assert(ex.getMessage.contains("id_col"))
+    // backfill route: one explicit ensureIndexed with the original args
+    assert(AnnIndex.ensureIndexed(spark, corpus, legacy, idCol = "id", embCol = "emb") == 0L)
+    assert(AnnIndex.hasBinding(legacy))
     TxLog.append(spark, vecs(20L to 29L)
       .withColumnRenamed("vec_id", "id").withColumnRenamed("embedding", "emb"),
       corpus, "id", nParts = 1)
-    val rep = AnnIndex.maintain(spark, corpus, index)
+    val rep = AnnIndex.maintain(spark, corpus, legacy)
     assert(rep.vecsIndexed == 10L)
-    assert(AnnIndex.maxFilesPerCent(spark, index) == 1)
+    assert(AnnIndex.maxFilesPerCent(spark, legacy) == 1)
   }
 
   test("assignAll: the two-level path (>256 centroids) equals the flat rank on clustered vectors") {

@@ -9,7 +9,7 @@ import graft.SparkSpec
   * (optimization r17, VERDICT r16 item 7): a table deleted and
   * RE-CREATED at the same path — without going through deleteTree, so
   * no cache is explicitly invalidated — must serve the new incarnation's
-  * metadata from cachedHeadRow / cachedStringSet / protocolAt. */
+  * metadata from cachedStringSet / protocolAt. */
 class CacheStampSpec extends SparkSpec {
   import spark.implicits._
 
@@ -29,19 +29,6 @@ class CacheStampSpec extends SparkSpec {
     TxLog.append(spark, Seq("bb", "ccc").toDF("file_name"), t, "file_name")
     assert(TxLog.latestVersion(t) == 0L) // same latest version as before
     assert(TxLog.cachedStringSet(spark, t, "file_name") == Set("bb", "ccc"))
-    rawDelete(dir)
-  }
-
-  test("cachedHeadRow: same path, same version, new incarnation -> fresh row") {
-    val dir = Files.createTempDirectory("graft_stamp")
-    val t = dir.resolve("meta")
-    TxLog.append(spark, Seq((5L, 10L)).toDF("n_docs", "total_len"), t, "n_docs")
-    assert(TxLog.cachedHeadRow(spark, t).getLong(0) == 5L)
-    rawDelete(t)
-    TxLog.append(spark, Seq((777777L, 888888L)).toDF("n_docs", "total_len"),
-      t, "n_docs")
-    assert(TxLog.latestVersion(t) == 0L)
-    assert(TxLog.cachedHeadRow(spark, t).getLong(0) == 777777L)
     rawDelete(dir)
   }
 

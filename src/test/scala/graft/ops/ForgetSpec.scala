@@ -60,8 +60,8 @@ class ForgetSpec extends SparkSpec {
       leaked(aix, "doc_id") == 0)
     // text scalars settled: n_docs == survivors, and the bounded modes
     // (now in the staleness window) still exactly equal full scoring
-    val st = TxLog.readAt(spark, base.resolve("tbl_text_ix_stats")).head
-    assert(st.getLong(0) == 100L - keys.size)
+    assert(TextIndex.corpusStats(tix)._1 == 100L - keys.size)
+    assert(rep.postingsDeleted == keys.size.toLong)
     val terms = Seq("rareword", "alpha")
     val full = TextIndex.searchBm25(spark, tix, terms, 5).collect().toSeq
     val (bm, bmRep) = TextIndex.searchBm25BlockMax(spark, tix, terms, 5)
@@ -70,8 +70,7 @@ class ForgetSpec extends SparkSpec {
     // stats must not double-shrink
     val rep2 = Forget.forget(spark, base, "tbl", keys.toDF("doc_id"), "doc_id")
     assert(rep2.postingsDeleted == 0L)
-    assert(TxLog.readAt(spark, base.resolve("tbl_text_ix_stats"))
-      .head.getLong(0) == 100L - keys.size)
+    assert(TextIndex.corpusStats(tix)._1 == 100L - keys.size)
   }
 
   test("forget on a bare table (no siblings) is a one-participant transaction") {

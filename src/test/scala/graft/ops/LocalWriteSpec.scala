@@ -7,11 +7,10 @@ import org.apache.spark.sql.types._
 
 import graft.SparkSpec
 
-/** Pins TxLog.appendLocal / overwriteLocal (optimization r17): the
-  * driver-written parquet file must be indistinguishable from a
-  * Spark-staged one — same read-back rows and schema, same footer
-  * stats (so scalarsOf / pruneFiles keep working), same commit
-  * semantics. */
+/** Pins TxLog.appendLocal (optimization r17): the driver-written
+  * parquet file must be indistinguishable from a Spark-staged one —
+  * same read-back rows and schema, same footer stats (so pruneFiles
+  * keeps working), same commit semantics. */
 class LocalWriteSpec extends SparkSpec {
   import spark.implicits._
 
@@ -55,22 +54,6 @@ class LocalWriteSpec extends SparkSpec {
     assert(f.minKey == 3L && f.maxKey == 7L)
     // string footer stats present for pruning
     assert(f.strCols.contains("file_name"))
-    TxLog.deleteTree(dir)
-  }
-
-  test("overwriteLocal: atomic replace with OCC, scalarsOf-compatible footer") {
-    val dir = Files.createTempDirectory("graft_localw")
-    val t = dir.resolve("stats")
-    TxLog.appendLocal(spark, t, "n_docs", twoLong, Seq(Seq(10L, 100L)))
-    TxLog.overwriteLocal(spark, t, "n_docs", twoLong, Seq(Seq(25L, 250L)))
-    assert(TxLog.versions(t) == Vector(0L, 1L))
-    val snap = TxLog.snapshotAt(t)
-    assert(snap.files.size == 1 && snap.files.head.rows == 1)
-    // min == max for a 1-row file: the scalarsOf fast path's contract
-    val c = snap.files.head.cols
-    assert(c("n_docs") == ((25L, 25L)) && c("total_len") == ((250L, 250L)))
-    val r = TxLog.readAt(spark, t).head
-    assert(r.getLong(0) == 25L && r.getLong(1) == 250L)
     TxLog.deleteTree(dir)
   }
 

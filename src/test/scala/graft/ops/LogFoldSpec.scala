@@ -16,7 +16,7 @@ import graft.SparkSpec
   * commit from v0 — no checkpoint, no cache — written here. Seeded
   * random op sequences cross several checkpoint boundaries (inline and
   * sharded); at every version the files (as a sequence), protocol,
-  * tags, constraints and partitioning must match, warm (the fold
+  * tags, constraints, partitioning and properties must match, warm (the fold
   * extended one commit at a time from the cached state) and cold (every
   * cache dropped, the fold seeded from a checkpoint); the batch
   * watermark is checked at the head. Three fixed cases cover a
@@ -51,7 +51,7 @@ class LogFoldSpec extends SparkSpec {
     * when its marker's outcome file says "committed". */
   private def naive(table: Path, v: Long): Expect = {
     val live = scala.collection.mutable.LinkedHashMap.empty[String, TxLog.AddFile]
-    var e = Expect(Vector.empty, TxLog.Protocol.Empty, Map.empty, Map.empty, None, Nil)
+    var e = Expect(Vector.empty, TxLog.Protocol.Empty, Map.empty, Map.empty, None, Nil, Map.empty)
     def names(n: com.fasterxml.jackson.databind.JsonNode): Seq[String] =
       Option(n).fold(Seq.empty[String])(_.elements().asScala.map(_.asText).toSeq)
     TxLog.versions(table).filter(_ <= v).foreach { cv =>
@@ -77,7 +77,10 @@ class LogFoldSpec extends SparkSpec {
             case "create" if cv == 0L => names(n.get("partitionCols"))
             case "set-partitioning" => names(n.get("partitionCols"))
             case _ => e.partitionCols
-          })
+          },
+          props = Option(n.get("props")).fold(e.props)(_.fields().asScala.foldLeft(e.props) {
+            (m, f) => if (f.getValue.isNull) m - f.getKey else m + (f.getKey -> f.getValue.asText)
+          }))
       }
     }
     e.copy(files = live.values.toVector)
@@ -92,6 +95,7 @@ class LogFoldSpec extends SparkSpec {
     assert(TxLog.constraints(table, at) == want.constraints, s"constraints at v$v ($how)")
     assert(TxLog.partitionColsOf(table, at) == want.partitionCols,
       s"partitionCols at v$v ($how)")
+    assert(TxLog.propsAt(table, at) == want.props, s"props at v$v ($how)")
   }
 
   private def checkBatches(table: Path, upTo: Long, how: String): Unit = {
@@ -136,13 +140,14 @@ class LogFoldSpec extends SparkSpec {
           nextBatch += 1
         } else if (op == abortedAt) {
           // a coordinator that died before deciding: the aborted commit
-          // would drop a live file, add a phantom one and claim the next
-          // batch id if it were (wrongly) applied
+          // would drop a live file, add a phantom one, claim the next
+          // batch id and set a property if it were (wrongly) applied
           val victim = TxLog.snapshotAt(t).files.head.path
           assert(TxLog.tryCommit(t, next, "append",
             Seq(TxLog.AddFile("phantom.parquet", 1L, 0L, 0L)), Seq(victim),
-            batchId = Some(nextBatch), extra = Map("txn" -> agedMarker(base).toString)))
-        } else rnd.nextInt(8) match {
+            batchId = Some(nextBatch), extra = Map("txn" -> agedMarker(base).toString,
+              "props" -> java.util.Map.of("aborted", "yes"))))
+        } else rnd.nextInt(10) match {
           case 0 | 1 => TxLog.append(spark, rows(fresh(1 + rnd.nextInt(2))), t, "doc_id", nParts = 1)
           case 2 if live.nonEmpty =>
             TxLog.deleteMor(spark, t, rnd.shuffle(live).take(1 + rnd.nextInt(2)).toDF("doc_id"),
@@ -160,8 +165,17 @@ class LogFoldSpec extends SparkSpec {
               "nonneg" -> "doc_id > -1")(rnd.nextInt(3))
             TxLog.setConstraint(spark, t, name, sql)
           case 6 => TxLog.setPartitioning(t, if (rnd.nextBoolean()) Seq("lang") else Nil)
-          case _ => TxLog.upgradeProtocol(t,
+          case 7 => TxLog.upgradeProtocol(t,
             writerFeatures = Set(Seq("changeDataFeed", "deletionVectors")(rnd.nextInt(2))))
+          case 8 =>
+            // set or (now and then) remove a property in a props-only commit
+            val k = Seq("owner", "tier", "note")(rnd.nextInt(3))
+            TxLog.setProps(t, Map[String, String](k -> (if (rnd.nextInt(4) == 0) null else s"v$next")))
+          case _ if live.nonEmpty =>
+            // properties riding a data commit
+            TxLog.deleteMor(spark, t, rnd.shuffle(live).take(1).toArray, "doc_id",
+              props = probed => Map("deleted" -> probed.length.toString, "at" -> s"v$next"))
+          case _ => TxLog.setProps(t, Map("tier" -> s"w$next"))
         }
         op += 1
         // warm: the head, folded on top of the previous head
@@ -271,5 +285,5 @@ class LogFoldSpec extends SparkSpec {
 object LogFoldSpec {
   private final case class Expect(files: Vector[TxLog.AddFile], protocol: TxLog.Protocol,
       tags: Map[String, Long], constraints: Map[String, String],
-      batchMax: Option[Long], partitionCols: Seq[String])
+      batchMax: Option[Long], partitionCols: Seq[String], props: Map[String, String])
 }

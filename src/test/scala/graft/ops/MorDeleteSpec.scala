@@ -3,6 +3,7 @@ package graft.ops
 import java.nio.file.{Files, Path}
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 import org.apache.spark.sql.{DataFrame, Row}
@@ -163,15 +164,15 @@ class MorDeleteSpec extends SparkSpec {
         val want = dvSets(t).keys.map(p => p -> model(t).getOrElse(p, Set.empty[Long])).toMap
         assert(dvSets(t) == want, s"$what: DV key sets of ${t.getFileName}")
       }
-      // _stats against the live postings and against the model
-      val st = TxLog.readAt(spark, sib(lake.index, "_stats")).head
+      // the index's statistics against the live postings and the model
+      val st = TextIndex.corpusStats(lake.index)
       val fromPostings = TxLog.readAt(spark, lake.index)
         .groupBy("doc_id").agg(first(col("dl")).as("dl"))
         .agg(count(lit(1)), sum(col("dl"))).head
-      assert((st.getLong(0), st.getLong(1)) == (fromPostings.getLong(0), fromPostings.getLong(1)),
-        s"$what: _stats vs live postings")
-      assert(st.getLong(0) == lake.live.size.toLong &&
-        st.getLong(1) == lake.live.values.map(_.split(" ").length.toLong).sum, s"$what: _stats vs model")
+      assert(st == ((fromPostings.getLong(0), fromPostings.getLong(1))),
+        s"$what: statistics vs live postings")
+      assert(st == ((lake.live.size.toLong, lake.live.values.map(_.split(" ").length.toLong).sum)),
+        s"$what: statistics vs model")
       for (terms <- Seq(Seq("w0"), Seq("w1", "w7"), Seq("w2", "w13", Ghost), Seq(s"w${r.nextInt(Vocab)}"))) {
         val got = TextIndex.searchBm25(spark, lake.index, terms, 8).collect()
           .map(x => (x.getLong(0), x.getDouble(1))).toSeq
@@ -192,12 +193,66 @@ class MorDeleteSpec extends SparkSpec {
     val ks = Seq(2L, 9L, 31L, 9L)
     assert(lake.delete(ks) > 0L)
     val tabs = Seq(lake.corpus, lake.index) ++
-      Seq("_pos", "_stats", "_tstats", "_tstats_meta").map(sib(lake.index, _))
+      Seq("_pos", "_tstats", "_files").map(sib(lake.index, _))
     val before = tabs.map(TxLog.latestVersion)
     val (v, _, dvFiles, _) = TxLog.deleteMor(spark, lake.corpus, keyFrame(ks), "doc_id")
     assert(v == before.head && dvFiles == 0)
     assert(TextIndex.pruneDeleted(spark, lake.index, keyFrame(ks)) == 0L)
     assert(tabs.map(TxLog.latestVersion) == before)
+  }
+
+  // ------------------------------------------------------ commit counts
+
+  /** Latest version of every table under `base`, by directory name. */
+  private def heads(base: Path): Map[String, Long] = {
+    val s = Files.list(base)
+    try s.iterator().asScala.filter(p => Files.isDirectory(p.resolve("_graft_log")))
+      .map(p => p.getFileName.toString -> TxLog.latestVersion(p)).toMap
+    finally s.close()
+  }
+
+  /** The tables whose head moved between two [[heads]], with the count. */
+  private def moved(before: Map[String, Long], after: Map[String, Long]): Map[String, Long] =
+    after.collect { case (t, v) if v != before.getOrElse(t, -1L) => t -> (v - before.getOrElse(t, -1L)) }
+
+  private def headTxn(p: Path): String = {
+    val s = new String(Files.readAllBytes(p.resolve("_graft_log")
+      .resolve(f"v${TxLog.latestVersion(p)}%020d").resolve("commit.json")))
+    """"txn"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(s).map(_.group(1)).getOrElse("")
+  }
+
+  test("index writes publish one version per table they change and none anywhere else") {
+    val lake = new Lake("graft_mor_commits", new Random(5), 2, 30, positional = true)
+    // pruneDeleted: one version on the index (statistics included) and
+    // one on the positional sibling
+    val h0 = heads(lake.base)
+    TxLog.deleteMor(spark, lake.corpus, keyFrame(Seq(3L, 4L, 40L)), "doc_id"): Unit
+    val h1 = heads(lake.base)
+    assert(TextIndex.pruneDeleted(spark, lake.index, keyFrame(Seq(3L, 4L, 40L))) > 0L)
+    assert(moved(h0, h1) == Map("corpus" -> 1L))
+    assert(moved(h1, heads(lake.base)) == Map("ix" -> 1L, "ix_pos" -> 1L))
+    // an ensureIndexed increment: the index, its dictionary, its watermark
+    TxLog.append(spark, frame(docs(new Random(6), lake.next, 20)), lake.corpus, "doc_id",
+      nParts = 2): Unit
+    val h2 = heads(lake.base)
+    assert(TextIndex.ensureIndexed(spark, lake.corpus, lake.index) == 20L)
+    assert(moved(h2, heads(lake.base)) == Map("ix" -> 1L, "ix_tstats" -> 1L, "ix_files" -> 1L))
+    // Forget: one version per participant, every head under one marker
+    val base = Files.createTempDirectory("graft_mor_forget")
+    TxLog.cloneTable(spark, lake.corpus, base.resolve("tbl")): Unit
+    Seq("" -> "", "_pos" -> "_pos", "_tstats" -> "_tstats", "_files" -> "_files").foreach {
+      case (from, to) =>
+        TxLog.cloneTable(spark, sib(lake.index, from), base.resolve("tbl_text_ix" + to)): Unit
+    }
+    val h3 = heads(base)
+    val n0 = TextIndex.corpusStats(base.resolve("tbl_text_ix"))._1
+    val rep = Forget.forget(spark, base, "tbl", keyFrame(Seq(5L, 6L, 7L)), "doc_id")
+    assert(rep.postingsDeleted == 3L)
+    val parts = Seq("tbl", "tbl_text_ix", "tbl_text_ix_pos")
+    assert(moved(h3, heads(base)) == parts.map(_ -> 1L).toMap)
+    val marker = headTxn(base.resolve("tbl"))
+    assert(marker.nonEmpty && parts.forall(p => headTxn(base.resolve(p)) == marker))
+    assert(TextIndex.corpusStats(base.resolve("tbl_text_ix"))._1 == n0 - 3L)
   }
 
   // ------------------------------------------------- positional crash window
@@ -215,14 +270,14 @@ class MorDeleteSpec extends SparkSpec {
     TextIndex.ensureIndexed(spark, corpus, index): Unit
     TextIndex.ensurePositional(spark, corpus, index): Unit
     assert(phrase(index, "a b c") == Set(1L, 2L, 3L))
-    val stats = sib(index, "_stats")
-    def st(): (Long, Long) = { val h = TxLog.readAt(spark, stats).head; (h.getLong(0), h.getLong(1)) }
+    def st(): (Long, Long) = TextIndex.corpusStats(index)
 
-    // index committed (and its stats shrunk), positional delete lost
-    val (n1, len1) = TextIndex.deletedContribution(spark, index, Seq(1L).toDF("doc_id"))
-    assert((n1, len1) == (1L, 3L))
-    TxLog.deleteMor(spark, index, Seq(1L).toDF("doc_id"), "doc_id"): Unit
-    TextIndex.noteDeleted(spark, index, n1, len1)
+    // index committed (its statistics shrunk in the same commit),
+    // positional delete lost
+    assert(st() == ((4L, 13L)))
+    assert(TxLog.deleteMor(spark, index, Array(1L), "doc_id", carry = Seq("dl"),
+      props = TextIndex.deletedProps(index)).dvFiles > 0)
+    assert(st() == ((3L, 10L)))
     assert(phrase(index, "a b c") == Set(1L, 2L, 3L)) // the crash window
     assert(TextIndex.pruneDeleted(spark, index, Seq(1L).toDF("doc_id")) == 0L)
     assert(phrase(index, "a b c") == Set(2L, 3L))

@@ -85,9 +85,7 @@ class TextIndexSpec extends SparkSpec {
     val b = TxLog.readAt(spark, i2).select("term", "doc_id", "tf", "dl")
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
       "incremental postings differ from rebuild")
-    val sa = TxLog.readAt(spark, base.resolve("i1_stats")).head
-    val sb = TxLog.readAt(spark, base.resolve("i2_stats")).head
-    assert(sa.getLong(0) == sb.getLong(0) && sa.getLong(1) == sb.getLong(1))
+    assert(TextIndex.corpusStats(i1) == TextIndex.corpusStats(i2))
   }
 
   test("maintain folds incremental file-sets back to the clustered per-term bound, serving unchanged") {
@@ -136,8 +134,7 @@ class TextIndexSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet
     assert(!ids.contains(21L) && !ids.contains(42L))
     assert(ids.contains(70L) && ids.contains(63L)) // 70 %7==0, 63 %7==0
-    val st = TxLog.readAt(spark, base.resolve("ix_stats")).head
-    assert(st.getLong(0) == 78L) // 60 - 2 deleted + 20 new
+    assert(TextIndex.corpusStats(index)._1 == 78L) // 60 - 2 deleted + 20 new
   }
 
   test("positional index: phrase alignment, incremental build, overlapping phrases, maintain re-clusters") {
@@ -208,12 +205,11 @@ class TextIndexSpec extends SparkSpec {
     TxLog.append(spark, corpusDf(0L to 29L), corpus, "doc_id", nParts = 2)
     TextIndex.ensureIndexed(spark, corpus, index): Unit
     assert(TextIndex.pruneDeleted(spark, index, Seq(7L, 14L).toDF("doc_id")) > 0L)
-    val st1 = TxLog.readAt(spark, base.resolve("ix_stats")).head
+    val st1 = TextIndex.corpusStats(index)
     // the crash-redelivery case a CDF-driven pruner hits: same batch again
     assert(TextIndex.pruneDeleted(spark, index, Seq(7L, 14L).toDF("doc_id")) == 0L)
-    val st2 = TxLog.readAt(spark, base.resolve("ix_stats")).head
-    assert(st1.getLong(0) == st2.getLong(0) && st1.getLong(1) == st2.getLong(1))
-    assert(st1.getLong(0) == 28L)
+    assert(TextIndex.corpusStats(index) == st1)
+    assert(st1._1 == 28L)
   }
 
   test("pruneDeleted removes a document from the ranking and shrinks the stats") {
@@ -232,8 +228,7 @@ class TextIndexSpec extends SparkSpec {
     val after = TextIndex.searchBm25(spark, index, Seq("rareword"), 30)
       .collect().map(_.getLong(0)).toSet
     assert(after == before - 21L)
-    val st = TxLog.readAt(spark, base.resolve("ix_stats")).head
-    assert(st.getLong(0) == 29L)
+    assert(TextIndex.corpusStats(index)._1 == 29L)
   }
 
   test("binding contracts: meta mismatch refused, legacy index refuses maintain, backfill restores it") {
@@ -249,22 +244,27 @@ class TextIndexSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       TextIndex.ensureIndexed(spark, corpus, index) // defaults != (id, body, 8)
     }
-    // a legacy index (no _meta sidecar) must refuse maintenance outright
-    val metaLog = base.resolve("ix_meta")
-    val legacyMeta = base.resolve("ix_meta_hidden")
-    Files.move(metaLog, legacyMeta)
+    // a legacy index (a log whose commits carry the statistics but no
+    // binding property) must refuse maintenance outright
+    val legacy = base.resolve("lx")
+    TxLog.append(spark, TxLog.readAt(spark, index), legacy, "term_hash"): Unit
+    val (n, len) = TextIndex.corpusStats(index)
+    TxLog.setProps(legacy, Map("n_docs" -> n.toString, "total_len" -> len.toString)): Unit
+    TxLog.cloneTable(spark, base.resolve("ix_files"), base.resolve("lx_files")): Unit
+    assert(!TextIndex.hasBinding(legacy))
     val ex = intercept[IllegalStateException] {
-      TextIndex.maintain(spark, corpus, index)
+      TextIndex.maintain(spark, corpus, legacy)
     }
-    assert(ex.getMessage.contains("_meta"))
+    assert(ex.getMessage.contains("id_col"))
     // backfill route: one explicit ensureIndexed with the original args
-    Files.move(legacyMeta, metaLog)
+    assert(TextIndex.ensureIndexed(spark, corpus, legacy, idCol = "id", textCol = "body") == 0L)
+    assert(TextIndex.hasBinding(legacy))
     TxLog.append(spark, corpusDf(10L to 14L)
       .withColumnRenamed("doc_id", "id").withColumnRenamed("text", "body"),
       corpus, "id", nParts = 1)
-    val rep = TextIndex.maintain(spark, corpus, index)
+    val rep = TextIndex.maintain(spark, corpus, legacy)
     assert(rep.docsIndexed == 5L)
-    assert(TextIndex.searchBm25(spark, index, Seq("rareword"), 30)
+    assert(TextIndex.searchBm25(spark, legacy, Seq("rareword"), 30)
       .collect().map(_.getLong(0)).toSet == Set(0L, 7L, 14L))
   }
 
@@ -351,7 +351,6 @@ class TextIndexSpec extends SparkSpec {
     TextIndex.ensureIndexed(spark, corpus, index): Unit
     // simulate an index built by a pre-_tstats binary
     TxLog.deleteTree(base.resolve("ix_tstats"))
-    TxLog.deleteTree(base.resolve("ix_tstats_meta"))
     val (legacy, legacyRep) = TextIndex.searchBm25MaxScore(
       spark, index, Seq("rareword", "alpha"), 5)
     assert(legacyRep.fellBack) // no dictionary at all: exact full scoring

@@ -756,8 +756,12 @@ class TxLogSpec extends SparkSpec {
     assert(TxLog.readAt(spark, table, Some(2L)).count() == 9L)
     assert(TxLog.history(table).map(_._2) ==
       Seq("append", "delete", "append", "restore"))
+    // the target's properties come back with it: a key set since goes
+    TxLog.setProps(table, Map("owner" -> "etl"))                        // v4
+    TxLog.restore(spark, table, toVersion = 2L)                         // v5
+    assert(TxLog.propsAt(table, Some(4L)) == Map("owner" -> "etl") && TxLog.propsAt(table).isEmpty)
     // restoring to a vacuumed-away version fails fast with a clear error
-    TxLog.compact(spark, table, "doc_id", nParts = 1)                   // v4 rewrites
+    TxLog.compact(spark, table, "doc_id", nParts = 1)                   // v6 rewrites
     TxLog.vacuum(table, keepVersions = 1, minAgeMs = 0L)
     val e = intercept[IllegalArgumentException] {
       TxLog.restore(spark, table, toVersion = 2L)
