@@ -235,8 +235,8 @@ private[catalog] object GraftProcedures {
       // re-calls after appends index only the new files).
       // PERSISTED INVERTED TEXT INDEX from SQL: `CALL <cat>.text_index
       // ('t', 'text')` materializes/refreshes the postings as the
-      // sibling catalog table `t_text_ix` (+ `t_text_ix_files`, and its
-      // corpus statistics as the `t_text_ix$props` metadata table) —
+      // sibling catalog table `t_text_ix` (its corpus statistics as the
+      // `t_text_ix$props` metadata table, its watermark in its log) —
       // ordinary SQL relations, so BM25 is computable in PURE SQL over
       // them (sql24 proves it reproduces t14's ranking).
       case "text_index" => new GraftProc("text_index",
@@ -267,7 +267,8 @@ private[catalog] object GraftProcedures {
         Array(param("table", StringType), param("id_column", StringType),
           param("emb_column", StringType),
           // pq => true ALSO builds/refreshes the IVFADC codes sibling
-          // (`<t>_ann_ix_codes` + codebook + its own meta/watermark) —
+          // (`<t>_ann_ix_codes` + codebook; the codes log carries its
+          // binding and watermark) —
           // the knn06 four-table layout under the sibling convention,
           // so CALL maintain and CALL forget reach it automatically
           paramWithDefault("pq", BooleanType, "false")),

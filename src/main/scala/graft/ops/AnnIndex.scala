@@ -21,18 +21,20 @@ import org.apache.spark.sql.functions._
   *                   `id_col`, `emb_col`, `n_clusters`, set by the first
   *                   assignments commit — same contract as TextIndex:
   *                   maintenance REFUSES a legacy index without it
-  *                   rather than guess and corrupt.
+  *                   rather than guess and corrupt. Its source files
+  *                   ([[TxLog.sourcesAt]]) are the corpus watermark
+  *                   (files already assigned), each increment's names
+  *                   riding its assignments commit.
   *   - `<ix>_cent`   the trained coarse quantizer `(cent_id, cent_emb)`,
   *                   corpus-scaled C, seeded + one integer-quantized
   *                   Lloyd update (bit-deterministic: exact int64 sums,
   *                   IEEE means — graft.ops.Clustering). Trained ONCE on
   *                   the creating batch; a trained artifact never
   *                   invalidates, increments assign against it.
-  *   - `<ix>_files`  corpus watermark (files already assigned).
-  *   - `<ix>_cb`, `<ix>_codes`, `<ix>_codes_files` the optional PQ
-  *                   sibling ([[ensurePq]]): codebook, codes (binding
-  *                   `id_col`, `emb_col`, `dims`, `m` in their
-  *                   properties) and watermark.
+  *   - `<ix>_cb`, `<ix>_codes` the optional PQ sibling ([[ensurePq]]):
+  *                   codebook and codes (binding `id_col`, `emb_col`,
+  *                   `dims`, `m` in their properties, the encoded corpus
+  *                   files in their source files).
   *
   * Degradation + cure (the tix05 disease, vector edition): each
   * incremental [[ensureIndexed]] appends its own per-list file-set, so
@@ -40,9 +42,9 @@ import org.apache.spark.sql.functions._
   * merge-on-read deletes leave DV sidecars every read must anti-join.
   * [[maintain]] re-clusters ALL assignments back to one file per list
   * with DVs folded (one distributed compactClustered job, one atomic
-  * commit — readers never block), folds the watermark, and vacuums dead
-  * versions. Serving through the rewrite is identical by construction
-  * (same rows, new layout) — gate sim14 pins both the equality and the
+  * commit — readers never block) and vacuums dead versions. Serving
+  * through the rewrite is identical by construction (same rows, new
+  * layout) — gate sim14 pins both the equality and the
   * files-per-probe bound; AnnIndexSpec pins the contracts.
   *
   * The reference (a parser-to-sink shuttle, /root/reference/src/domain/ports.rs)
@@ -55,11 +57,8 @@ object AnnIndex {
   private val TargetListSize = 125
 
   private def centDir(index: Path): Path = index.resolveSibling(index.getFileName + "_cent")
-  private def filesDir(index: Path): Path = index.resolveSibling(index.getFileName + "_files")
   private def cbDir(index: Path): Path = index.resolveSibling(index.getFileName + "_cb")
   private def codesDir(index: Path): Path = index.resolveSibling(index.getFileName + "_codes")
-  private def codesFilesDir(index: Path): Path =
-    index.resolveSibling(index.getFileName + "_codes_files")
 
   /** The PQ sibling's fixed knobs — knn06's contract (64 dims padded,
     * 8 sub-quantizers, 2 Lloyd iterations; the clustered write lays
@@ -183,17 +182,18 @@ object AnnIndex {
     }
     val bind = Map("id_col" -> idCol, "emb_col" -> embCol, "n_clusters" -> nClusters.toString)
     // a legacy index gets the binding on any call; a fresh one's rides
-    // its first assignments commit
+    // its first commit
     val built = TxLog.versions(index).nonEmpty
     if (built && bound.isEmpty) TxLog.setProps(index, bind): Unit
     val snap = TxLog.snapshotAt(corpus)
-    val indexed: Set[String] =
-      TxLog.cachedStringSet(spark, filesDir(index), "file_name")
+    val indexed = TxLog.sourcesAt(index)
     val newFiles = snap.files.filterNot(f => indexed(f.path))
     if (newFiles.isEmpty) return 0L
+    // gated on the assignments, not the watermark (TextIndex.ensureIndexed)
+    val hasRows = built && TxLog.snapshotAt(index).files.nonEmpty
     val vecs0 = TxLog.readFiles(spark, corpus, newFiles)
     val vecs =
-      if (indexed.isEmpty) vecs0
+      if (!hasRows) vecs0
       else vecs0.join(
         TxLog.readAt(spark, index).select(col(idCol)).distinct(),
         Seq(idCol), "left_anti")
@@ -218,22 +218,14 @@ object AnnIndex {
     require(n > 0 || vecs.isEmpty,
       s"ANN index build at $index assigned 0 of the batch's vectors " +
         "(zero trained centroids?) — refusing to advance the watermark")
-    if (n > 0)
-      TxLog.appendClustered(spark, assigned, index,
-        "cent_id", clusterCol = col("cent_id"), nClusters = nClusters,
-        props = if (built) Map.empty else bind): Unit
-    // watermark: driver-local write + in-place cache seed (the
-    // TextIndex.ensureIndexed discipline)
-    val wmV = TxLog.appendLocal(spark, filesDir(index), "file_name",
-      WatermarkSchema, newFiles.map(f => Seq(f.path)))
-    TxLog.seedStringSet(filesDir(index), "file_name", wmV,
-      indexed ++ newFiles.map(_.path))
+    val props = if (built) Map.empty[String, String] else bind
+    val names = newFiles.map(_.path)
+    if (n == 0) TxLog.setProps(index, props, names): Unit
+    else TxLog.appendClustered(spark, assigned, index,
+      "cent_id", clusterCol = col("cent_id"), nClusters = nClusters,
+      props = props, sources = names): Unit
     n
   }
-
-  private val WatermarkSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("file_name",
-      org.apache.spark.sql.types.StringType, nullable = true)))
 
   /** Files a single list's probe must touch — the pruning-power audit,
     * decided from driver metadata alone, no data read. */
@@ -296,17 +288,18 @@ object AnnIndex {
     val built = TxLog.versions(codesDir(index)).nonEmpty
     if (built && bound.isEmpty) TxLog.setProps(codesDir(index), bind): Unit
     val snap = TxLog.snapshotAt(corpus)
-    val coded: Set[String] =
-      TxLog.cachedStringSet(spark, codesFilesDir(index), "file_name")
+    val coded = TxLog.sourcesAt(codesDir(index))
     val newFiles = snap.files.filterNot(f => coded(f.path))
     if (newFiles.isEmpty) return 0L
+    // gated on the codes, not the watermark (TextIndex.ensureIndexed)
+    val hasCodes = built && TxLog.snapshotAt(codesDir(index)).files.nonEmpty
     val vecs0 = TxLog.readFiles(spark, corpus, newFiles)
     // the anti-joined increment feeds the count AND the encode/train —
     // checkpoint it so the codes-table scan + anti-join run once (a
     // fresh build's vecs is a bare parquet read: nothing to save); the
     // increment count rides the checkpoint pass as an observed metric
     val (vecs, n) =
-      if (coded.isEmpty) { val v = vecs0; (v, v.count()) }
+      if (!hasCodes) { val v = vecs0; (v, v.count()) }
       else {
         val obs = new org.apache.spark.sql.Observation
         val v = vecs0.join(
@@ -316,7 +309,10 @@ object AnnIndex {
           .localCheckpoint(true)
         (v, obs.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L))
       }
-    if (n > 0) {
+    val props = if (built) Map.empty[String, String] else bind
+    val names = newFiles.map(_.path)
+    if (n == 0) TxLog.setProps(codesDir(index), props, names): Unit
+    else {
       val codes =
         if (TxLog.versions(cbDir(index)).isEmpty) {
           val (codes0, cb) = Pq.model(vecs, idCol, embCol,
@@ -331,12 +327,8 @@ object AnnIndex {
           idCol, embCol, dims = PqDims, m = PqM)
       TxLog.appendClustered(spark, codes, codesDir(index), idCol,
         clusterCol = col("sub"), nClusters = PqSubClusters,
-        props = if (built) Map.empty else bind): Unit
+        props = props, sources = names): Unit
     }
-    val wmV = TxLog.appendLocal(spark, codesFilesDir(index), "file_name",
-      WatermarkSchema, newFiles.map(f => Seq(f.path)))
-    TxLog.seedStringSet(codesFilesDir(index), "file_name", wmV,
-      coded ++ newFiles.map(_.path))
     n
   }
 
@@ -348,9 +340,9 @@ object AnnIndex {
     * binding properties supply the columns — a legacy index without
     * them REFUSES);
     * (2) re-cluster ALL assignments to one file per list, DVs folded,
-    * one atomic commit; (3) fold the watermark; (4) vacuum every
-    * sibling. The trained quantizer is never retrained — serving
-    * through the rewrite is row-identical. */
+    * one atomic commit; (3) the same two steps for the PQ sibling, if
+    * built; (4) vacuum every sibling. The trained quantizer is never
+    * retrained — serving through the rewrite is row-identical. */
   def maintain(spark: SparkSession, corpus: Path, index: Path,
       vacuumKeep: Int = 1, vacuumMinAgeMs: Long = 0L): MaintainReport = {
     val (idCol, embCol, nClusters) = binding(index).getOrElse {
@@ -366,11 +358,9 @@ object AnnIndex {
     if (snap0.files.nonEmpty)
       TxLog.compactClustered(spark, index, "cent_id",
         clusterCol = col("cent_id"), nClusters = nClusters): Unit
-    if (TxLog.snapshotAt(filesDir(index)).files.size > 1)
-      TxLog.compact(spark, filesDir(index), "file_name", nParts = 1): Unit
     // the PQ sibling (if built) degrades the same two ways — encode
     // corpus files that arrived since, re-cluster the codes back to
-    // their per-subspace layout with DVs folded, fold its watermark.
+    // their per-subspace layout with DVs folded.
     // Behind the same no-guessing fence: only a self-describing codes
     // sibling (its binding properties) is maintained.
     pqBinding(index).foreach { case (pqId, pqEmb) =>
@@ -378,11 +368,8 @@ object AnnIndex {
       if (TxLog.snapshotAt(codesDir(index)).files.nonEmpty)
         TxLog.compactClustered(spark, codesDir(index), pqId,
           clusterCol = col("sub"), nClusters = PqSubClusters): Unit
-      if (TxLog.snapshotAt(codesFilesDir(index)).files.size > 1)
-        TxLog.compact(spark, codesFilesDir(index), "file_name", nParts = 1): Unit
     }
-    val reclaimed = Seq(index, centDir(index), filesDir(index), cbDir(index),
-        codesDir(index), codesFilesDir(index))
+    val reclaimed = Seq(index, centDir(index), cbDir(index), codesDir(index))
       .map { t =>
         if (TxLog.versions(t).isEmpty) 0
         else TxLog.vacuum(t, keepVersions = math.max(1, vacuumKeep),

@@ -138,16 +138,17 @@ object BloomIndex {
       valueCol: String, bitsPerKey: Int = 16, k: Int = 7,
       capBits: Int = DefaultCapBits): Int = {
     val live = TxLog.snapshotAt(table).files
-    val indexed: Set[String] = // file-count-sized metadata, version-cached
-      TxLog.cachedStringSet(spark, index, "data_file")
+    // the watermark is the index's own data_file column: file-count-sized,
+    // read on the driver (no Spark job), deletion vectors applied
+    val indexed: Set[String] =
+      if (TxLog.versions(index).isEmpty) Set.empty
+      else TxLog.readLocal(spark, index, TxLog.snapshotAt(index).files, Seq("data_file"))
+        .map(_.getString(0)).toSet
     val fresh = live.filterNot(f => indexed.contains(f.path))
     if (fresh.isEmpty) return 0
-    val v = TxLog.append(spark,
+    TxLog.append(spark,
       bloomRows(spark, table, fresh, valueCol, bitsPerKey, k, capBits),
-      index, "file_hash", nParts = 1)
-    // seed the watermark cache in place: this JVM just wrote the rows,
-    // so the next lifecycle call pays no Spark job to re-read the names
-    TxLog.seedStringSet(index, "data_file", v, indexed ++ fresh.map(_.path))
+      index, "file_hash", nParts = 1): Unit
     fresh.size
   }
 

@@ -23,11 +23,12 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   *    corpus binding `id_col`, `text_col`, `n_clusters`, set by the
   *    first postings commit. A crash can never leave them disagreeing
   *    with the postings of any version;
+  *    The postings log's source files ([[TxLog.sourcesAt]]) are the
+  *    indexed corpus files, the incremental-maintenance watermark: each
+  *    increment's names ride the postings commit that indexes them;
   *  - `<index>_tstats`: the term dictionary the bounded search modes
   *    prune with; its `refreshed_at` property is the index's
-  *    `n_deleted` as of the postings its exact rebuild read;
-  *  - `<index>_files`: the indexed corpus files (names), the
-  *    incremental-maintenance watermark ([[BloomIndex]]'s discipline).
+  *    `n_deleted` as of the postings its exact rebuild read.
   *
   * SERVING never touches the corpus: [[searchBm25]] reads the query
   * terms' pruned postings + N and avgdl from the same postings version,
@@ -78,7 +79,6 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   */
 object TextIndex {
 
-  private def filesDir(index: Path): Path = index.resolveSibling(index.getFileName + "_files")
   private def tstatsDir(index: Path): Path = index.resolveSibling(index.getFileName + "_tstats")
 
   /** Range-MONOTONE cluster bucket of term_hash. Clustering by the raw
@@ -153,10 +153,11 @@ object TextIndex {
     TxLog.propsAt(tstatsDir(index)).get("refreshed_at").fold(-1L)(_.toLong)
 
   /** Index every live corpus file not yet in the watermark: postings
-    * range-clustered by term_hash with the statistics advanced in the
-    * same commit, then the dictionary slice and the watermark, one
-    * commit each. Returns the number of newly indexed documents. First
-    * call on an empty index IS the build. */
+    * range-clustered by term_hash with the statistics and the files'
+    * names in the same commit, then the dictionary slice. New files with
+    * no new docs (a corpus compaction) record their names in one
+    * data-less index commit. Returns the number of newly indexed
+    * documents. First call on an empty index IS the build. */
   def ensureIndexed(spark: SparkSession, corpus: Path, index: Path,
       idCol: String = "doc_id", textCol: String = "text",
       nClusters: Int = 8): Long = Jobs.labeled(spark, "text ensureIndexed") {
@@ -175,14 +176,16 @@ object TextIndex {
     // backfill the binding even on a no-op call, so a legacy index (no
     // binding property) becomes maintainable after one explicit
     // ensureIndexed with its original arguments. A fresh index's
-    // binding rides its first postings commit: a separate commit would
-    // count as a prior postings version below
+    // binding rides its first commit
     if (built && bound.isEmpty) TxLog.setProps(index, bind): Unit
     val snap = TxLog.snapshotAt(corpus)
-    val indexed: Set[String] =
-      TxLog.cachedStringSet(spark, filesDir(index), "file_name")
+    val indexed = TxLog.sourcesAt(index)
     val newFiles = snap.files.filterNot(f => indexed(f.path))
     if (newFiles.isEmpty) return 0L
+    // the anti-join gate is the postings, not the watermark: an index
+    // built before its names rode its commits has postings and no
+    // sources, and its first call here re-presents every corpus file
+    val hasPostings = built && TxLog.snapshotAt(index).files.nonEmpty
     val docs = TxLog.readFiles(spark, corpus, newFiles)
     // idempotency + compaction correctness: a rewritten file re-presents
     // docs the index already carries — their postings must stay single.
@@ -193,7 +196,7 @@ object TextIndex {
     val docRows0 = docs.select(col(idCol).cast("long").as("doc_id"),
       split(col(textCol), " ").as("__ws"))
     val docRows =
-      if (indexed.isEmpty) docRows0
+      if (!hasPostings) docRows0
       else docRows0.join(
         TxLog.readAt(spark, index).select(col("doc_id")).distinct(),
         Seq("doc_id"), "left_anti")
@@ -219,12 +222,14 @@ object TextIndex {
     val om = obs.get
     val nNew = om.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
     val lenNew = om.get("len").map(_.asInstanceOf[Long]).getOrElse(0L)
-    if (nNew > 0) {
+    val props = (if (built) Map.empty[String, String] else bind) ++ Map(
+      "n_docs" -> (st0.nDocs + nNew).toString,
+      "total_len" -> (st0.totalLen + lenNew).toString)
+    val names = newFiles.map(_.path)
+    if (nNew == 0) TxLog.setProps(index, props, names): Unit
+    else {
       val pv = TxLog.appendClustered(spark, mat, index, "term_hash",
-        clusterBucket(nClusters), nClusters,
-        props = (if (built) Map.empty[String, String] else bind) ++ Map(
-          "n_docs" -> (st0.nDocs + nNew).toString,
-          "total_len" -> (st0.totalLen + lenNew).toString))
+        clusterBucket(nClusters), nClusters, props = props, sources = names)
       // the _tstats dictionary delta (per-term df, the dl-free impact
       // ceiling max tf/(tf+k1(1-b)), the slice's top (tf, dl) pairs,
       // and the postings-commit binding): LOG-STRUCTURED — each
@@ -241,32 +246,20 @@ object TextIndex {
       // their n_deleted.
       val creating = TxLog.versions(tstatsDir(index)).isEmpty
       upgradeTstatsSchema(spark, index)
-      // creating on a FRESH index (no postings commit before pv): the
-      // live postings ARE `mat` — derive the dictionary from the
+      // creating on a FRESH index (no postings before pv): the live
+      // postings ARE `mat` — derive the dictionary from the
       // already-checkpointed increment instead of re-reading the just-
       // written files (VERDICT r15 #6: one aggregation source, no
       // second corpus-sized pass on the build path). Only a mid-life
-      // upgrade (prior postings commits exist) must read the full index.
-      val hadPrior = TxLog.versions(index).exists(_ < pv)
-      val dictSrc = if (creating && hadPrior) TxLog.readAt(spark, index, Some(pv)) else mat
-      val sliceVer = if (creating && hadPrior) -1L else pv
+      // upgrade (postings before pv) must read the full index.
+      val dictSrc = if (creating && hasPostings) TxLog.readAt(spark, index, Some(pv)) else mat
+      val sliceVer = if (creating && hasPostings) -1L else pv
       TxLog.appendClustered(spark, tstatsDelta(spark, dictSrc, sliceVer),
         tstatsDir(index), "term_hash", clusterBucket(nClusters), nClusters,
         props = if (creating) Map("refreshed_at" -> st0.nDeleted.toString) else Map.empty): Unit
     }
-    // watermark advance: a driver-held name list — local write, and the
-    // cached set is seeded in place so the NEXT lifecycle call pays no
-    // Spark job to re-read rows this JVM just wrote
-    val wmV = TxLog.appendLocal(spark, filesDir(index), "file_name",
-      WatermarkSchema, newFiles.map(f => Seq(f.path)))
-    TxLog.seedStringSet(filesDir(index), "file_name", wmV,
-      indexed ++ newFiles.map(_.path))
     nNew
   }
-
-  private val WatermarkSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("file_name",
-      org.apache.spark.sql.types.StringType, nullable = true)))
 
   /** BM25 top-k served from the INDEX ALONE — per query term one
     * footer-pruned point read of the postings (range on term_hash, the
@@ -836,31 +829,32 @@ object TextIndex {
   }
 
   private def posDir(index: Path): Path = index.resolveSibling(index.getFileName + "_pos")
-  private def posFilesDir(index: Path): Path = index.resolveSibling(index.getFileName + "_pos_files")
 
   /** POSITIONAL postings — the OPTIONAL sibling table phrase queries
     * need: one row per term OCCURRENCE (term_hash, term, doc_id, pos),
     * range-clustered by term_hash like the frequency postings, with
-    * its own watermark under the same diff + doc_id-anti-join
-    * discipline (idempotent under redelivery, compaction-proof).
+    * its own watermark (the `_pos` log's source files) under the same
+    * diff + doc_id-anti-join discipline (idempotent under redelivery,
+    * compaction-proof).
     * Kept separate from [[ensureIndexed]]'s table so BM25 serving
     * never pays the ~dl-times-larger occurrence rows. */
   def ensurePositional(spark: SparkSession, corpus: Path, index: Path,
       idCol: String = "doc_id", textCol: String = "text",
       nClusters: Int = 8): Long = {
     val pd = posDir(index)
-    val wm = posFilesDir(index)
     val snap = TxLog.snapshotAt(corpus)
-    val indexed: Set[String] = TxLog.cachedStringSet(spark, wm, "file_name")
+    val indexed = TxLog.sourcesAt(pd)
     val newFiles = snap.files.filterNot(f => indexed(f.path))
     if (newFiles.isEmpty) return 0L
+    // gated on the postings, as in ensureIndexed
+    val hasPostings = TxLog.versions(pd).nonEmpty && TxLog.snapshotAt(pd).files.nonEmpty
     val docs = TxLog.readFiles(spark, corpus, newFiles)
     // doc-level anti-join before the posexplode (guide §3.3): the
     // idempotency decision needs |new docs| rows, not |new occurrences|
     val docRows0 = docs.select(col(idCol).cast("long").as("doc_id"),
       split(col(textCol), " ").as("__ws"))
     val docRows =
-      if (indexed.isEmpty) docRows0
+      if (!hasPostings) docRows0
       else docRows0.join(
         TxLog.readAt(spark, pd).select(col("doc_id")).distinct(),
         Seq("doc_id"), "left_anti")
@@ -877,14 +871,10 @@ object TextIndex {
     val mat = fresh.localCheckpoint(true)
     // empty observed map = zero-partition empty plan (see ensureIndexed)
     val nNew = obs.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
-    if (nNew > 0)
-      TxLog.appendClustered(spark, mat, pd, "term_hash",
-        clusterBucket(nClusters), nClusters): Unit
-    // watermark: driver-local write + in-place cache seed (the
-    // ensureIndexed discipline)
-    val wmV = TxLog.appendLocal(spark, wm, "file_name", WatermarkSchema,
-      newFiles.map(f => Seq(f.path)))
-    TxLog.seedStringSet(wm, "file_name", wmV, indexed ++ newFiles.map(_.path))
+    val names = newFiles.map(_.path)
+    if (nNew == 0) TxLog.setProps(pd, Map.empty, names): Unit
+    else TxLog.appendClustered(spark, mat, pd, "term_hash",
+      clusterBucket(nClusters), nClusters, sources = names): Unit
     nNew
   }
 
@@ -1034,7 +1024,8 @@ object TextIndex {
     *      with DVs folded in (one distributed compactClustered job,
     *      one atomic commit — readers never block), restoring the
     *      one-file-per-term seek;
-    *   3. compact the per-increment watermark appends to one file;
+    *   3. rebuild the dictionary exact, and bring the positional
+    *      sibling (if built) through steps 1 and 2;
     *   4. vacuum dead versions of every sibling table.
     * Serving through the rewrite is identical by construction (same
     * rows, new layout) — TextIndexSpec pins it, gate tix05 proves the
@@ -1062,8 +1053,6 @@ object TextIndex {
     if (snap0.files.nonEmpty)
       TxLog.compactClustered(spark, index, "term_hash",
         clusterBucket(nClusters), nClusters): Unit
-    if (TxLog.snapshotAt(filesDir(index)).files.size > 1)
-      TxLog.compact(spark, filesDir(index), "file_name", nParts = 1): Unit
     // the _tstats dictionary: increments appended log-structured slices
     // and pruneDeleted left its df counts stale-high — rebuild it EXACT
     // from the live (DV-folded) postings, restore the range clustering,
@@ -1084,17 +1073,14 @@ object TextIndex {
         props = Map("refreshed_at" -> scalarsAt(index, Some(v)).nDeleted.toString)): Unit
     }
     // the positional sibling (if built) degrades the same two ways —
-    // fold its increments and watermark back too
+    // fold its increments back too
     if (TxLog.versions(posDir(index)).nonEmpty) {
       ensurePositional(spark, corpus, index, idCol, textCol, nClusters): Unit
       if (TxLog.snapshotAt(posDir(index)).files.nonEmpty)
         TxLog.compactClustered(spark, posDir(index), "term_hash",
           clusterBucket(nClusters), nClusters): Unit
-      if (TxLog.snapshotAt(posFilesDir(index)).files.size > 1)
-        TxLog.compact(spark, posFilesDir(index), "file_name", nParts = 1): Unit
     }
-    val reclaimed = Seq(index, filesDir(index), tstatsDir(index), posDir(index),
-        posFilesDir(index))
+    val reclaimed = Seq(index, tstatsDir(index), posDir(index))
       .map { t =>
         if (TxLog.versions(t).isEmpty) 0
         else TxLog.vacuum(t, keepVersions = math.max(1, vacuumKeep),

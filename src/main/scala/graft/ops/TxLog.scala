@@ -170,8 +170,9 @@ object TxLog {
   /** Live-set size above which a checkpoint SHARDS its file list.
     * A checkpoint is the log folded at its version ([[stateAt]]): the
     * live files plus the scalar fields protocol, tags, constraints,
-    * batchMax, partitionCols and props (the table properties, written
-    * when any are set), and the txn outcomes decided so far.
+    * batchMax, partitionCols, props (the table properties, written
+    * when any are set) and sources (the source-file names, written when
+    * any are recorded), and the txn outcomes decided so far.
     * A sharded `checkpoint.json` keeps every scalar but carries
     * `filesRef` — a list of `checkpoint.d/part-NNNNN.jsonl` shards,
     * one AddFile JSON per line — instead of the inline `files` array.
@@ -180,7 +181,8 @@ object TxLog {
     * shards stream out bounded and parse back in parallel. A checkpoint
     * missing `batchMax` or `partitionCols` (both always written) predates
     * those fields and never seeds the fold. A missing `props` means no
-    * properties: no commit that sets one predates the field. The first
+    * properties and a missing `sources` no source files: no commit that
+    * sets either predates its field. The first
     * sharded checkpoint grows the table protocol with the `shardedCheckpoint`
     * reader+writer feature IN THE SAME COMMIT (tx26's gate machinery),
     * so a pre-upgrade engine refuses the table by name instead of
@@ -606,15 +608,17 @@ object TxLog {
 
   /** The log folded at `snapshot.version`: the live files plus every
     * scalar a checkpoint carries. Snapshot, protocol, tags, constraints,
-    * the streaming batch watermark, the partitioning and the table
-    * properties are all fields of this one fold ([[stateAt]]); the
-    * public readers are accessors. */
+    * the streaming batch watermark, the partitioning, the table
+    * properties and the source-file names ([[sourcesAt]]) are all
+    * fields of this one fold ([[stateAt]]); the public readers are
+    * accessors. */
   private final case class State(snapshot: Snapshot, protocol: Protocol,
       tags: Map[String, Long], constraints: Map[String, String],
-      batchMax: Option[Long], partitionCols: Seq[String], props: Map[String, String])
+      batchMax: Option[Long], partitionCols: Seq[String], props: Map[String, String],
+      sources: Set[String])
 
   private val EmptyState = State(Snapshot(-1L, Vector.empty), Protocol.Empty, Map.empty,
-    Map.empty, None, Nil, Map.empty)
+    Map.empty, None, Nil, Map.empty, Set.empty)
 
   /** One folded state per table path — the newest resolved (an older
     * time-travel read never displaces it) — with its version's commit
@@ -656,7 +660,7 @@ object TxLog {
           Option(ck.get("constraints")).fold(Map.empty[String, String])(
             _.fields().asScala.map(e => e.getKey -> e.getValue.asText).toMap),
           Some(ck.get("batchMax").asLong).filter(_ >= 0L), strings(ck.get("partitionCols")),
-          upsertProps(Map.empty, ck.get("props")))
+          upsertProps(Map.empty, ck.get("props")), strings(ck.get("sources")).toSet)
       case None => EmptyState
     })
     // the live map is built only once a replayed commit touches files
@@ -684,7 +688,12 @@ object TxLog {
           case "set-partitioning" => strings(n.get("partitionCols"))
           case _ => s.partitionCols
         },
-        upsertProps(s.props, n.get("props")))
+        upsertProps(s.props, n.get("props")),
+        n.get("op").asText match {
+          // a clone or restore carries the whole set it establishes
+          case "clone" | "restore" => strings(n.get("sources")).toSet
+          case _ => s.sources ++ strings(n.get("sources"))
+        })
     }
     val out = s.copy(snapshot =
       Snapshot(target, if (live == null) seed.snapshot.files else live.values.toVector))
@@ -706,53 +715,20 @@ object TxLog {
   private def propsExtra(props: Map[String, String]): Map[String, Object] =
     if (props.isEmpty) Map.empty else Map("props" -> (props.asJava: Object))
 
+  /** A commit's or checkpoint's `extra` entry carrying source-file names
+    * (none when empty). */
+  private def sourcesExtra(names: Iterable[String]): Map[String, Object] =
+    if (names.isEmpty) Map.empty else Map("sources" -> (names.toSeq.sorted.asJava: Object))
+
   /** [[stateAt]] at `version` (latest when None). */
   private def stateOf(table: Path, version: Option[Long]): State =
     stateAt(table, versions(table), version.getOrElse(Long.MaxValue))
-
-  // ---- cached watermark reads (optimization r16): index watermarks
-  // (file-name lists) are read at the top of EVERY lifecycle call — each
-  // read is a full Spark job over a table of a few rows. The cache is
-  // version-keyed: a cached set is valid exactly while the table's
-  // latest version is unchanged, so only the no-op/refresh calls (the
-  // common case: streaming drains, idempotent CALL re-issues, maintain
-  // passes) skip the job. STAMP-GUARDED (optimization r17, VERDICT r16
-  // item 7): like nodeCache/stateCache, the latest commit's (size,
-  // mtime) rides along so a table deleted and re-created at the same
-  // path with the same latest version (spec fixtures, clone targets)
-  // can never serve a stale set — one stat() instead of a Spark job.
-  private val strSetCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, (Long, Long), Set[String])]()
 
   /** Stamp of `table`'s commit.json at `v` — (-1, -1) when unreadable
     * (a vanished log), which can never equal a real stamp. */
   private def versionStamp(table: Path, v: Long): (Long, Long) =
     try commitStamp(versionDir(table, v).resolve("commit.json"))
     catch { case _: java.io.IOException => (-1L, -1L) }
-
-  /** One string column of a small metadata table as a Set, cached per
-    * (version, commit stamp) (the index-watermark read shape). */
-  def cachedStringSet(spark: SparkSession, table: Path, colName: String): Set[String] = {
-    val v = latestVersion(table)
-    if (v < 0) return Set.empty
-    val key = table.toAbsolutePath.toString + "#" + colName
-    val stamp = versionStamp(table, v)
-    val hit = strSetCache.get(key)
-    if (hit != null && hit._1 == v && hit._2 == stamp) return hit._3
-    val s = readAt(spark, table).select(colName).collect().map(_.getString(0)).toSet
-    strSetCache.put(key, (v, stamp, s))
-    s
-  }
-
-  /** Writer-side cache refresh: a maintenance path that just appended
-    * `added` names to watermark table `table` (now at `v`) already
-    * KNOWS the new set — seed the cache so the next lifecycle call pays
-    * no Spark job to re-read rows this JVM just wrote. Safe by the same
-    * argument as the read path: keyed on (version, stamp). */
-  private[graft] def seedStringSet(table: Path, colName: String, v: Long,
-      s: Set[String]): Unit =
-    strSetCache.put(table.toAbsolutePath.toString + "#" + colName,
-      (v, versionStamp(table, v), s)): Unit
 
   /** The live files at `version` (latest when None): the log fold
     * ([[stateAt]]) behind the refuse-by-name reader gate. */
@@ -877,6 +853,7 @@ object TxLog {
             else Map("tags" -> (st.tags.view.mapValues(java.lang.Long.valueOf(_): Object)
               .toMap.asJava: Object)))
         ++ propsExtra(st.props)
+        ++ sourcesExtra(st.sources)
         ++ (if (txo.isEmpty) Map.empty[String, Object]
             else Map("txnOutcomes" -> (txo.asJava: Object)))
         ++ (if (txp.isEmpty) Map.empty[String, Object]
@@ -1374,9 +1351,23 @@ object TxLog {
   def propsAt(table: Path, version: Option[Long] = None): Map[String, String] =
     stateOf(table, version).props
 
-  /** A commit that changes only properties (op `set-props`, no files). */
-  def setProps(table: Path, props: Map[String, String]): Long =
-    commitRetry(table, "set-props", Nil, Nil, extra = propsExtra(props))(_ => true)
+  /** SOURCE FILES: the names of the input files a derived table has
+    * consumed — an index's corpus watermark. A commit's `sources` array
+    * adds its names; a `clone` or `restore` commit carries the whole set
+    * it establishes (a clone the source's, a restore the target
+    * version's, so files consumed after that version are consumed
+    * again). The checkpoint records the folded set, and the set at a
+    * version is a field of the log fold ([[stateAt]]), so it advances
+    * in the same atomic commit as the rows derived from those files.
+    * Empty for a table that never recorded one. */
+  def sourcesAt(table: Path, version: Option[Long] = None): Set[String] =
+    stateOf(table, version).sources
+
+  /** A commit that changes only properties and source files (op
+    * `set-props`, no data files). */
+  def setProps(table: Path, props: Map[String, String], sources: Seq[String] = Nil): Long =
+    commitRetry(table, "set-props", Nil, Nil,
+      extra = propsExtra(props) ++ sourcesExtra(sources))(_ => true)
 
   /** Validate a write's NEW rows against the table's constraints — ONE
     * combined filter pass over the WRITE-sized delta (never the table),
@@ -1547,99 +1538,17 @@ object TxLog {
       schema = Some(validateSchema(tableSchema(table), df.schema, allowEvolution)))(_ => true)
   }
 
-  // ------------------------------------------- driver-local small writes
-
-  /** Write `rows` as ONE parquet file on the DRIVER (parquet-mr Group
-    * writer — zero Spark jobs) and commit them as an atomic append.
-    *
-    * The few-row watermark tables every index lifecycle call maintains
-    * were each paying a full distributed job (schedule + task launch +
-    * stage + commit, ~100 ms of pure overhead
-    * in local mode and worse on a cluster) to move a handful of
-    * DRIVER-HELD values into a file (optimization r17, guide §5 — a
-    * Spark job for one row is driver work with extra steps; production
-    * lake drivers write such metadata files directly, e.g. Delta
-    * checkpoints). The staged file flows through the UNCHANGED promote
-    * path — footer stats, fresh UUID name, atomic move, commit
-    * protocol, constraint enforcement — so readers cannot tell who
-    * wrote it (LocalWriteSpec pins byte-level equivalence of stats and
-    * read-back). Supported column types: long, int, double, boolean,
-    * string (the metadata-sidecar shapes); anything else must go
-    * through [[append]]. */
-  def appendLocal(spark: SparkSession, table: Path, statsCol: String,
-      schema: StructType, rows: Seq[Seq[Any]]): Long = {
-    Files.createDirectories(table)
-    val declared = validateSchema(tableSchema(table), schema, allowEvolution = false)
-    val stage = table.resolve(s".stage-${UUID.randomUUID()}")
-    Files.createDirectories(stage)
-    writeLocalParquet(spark, stage.resolve("part-local.parquet"), table, schema, rows)
-    enforceConstraintsStaged(spark, table, stage)
-    val adds = promoteStaged(spark, stage, table, statsCol)
-    commitRetry(table, "append", adds, Nil, schema = Some(declared))(_ => true)
-  }
-
-  /** One flat parquet file from driver-held rows, under the table's
-    * PHYSICAL column names (the staged-write contract), with standard
-    * footer statistics — parquet-mr's Group writer, the same library
-    * Spark itself writes through. */
-  private def writeLocalParquet(spark: SparkSession, file: Path, table: Path,
-      schema: StructType, rows: Seq[Seq[Any]]): Unit = {
-    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType, LongType, StringType}
-    val fields: Seq[(String, DataType)] =
-      schema.fields.toSeq.map(f => (physName(table, f.name), f.dataType))
-    val mb = Types.buildMessage()
-    fields.foreach { case (name, dt) =>
-      val p = dt match {
-        case LongType => Types.optional(PrimitiveTypeName.INT64)
-        case IntegerType => Types.optional(PrimitiveTypeName.INT32)
-        case DoubleType => Types.optional(PrimitiveTypeName.DOUBLE)
-        case BooleanType => Types.optional(PrimitiveTypeName.BOOLEAN)
-        case StringType => Types.optional(PrimitiveTypeName.BINARY)
-          .as(LogicalTypeAnnotation.stringType())
-        case other => throw new IllegalArgumentException(
-          s"appendLocal supports long/int/double/boolean/string columns; " +
-            s"'$name' is $other — use append")
-      }
-      mb.addField(p.named(name))
-    }
-    val mt = mb.named("spark_schema")
-    val factory = new org.apache.parquet.example.data.simple.SimpleGroupFactory(mt)
-    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
-      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile
-        .fromPath(new HPath(file.toString), spark.sessionState.newHadoopConf()))
-      .withType(mt)
-      .build()
-    try rows.foreach { r =>
-      require(r.size == fields.size,
-        s"row arity ${r.size} != schema arity ${fields.size}")
-      val g = factory.newGroup()
-      fields.zip(r).foreach { case ((name, dt), v) =>
-        if (v != null) dt match {
-          case LongType => g.add(name, v.asInstanceOf[Long]): Unit
-          case IntegerType => g.add(name, v.asInstanceOf[Int]): Unit
-          case DoubleType => g.add(name, v.asInstanceOf[Double]): Unit
-          case BooleanType => g.add(name, v.asInstanceOf[Boolean]): Unit
-          case StringType => g.add(name, v.asInstanceOf[String]): Unit
-          case _ => ()
-        }
-      }
-      writer.write(g)
-    } finally writer.close()
-  }
-
-  /** [[readFiles]]'s driver-local twin, the read side of [[appendLocal]]:
-    * `files` of `table` read ON THE DRIVER with parquet-mr's Group reader
+  /** [[readFiles]]'s driver-local twin: `files` of `table` read ON THE
+    * DRIVER with parquet-mr's Group reader
     * — no Spark job — for serving paths whose whole input is a few
     * footer-pruned files. Only `columns` (logical names) are read, under
     * their physical names; `eq` (a long column, a value) is pushed into
     * the reader (row-group stats, then record level); each file's
     * deletion vector drops its rows exactly as the merge-on-read scan's
     * per-file keyed anti-join does. Rows come back under the logical
-    * names, null where a file predates a column. Supported types:
-    * [[appendLocal]]'s flat ones plus [[graft.functions.TopKAgg]]'s pair
-    * array; any other column is refused by name. */
+    * names, null where a file predates a column. Supported types: long,
+    * int, double, boolean and string, plus [[graft.functions.TopKAgg]]'s
+    * pair array; any other column is refused by name. */
   def readLocal(spark: SparkSession, table: Path, files: Seq[AddFile],
       columns: Seq[String], eq: Option[(String, Long)] = None): Vector[org.apache.spark.sql.Row] = {
     import org.apache.parquet.example.data.Group
@@ -1943,10 +1852,12 @@ object TxLog {
     * range-derived cluster key each file's footer [min,max] is exactly
     * its cluster's key range, which is what makes [[pruneFiles]] sharp.
     * The cluster column is layout metadata (derivable from the data) and
-    * is not stored in the files. `props` upserts table properties in the
-    * same commit ([[propsAt]]). */
+    * is not stored in the files. `props` upserts table properties and
+    * `sources` adds source-file names in the same commit ([[propsAt]],
+    * [[sourcesAt]]). */
   def appendClustered(spark: SparkSession, df: DataFrame, table: Path, statsCol: String,
-      clusterCol: Column, nClusters: Int, props: Map[String, String] = Map.empty): Long =
+      clusterCol: Column, nClusters: Int, props: Map[String, String] = Map.empty,
+      sources: Seq[String] = Nil): Long =
       Jobs.labeled(spark, s"txlog appendClustered ${table.getFileName}") {
     Files.createDirectories(table)
     validateSchema(tableSchema(table), df.schema, allowEvolution = false): Unit // fail fast
@@ -1962,7 +1873,7 @@ object TxLog {
     deleteRecursively(stage)
     commitRetry(table, "append", adds, Nil,
       schema = Some(validateSchema(tableSchema(table), df.schema, allowEvolution = false)),
-      extra = propsExtra(props))(
+      extra = propsExtra(props) ++ sourcesExtra(sources))(
       _ => true)
   }
 
@@ -2405,7 +2316,7 @@ object TxLog {
     * independent: each table's later commits, compactions, and vacuums
     * touch only its own links (unlink decrements the refcount, the
     * other table's link keeps the inode alive). Schema, partition
-    * columns and properties carry over; CHECK constraints and tags are table-local
+    * columns, properties and source files carry over; CHECK constraints and tags are table-local
     * history and deliberately do NOT copy (set them on the clone if
     * wanted — the Delta position for properties is the same). On an
     * object store the analog is server-side copy or a manifest-level
@@ -2424,6 +2335,7 @@ object TxLog {
     commitRetry(dst, "clone", snap.files, Nil,
       schema = tableSchema(src, Some(snap.version)),
       extra = propsExtra(propsAt(src, Some(snap.version))) ++
+        sourcesExtra(sourcesAt(src, Some(snap.version))) ++
         (if (partCols.isEmpty) Map.empty
          else Map("partitionCols" -> (partCols.asJava: Object))))(_.isEmpty)
   }
@@ -2605,9 +2517,9 @@ object TxLog {
     * vectors), removes drop everything the target didn't have. History
     * is preserved: time travel still sees every version including the
     * pre-restore state, and the restore itself is one more auditable
-    * commit. The target's SCHEMA and properties ([[propsAt]]) are
-    * restored with it; CHECK constraints and tags stay (Delta
-    * semantics).
+    * commit. The target's SCHEMA, properties ([[propsAt]]) and source
+    * files ([[sourcesAt]]) are restored with it; CHECK constraints and
+    * tags stay (Delta semantics).
     * Fails fast if any restored file was vacuumed away, and under
     * strict OCC (any concurrent commit re-derives the diff). */
   def restore(spark: SparkSession, table: Path, toVersion: Long): Long = {
@@ -2632,7 +2544,8 @@ object TxLog {
     val props = targetProps.filter { case (k, v) => !baseProps.get(k).contains(v) } ++
       (baseProps.keySet -- targetProps.keySet).map(_ -> (null: String))
     commitRetry(table, "restore", adds, removes,
-      schema = tableSchema(table, Some(toVersion)), extra = propsExtra(props)) {
+      schema = tableSchema(table, Some(toVersion)),
+      extra = propsExtra(props) ++ sourcesExtra(sourcesAt(table, Some(toVersion)))) {
       case Some(s) => s.version == base.version
       case None => base.version == -1L
     }

@@ -1524,7 +1524,8 @@ object SimilarityQueries {
     // (sim13's flow) leave DV sidecars every candidate read must
     // anti-join. CALL maintain's ANN-sibling pass re-clusters ALL
     // assignments back to ONE FILE PER LIST with DVs folded (one atomic
-    // commit — readers never block) and folds the watermark; serving
+    // commit — readers never block), and after it the index's watermark
+    // (its log's source files) covers every live corpus file; serving
     // through the rewrite is row-identical: the sim13 oracle (sim07's
     // chain, deleted class excluded from candidates) gates the ranking,
     // the layout claims ride as gated literals. Everything runs through
@@ -1558,14 +1559,15 @@ object SimilarityQueries {
       spark.sql(s"CALL $cat.maintain('tbl', 4, 4, vacuum_min_age_ms => 0)").collect(): Unit
       val maxAfter = graft.ops.AnnIndex.maxFilesPerCent(spark, index)
       val dvsAfter = graft.ops.TxLog.snapshotAt(index).files.count(_.dv.isDefined)
-      val wmFiles = graft.ops.TxLog.snapshotAt(base.resolve("tbl_ann_ix_files")).files.size
+      val covered = graft.ops.TxLog.snapshotAt(corpus).files.map(_.path).toSet
+        .subsetOf(graft.ops.TxLog.sourcesAt(index))
       serveLakeAnn(spark, dir,
           graft.ops.TxLog.readAt(spark, base.resolve("tbl_ann_ix_cent")),
           graft.ops.TxLog.readAt(spark, index))
         .withColumn("overlap_before", lit(overlapBefore))
         .withColumn("max_files_per_cent_after", lit(maxAfter.toLong))
         .withColumn("dvs_folded", lit(dvsBefore > 0 && dvsAfter == 0))
-        .withColumn("watermark_folded", lit(wmFiles == 1))
+        .withColumn("watermark_folded", lit(covered))
     }),
 
     // ---- sim11: STREAMING maintenance of the persisted PQ index — the
@@ -2269,7 +2271,8 @@ object SimilarityQueries {
     // sim14: the ranking is sim13's oracle verbatim (the rewrite must
     // change nothing); the layout cure rides as gated literals —
     // overlapping per-list file-sets before, exactly one file per
-    // probed list after, DVs folded, watermark folded
+    // probed list after, DVs folded, every live corpus file in the
+    // watermark
     "sim14_ann_index_maintain" ->
       s"""SELECT q_id, rk, c_id, label, cosine,
          |  TRUE AS overlap_before,

@@ -218,7 +218,7 @@ class LakeStreamSource(spark: SparkSession, table: Path,
     op match {
       // metadata-only commits: no row-level change to emit
       case "compact" | "set-constraint" | "create" | "set-schema" | "set-tag"
-         | "set-partitioning" => None
+         | "set-partitioning" | "set-props" => None
       // a clone's v0 is the target's initial load: its adds ARE the
       // table's first rows, append-class for the feed. Cloned adds KEEP
       // the source's deletion vectors (cloneTable hardlinks the DV

@@ -9,7 +9,7 @@ import graft.SparkSpec
   * (optimization r17, VERDICT r16 item 7): a table deleted and
   * RE-CREATED at the same path — without going through deleteTree, so
   * no cache is explicitly invalidated — must serve the new incarnation's
-  * metadata from cachedStringSet / protocolAt. */
+  * metadata from protocolAt. */
 class CacheStampSpec extends SparkSpec {
   import spark.implicits._
 
@@ -19,18 +19,6 @@ class CacheStampSpec extends SparkSpec {
     if (Files.exists(p))
       Files.walk(p).sorted(Comparator.reverseOrder[Path]())
         .forEach(f => Files.deleteIfExists(f): Unit)
-
-  test("cachedStringSet: same path, same version, new incarnation -> fresh set") {
-    val dir = Files.createTempDirectory("graft_stamp")
-    val t = dir.resolve("wm")
-    TxLog.append(spark, Seq("a").toDF("file_name"), t, "file_name")
-    assert(TxLog.cachedStringSet(spark, t, "file_name") == Set("a"))
-    rawDelete(t)
-    TxLog.append(spark, Seq("bb", "ccc").toDF("file_name"), t, "file_name")
-    assert(TxLog.latestVersion(t) == 0L) // same latest version as before
-    assert(TxLog.cachedStringSet(spark, t, "file_name") == Set("bb", "ccc"))
-    rawDelete(dir)
-  }
 
   test("protocolAt: re-created table never replays the old protocol base") {
     val dir = Files.createTempDirectory("graft_stamp")

@@ -10,24 +10,26 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** A text index's scalars ride its own commits as table properties.
-  * Seeded random lifecycles — increments, deletes (with the positional
-  * sibling) each followed by its redelivery, maintain, Forget, a
-  * zero-copy clone of the whole family and restores of the whole family
-  * to an earlier point — are checked after every step against two
-  * invariants:
+/** A text index's scalars and watermark ride its own commits as table
+  * properties and source files. Seeded random lifecycles — increments,
+  * deletes (with the positional sibling) each followed by its
+  * redelivery, maintain, Forget, a zero-copy clone of the whole family
+  * and restores of the whole family to an earlier point — are checked
+  * after every step against three invariants:
   *
   *  - at EVERY index version v, the `n_docs` and `total_len` properties
   *    equal the distinct docs and the per-doc `dl` sum of the postings
   *    read at v: no prefix of the log disagrees with its rows, so a
   *    crash between any two commits leaves consistent scalars;
+  *  - at EVERY index version v, the source files are the corpus files
+  *    indexed up to v (a restore or clone carries its version's set),
+  *    and the positional sibling's head set equals the index's;
   *  - whenever the dictionary's `refreshed_at` equals the index's
   *    `n_deleted` and no deletion vector is live, the dictionary's df
   *    (summed over its slices) equals the live df of every term. */
 class IndexPropsSpec extends SparkSpec {
 
-  private val Family = Seq("tbl", "tbl_text_ix", "tbl_text_ix_pos", "tbl_text_ix_tstats",
-    "tbl_text_ix_files", "tbl_text_ix_pos_files")
+  private val Family = Seq("tbl", "tbl_text_ix", "tbl_text_ix_pos", "tbl_text_ix_tstats")
 
   private def docs(r: Random, from: Long, n: Int): DataFrame = {
     import spark.implicits._
@@ -45,8 +47,12 @@ class IndexPropsSpec extends SparkSpec {
   private def liveIds(corpus: Path): Seq[Long] =
     TxLog.readAt(spark, corpus).select(col("doc_id")).collect().map(_.getLong(0)).toSeq.sorted
 
-  /** The first invariant at one index version. */
-  private def checkVersion(index: Path, v: Long, what: String): Unit = {
+  private def liveFiles(corpus: Path): Set[String] = TxLog.snapshotAt(corpus).files.map(_.path).toSet
+
+  /** The first two invariants at one index version; `sources` is the
+    * set the model expects. */
+  private def checkVersion(index: Path, v: Long, sources: Set[String], what: String): Unit = {
+    assert(TxLog.sourcesAt(index, Some(v)) == sources, s"$what: source files at v$v")
     val p = TxLog.propsAt(index, Some(v))
     val agg = TxLog.readAt(spark, index, Some(v))
       .groupBy("doc_id").agg(first(col("dl")).as("dl"))
@@ -56,7 +62,7 @@ class IndexPropsSpec extends SparkSpec {
       s"$what: properties at v$v vs the postings at v$v ($p)")
   }
 
-  /** The second invariant at the heads; true when it applied. */
+  /** The third invariant at the heads; true when it applied. */
   private def checkDictionary(index: Path, what: String): Boolean = {
     val tstats = index.resolveSibling(index.getFileName.toString + "_tstats")
     val nDeleted = TxLog.propsAt(index).getOrElse("n_deleted", "0")
@@ -78,11 +84,20 @@ class IndexPropsSpec extends SparkSpec {
     def corpus = base.resolve("tbl")
     def index = base.resolve("tbl_text_ix")
     var next = 0L
+    // the model of the watermark: the expected source files per index
+    // version, extended to each new version by the step that made it
+    var expect = mutable.Map(-1L -> Set.empty[String])
+    def note(sources: Set[String]): Unit =
+      (expect.keys.max + 1 to TxLog.latestVersion(index)).foreach(v => expect(v) = sources)
+    def latest: Set[String] = expect(expect.keys.max)
     def increment(): Unit = {
       val n = 10 + r.nextInt(20)
       TxLog.append(spark, docs(r, next, n), corpus, "doc_id", nParts = 2): Unit
       next += n
+      val v0 = TxLog.latestVersion(index)
       TextIndex.ensureIndexed(spark, corpus, index): Unit
+      assert(TxLog.latestVersion(index) == v0 + 1, "an increment is one index commit")
+      note(latest ++ liveFiles(corpus))
       TextIndex.ensurePositional(spark, corpus, index): Unit
     }
     increment()
@@ -106,9 +121,11 @@ class IndexPropsSpec extends SparkSpec {
           val before = heads
           assert(TextIndex.pruneDeleted(spark, index, keys(ks)) == 0L)
           assert(heads == before, s"$what: a redelivered delete committed")
+          note(latest)
           "prune"
         case "maintain" =>
           TextIndex.maintain(spark, corpus, index, vacuumKeep = 1000): Unit
+          note(latest ++ liveFiles(corpus))
           "maintain"
         case "forget" if live.nonEmpty =>
           val ks = r.shuffle(live).take(1 + r.nextInt(3))
@@ -116,17 +133,23 @@ class IndexPropsSpec extends SparkSpec {
           val rep = Forget.forget(spark, base, "tbl", keys(ks), "doc_id")
           assert(rep.postingsDeleted == ks.size.toLong && TextIndex.corpusStats(index)._1 == n0 - ks.size,
             s"$what: forget")
+          note(latest)
           "forget"
         case "clone" =>
           // the whole family, cloned zero-copy: the clone carries the
-          // properties of every table it copies
+          // properties and source files of every table it copies
           val to = Files.createTempDirectory(s"graft_ixprops${seed}c")
           Family.foreach(t => TxLog.cloneTable(spark, base.resolve(t), to.resolve(t)): Unit)
-          Family.foreach(t => assert(TxLog.propsAt(to.resolve(t)) == TxLog.propsAt(base.resolve(t)),
-            s"$what: clone of $t"))
+          Family.foreach { t =>
+            assert(TxLog.propsAt(to.resolve(t)) == TxLog.propsAt(base.resolve(t)), s"$what: clone of $t")
+            assert(TxLog.sourcesAt(to.resolve(t)) == TxLog.sourcesAt(base.resolve(t)),
+              s"$what: clone of $t")
+          }
           base = to
           checkedTo = -1L
           marks = mutable.ArrayBuffer.empty
+          expect = mutable.Map(-1L -> latest)
+          note(latest)
           "clone"
         case "restore" =>
           // the whole family restored to an earlier consistent point
@@ -138,19 +161,22 @@ class IndexPropsSpec extends SparkSpec {
             assert(TxLog.propsAt(base.resolve(t)) == TxLog.propsAt(base.resolve(t), Some(mark(t))),
               s"$what: restore of $t")
           }
+          note(expect(mark("tbl_text_ix")))
           "restore"
         case _ => increment(); "increment"
       }
       done(op) = done.getOrElse(op, 0) + 1
       val head = TxLog.latestVersion(index)
-      (checkedTo + 1 to head).foreach(v => checkVersion(index, v, s"$what ($op)"))
+      (checkedTo + 1 to head).foreach(v => checkVersion(index, v, expect(v), s"$what ($op)"))
       checkedTo = head
+      assert(TxLog.sourcesAt(base.resolve("tbl_text_ix_pos")) == TxLog.sourcesAt(index),
+        s"$what ($op): positional watermark")
       if (checkDictionary(index, s"$what ($op)")) dictChecks += 1
       marks += heads
     }
     // cold: every version folded again from checkpoints and commits
     TxLog.forgetTxnOutcomesForTest()
-    TxLog.versions(index).foreach(v => checkVersion(index, v, s"seed $seed, cold"))
+    TxLog.versions(index).foreach(v => checkVersion(index, v, expect(v), s"seed $seed, cold"))
     assert(dictChecks > 0, "the dictionary invariant never applied")
     assert(Seq("increment", "prune", "maintain", "forget", "clone", "restore").forall(done.contains),
       s"ops run: $done")

@@ -16,7 +16,8 @@ import graft.SparkSpec
   * commit from v0 — no checkpoint, no cache — written here. Seeded
   * random op sequences cross several checkpoint boundaries (inline and
   * sharded); at every version the files (as a sequence), protocol,
-  * tags, constraints, partitioning and properties must match, warm (the fold
+  * tags, constraints, partitioning, properties and source files must
+  * match, warm (the fold
   * extended one commit at a time from the cached state) and cold (every
   * cache dropped, the fold seeded from a checkpoint); the batch
   * watermark is checked at the head. Three fixed cases cover a
@@ -51,7 +52,8 @@ class LogFoldSpec extends SparkSpec {
     * when its marker's outcome file says "committed". */
   private def naive(table: Path, v: Long): Expect = {
     val live = scala.collection.mutable.LinkedHashMap.empty[String, TxLog.AddFile]
-    var e = Expect(Vector.empty, TxLog.Protocol.Empty, Map.empty, Map.empty, None, Nil, Map.empty)
+    var e = Expect(Vector.empty, TxLog.Protocol.Empty, Map.empty, Map.empty, None, Nil, Map.empty,
+      Set.empty)
     def names(n: com.fasterxml.jackson.databind.JsonNode): Seq[String] =
       Option(n).fold(Seq.empty[String])(_.elements().asScala.map(_.asText).toSeq)
     TxLog.versions(table).filter(_ <= v).foreach { cv =>
@@ -80,7 +82,11 @@ class LogFoldSpec extends SparkSpec {
           },
           props = Option(n.get("props")).fold(e.props)(_.fields().asScala.foldLeft(e.props) {
             (m, f) => if (f.getValue.isNull) m - f.getKey else m + (f.getKey -> f.getValue.asText)
-          }))
+          }),
+          sources = n.get("op").asText match {
+            case "clone" | "restore" => names(n.get("sources")).toSet
+            case _ => e.sources ++ names(n.get("sources"))
+          })
       }
     }
     e.copy(files = live.values.toVector)
@@ -96,6 +102,7 @@ class LogFoldSpec extends SparkSpec {
     assert(TxLog.partitionColsOf(table, at) == want.partitionCols,
       s"partitionCols at v$v ($how)")
     assert(TxLog.propsAt(table, at) == want.props, s"props at v$v ($how)")
+    assert(TxLog.sourcesAt(table, at) == want.sources, s"sources at v$v ($how)")
   }
 
   private def checkBatches(table: Path, upTo: Long, how: String): Unit = {
@@ -126,6 +133,7 @@ class LogFoldSpec extends SparkSpec {
       var nextBatch = 0L
       val (committedAt, abortedAt) = (6, 13) // op indexes of the two transactions
       var op = 0
+      var restores = 0
       while (TxLog.latestVersion(t) < 44) {
         val next = TxLog.latestVersion(t) + 1
         // checkpoints alternate inline (v10, v30) and sharded (v20, v40)
@@ -141,13 +149,15 @@ class LogFoldSpec extends SparkSpec {
         } else if (op == abortedAt) {
           // a coordinator that died before deciding: the aborted commit
           // would drop a live file, add a phantom one, claim the next
-          // batch id and set a property if it were (wrongly) applied
+          // batch id, set a property and record a source file if it
+          // were (wrongly) applied
           val victim = TxLog.snapshotAt(t).files.head.path
           assert(TxLog.tryCommit(t, next, "append",
             Seq(TxLog.AddFile("phantom.parquet", 1L, 0L, 0L)), Seq(victim),
             batchId = Some(nextBatch), extra = Map("txn" -> agedMarker(base).toString,
-              "props" -> java.util.Map.of("aborted", "yes"))))
-        } else rnd.nextInt(10) match {
+              "props" -> java.util.Map.of("aborted", "yes"),
+              "sources" -> java.util.List.of("aborted.src"))))
+        } else rnd.nextInt(11) match {
           case 0 | 1 => TxLog.append(spark, rows(fresh(1 + rnd.nextInt(2))), t, "doc_id", nParts = 1)
           case 2 if live.nonEmpty =>
             TxLog.deleteMor(spark, t, rnd.shuffle(live).take(1 + rnd.nextInt(2)).toDF("doc_id"),
@@ -168,20 +178,28 @@ class LogFoldSpec extends SparkSpec {
           case 7 => TxLog.upgradeProtocol(t,
             writerFeatures = Set(Seq("changeDataFeed", "deletionVectors")(rnd.nextInt(2))))
           case 8 =>
-            // set or (now and then) remove a property in a props-only commit
+            // set or (now and then) remove a property in a props-only
+            // commit, now and then recording source files with it
             val k = Seq("owner", "tier", "note")(rnd.nextInt(3))
-            TxLog.setProps(t, Map[String, String](k -> (if (rnd.nextInt(4) == 0) null else s"v$next")))
+            TxLog.setProps(t, Map[String, String](k -> (if (rnd.nextInt(4) == 0) null else s"v$next")),
+              sources = Seq.fill(rnd.nextInt(3))(s"src-${rnd.nextInt(8)}"))
+          case 10 if next > 2 =>
+            // restore replaces the files, properties and source files
+            // with the target version's
+            TxLog.restore(spark, t, rnd.nextInt(next.toInt).toLong)
+            restores += 1
           case _ if live.nonEmpty =>
             // properties riding a data commit
             TxLog.deleteMor(spark, t, rnd.shuffle(live).take(1).toArray, "doc_id",
               props = probed => Map("deleted" -> probed.length.toString, "at" -> s"v$next"))
-          case _ => TxLog.setProps(t, Map("tier" -> s"w$next"))
+          case _ => TxLog.setProps(t, Map("tier" -> s"w$next"), sources = Seq(s"src-w$next"))
         }
         op += 1
         // warm: the head, folded on top of the previous head
         check(t, TxLog.latestVersion(t), s"warm, seed $seed op $op")
         checkBatches(t, nextBatch + 1, s"warm, seed $seed op $op")
       }
+      assert(restores > 0, s"seed $seed ran no restore")
       val vs = TxLog.versions(t)
       val log = t.resolve("_graft_log")
       val ckpts = vs.filter(v => Files.exists(checkpointFile(t, v)))
@@ -201,6 +219,15 @@ class LogFoldSpec extends SparkSpec {
         check(t, e, s"early base, seed $seed")
         check(t, vs.last, s"head over base v$e, seed $seed")
       }
+      // a clone carries the source's set, and its own commits add to it
+      val c = base.resolve("c")
+      TxLog.cloneTable(spark, t, c): Unit
+      assert(TxLog.sourcesAt(c) == TxLog.sourcesAt(t))
+      TxLog.setProps(c, Map.empty, Seq("clone-only.src")): Unit
+      TxLog.versions(c).foreach(v => check(c, v, s"clone, seed $seed"))
+      TxLog.forgetTxnOutcomesForTest()
+      TxLog.versions(c).foreach(v => check(c, v, s"clone cold, seed $seed"))
+      assert(!TxLog.sourcesAt(t).contains("clone-only.src"))
     } finally {
       TxLog.CheckpointInlineMax = oldMax
       TxLog.deleteTree(base)
@@ -285,5 +312,6 @@ class LogFoldSpec extends SparkSpec {
 object LogFoldSpec {
   private final case class Expect(files: Vector[TxLog.AddFile], protocol: TxLog.Protocol,
       tags: Map[String, Long], constraints: Map[String, String],
-      batchMax: Option[Long], partitionCols: Seq[String], props: Map[String, String])
+      batchMax: Option[Long], partitionCols: Seq[String], props: Map[String, String],
+      sources: Set[String])
 }

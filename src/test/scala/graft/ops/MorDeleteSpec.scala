@@ -193,7 +193,7 @@ class MorDeleteSpec extends SparkSpec {
     val ks = Seq(2L, 9L, 31L, 9L)
     assert(lake.delete(ks) > 0L)
     val tabs = Seq(lake.corpus, lake.index) ++
-      Seq("_pos", "_tstats", "_files").map(sib(lake.index, _))
+      Seq("_pos", "_tstats").map(sib(lake.index, _))
     val before = tabs.map(TxLog.latestVersion)
     val (v, _, dvFiles, _) = TxLog.deleteMor(spark, lake.corpus, keyFrame(ks), "doc_id")
     assert(v == before.head && dvFiles == 0)
@@ -231,18 +231,19 @@ class MorDeleteSpec extends SparkSpec {
     assert(TextIndex.pruneDeleted(spark, lake.index, keyFrame(Seq(3L, 4L, 40L))) > 0L)
     assert(moved(h0, h1) == Map("corpus" -> 1L))
     assert(moved(h1, heads(lake.base)) == Map("ix" -> 1L, "ix_pos" -> 1L))
-    // an ensureIndexed increment: the index, its dictionary, its watermark
+    // an ensureIndexed increment: the index (its watermark included)
+    // and its dictionary
     TxLog.append(spark, frame(docs(new Random(6), lake.next, 20)), lake.corpus, "doc_id",
       nParts = 2): Unit
     val h2 = heads(lake.base)
     assert(TextIndex.ensureIndexed(spark, lake.corpus, lake.index) == 20L)
-    assert(moved(h2, heads(lake.base)) == Map("ix" -> 1L, "ix_tstats" -> 1L, "ix_files" -> 1L))
+    assert(moved(h2, heads(lake.base)) == Map("ix" -> 1L, "ix_tstats" -> 1L))
+    assert(TxLog.snapshotAt(lake.corpus).files.map(_.path).toSet.subsetOf(TxLog.sourcesAt(lake.index)))
     // Forget: one version per participant, every head under one marker
     val base = Files.createTempDirectory("graft_mor_forget")
     TxLog.cloneTable(spark, lake.corpus, base.resolve("tbl")): Unit
-    Seq("" -> "", "_pos" -> "_pos", "_tstats" -> "_tstats", "_files" -> "_files").foreach {
-      case (from, to) =>
-        TxLog.cloneTable(spark, sib(lake.index, from), base.resolve("tbl_text_ix" + to)): Unit
+    Seq("", "_pos", "_tstats").foreach { s =>
+      TxLog.cloneTable(spark, sib(lake.index, s), base.resolve("tbl_text_ix" + s)): Unit
     }
     val h3 = heads(base)
     val n0 = TextIndex.corpusStats(base.resolve("tbl_text_ix"))._1

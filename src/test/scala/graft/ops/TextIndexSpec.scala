@@ -1,6 +1,8 @@
 package graft.ops
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
@@ -54,6 +56,16 @@ class TextIndexSpec extends SparkSpec {
       s"term_hash clustering should prune: scanned $scanned of $indexFiles")
   }
 
+  /** Latest version of every table under `base`, by directory name. */
+  private def heads(base: Path): Map[String, Long] = {
+    val s = Files.list(base)
+    try s.iterator().asScala.filter(p => Files.isDirectory(p.resolve("_graft_log")))
+      .map(p => p.getFileName.toString -> TxLog.latestVersion(p)).toMap
+    finally s.close()
+  }
+
+  private def liveFiles(corpus: Path): Set[String] = TxLog.snapshotAt(corpus).files.map(_.path).toSet
+
   test("ensureIndexed is idempotent and survives corpus compaction without doubling postings") {
     val base = Files.createTempDirectory("graft_tix2")
     val corpus = base.resolve("corpus")
@@ -65,8 +77,41 @@ class TextIndexSpec extends SparkSpec {
     // compaction rewrites every corpus file under new names — the
     // watermark sees "new" files, the doc_id anti-join keeps postings single
     TxLog.compact(spark, corpus, "doc_id")
+    val h0 = heads(base)
     assert(TextIndex.ensureIndexed(spark, corpus, index) == 0L)
     assert(TxLog.readAt(spark, index).count() == before)
+    // the names ride exactly one data-less index commit, and nothing else moves
+    val h1 = heads(base)
+    assert(h1 == h0 + ("ix" -> (h0("ix") + 1L)))
+    assert(TxLog.addsAt(index, h1("ix")).isEmpty)
+    assert(liveFiles(corpus).subsetOf(TxLog.sourcesAt(index)))
+    assert(TextIndex.ensureIndexed(spark, corpus, index) == 0L)
+    assert(heads(base) == h1, "a second call committed")
+  }
+
+  test("an index whose postings predate its watermark catches up in one call, postings single") {
+    val base = Files.createTempDirectory("graft_tix_legacy")
+    val corpus = base.resolve("corpus")
+    val index = base.resolve("ix")
+    TxLog.append(spark, corpusDf(0L to 29L), corpus, "doc_id", nParts = 2)
+    TextIndex.ensureIndexed(spark, corpus, index): Unit
+    TxLog.append(spark, corpusDf(30L to 49L), corpus, "doc_id", nParts = 1)
+    TextIndex.ensureIndexed(spark, corpus, index): Unit
+    // the same postings and statistics in a log that records no source
+    // files, as an index built with a separate watermark table has
+    val legacy = base.resolve("lx")
+    TxLog.append(spark, TxLog.readAt(spark, index), legacy, "term_hash"): Unit
+    TxLog.setProps(legacy, TxLog.propsAt(index)): Unit
+    assert(TxLog.sourcesAt(legacy).isEmpty)
+    val postings = TxLog.readAt(spark, legacy).count()
+    val h0 = heads(base)
+    assert(TextIndex.ensureIndexed(spark, corpus, legacy) == 0L)
+    assert(heads(base) == h0 + ("lx" -> (h0("lx") + 1L)))
+    assert(TxLog.readAt(spark, legacy).count() == postings)
+    assert(TextIndex.corpusStats(legacy) == TextIndex.corpusStats(index))
+    assert(TxLog.sourcesAt(legacy) == liveFiles(corpus))
+    assert(TextIndex.ensureIndexed(spark, corpus, legacy) == 0L)
+    assert(heads(base) == h0 + ("lx" -> (h0("lx") + 1L)), "a second call committed")
   }
 
   test("incremental build equals rebuild, postings multiset and stats both") {
@@ -110,8 +155,9 @@ class TextIndexSpec extends SparkSpec {
     val servedAfter = TextIndex.searchBm25(spark, index, Seq("gamma", "rareword"), 20)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(servedAfter == servedBefore, "maintenance changed the ranking")
-    // the per-increment watermark appends folded to one file
-    assert(TxLog.snapshotAt(base.resolve("ix_files")).files.size == 1)
+    // every live corpus file is in the watermark, and no sibling table holds it
+    assert(liveFiles(corpus).subsetOf(TxLog.sourcesAt(index)))
+    assert(!Files.exists(base.resolve("ix_files")))
   }
 
   test("maintain folds pruneDeleted's DV sidecars and indexes corpus files that arrived since") {
@@ -250,7 +296,6 @@ class TextIndexSpec extends SparkSpec {
     TxLog.append(spark, TxLog.readAt(spark, index), legacy, "term_hash"): Unit
     val (n, len) = TextIndex.corpusStats(index)
     TxLog.setProps(legacy, Map("n_docs" -> n.toString, "total_len" -> len.toString)): Unit
-    TxLog.cloneTable(spark, base.resolve("ix_files"), base.resolve("lx_files")): Unit
     assert(!TextIndex.hasBinding(legacy))
     val ex = intercept[IllegalStateException] {
       TextIndex.maintain(spark, corpus, legacy)

@@ -300,6 +300,7 @@ class LakeStreamSpec extends SparkSpec {
     TxLog.setConstraint(spark, table, "cap", "doc_id < 100")              // v2
     TxLog.setTag(table, "stable", 1L)                                     // v3
     TxLog.addColumn(table, "extra", org.apache.spark.sql.types.LongType)  // v4
+    TxLog.setProps(table, Map("owner" -> "x"), sources = Seq("in.parquet")) // v5
     val rows = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()
     val q = spark.readStream.format("graft-lake")
       .option("readChangeFeed", "true")
