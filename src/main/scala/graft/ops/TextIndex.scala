@@ -793,7 +793,10 @@ object TextIndex {
     * Spark's cost stays near its fixed job overhead. On a stale index the driver still won
     * at 19 MB (2,100 vs 3,120 ms), since Spark reads the lists once for
     * the df recount and again for the ranking; the one limit keeps to
-    * the fresh crossover. */
+    * the fresh crossover. The crossover was measured while every
+    * driver-side parquet open still parsed Hadoop's default
+    * configuration, a fixed cost per file that [[ParquetOpen]] has since
+    * removed; the limit has not been measured again. */
   private val DriverServeBytes: Long = 1L << 20
 
   /** The end-user search shape: BM25 rank from the INDEX, then fetch

@@ -5,9 +5,8 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
@@ -686,6 +685,8 @@ object TxLog {
           // the create-time declaration, then Iceberg-style evolution
           case "create" if cv == 0L => strings(n.get("partitionCols"))
           case "set-partitioning" => strings(n.get("partitionCols"))
+          // a clone is its table's v0 and carries the source's columns
+          case "clone" => strings(n.get("partitionCols"))
           case _ => s.partitionCols
         },
         upsertProps(s.props, n.get("props")),
@@ -1422,10 +1423,11 @@ object TxLog {
 
   /** Footer-only stats for one parquet file: row count from block
     * metadata, min/max of `statsCol` from the column-chunk statistics.
-    * No data pages are read. */
-  def footerStats(spark: SparkSession, file: Path, statsCol: String): AddFile = {
-    val conf = spark.sessionState.newHadoopConf()
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(file.toString), conf))
+    * No data pages are read. The footer is opened with `conf`
+    * ([[ParquetOpen.footer]]), so a caller promoting many files takes
+    * one Hadoop configuration for all of them. */
+  def footerStats(conf: Configuration, file: Path, statsCol: String): AddFile = {
+    val reader = ParquetOpen.footer(conf, new HPath(file.toString))
     try {
       val blocks = reader.getFooter.getBlocks.asScala
       val rows = blocks.map(_.getRowCount).sum
@@ -1494,13 +1496,14 @@ object TxLog {
     // footer stats are keyed by the names IN the file — physical names;
     // the caller's designated stats column is logical
     val physStats = physName(table, statsCol)
+    val conf = spark.sessionState.newHadoopConf()
     parts.map { p =>
       val name = s"${UUID.randomUUID()}.parquet"
       val dest = table.resolve(name)
       Files.move(p, dest, StandardCopyOption.ATOMIC_MOVE)
       Files.setLastModifiedTime(dest,
         java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
-      footerStats(spark, dest, physStats).copy(path = name)
+      footerStats(conf, dest, physStats).copy(path = name)
     }.filter { a =>
       // zero-row part files (empty partitions/filters) carry no data and
       // would pollute the live set and file-count gates — drop them
@@ -1548,7 +1551,10 @@ object TxLog {
     * per-file keyed anti-join does. Rows come back under the logical
     * names, null where a file predates a column. Supported types: long,
     * int, double, boolean and string, plus [[graft.functions.TopKAgg]]'s
-    * pair array; any other column is refused by name. */
+    * pair array; any other column is refused by name. Every file opens
+    * with the one session Hadoop configuration taken per call
+    * ([[ParquetOpen.records]]), so a file costs its decode, not a parse
+    * of Hadoop's default configuration. */
   def readLocal(spark: SparkSession, table: Path, files: Seq[AddFile],
       columns: Seq[String], eq: Option[(String, Long)] = None): Vector[org.apache.spark.sql.Row] = {
     import org.apache.parquet.example.data.Group
@@ -1603,9 +1609,8 @@ object TxLog {
       FilterCompat.get(FilterApi.eq(FilterApi.longColumn(c), java.lang.Long.valueOf(v)))
     }
     files.toVector.flatMap { f =>
-      val reader = org.apache.parquet.hadoop.ParquetReader
-        .builder(new ProjectedGroupRead(wanted), new HPath(table.resolve(f.path).toString))
-        .withConf(conf).withFilter(filter).useRecordFilter().build()
+      val reader = ParquetOpen.records(conf, new HPath(table.resolve(f.path).toString),
+        new ProjectedGroupRead(wanted)).withFilter(filter).useRecordFilter().build()
       val dv = dvs.get(f.path)
       try Iterator.continually(reader.read()).takeWhile(_ != null)
         .filter(g => dv.forall { case (kc, keys) => !key(g, kc).exists(keys) })
@@ -1812,6 +1817,34 @@ object TxLog {
     }
   }
 
+  /** The clustered writers' shared staging: shuffle `df` (logical
+    * names) on `clusterCol`, write it with a partitionBy split (one file
+    * per non-empty cluster) and promote the files in cluster order. The
+    * shuffle has no fixed count, so adaptive execution sizes it by the
+    * data: hashing keeps a cluster in one partition and coalescing merges
+    * whole partitions, so the layout does not change. Without coalescing
+    * it is `nClusters` partitions. `constrained` checks the table's CHECK
+    * constraints on the staged files (a rewrite skips them). */
+  private def writeClustered(spark: SparkSession, df: DataFrame, table: Path,
+      statsCol: String, clusterCol: Column, nClusters: Int,
+      constrained: Boolean): Vector[AddFile] = {
+    val stage = table.resolve(s".stage-${UUID.randomUUID()}")
+    val keyed = phys(df.withColumn("__cluster", clusterCol), table)
+    val sql = spark.sessionState.conf
+    val shuffled =
+      if (sql.adaptiveExecutionEnabled && sql.coalesceShufflePartitionsEnabled)
+        keyed.repartition(col("__cluster"))
+      else keyed.repartition(nClusters, col("__cluster"))
+    shuffled.write.partitionBy("__cluster").mode("overwrite").parquet(stage.toString)
+    if (constrained) enforceConstraintsStaged(spark, table, stage)
+    val parts = listDir(stage).filter(p => p.getFileName.toString.startsWith("__cluster="))
+      .sortBy(_.getFileName.toString)
+      .flatMap(d => listDir(d).filter(_.getFileName.toString.endsWith(".parquet")))
+    val adds = promoteParts(spark, parts, table, statsCol)
+    deleteRecursively(stage)
+    adds
+  }
+
   /** Clustered OVERWRITE: [[appendClustered]]'s one-job clustered
     * staging committed as ONE `overwrite` replacing the live set — the
     * maintenance rebuild shape (e.g. the text dictionary fold), which
@@ -1825,16 +1858,8 @@ object TxLog {
       Jobs.labeled(spark, s"txlog overwriteClustered ${table.getFileName}") {
     Files.createDirectories(table)
     validateSchema(tableSchema(table), df.schema, allowEvolution = false): Unit
-    val stage = table.resolve(s".stage-${UUID.randomUUID()}")
-    phys(df.withColumn("__cluster", clusterCol), table)
-      .repartition(nClusters, col("__cluster"))
-      .write.partitionBy("__cluster").mode("overwrite").parquet(stage.toString)
-    enforceConstraintsStaged(spark, table, stage)
-    val parts = listDir(stage).filter(p => p.getFileName.toString.startsWith("__cluster="))
-      .sortBy(_.getFileName.toString)
-      .flatMap(d => listDir(d).filter(_.getFileName.toString.endsWith(".parquet")))
-    val adds = promoteParts(spark, parts, table, statsCol)
-    deleteRecursively(stage)
+    val adds = writeClustered(spark, df, table, statsCol, clusterCol, nClusters,
+      constrained = true)
     val base = snapshotAt(table)
     commitRetry(table, "overwrite", adds, base.files.map(_.path),
       schema = Some(validateSchema(tableSchema(table), df.schema, allowEvolution = false)),
@@ -1845,12 +1870,15 @@ object TxLog {
   }
 
   /** Clustered append: ONE distributed write producing one data file per
-    * cluster of `clusterCol` (repartition on the cluster key + a
-    * partitionBy split keeps co-hashed clusters in separate files), all
+    * non-empty cluster of `clusterCol` (repartition on the cluster key +
+    * a partitionBy split keeps co-hashed clusters in separate files), all
     * committed atomically. This is how a range/Z-clustered layout is
     * written at scale — a single job, not a job per cluster; with a
     * range-derived cluster key each file's footer [min,max] is exactly
     * its cluster's key range, which is what makes [[pruneFiles]] sharp.
+    * The task count is set by adaptive execution from the data size, not
+    * by `nClusters` (a 200-doc increment writes its clusters from one
+    * task); `nClusters` bounds it when partition coalescing is off.
     * The cluster column is layout metadata (derivable from the data) and
     * is not stored in the files. `props` upserts table properties and
     * `sources` adds source-file names in the same commit ([[propsAt]],
@@ -1861,16 +1889,8 @@ object TxLog {
       Jobs.labeled(spark, s"txlog appendClustered ${table.getFileName}") {
     Files.createDirectories(table)
     validateSchema(tableSchema(table), df.schema, allowEvolution = false): Unit // fail fast
-    val stage = table.resolve(s".stage-${UUID.randomUUID()}")
-    phys(df.withColumn("__cluster", clusterCol), table)
-      .repartition(nClusters, col("__cluster"))
-      .write.partitionBy("__cluster").mode("overwrite").parquet(stage.toString)
-    enforceConstraintsStaged(spark, table, stage)
-    val parts = listDir(stage).filter(p => p.getFileName.toString.startsWith("__cluster="))
-      .sortBy(_.getFileName.toString)
-      .flatMap(d => listDir(d).filter(_.getFileName.toString.endsWith(".parquet")))
-    val adds = promoteParts(spark, parts, table, statsCol)
-    deleteRecursively(stage)
+    val adds = writeClustered(spark, df, table, statsCol, clusterCol, nClusters,
+      constrained = true)
     commitRetry(table, "append", adds, Nil,
       schema = Some(validateSchema(tableSchema(table), df.schema, allowEvolution = false)),
       extra = propsExtra(props) ++ sourcesExtra(sources))(
@@ -2164,22 +2184,16 @@ object TxLog {
     * in arrival order (no pruning power); this restores the
     * range/Z-clustered layout whose footer [min,max] makes
     * [[pruneFiles]] sharp, without blocking readers (old versions stay
-    * pinned until vacuum). Same dv-identity validation as [[compact]]. */
+    * pinned until vacuum). Same dv-identity validation as [[compact]].
+    * As in [[appendClustered]], each non-empty cluster is one file and
+    * adaptive execution sets the task count from the data size. */
   def compactClustered(spark: SparkSession, table: Path, statsCol: String,
       clusterCol: Column, nClusters: Int): Long =
       Jobs.labeled(spark, s"txlog compactClustered ${table.getFileName}") {
     val snap = snapshotAt(table)
     val removes = snap.files.map(_.path)
-    val stage = table.resolve(s".stage-${UUID.randomUUID()}")
-    phys(scanFiles(spark, table, snap.files)
-        .withColumn("__cluster", clusterCol), table)
-      .repartition(nClusters, col("__cluster"))
-      .write.partitionBy("__cluster").mode("overwrite").parquet(stage.toString)
-    val parts = listDir(stage).filter(p => p.getFileName.toString.startsWith("__cluster="))
-      .sortBy(_.getFileName.toString)
-      .flatMap(d => listDir(d).filter(_.getFileName.toString.endsWith(".parquet")))
-    val adds = promoteParts(spark, parts, table, statsCol)
-    deleteRecursively(stage)
+    val adds = writeClustered(spark, scanFiles(spark, table, snap.files), table, statsCol,
+      clusterCol, nClusters, constrained = false)
     val baseDv = snap.files.map(f => f.path -> f.dv).toMap
     commitRetry(table, "compact", adds, removes) {
       case None => false
@@ -2620,19 +2634,18 @@ object TxLog {
   /** Extend each matched file's deletion vector with its matched keys:
     * new immutable sidecar = old DV keys ∪ new keys; the returned
     * AddFiles re-enter the log with the new dv (replacing the old
-    * entries — pure metadata, zero data rewritten). */
+    * entries — pure metadata, zero data rewritten), in snapshot order:
+    * file names are random, their position in the log is not. */
   private def extendDvs(table: Path, snap: Snapshot, matches: Map[String, Vector[Long]],
-      keyCol: String): Vector[AddFile] = {
-    val byPath = snap.files.map(f => f.path -> f).toMap
-    matches.toVector.sortBy(_._1).map { case (path, newKeys) =>
-      val f = byPath(path)
+      keyCol: String): Vector[AddFile] =
+    snap.files.filter(f => matches.contains(f.path)).map { f =>
+      val newKeys = matches(f.path)
       val existing = f.dv.map(readDv(table, _)._2).getOrElse(Vector.empty)
       // DVs apply to the RAW physical scan, so the key column is
       // recorded under its physical name (identity for unmapped tables)
       f.copy(dv = Some(writeDv(table, physName(table, keyCol),
         (existing ++ newKeys).distinct)))
     }
-  }
 
   /** What a merge-on-read delete did: the commit version (the base
     * snapshot's when no live row held a key), the files whose deletion

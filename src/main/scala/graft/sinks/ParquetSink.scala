@@ -83,13 +83,13 @@ final class ParquetSink(baseDir: String, metricWaitSeconds: Long = 120) extends 
     else fs.listStatus(p).toSeq.filter(st => st.isFile && st.getPath.getName.endsWith(".parquet")).map(_.getPath)
   }
 
-  /** Sum of row counts from parquet footers — metadata-only reads. */
+  /** Sum of row counts from parquet footers — metadata-only reads, all
+    * opened with the context's one Hadoop configuration. */
   private[sinks] def footerRowCount(spark: org.apache.spark.sql.SparkSession, files: Seq[org.apache.hadoop.fs.Path]): Long = {
     import scala.jdk.CollectionConverters._
     val conf = spark.sparkContext.hadoopConfiguration
     files.map { f =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+      val reader = graft.ops.ParquetOpen.footer(conf, f)
       try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
       finally reader.close()
     }.sum

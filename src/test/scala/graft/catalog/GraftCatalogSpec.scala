@@ -149,6 +149,25 @@ class GraftCatalogSpec extends SparkSpec {
     assert(TxLog.history(table).map(_._2).last == "overwrite")
   }
 
+  test("catalog: a clone of a partitioned table keeps its partitioning for SQL inserts") {
+    val (cat, base) = freshCatalog()
+    spark.sql(s"CREATE TABLE $cat.ps (doc_id BIGINT, tag STRING) PARTITIONED BY (tag)")
+    spark.sql(s"INSERT INTO $cat.ps VALUES (1, 'a'), (2, 'b')")
+    val (src, clone) = (base.resolve("ps"), base.resolve("pc"))
+    TxLog.cloneTable(spark, src, clone): Unit
+    assert(TxLog.partitionColsOf(clone) == TxLog.partitionColsOf(src))
+    assert(TxLog.partitionColsOf(clone) == Seq("tag"))
+    spark.sql(s"INSERT INTO $cat.pc VALUES (3, 'a'), (4, 'c'), (5, 'c')")
+    // the insert's files carry the clone's partition values, one per tag
+    val added = TxLog.snapshotAt(clone).files
+      .filterNot(f => TxLog.snapshotAt(src).files.exists(_.path == f.path))
+    assert(added.size == 2 && added.flatMap(_.part.get("tag")).toSet == Set("a", "c"),
+      s"the clone's insert must lay out by tag: ${added.map(f => (f.path, f.part))}")
+    assert(TxLog.readAt(spark, clone, partitions = Map("tag" -> "c"))
+      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq == Seq(4L, 5L))
+    assert(TxLog.snapshotAt(src).files.size == 2, "the source is untouched")
+  }
+
   test("catalog: CALL procedures run maintenance from SQL (compact, constraint, restore, vacuum)") {
     val (cat, base) = freshCatalog()
     val table = base.resolve("mt")

@@ -78,6 +78,7 @@ class LogFoldSpec extends SparkSpec {
           partitionCols = n.get("op").asText match {
             case "create" if cv == 0L => names(n.get("partitionCols"))
             case "set-partitioning" => names(n.get("partitionCols"))
+            case "clone" => names(n.get("partitionCols"))
             case _ => e.partitionCols
           },
           props = Option(n.get("props")).fold(e.props)(_.fields().asScala.foldLeft(e.props) {
@@ -219,10 +220,12 @@ class LogFoldSpec extends SparkSpec {
         check(t, e, s"early base, seed $seed")
         check(t, vs.last, s"head over base v$e, seed $seed")
       }
-      // a clone carries the source's set, and its own commits add to it
+      // a clone carries the source's set and partitioning, and its own
+      // commits add to the set
       val c = base.resolve("c")
       TxLog.cloneTable(spark, t, c): Unit
       assert(TxLog.sourcesAt(c) == TxLog.sourcesAt(t))
+      assert(TxLog.partitionColsOf(c) == TxLog.partitionColsOf(t))
       TxLog.setProps(c, Map.empty, Seq("clone-only.src")): Unit
       TxLog.versions(c).foreach(v => check(c, v, s"clone, seed $seed"))
       TxLog.forgetTxnOutcomesForTest()

@@ -110,6 +110,32 @@ class ReadLocalSpec extends SparkSpec {
     assert(one.head.getSeq[Row](3).nonEmpty)
   }
 
+  test("readLocal and footerStats read with the session's Hadoop configuration") {
+    val t = Files.createTempDirectory("graft_rl_conf").resolve("t")
+    TxLog.append(spark, rows(10), t, "id", nParts = 1)
+    val files = TxLog.snapshotAt(t).files
+    val file = t.resolve(files.head.path)
+    // a decryption factory that does not exist, set on the session only:
+    // an open that builds its options from a default configuration never
+    // sees it; one that reads the session's fails on it
+    val key = "parquet.crypto.factory.class"
+    val missing = "graft.ops.NoSuchDecryptionFactory"
+    spark.conf.set(key, missing)
+    try {
+      val local = intercept[Exception](TxLog.readLocal(spark, t, files, Seq("id")))
+      assert(chain(local).exists(_.contains(missing)), chain(local))
+      val footer = intercept[Exception](
+        TxLog.footerStats(spark.sessionState.newHadoopConf(), file, "id"))
+      assert(chain(footer).exists(_.contains(missing)), chain(footer))
+    } finally spark.conf.unset(key)
+    assert(TxLog.readLocal(spark, t, files, Seq("id")).size == 10)
+    assert(TxLog.footerStats(spark.sessionState.newHadoopConf(), file, "id").rows == 10L)
+  }
+
+  /** The messages of `e` and its causes. */
+  private def chain(e: Throwable): Seq[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(x => String.valueOf(x.getMessage)).toSeq
+
   test("an unsupported column type is refused by name") {
     import spark.implicits._
     val t = Files.createTempDirectory("graft_rl_bad").resolve("t")
