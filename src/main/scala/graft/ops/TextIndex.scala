@@ -18,17 +18,19 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   *    an inverted index, expressed as ordinary stats skipping;
   *    The postings table's properties ([[TxLog.propsAt]]) carry the
   *    corpus-global scalars BM25 needs — `n_docs` and `total_len` (N,
-  *    avgdl) — and `n_deleted`, the docs deletes removed since the
-  *    build, each set by the postings commit that changes it; and the
+  *    avgdl) — `n_deleted`, the docs deletes removed since the
+  *    build, and `increments`, the postings commits that added rows,
+  *    each set by the postings commit that changes it; and the
   *    corpus binding `id_col`, `text_col`, `n_clusters`, set by the
   *    first postings commit. A crash can never leave them disagreeing
   *    with the postings of any version;
   *    The postings log's source files ([[TxLog.sourcesAt]]) are the
   *    indexed corpus files, the incremental-maintenance watermark: each
   *    increment's names ride the postings commit that indexes them;
-  *  - `<index>_tstats`: the term dictionary the bounded search modes
-  *    prune with; its `refreshed_at` property is the index's
-  *    `n_deleted` as of the postings its exact rebuild read.
+  *  - `<index>_tstats`: the term dictionary [[searchBm25BlockMax]]
+  *    prunes with; its `refreshed_at` property is the index's
+  *    `n_deleted` as of the postings its exact rebuild read, and its
+  *    `increments` property the index's `increments` its slices cover.
   *
   * SERVING never touches the corpus: [[searchBm25]] reads the query
   * terms' pruned postings + N and avgdl from the same postings version,
@@ -106,8 +108,10 @@ object TextIndex {
     * auto-maintenance must check before driving [[maintain]]. */
   def hasBinding(index: Path): Boolean = binding(index).isDefined
 
-  /** The index's corpus scalars at one postings version. */
-  private final case class Scalars(nDocs: Long, totalLen: Long, nDeleted: Long)
+  /** The index's corpus scalars at one postings version; `increments`
+    * counts the postings commits that added rows. */
+  private final case class Scalars(nDocs: Long, totalLen: Long, nDeleted: Long,
+      increments: Long)
 
   /** [[Scalars]] from the index's properties at `version` (latest when
     * None). An index with postings but no `n_docs` property was built
@@ -118,7 +122,8 @@ object TextIndex {
     def long(k: String): Long = p.get(k).map(_.toLong).getOrElse(
       throw new IllegalStateException(s"text index at $index has no '$k' property: it " +
         "was built with its scalars in sidecar tables, which are no longer read — rebuild it"))
-    Scalars(long("n_docs"), long("total_len"), p.get("n_deleted").fold(0L)(_.toLong))
+    Scalars(long("n_docs"), long("total_len"), p.get("n_deleted").fold(0L)(_.toLong),
+      p.get("increments").fold(0L)(_.toLong))
   }
 
   /** The index's (n_docs, total_len) at `version` (latest when None):
@@ -132,7 +137,7 @@ object TextIndex {
     * (file, doc_id, dl) rows: the statistics shrink by the distinct
     * docs and one `dl` per doc (every posting of a doc carries the same
     * dl), and the dictionary's staleness counter `n_deleted` advances by
-    * the docs, so the bounded search modes recount live dfs until
+    * the docs, so block-max searches recount live dfs until
     * [[maintain]] rebuilds the dictionary. Read from the index's head,
     * which [[TxLog.transact]]'s claim fence freezes. */
   private[ops] def deletedProps(index: Path)(probed: Array[Row]): Map[String, String] = {
@@ -146,22 +151,23 @@ object TextIndex {
     }
   }
 
-  /** The refresh mark of the index's dictionary: the index's
-    * `n_deleted` as of the postings its last exact rebuild read (-1, so
-    * stale, when unset). */
-  private def refreshedAt(index: Path): Long =
-    TxLog.propsAt(tstatsDir(index)).get("refreshed_at").fold(-1L)(_.toLong)
-
   /** Index every live corpus file not yet in the watermark: postings
     * range-clustered by term_hash with the statistics and the files'
     * names in the same commit, then the dictionary slice. New files with
     * no new docs (a corpus compaction) record their names in one
     * data-less index commit. Returns the number of newly indexed
-    * documents. First call on an empty index IS the build. */
+    * documents. First call on an empty index IS the build.
+    *
+    * Each postings commit that adds rows advances the index's
+    * `increments` property, and each dictionary commit records the
+    * `increments` it covers. A call on a built index whose dictionary
+    * covers other increments than the head, or that has postings and no
+    * dictionary, first rebuilds the dictionary from the live postings:
+    * a crash between an increment's postings commit and its slice is
+    * repaired by the redelivery. */
   def ensureIndexed(spark: SparkSession, corpus: Path, index: Path,
       idCol: String = "doc_id", textCol: String = "text",
       nClusters: Int = 8): Long = Jobs.labeled(spark, "text ensureIndexed") {
-    import spark.implicits._
     // args-vs-binding consistency: an index already bound to one
     // (id, text, clusters) triple must not ingest under another
     val bound = binding(index)
@@ -172,20 +178,26 @@ object TextIndex {
     }
     val bind = Map("id_col" -> idCol, "text_col" -> textCol, "n_clusters" -> nClusters.toString)
     val built = TxLog.versions(index).nonEmpty
-    val st0 = if (built) scalarsAt(index) else Scalars(0L, 0L, 0L)
+    val st0 = if (built) scalarsAt(index) else Scalars(0L, 0L, 0L, 0L)
     // backfill the binding even on a no-op call, so a legacy index (no
     // binding property) becomes maintainable after one explicit
     // ensureIndexed with its original arguments. A fresh index's
     // binding rides its first commit
     if (built && bound.isEmpty) TxLog.setProps(index, bind): Unit
+    // the anti-join gate is the postings, not the watermark: an index
+    // built before its names rode its commits has postings and no
+    // sources, and its first call here re-presents every corpus file
+    lazy val hasPostings = built && TxLog.snapshotAt(index).files.nonEmpty
+    val hadDict = TxLog.versions(tstatsDir(index)).nonEmpty
+    val dictBehind = built && (
+      if (hadDict) TxLog.propsAt(tstatsDir(index)).get("increments").fold(0L)(_.toLong) !=
+        st0.increments
+      else hasPostings)
+    if (dictBehind) rebuildDictionary(spark, index, TxLog.latestVersion(index), -1L, nClusters)
     val snap = TxLog.snapshotAt(corpus)
     val indexed = TxLog.sourcesAt(index)
     val newFiles = snap.files.filterNot(f => indexed(f.path))
     if (newFiles.isEmpty) return 0L
-    // the anti-join gate is the postings, not the watermark: an index
-    // built before its names rode its commits has postings and no
-    // sources, and its first call here re-presents every corpus file
-    val hasPostings = built && TxLog.snapshotAt(index).files.nonEmpty
     val docs = TxLog.readFiles(spark, corpus, newFiles)
     // idempotency + compaction correctness: a rewritten file re-presents
     // docs the index already carries — their postings must stay single.
@@ -228,37 +240,45 @@ object TextIndex {
     val names = newFiles.map(_.path)
     if (nNew == 0) TxLog.setProps(index, props, names): Unit
     else {
+      val increments = "increments" -> (st0.increments + 1).toString
       val pv = TxLog.appendClustered(spark, mat, index, "term_hash",
-        clusterBucket(nClusters), nClusters, props = props, sources = names)
+        clusterBucket(nClusters), nClusters, props = props + increments, sources = names)
       // the _tstats dictionary delta (per-term df, the dl-free impact
       // ceiling max tf/(tf+k1(1-b)), the slice's top (tf, dl) pairs,
       // and the postings-commit binding): LOG-STRUCTURED — each
       // increment appends its own range-clustered slice, reads SUM
       // across slices, maintain folds to the exact single row per
-      // term. No vocab-sized rewrite on the increment path. The
-      // CREATING write derives from ALL live postings, not just this
-      // increment — a pre-dictionary index upgraded mid-life would
-      // otherwise carry a silently PARTIAL dictionary and misrank
-      // every query touching the uncovered terms; such a write spans
-      // many commits' files, so its slice binding is -1 (unbound:
-      // block-max falls back to hash-range reads for it). A created
+      // term. No vocab-sized rewrite on the increment path. With no
+      // dictionary yet there are no postings before pv (a built index's
+      // were covered above), so `mat` is all of them and the created
       // dictionary is exact for the postings at pv: its refresh mark is
       // their n_deleted.
-      val creating = TxLog.versions(tstatsDir(index)).isEmpty
-      upgradeTstatsSchema(spark, index)
-      // creating on a FRESH index (no postings before pv): the live
-      // postings ARE `mat` — derive the dictionary from the
-      // already-checkpointed increment instead of re-reading the just-
-      // written files (VERDICT r15 #6: one aggregation source, no
-      // second corpus-sized pass on the build path). Only a mid-life
-      // upgrade (postings before pv) must read the full index.
-      val dictSrc = if (creating && hasPostings) TxLog.readAt(spark, index, Some(pv)) else mat
-      val sliceVer = if (creating && hasPostings) -1L else pv
-      TxLog.appendClustered(spark, tstatsDelta(spark, dictSrc, sliceVer),
+      TxLog.appendClustered(spark, tstatsDelta(spark, mat, pv),
         tstatsDir(index), "term_hash", clusterBucket(nClusters), nClusters,
-        props = if (creating) Map("refreshed_at" -> st0.nDeleted.toString) else Map.empty): Unit
+        props = Map(increments) ++
+          (if (hadDict || dictBehind) Map.empty
+          else Map("refreshed_at" -> st0.nDeleted.toString))): Unit
     }
     nNew
+  }
+
+  /** Replace the dictionary (create it, when missing) with one slice per
+    * term from all live postings at version `v`, bound to `sliceVer` (-1 = unbound: block-max
+    * reads the hash range for it). The rebuild is exact for those
+    * postings: its refresh mark is their `n_deleted` and it covers their
+    * `increments`, both set by its own commit, so a crash before it
+    * leaves the old marks and a stale dictionary never reads as fresh. */
+  private def rebuildDictionary(spark: SparkSession, index: Path, v: Long, sliceVer: Long,
+      nClusters: Int): Unit = {
+    val s = scalarsAt(index, Some(v))
+    val dict = tstatsDelta(spark, TxLog.readAt(spark, index, Some(v)), sliceVer)
+    val props = Map("refreshed_at" -> s.nDeleted.toString, "increments" -> s.increments.toString)
+    // overwriteClustered needs a committed version to replace
+    if (TxLog.versions(tstatsDir(index)).isEmpty)
+      TxLog.appendClustered(spark, dict, tstatsDir(index), "term_hash",
+        clusterBucket(nClusters), nClusters, props = props): Unit
+    else TxLog.overwriteClustered(spark, dict, tstatsDir(index), "term_hash",
+      clusterBucket(nClusters), nClusters, props = props): Unit
   }
 
   /** BM25 top-k served from the INDEX ALONE — per query term one
@@ -377,169 +397,66 @@ object TextIndex {
       statsRel(spark, index, v), k)
   }
 
-  /** What a [[searchBm25MaxScore]] call decided: which lists were
-    * scored in full, which were only probed for already-found
-    * candidates, and the dictionary-counted postings behind each —
-    * the gated/spec'd evidence that pruning happened. */
-  final case class MaxScoreReport(essential: Seq[String], skipped: Seq[String],
-      postingsTotal: Long, postingsEssential: Long, fellBack: Boolean,
-      dfRecounted: Boolean)
-
-  /** Disjunctive (OR) BM25 top-k with MAXSCORE bounds (Turtle & Flood
-    * 1995; the block-max refinement is Ding & Suel, SIGIR 2011) —
-    * result EXACTLY equals [[searchBm25]]'s, postings cost tracks the
-    * ESSENTIAL lists only. The _tstats dictionary sidecar carries each
-    * term's (df, max tf/(tf+k1(1-b))): u_t = idf(df) * that bound is a
-    * per-doc score ceiling independent of dl/avgdl (dl > 0 only shrinks
-    * the part), so with θ̂ = the k-th best single-list partial score of
-    * the top-impact list, every term whose suffix-sum of ceilings stays
-    * below θ̂ is NON-ESSENTIAL: a doc absent from all essential lists
-    * scores strictly under θ̂ ≤ the true k-th score and cannot rank.
-    * Non-essential lists are then only PROBED for candidates the
-    * essential lists produced (semi-join on doc_id — footer-pruned
-    * point reads either way), never scored in full. A 1e-6 margin
-    * absorbs the round-6 readout so a pruned doc cannot tie its way
-    * back in (margin 1e-5 in the code — belt over the 5e-7 braces).
-    * SAFETY: the dictionary's df is exact under pure increments;
-    * [[pruneDeleted]] marks it stale-HIGH (n_deleted advances past
-    * refreshed_at) and the search then RECOUNTS the query terms' live
-    * dfs in one scan-only pass over their pruned lists (term column
-    * only — no join, no shuffle), restoring exact bounds and exact
-    * scoring without losing the pruning; [[maintain]] folds the
-    * dictionary exact again and reopens the recount-free path. Bounds
-    * are never guessed; with no dictionary at all (pre-upgrade index)
-    * the search falls back to full scoring. */
-  def searchBm25MaxScore(spark: SparkSession, index: Path, terms: Seq[String],
-      k: Int): (DataFrame, MaxScoreReport) = {
-    require(terms.nonEmpty, "searchBm25MaxScore needs at least one query term")
-    val distinct = terms.distinct
-    def fallback = (searchBm25(spark, index, terms, k),
-      MaxScoreReport(distinct, Nil, -1L, -1L, fellBack = true,
-        dfRecounted = false))
-    if (TxLog.versions(tstatsDir(index)).isEmpty) return fallback
-    val v = TxLog.latestVersion(index)
-    val sc = scalarsAt(index, Some(v))
-    val nDocs = sc.nDocs
-    def postings(t: String) = pointRead(spark, index, v, t)
-    // dictionary point reads: per term one footer-pruned file, all
-    // terms unioned into ONE job, reduced to (df, bound) — |terms| rows
-    // on the driver, never a posting; absent terms simply yield no row
-    // (they contribute nothing in either search mode)
-    val stored = distinct.map { term =>
-      val h = termHash(term)
-      TxLog.readAt(spark, tstatsDir(index), range = Some(("term_hash", h, h)))
-        .filter(col("term") === lit(term))
-    }.reduce(_ unionByName _)
-      .groupBy(col("term"))
-      .agg(sum(col("df")).as("df"), max(col("tf_bound")).as("b"))
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
-      .toSeq
-    // DELETE STALENESS: pruneDeleted leaves the dictionary's df
-    // stale-HIGH (idf under-bounded — unsafe for selection AND wrong
-    // for scoring). Rather than giving up all pruning until maintain,
-    // recount the query terms' LIVE dfs in one scan-only job over
-    // their pruned lists (reads the term column, no join, no shuffle):
-    // selection bounds and scoring both become exact again. The
-    // tf_bound stays valid under deletes (a max over a superset).
-    // Staleness is derived from the INDEX ITSELF, not only from
-    // pruneDeleted's counter: ANY deletion-vector sidecar on a live
-    // postings file means rows left since the dictionary refresh (a
-    // caller running TxLog.deleteMor on the index directly — the exact
-    // pattern the ANN gates use on their index tables), so the counter
-    // alone would under-detect and break the exact-equality contract.
-    // [[maintain]] is the one supported DV-folding rewrite, and it
-    // rebuilds the dictionary in the same pass — so "no DVs and
-    // counters equal" genuinely implies an exact dictionary.
-    val dvsPresent = TxLog.snapshotAt(index, Some(v)).files.exists(_.dv.isDefined)
-    val dfRecounted = sc.nDeleted != refreshedAt(index) || dvsPresent
-    val dfExact: Map[String, Long] =
-      if (!dfRecounted) stored.map(s => s._1 -> s._2).toMap
-      else distinct.map(postings).reduce(_ unionByName _)
-        .groupBy(col("term")).agg(count(lit(1)).as("df"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val dict = stored.flatMap { case (t, _, b) =>
-      dfExact.get(t).filter(_ > 0).map(df => (t, df, b))
-    }
-    if (dict.isEmpty)
-      return (TxLog.readAt(spark, index, Some(v)).filter(lit(false))
-        .select(col("doc_id"), lit(0.0).as("score")),
-        MaxScoreReport(Nil, distinct, 0L, 0L, fellBack = false, dfRecounted))
-    val ceil = dict.map { case (t, df, b) =>
-      (t, df, math.log((nDocs - df + 0.5) / (df + 0.5) + 1.0) * b)
-    }.sortBy { case (t, _, u) => (-u, t) }
-    val st = statsRel(spark, index, v)
-    import spark.implicits._
-    val dfRel = broadcast(ceil.map(c => (c._1, c._2)).toDF("term", "df"))
-    // θ̂: the k-th best single-list partial of the top-impact list —
-    // every such doc's TRUE score only grows, so θ_true >= θ̂
-    val t1 = ceil.head._1
-    val thetaRow = bm25Rank(postings(t1), dfRel, st, k)
-      .agg(count(lit(1)).as("n"), coalesce(min(col("score")), lit(0.0)).as("kth")).head
-    val theta =
-      if (thetaRow.getLong(0) < k) Double.NegativeInfinity else thetaRow.getDouble(1)
-    // essential = minimal prefix whose complement's ceiling-sum cannot
-    // reach θ̂ (strictly, with the rounding margin)
-    val suffix = ceil.map(_._3).scanRight(0.0)(_ + _).tail // suffix(i) = Σ_{j>i} u_j
-    val nEss = (1 to ceil.size).find(j => suffix(j - 1) < theta - 1e-5)
-      .getOrElse(ceil.size)
-    val (ess, rest) = ceil.splitAt(nEss)
-    val essPosts = ess.map(c => postings(c._1)).reduce(_ unionByName _)
-    val posts =
-      if (rest.isEmpty) essPosts
-      else {
-        val cands = essPosts.select("doc_id").distinct()
-        essPosts.unionByName(
-          rest.map(c => postings(c._1)).reduce(_ unionByName _)
-            .join(cands, Seq("doc_id"), "left_semi"))
-      }
-    (bm25Rank(posts, dfRel, st, k),
-      MaxScoreReport(ess.map(_._1), rest.map(_._1),
-        ceil.map(_._2).sum, ess.map(_._2).sum, fellBack = false, dfRecounted))
-  }
-
-  /** What a [[searchBm25BlockMax]] call decided: unit (term × slice)
-    * granularity selection, and the files it actually touched vs the
-    * per-term point reads full scoring pays. */
+  /** What a [[searchBm25BlockMax]] call decided, at unit (term × slice)
+    * granularity: the units, and the dictionary df summed over the live
+    * units (`postingsTotal`) and over the essential ones
+    * (`postingsEssential`; both -1 on fallback); the query terms with
+    * live units but no essential unit, whose lists were only probed for
+    * candidates (`termsSkipped`); and the postings files read vs the
+    * per-term point reads full scoring pays. A stale call reads every
+    * query term's full list for its df recount, so its `filesRead` is
+    * `filesFull`. */
   final case class BlockMaxReport(unitsTotal: Int, unitsEssential: Int,
+      postingsTotal: Long, postingsEssential: Long, termsSkipped: Int,
       filesFull: Int, filesRead: Int, filesProbed: Int,
       fellBack: Boolean, dfRecounted: Boolean, thetaFromDict: Boolean)
 
-  /** BLOCK-MAX disjunctive BM25 top-k (Ding & Suel, SIGIR 2011 — the
-    * per-block refinement of [[searchBm25MaxScore]]'s Turtle & Flood
-    * bounds), re-expressed over the lake layout: a "block" here is a
-    * DICTIONARY SLICE — one incremental [[ensureIndexed]] commit's
-    * postings for one term, bound to its commit's files via
-    * `slice_ver` — so bounds live at (term × file-set) granularity and
-    * whole FILES are skipped, not just whole terms. Result EXACTLY
-    * equals [[searchBm25]] (same bm25Rank readout; tix11 gates the
-    * hash), cost tracks the essential units:
+  /** Disjunctive (OR) BM25 top-k with BLOCK-MAX bounds (Ding & Suel,
+    * SIGIR 2011, the per-block refinement of Turtle & Flood's MaxScore),
+    * re-expressed over the lake layout. The result EXACTLY equals
+    * [[searchBm25]]'s (the same readout; tix10 and tix11 gate the hash),
+    * and the postings cost tracks the essential units.
     *
-    *  1. θ̂ WITHOUT a postings job: each slice stores its top (tf, dl)
-    *     pairs; the k-th best recomputed partial over any ONE term's
-    *     pooled pairs lower-bounds that list's k-th partial (a subset's
-    *     k-th best never exceeds the full list's), which lower-bounds
-    *     the true k-th score — the max over terms is the tightest such
-    *     θ̂. Under delete staleness stored pairs may name dead docs
-    *     (θ̂ would overshoot — unsafe), so θ̂ falls back to one live
-    *     bm25Rank job on the top-ceiling term, and df is recounted
-    *     scan-only, the searchBm25MaxScore discipline.
-    *  2. UNIT SELECTION, greedy peel: units sorted by ceiling
-    *     u = idf·tf_bound descending move into the essential set until
+    * The `_tstats` dictionary holds one row per (term × SLICE): a slice
+    * is one [[ensureIndexed]] commit's postings for one term, bound to
+    * that commit's files via `slice_ver`, with the slice's df, its
+    * dl-free impact ceiling max tf/(tf+k1(1-b)) and its top (tf, dl)
+    * pairs. u = idf(df) * ceiling bounds any doc's part from that slice
+    * (dl > 0 only shrinks it), so bounds live at (term × file-set)
+    * granularity and whole FILES are skipped, not just whole terms:
+    *
+    *  1. θ̂ WITHOUT a postings job: the k-th best recomputed partial over
+    *     any ONE term's pooled stored pairs lower-bounds that list's k-th
+    *     partial (a subset's k-th best never exceeds the full list's),
+    *     which lower-bounds the true k-th score — the max over terms is
+    *     the tightest such θ̂.
+    *  2. UNIT SELECTION, greedy peel: units sorted by ceiling descending
+    *     move into the essential set until
     *     Σ_t max{u(t,s) : (t,s) non-essential} < θ̂ − margin. Any doc
     *     absent from every essential unit appears in at most one
     *     non-essential unit PER TERM, so its score is at most that
-    *     remaining-max sum — it cannot reach the k-th place.
+    *     remaining-max sum — it cannot reach the k-th place. The 1e-5
+    *     margin absorbs the round-6 readout, so a pruned doc cannot tie
+    *     its way back in.
     *  3. READS in file space: essential units read exactly their
-    *     slice's live files (hash-range fallback when the binding is
-    *     unbound or rewritten); every doc read is a candidate. The
-    *     candidates' remaining postings are PROBED from each term's
-    *     not-yet-read files, doc_id-footer-range pruned against the
-    *     candidate id span — the file skip that makes a long-lived
-    *     multi-increment index serve like a maintained one.
+    *     slice's live files (the term's hash range when the slice is
+    *     unbound or its files were rewritten since); every doc read is a
+    *     candidate. The candidates' remaining postings are PROBED from
+    *     each term's not-yet-read files, doc_id-footer-range pruned
+    *     against the candidate id span — the file skip that makes a
+    *     long-lived multi-increment index serve like a maintained one.
     *
-    * Safety mirrors searchBm25MaxScore: no dictionary, or a
-    * pre-slice_ver dictionary, falls back to exact full scoring.
+    * STALENESS: the dictionary's df is exact under increments. A
+    * [[pruneDeleted]] leaves it stale-HIGH (the index's `n_deleted`
+    * moves past the dictionary's `refreshed_at`), and a deletion vector
+    * on a live postings file (a direct `TxLog.deleteMor` on the index)
+    * means rows left since the refresh. Either way the call recounts the
+    * query terms' live dfs from their full pruned lists, and, since
+    * stored pairs may name deleted docs, takes θ̂ from one live ranking
+    * of the top-ceiling term. The ceilings stay valid (a max over a
+    * superset), so the pruning survives; [[maintain]] rebuilds the
+    * dictionary exact and reopens the recount-free path. With no
+    * dictionary at all the call falls back to [[searchBm25]].
     *
     * EXECUTION: when the query terms' dictionary and postings files
     * total at most [[DriverServeBytes]] ([[servesOnDriver]]), every read
@@ -561,13 +478,11 @@ object TextIndex {
     require(terms.nonEmpty, "searchBm25BlockMax needs at least one query term")
     require(k >= 1, "searchBm25BlockMax needs k >= 1")
     val distinct = terms.distinct
-    def fallback = (searchBm25(spark, index, terms, k),
-      BlockMaxReport(distinct.size, distinct.size, -1, -1, -1,
-        fellBack = true, dfRecounted = false, thetaFromDict = false))
-    if (TxLog.versions(tstatsDir(index)).isEmpty) return fallback
-    val dictCols = TxLog.tableSchema(tstatsDir(index))
-      .map(_.fieldNames.toSet).getOrElse(Set.empty)
-    if (!dictCols("slice_ver") || !dictCols("top_pairs")) return fallback
+    val dictVer = TxLog.latestVersion(tstatsDir(index))
+    if (dictVer < 0)
+      return (searchBm25(spark, index, terms, k),
+        BlockMaxReport(distinct.size, distinct.size, -1L, -1L, 0, -1, -1, -1,
+          fellBack = true, dfRecounted = false, thetaFromDict = false))
     import spark.implicits._
     val snap = TxLog.snapshotAt(index)
     val byPath = snap.files.map(f => f.path -> f).toMap
@@ -583,25 +498,21 @@ object TextIndex {
     // slices are immutable for a given _tstats version, so steady-state
     // serving pays ZERO dictionary reads; any dictionary commit (new
     // slice, maintain rebuild) changes the version and drops the key
-    val dictVer = TxLog.latestVersion(tstatsDir(index))
     val dictKeyBase = s"${tstatsDir(index).toAbsolutePath}@$dictVer#"
     val misses = distinct.filter(t => !dictCache.containsKey(dictKeyBase + t))
     if (misses.nonEmpty) {
       // a miss reads its term's few footer-pruned dictionary rows on the
       // driver, whichever way the rest of the call runs
-      val tsnap = TxLog.snapshotAt(tstatsDir(index))
+      val tsnap = TxLog.snapshotAt(tstatsDir(index), Some(dictVer))
       val fetched = misses.flatMap { term =>
         val h = termHash(term)
         TxLog.readLocal(spark, tstatsDir(index), TxLog.pruneFiles(tsnap, h, h),
           Seq("term", "df", "tf_bound", "top_pairs", "slice_ver"), eq = Some(("term_hash", h)))
           .filter(_.getString(0) == term)
       }.map { r =>
-        val pairs =
-          if (r.isNullAt(3)) Seq.empty[(Long, Long)]
-          else r.getSeq[org.apache.spark.sql.Row](3)
-            .map(p => { val id = p.getLong(1); (id & 0xFFFFFL, id >>> 20) })
-        DictRow(r.getString(0), r.getLong(1), r.getDouble(2), pairs,
-          if (r.isNullAt(4)) -1L else r.getLong(4))
+        val pairs = r.getSeq[org.apache.spark.sql.Row](3)
+          .map(p => { val id = p.getLong(1); (id & 0xFFFFFL, id >>> 20) })
+        DictRow(r.getString(0), r.getLong(1), r.getDouble(2), pairs, r.getLong(4))
       }.groupBy(_.term)
       if (dictCache.size > 65536) dictCache.clear() // bounded serving heap
       misses.foreach(t =>
@@ -620,8 +531,12 @@ object TextIndex {
         .collect { case r if r.getString(0) == t =>
           Posting(t, r.getLong(1), r.getAs[Number](2).longValue, r.getAs[Number](3).longValue)
         }
-    // ---- staleness (the searchBm25MaxScore rule: counter OR DVs)
-    val stale = sc.nDeleted != refreshedAt(index) || snap.files.exists(_.dv.isDefined)
+    // ---- staleness: the counter OR a live deletion vector. The
+    // dictionary's refresh mark is read at the version its rows came
+    // from (-1, so stale, when unset)
+    val refreshedAt = TxLog.propsAt(tstatsDir(index), Some(dictVer))
+      .get("refreshed_at").fold(-1L)(_.toLong)
+    val stale = sc.nDeleted != refreshedAt || snap.files.exists(_.dv.isDefined)
     // stale driver path: each term's live pruned list, read once for
     // the df recount, θ̂ and the ranking
     lazy val fullLists: Map[String, Vector[Posting]] = distinct.map { t =>
@@ -640,7 +555,7 @@ object TextIndex {
       TxLog.pruneFiles(snap, termHash(t), termHash(t)).size).sum
     if (live.isEmpty)
       return (emptyRanking(spark),
-        BlockMaxReport(units.size, 0, filesFull, 0, 0,
+        BlockMaxReport(units.size, 0, 0L, 0L, 0, filesFull, if (stale) filesFull else 0, 0,
           fellBack = false, dfRecounted = stale, thetaFromDict = false))
     val dfLive: Map[String, Long] = dfExact.filter(_._2 > 0)
     val idf: Map[String, Double] = dfLive.map { case (t, df) => t -> bm25Idf(nDocs, df) }
@@ -732,9 +647,12 @@ object TextIndex {
         if (rem.isEmpty) None else Some((t, h, rem))
       }
     val filesProbed = probeFiles.map(_._3.size).sum
-    val report = BlockMaxReport(units.size, essN, filesFull,
-      essFiles.map(_._2.size).sum + filesProbed, filesProbed, fellBack = false,
-      dfRecounted = stale, thetaFromDict = thetaFromDict)
+    val essTerms = ess.map(_.term).toSet
+    val report = BlockMaxReport(units.size, essN, live.map(_.df).sum, ess.map(_.df).sum,
+      live.map(_.term).distinct.count(t => !essTerms(t)), filesFull,
+      // stale: the df recount read every query term's full list
+      if (stale) filesFull else essFiles.map(_._2.size).sum + filesProbed, filesProbed,
+      fellBack = false, dfRecounted = stale, thetaFromDict = thetaFromDict)
     if (onDriver) {
       val posts =
         // stale: the recount already holds every live posting of every
@@ -994,20 +912,6 @@ object TextIndex {
       .withColumn("slice_ver", lit(sliceVer))
   }
 
-  /** One-time in-place schema evolution for a pre-round-16 dictionary:
-    * the new columns land as NULLs (unbound slice, no stored pairs), so
-    * block-max serving degrades gracefully (hash-range reads, θ̂ via a
-    * live-postings job) until [[maintain]] rebuilds exact values. */
-  private def upgradeTstatsSchema(spark: SparkSession, index: Path): Unit = {
-    val t = tstatsDir(index)
-    if (TxLog.versions(t).isEmpty) return
-    val have = TxLog.tableSchema(t).map(_.fieldNames.toSet).getOrElse(Set.empty)
-    if (!have("top_pairs"))
-      TxLog.addColumn(t, "top_pairs", graft.functions.TopKAgg.resultType): Unit
-    if (!have("slice_ver"))
-      TxLog.addColumn(t, "slice_ver", org.apache.spark.sql.types.LongType): Unit
-  }
-
   /** What [[maintain]] did: docs newly indexed, postings files and DV
     * sidecars before/after the re-cluster, dead files reclaimed. */
   final case class MaintainReport(docsIndexed: Long, filesBefore: Long,
@@ -1058,22 +962,13 @@ object TextIndex {
         clusterBucket(nClusters), nClusters): Unit
     // the _tstats dictionary: increments appended log-structured slices
     // and pruneDeleted left its df counts stale-high — rebuild it EXACT
-    // from the live (DV-folded) postings, restore the range clustering,
-    // and mark it refreshed so MaxScore's fast path reopens. The mark is
-    // the n_deleted of the postings version the rebuild read, set by the
-    // rebuild's own commit: a crash before it leaves the old mark, so a
-    // stale dictionary never reads as fresh
+    // from the live (DV-folded) postings, restoring the range clustering
+    // and the recount-free search path. One slice, bound to the
+    // freshly-compacted postings commit: after this every term's unit
+    // resolves to exactly its one clustered file
     if (TxLog.versions(tstatsDir(index)).nonEmpty) {
-      upgradeTstatsSchema(spark, index)
-      // one slice, bound to the freshly-compacted postings commit —
-      // after this every term's unit resolves to exactly its one
-      // clustered file. ONE clustered overwrite: the old overwrite +
-      // compactClustered pair rewrote the dictionary twice for the
-      // same final layout.
       val v = TxLog.latestVersion(index)
-      TxLog.overwriteClustered(spark, tstatsDelta(spark, TxLog.readAt(spark, index, Some(v)), v),
-        tstatsDir(index), "term_hash", clusterBucket(nClusters), nClusters,
-        props = Map("refreshed_at" -> scalarsAt(index, Some(v)).nDeleted.toString)): Unit
+      rebuildDictionary(spark, index, v, v, nClusters)
     }
     // the positional sibling (if built) degrades the same two ways —
     // fold its increments back too

@@ -2040,36 +2040,39 @@ object LakeQueries {
         Seq("spark", "join", "filter"), 20)
     }),
 
-    // ---- tix10: DISJUNCTIVE TOP-K WITH MAXSCORE BOUNDS — searchBm25
+    // ---- tix10: DISJUNCTIVE TOP-K WITH TERM-LEVEL BOUNDS — searchBm25
     // scores EVERY posting of EVERY query term; for the classic
     // rare-term + common-terms query that is almost all waste: the
     // common lists' per-doc score ceiling (idf(df) * max tf/(tf+k1(1-b)),
-    // both from the _tstats dictionary sidecar — |terms| point reads)
-    // cannot reach the k-th best score of the rare list alone, so they
-    // are scored only for candidates the rare list produced, never in
-    // full. SAFE-UP-TO-K: the ranking hash-equals the full-scoring
-    // oracle; the postings arithmetic rides as gated columns — the
-    // oracle RECOMPUTES postings_total (Σ df over the query terms) and
-    // postings_essential (df of 'dup') from the corpus, so the claimed
-    // read reduction (~600 postings skipped of ~630 per 500 docs) is
-    // itself oracle-checked, not self-reported.
+    // both from the _tstats dictionary — |terms| point reads) cannot
+    // reach θ̂, the k-th best score of the rare list alone (from the
+    // dictionary's stored pairs), so they are probed only for
+    // candidates the rare list produced, never scored in full. On this
+    // one-increment index every term is one block-max unit, so the
+    // pruning is whole lists (MaxScore's). SAFE-UP-TO-K: the ranking
+    // hash-equals the full-scoring oracle; the postings arithmetic
+    // rides as gated columns — the oracle RECOMPUTES postings_total
+    // (Σ df over the query terms) and postings_essential (df of 'dup')
+    // from the corpus, so the claimed read reduction (~600 postings
+    // skipped of ~630 per 500 docs) is itself oracle-checked, not
+    // self-reported.
     "tix10_maxscore_topk" -> ((spark: SparkSession, dir: String) => {
       // shared text2 family (read-only serve — no clone needed)
       val index = textFam2(spark, dir).resolve("tbl_text_ix")
-      val (ranked, rep) = TextIndex.searchBm25MaxScore(
+      val (ranked, rep) = TextIndex.searchBm25BlockMax(
         spark, index, Seq("dup", "join", "filter"), 10)
       ranked
         .withColumn("postings_total", lit(rep.postingsTotal))
         .withColumn("postings_essential", lit(rep.postingsEssential))
-        .withColumn("lists_skipped", lit(rep.skipped.size.toLong))
+        .withColumn("lists_skipped", lit(rep.termsSkipped.toLong))
         .withColumn("fell_back", lit(rep.fellBack))
     }),
 
-    // ---- tix11: BLOCK-MAX top-k (Ding & Suel, SIGIR 2011) — tix10's
-    // MaxScore prunes whole TERMS; on a long-lived multi-increment
+    // ---- tix11: BLOCK-MAX top-k (Ding & Suel, SIGIR 2011) — tix10
+    // prunes whole TERMS; on a long-lived multi-increment
     // index the unit of waste is the FILE: every increment appends its
     // own clustered file-set, so full scoring pays one file per term
-    // per increment. The dictionary now stores per-SLICE rows bound to
+    // per increment. The dictionary stores per-SLICE rows bound to
     // their postings commit plus each slice's top (tf, dl) pairs, so
     // block-max (a) derives θ̂ ON THE DRIVER from stored pairs — no
     // postings job, (b) selects essential units at (term × slice)
@@ -3312,7 +3315,7 @@ object LakeQueries {
 
     "tix01_bm25_from_index" -> TextIndexOracle,
 
-    // tix10: the full-scoring ranking over the MaxScore terms, LIMIT 10;
+    // tix10: the full-scoring ranking over the block-max terms, LIMIT 10;
     // the read-reduction counters recomputed from the corpus itself
     "tix10_maxscore_topk" ->
       TextIndexOracle

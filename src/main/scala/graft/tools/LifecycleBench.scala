@@ -125,12 +125,12 @@ object LifecycleBench {
         TxLog.readAt(spark, mIx)).count()
     }
 
-    // ---- text MaxScore (tix10/tix11 serving): bounds-pruned
-    // disjunctive top-k, now the BLOCK-MAX variant — θ̂ from the
-    // dictionary's stored pairs (no postings job), unit-granular
-    // essential selection, candidate-span file pruning. When the query
-    // terms' dictionary and postings files total at most
-    // TextIndex.DriverServeBytes (1 MiB) the whole call reads and ranks
+    // ---- bounded text top-k (tix10/tix11 serving): block-max
+    // disjunctive top-k — θ̂ from the dictionary's stored pairs (no
+    // postings job), unit-granular essential selection, candidate-span
+    // file pruning (the lane keeps its name: LIFECYCLE.json keys on
+    // it). When the query terms' dictionary and postings files total at
+    // most TextIndex.DriverServeBytes (1 MiB) the whole call reads and ranks
     // on the driver (zero Spark jobs; the count below runs on a local
     // relation), so this lane measures that path whenever the index is
     // that small. Must stay at-or-under the full-scoring text_search

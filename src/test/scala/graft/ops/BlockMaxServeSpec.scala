@@ -17,7 +17,8 @@ import graft.SparkSpec
   * Random corpora of 1–4 increments are walked through every index state
   * the serving path distinguishes: fresh, stale after `pruneDeleted`,
   * deletion vectors from a direct `deleteMor` on the index, maintained,
-  * and a legacy dictionary whose slices carry no binding or pairs. */
+  * and a compacted index whose dictionary slices all name files
+  * rewritten since. */
 class BlockMaxServeSpec extends SparkSpec {
 
   private val Vocab = 40
@@ -100,14 +101,14 @@ class BlockMaxServeSpec extends SparkSpec {
     assert(TxLog.snapshotAt(index).files.exists(_.dv.isDefined))
     check("DVs from a direct deleteMor", index, r)
 
-    // a legacy dictionary: files without slice_ver/top_pairs, served as
-    // nulls (unbound slices, no pairs); a second increment first gives
-    // every common term two unbound slices over overlapping files
+    // slices whose files were rewritten since: two increments after
+    // maintain, then a compaction of the index with no dictionary
+    // rebuild. Every slice of a common term falls back to the same
+    // hash-range files, which its essential units must read once
     TextIndex.maintain(spark, corpus, index): Unit
     increment()
-    val t = base.resolve("ix_tstats")
-    TxLog.overwrite(spark, TxLog.readAt(spark, t).drop("top_pairs", "slice_ver"),
-      t, "term_hash", nParts = 1): Unit
-    check("legacy dictionary", index, r)
+    increment()
+    TxLog.compact(spark, index, "term_hash"): Unit
+    check("slices rewritten since", index, r)
   }
 }

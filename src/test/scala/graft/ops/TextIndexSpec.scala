@@ -106,12 +106,15 @@ class TextIndexSpec extends SparkSpec {
     val postings = TxLog.readAt(spark, legacy).count()
     val h0 = heads(base)
     assert(TextIndex.ensureIndexed(spark, corpus, legacy) == 0L)
-    assert(heads(base) == h0 + ("lx" -> (h0("lx") + 1L)))
+    // one watermark commit, and the missing dictionary built from the
+    // postings the log has
+    val h1 = h0 + ("lx" -> (h0("lx") + 1L)) + ("lx_tstats" -> 0L)
+    assert(heads(base) == h1)
     assert(TxLog.readAt(spark, legacy).count() == postings)
     assert(TextIndex.corpusStats(legacy) == TextIndex.corpusStats(index))
     assert(TxLog.sourcesAt(legacy) == liveFiles(corpus))
     assert(TextIndex.ensureIndexed(spark, corpus, legacy) == 0L)
-    assert(heads(base) == h0 + ("lx" -> (h0("lx") + 1L)), "a second call committed")
+    assert(heads(base) == h1, "a second call committed")
   }
 
   test("incremental build equals rebuild, postings multiset and stats both") {
@@ -313,7 +316,7 @@ class TextIndexSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet == Set(0L, 7L, 14L))
   }
 
-  test("MaxScore: skips the common list, ranking EXACTLY equals full scoring") {
+  test("block-max: skips the common list, ranking EXACTLY equals full scoring") {
     val base = Files.createTempDirectory("graft_tix7")
     val corpus = base.resolve("corpus")
     val index = base.resolve("ix")
@@ -324,14 +327,15 @@ class TextIndexSpec extends SparkSpec {
     TextIndex.ensureIndexed(spark, corpus, index): Unit
     val terms = Seq("rareword", "alpha") // rare high-impact vs universal low-impact
     val full = TextIndex.searchBm25(spark, index, terms, 5).collect().toSeq
-    val (pruned, rep) = TextIndex.searchBm25MaxScore(spark, index, terms, 5)
-    assert(!rep.fellBack)
-    assert(rep.essential == Seq("rareword") && rep.skipped == Seq("alpha"),
-      s"expected alpha non-essential, got $rep")
-    assert(rep.postingsEssential < rep.postingsTotal)
+    val (pruned, rep) = TextIndex.searchBm25BlockMax(spark, index, terms, 5)
+    assert(!rep.fellBack && rep.thetaFromDict)
+    assert(rep.termsSkipped == 1, s"expected alpha non-essential, got $rep")
+    assert(rep.postingsEssential < rep.postingsTotal, s"no postings pruned: $rep")
+    // df summed over both slices of each term: 15 rareword + 100 alpha
+    assert(rep.postingsTotal == 115L && rep.postingsEssential == 15L, s"$rep")
     assert(pruned.collect().toSeq == full)
     // a term the corpus never saw: both modes agree (and no crash)
-    val (ghost, grep) = TextIndex.searchBm25MaxScore(spark, index, Seq("zzz_unseen"), 5)
+    val (ghost, grep) = TextIndex.searchBm25BlockMax(spark, index, Seq("zzz_unseen"), 5)
     assert(ghost.collect().isEmpty && !grep.fellBack)
   }
 
@@ -365,51 +369,72 @@ class TextIndexSpec extends SparkSpec {
     assert(nRows == recomputed.length.toLong)
   }
 
-  test("MaxScore: deletes force a live-df recount, ranking still exact, pruning kept") {
-    import spark.implicits._
-    val base = Files.createTempDirectory("graft_tix8")
-    val corpus = base.resolve("corpus")
-    val index = base.resolve("ix")
-    TxLog.append(spark, corpusDf(0L to 99L), corpus, "doc_id", nParts = 2)
-    TextIndex.ensureIndexed(spark, corpus, index): Unit
-    TxLog.deleteMor(spark, corpus, Seq(7L, 14L).toDF("doc_id"), "doc_id"): Unit
-    TextIndex.pruneDeleted(spark, index, Seq(7L, 14L).toDF("doc_id")): Unit
-    val terms = Seq("rareword", "alpha")
-    val (r1, rep1) = TextIndex.searchBm25MaxScore(spark, index, terms, 5)
-    assert(!rep1.fellBack && rep1.dfRecounted,
-      "stale-high df must recount live dfs, not serve stored bounds")
-    assert(rep1.skipped.nonEmpty, "pruning survives the stale-dictionary path")
-    // 7 and 14 are rareword docs (%7==0): the recounted df must be the
-    // LIVE one, so the exact ranking over survivors still matches
-    assert(r1.collect().toSeq == TextIndex.searchBm25(spark, index, terms, 5).collect().toSeq)
-    TextIndex.maintain(spark, corpus, index): Unit
-    val (r2, rep2) = TextIndex.searchBm25MaxScore(spark, index, terms, 5)
-    assert(!rep2.fellBack && !rep2.dfRecounted && rep2.skipped.nonEmpty)
-    assert(r2.collect().toSeq == TextIndex.searchBm25(spark, index, terms, 5).collect().toSeq)
-  }
-
   test("a pre-dictionary index upgraded mid-life gets a COMPLETE dictionary") {
     val base = Files.createTempDirectory("graft_tix10")
     val corpus = base.resolve("corpus")
     val index = base.resolve("ix")
     TxLog.append(spark, corpusDf(0L to 49L), corpus, "doc_id", nParts = 2)
     TextIndex.ensureIndexed(spark, corpus, index): Unit
-    // simulate an index built by a pre-_tstats binary
+    // an index without its dictionary
     TxLog.deleteTree(base.resolve("ix_tstats"))
-    val (legacy, legacyRep) = TextIndex.searchBm25MaxScore(
-      spark, index, Seq("rareword", "alpha"), 5)
+    val terms = Seq("rareword", "alpha")
+    val (legacy, legacyRep) = TextIndex.searchBm25BlockMax(spark, index, terms, 5)
     assert(legacyRep.fellBack) // no dictionary at all: exact full scoring
-    assert(legacy.collect().toSeq ==
-      TextIndex.searchBm25(spark, index, Seq("rareword", "alpha"), 5).collect().toSeq)
+    assert(legacy.collect().toSeq == TextIndex.searchBm25(spark, index, terms, 5).collect().toSeq)
     // the upgrading increment must cover the OLD postings too — a
-    // delta-only dictionary would misrank every query touching them
+    // delta-only dictionary would misrank every query touching them.
+    // The old postings' slice spans many commits, so it is unbound
+    // (hash-range reads) beside the increment's bound slice
     TxLog.append(spark, corpusDf(50L to 79L), corpus, "doc_id", nParts = 2)
     TextIndex.ensureIndexed(spark, corpus, index): Unit
-    val (pruned, rep) = TextIndex.searchBm25MaxScore(
-      spark, index, Seq("rareword", "alpha"), 5)
-    assert(!rep.fellBack && rep.skipped.nonEmpty)
-    assert(pruned.collect().toSeq ==
-      TextIndex.searchBm25(spark, index, Seq("rareword", "alpha"), 5).collect().toSeq)
+    val (pruned, rep) = TextIndex.searchBm25BlockMax(spark, index, terms, 5)
+    assert(!rep.fellBack && rep.termsSkipped > 0, s"$rep")
+    assert(pruned.collect().toSeq == TextIndex.searchBm25(spark, index, terms, 5).collect().toSeq)
+  }
+
+  test("a crash between an increment's postings and its dictionary slice is repaired") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_tix13")
+    val corpus = base.resolve("corpus")
+    val index = base.resolve("ix")
+    TxLog.append(spark, corpusDf(0L to 39L), corpus, "doc_id", nParts = 2)
+    TextIndex.ensureIndexed(spark, corpus, index): Unit
+    // the next increment's postings commit, written alone: its rows,
+    // statistics, increment count and source files, and no slice
+    val docs = Seq((40L, "alpha crashonly"), (41L, "crashonly crashonly beta"))
+      .toDF("doc_id", "text")
+    TxLog.append(spark, docs, corpus, "doc_id", nParts = 1)
+    val newFiles = TxLog.snapshotAt(corpus).files.map(_.path)
+      .filterNot(TxLog.sourcesAt(index))
+    val posts = docs.select(col("doc_id"), split(col("text"), " ").as("ws"))
+      .select(col("doc_id"), size(col("ws")).as("dl"), explode(col("ws")).as("term"))
+      .groupBy("doc_id", "term").agg(max(col("dl")).as("dl"), count(lit(1)).as("tf"))
+      .select(xxhash64(col("term")).as("term_hash"), col("term"), col("doc_id"),
+        col("tf"), col("dl"))
+    val p = TxLog.propsAt(index)
+    TxLog.appendClustered(spark, posts, index, "term_hash", lit(0), 1,
+      props = Map("n_docs" -> (p("n_docs").toLong + 2).toString,
+        "total_len" -> (p("total_len").toLong + 5).toString,
+        "increments" -> (p.get("increments").fold(0L)(_.toLong) + 1).toString),
+      sources = newFiles): Unit
+    // the redelivery finds no new corpus file, and repairs the dictionary
+    assert(TextIndex.ensureIndexed(spark, corpus, index) == 0L)
+    val dict = TxLog.readAt(spark, base.resolve("ix_tstats"))
+      .groupBy("term").agg(sum(col("df")).as("df"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val live = TxLog.readAt(spark, index).groupBy("term").agg(count(lit(1)).as("df"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(dict == live && live("crashonly") == 2L, s"dictionary $dict vs live $live")
+    for (terms <- Seq(Seq("crashonly"), Seq("crashonly", "alpha"))) {
+      val (r, rep) = TextIndex.searchBm25BlockMax(spark, index, terms, 5)
+      assert(!rep.fellBack)
+      assert(r.collect().toSeq == TextIndex.searchBm25(spark, index, terms, 5).collect().toSeq,
+        s"block-max differs from searchBm25 for $terms")
+    }
+    // once repaired, a redelivery commits nothing
+    val head = TxLog.latestVersion(base.resolve("ix_tstats"))
+    assert(TextIndex.ensureIndexed(spark, corpus, index) == 0L)
+    assert(TxLog.latestVersion(base.resolve("ix_tstats")) == head)
   }
 
   test("empty query-term lists refuse with a clear message in both search modes") {
@@ -457,6 +482,8 @@ class TextIndexSpec extends SparkSpec {
     val (r1, rep1) = TextIndex.searchBm25BlockMax(spark, index, terms, 5)
     assert(!rep1.fellBack && rep1.dfRecounted && !rep1.thetaFromDict,
       "stored pairs may name deleted docs; θ̂ must come from live postings")
+    assert(rep1.unitsEssential < rep1.unitsTotal, s"pruning survives staleness: $rep1")
+    assert(rep1.filesRead == rep1.filesFull, s"the recount reads every full list: $rep1")
     assert(r1.collect().toSeq == TextIndex.searchBm25(spark, index, terms, 5).collect().toSeq)
     // maintain folds DVs + rebuilds the dictionary: fast path reopens,
     // every unit binds to the one compacted commit
@@ -465,30 +492,6 @@ class TextIndexSpec extends SparkSpec {
     assert(!rep2.fellBack && !rep2.dfRecounted && rep2.thetaFromDict)
     assert(rep2.filesRead <= rep2.filesFull)
     assert(r2.collect().toSeq == TextIndex.searchBm25(spark, index, terms, 5).collect().toSeq)
-  }
-
-  test("block-max: a pre-slice_ver dictionary falls back to exact full scoring") {
-    val base = Files.createTempDirectory("graft_tix12")
-    val corpus = base.resolve("corpus")
-    val index = base.resolve("ix")
-    TxLog.append(spark, corpusDf(0L to 59L), corpus, "doc_id", nParts = 2)
-    TextIndex.ensureIndexed(spark, corpus, index): Unit
-    // simulate a legacy dictionary: rewrite _tstats with files that
-    // LACK the new columns (what a pre-round-16 build wrote). The log
-    // schema keeps listing them (evolution is append-only), so the
-    // merge-on-read scan serves them as NULLs — exactly the
-    // upgradeTstatsSchema shape — and block-max must degrade safely:
-    // unbound units → hash-range reads, no stored pairs → θ̂ = -inf →
-    // everything essential = exact full scoring, never a wrong answer.
-    val t = base.resolve("ix_tstats")
-    TxLog.overwrite(spark,
-      TxLog.readAt(spark, t).drop("top_pairs", "slice_ver"),
-      t, "term_hash", nParts = 1): Unit
-    val terms = Seq("rareword", "alpha")
-    val (r, rep) = TextIndex.searchBm25BlockMax(spark, index, terms, 5)
-    assert(r.collect().toSeq ==
-      TextIndex.searchBm25(spark, index, terms, 5).collect().toSeq)
-    assert(!rep.fellBack, "null bindings degrade to hash-range reads, not a refusal")
   }
 
   test("driver-side termHash is bit-identical to the SQL xxhash64 the postings carry") {
