@@ -273,11 +273,7 @@ object TextIndex {
     val s = scalarsAt(index, Some(v))
     val dict = tstatsDelta(spark, TxLog.readAt(spark, index, Some(v)), sliceVer)
     val props = Map("refreshed_at" -> s.nDeleted.toString, "increments" -> s.increments.toString)
-    // overwriteClustered needs a committed version to replace
-    if (TxLog.versions(tstatsDir(index)).isEmpty)
-      TxLog.appendClustered(spark, dict, tstatsDir(index), "term_hash",
-        clusterBucket(nClusters), nClusters, props = props): Unit
-    else TxLog.overwriteClustered(spark, dict, tstatsDir(index), "term_hash",
+    TxLog.overwriteClustered(spark, dict, tstatsDir(index), "term_hash",
       clusterBucket(nClusters), nClusters, props = props): Unit
   }
 
@@ -493,36 +489,26 @@ object TextIndex {
     val sc = scalarsAt(index, Some(snap.version))
     val nDocs = sc.nDocs
     val avgdl = sc.totalLen.toDouble / nDocs.toDouble
-    // ---- dictionary rows, VERSION-KEYED per-JVM cached (the Lucene
-    // shape: the term dictionary lives in serving memory) — a term's
-    // slices are immutable for a given _tstats version, so steady-state
-    // serving pays ZERO dictionary reads; any dictionary commit (new
-    // slice, maintain rebuild) changes the version and drops the key
-    val dictKeyBase = s"${tstatsDir(index).toAbsolutePath}@$dictVer#"
-    val misses = distinct.filter(t => !dictCache.containsKey(dictKeyBase + t))
-    if (misses.nonEmpty) {
-      // a miss reads its term's few footer-pruned dictionary rows on the
-      // driver, whichever way the rest of the call runs
-      val tsnap = TxLog.snapshotAt(tstatsDir(index), Some(dictVer))
-      val fetched = misses.flatMap { term =>
+    // ---- dictionary rows: a term's slices never change within one
+    // commit of the dictionary, so serving keeps them in memory. A miss
+    // reads its term's few footer-pruned dictionary rows on the driver,
+    // whichever way the rest of the call runs
+    val dictStamp = TxLog.versionStamp(tstatsDir(index), dictVer)
+    lazy val tsnap = TxLog.snapshotAt(tstatsDir(index), Some(dictVer))
+    final case class U(term: String, h: Long, df: Long, bound: Double,
+        pairs: Seq[(Long, Long)], ver: Long)
+    val units: Seq[U] = distinct.flatMap { term =>
+      dictCache.getOrPut(tstatsDir(index), (dictVer, term), dictStamp) {
         val h = termHash(term)
         TxLog.readLocal(spark, tstatsDir(index), TxLog.pruneFiles(tsnap, h, h),
           Seq("term", "df", "tf_bound", "top_pairs", "slice_ver"), eq = Some(("term_hash", h)))
-          .filter(_.getString(0) == term)
-      }.map { r =>
-        val pairs = r.getSeq[org.apache.spark.sql.Row](3)
-          .map(p => { val id = p.getLong(1); (id & 0xFFFFFL, id >>> 20) })
-        DictRow(r.getString(0), r.getLong(1), r.getDouble(2), pairs, r.getLong(4))
-      }.groupBy(_.term)
-      if (dictCache.size > 65536) dictCache.clear() // bounded serving heap
-      misses.foreach(t =>
-        dictCache.put(dictKeyBase + t, fetched.getOrElse(t, Nil)))
-    }
-    final case class U(term: String, h: Long, df: Long, bound: Double,
-        pairs: Seq[(Long, Long)], ver: Long)
-    val units: Seq[U] = distinct
-      .flatMap(t => Option(dictCache.get(dictKeyBase + t)).getOrElse(Nil))
-      .map(d => U(d.term, termHash(d.term), d.df, d.bound, d.pairs, d.ver))
+          .filter(_.getString(0) == term).map { r =>
+            val pairs = r.getSeq[org.apache.spark.sql.Row](3)
+              .map(p => { val id = p.getLong(1); (id & 0xFFFFFL, id >>> 20) })
+            DictRow(r.getString(0), r.getLong(1), r.getDouble(2), pairs, r.getLong(4))
+          }
+      }
+    }.map(d => U(d.term, termHash(d.term), d.df, d.bound, d.pairs, d.ver))
     def postings(t: String) = pointRead(spark, index, snap.version, t)
     // the driver path's postings of one term in `files`, DVs applied
     def readPostings(t: String, h: Long, files: Seq[TxLog.AddFile]): Vector[Posting] =
@@ -994,11 +980,9 @@ object TextIndex {
   private final case class DictRow(term: String, df: Long, bound: Double,
       pairs: Seq[(Long, Long)], ver: Long)
 
-  /** Per-JVM dictionary cache, keyed "<tstats path>@<version>#<term>" —
-    * entries are immutable by construction (a published commit never
-    * changes), cleared wholesale past 64k terms. */
+  private val DictCacheEntries = 65536
   private val dictCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[DictRow]]()
+    new StampedCache[(Long, String), (Long, Long), Seq[DictRow]](DictCacheEntries)
 
   /** The term's xxhash64 (seed 42, Spark's SQL default) computed ON THE
     * DRIVER — bit-identical to the `xxhash64(term)` column the postings

@@ -253,22 +253,8 @@ object TxLog {
 
   // ------------------------------------------- multi-table txn resolution
 
-  /** Resolved transaction outcomes, keyed by marker path. An outcome
-    * file is created exactly once (create-exclusive hardlink) and never
-    * changes, so a resolved entry is immutable — after first resolution
-    * a txn commit costs readers a map lookup, nothing more. Unlike the
-    * path-keyed node and state caches this needs NO re-creation stamp
-    * guard: the marker path ends in a fresh `UUID.randomUUID()` per
-    * transaction, so the same key can never name two transactions
-    * within (or across) JVM lifetimes. */
-  private val txnOutcomes = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Test hook: drop every per-JVM log cache (txn outcomes, resolved
-    * commits, folded states) so a spec can exercise cold resolution,
-    * e.g. after the marker-hosting table is dropped. */
-  private[ops] def forgetTxnOutcomesForTest(): Unit = {
-    txnOutcomes.clear(); nodeCache.clear(); stateCache.clear()
-  }
+  private val OutcomeCacheEntries = 65536
+  private val txnOutcomes = new StampedCache[String, Unit, String](OutcomeCacheEntries)
 
   private def readUtf8(f: Path): String =
     new String(Files.readAllBytes(f), java.nio.charset.StandardCharsets.UTF_8)
@@ -408,13 +394,10 @@ object TxLog {
     * transaction, and never once a replica or fold records it (a
     * dropped sibling must not turn a committed transfer into an abort).
     * Every reader of txn commits resolves through here. */
-  private def outcomeOf(table: Path, markerDir: Path): String = {
-    val key = markerDir.toString
-    val cached = txnOutcomes.get(key)
-    if (cached != null) return cached
-    val txnId = markerDir.getFileName.toString
-    val localF = txnOutLocal(table, txnId)
-    val o =
+  private def outcomeOf(table: Path, markerDir: Path): String =
+    txnOutcomes.getOrPut(table, markerDir.toString, ()) {
+      val txnId = markerDir.getFileName.toString
+      val localF = txnOutLocal(table, txnId)
       if (Files.exists(localF)) readUtf8(localF)
       else newestCheckpoint(table, versions(table), Long.MaxValue)
         .flatMap(c => foldedOutcomes(c._2).get(txnId))
@@ -423,21 +406,11 @@ object TxLog {
           replicateOutcome(table, txnId, r)
           r
         }
-    txnOutcomes.put(key, o)
-    o
-  }
+    }
 
-  // ---- per-JVM resolved-commit cache (optimization r16, guide §5 "the
-  // driver should do almost no data work"): every state replay, schema
-  // resolution and history scan re-reads + re-parses the same
-  // commit.json trees — on a lifecycle gate that is hundreds of driver-
-  // side parses per query. A PUBLISHED commit is immutable
-  // (create-exclusive hard link) and a resolved txn outcome is durable,
-  // so the RESOLVED node is cacheable; the (size, mtime) stamp guards
-  // the one hole — a table deleted and re-created at the same path
-  // (spec fixtures) — at the cost of one stat() instead of read+parse.
-  private val nodeCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, Long, com.fasterxml.jackson.databind.JsonNode)]()
+  private val NodeCacheEntries = 200000
+  private val nodeCache =
+    new StampedCache[Long, (Long, Long), com.fasterxml.jackson.databind.JsonNode](NodeCacheEntries)
 
   private def commitStamp(f: Path): (Long, Long) = {
     val a = Files.readAttributes(f, classOf[java.nio.file.attribute.BasicFileAttributes])
@@ -451,21 +424,15 @@ object TxLog {
     * "abandoned"). Ordinary commits pay a single null field check,
     * nothing else — the reader tax the design doc above requires to be
     * zero. */
-  private def commitNode(table: Path, v: Long): com.fasterxml.jackson.databind.JsonNode = {
-    val key = table.toAbsolutePath.toString + "#" + v
-    val stamp = commitStamp(versionDir(table, v).resolve("commit.json"))
-    val hit = nodeCache.get(key)
-    if (hit != null && (hit._1, hit._2) == stamp) return hit._3
-    val node = rawCommit(table, v)
-    val resolved = Option(node.get("txn")) match {
-      case Some(m) if outcomeOf(table, java.nio.file.Paths.get(m.asText)) != "committed" =>
-        mapper.readTree(commitBytes(v, "txn-aborted", Nil, Nil, None, None, Map.empty))
-      case _ => node
+  private def commitNode(table: Path, v: Long): com.fasterxml.jackson.databind.JsonNode =
+    nodeCache.getOrPut(table, v, commitStamp(versionDir(table, v).resolve("commit.json"))) {
+      val node = rawCommit(table, v)
+      Option(node.get("txn")) match {
+        case Some(m) if outcomeOf(table, java.nio.file.Paths.get(m.asText)) != "committed" =>
+          mapper.readTree(commitBytes(v, "txn-aborted", Nil, Nil, None, None, Map.empty))
+        case _ => node
+      }
     }
-    if (nodeCache.size > 200000) nodeCache.clear() // runaway backstop
-    nodeCache.put(key, (stamp._1, stamp._2, resolved))
-    resolved
-  }
 
   /** The files ADDED by commit `v` — log metadata only, one commit
     * read. Block-max retrieval uses this as the slice→file binding
@@ -619,15 +586,8 @@ object TxLog {
   private val EmptyState = State(Snapshot(-1L, Vector.empty), Protocol.Empty, Map.empty,
     Map.empty, None, Nil, Map.empty, Set.empty)
 
-  /** One folded state per table path — the newest resolved (an older
-    * time-travel read never displaces it) — with its version's commit
-    * (size, mtime) stamp. It is the BASE of the next fold: a later
-    * version replays only the commits since, so a read after a commit
-    * costs one commit read, not a checkpoint parse. A stamp mismatch (a
-    * table deleted and re-created at the same path) or a vanished
-    * version refolds from a checkpoint. */
-  private val stateCache = new java.util.concurrent.ConcurrentHashMap[
-    String, ((Long, Long), State)]()
+  private val StateCacheEntries = 1024
+  private val stateCache = new StampedCache[Unit, (Long, Long), State](StateCacheEntries)
 
   /** The state after every committed version in `vs` at or below `v`
     * (EmptyState when there is none). The seed is the cached state when
@@ -642,11 +602,8 @@ object TxLog {
     val upTo = vs.filter(_ <= v)
     if (upTo.isEmpty) return EmptyState
     val target = upTo.last
-    val key = table.toAbsolutePath.toString
-    val cached = Option(stateCache.get(key)).collect {
-      case (stamp, s) if vs.contains(s.snapshot.version) &&
-        versionStamp(table, s.snapshot.version) == stamp => s
-    }
+    val cached = stateCache.get(table, ())((stamp, s) =>
+      vs.contains(s.snapshot.version) && versionStamp(table, s.snapshot.version) == stamp)
     val base = cached.filter(_.snapshot.version <= target)
     if (base.exists(_.snapshot.version == target)) return base.get
     val seed = base.getOrElse(newestCheckpoint(table, vs, target,
@@ -699,7 +656,7 @@ object TxLog {
     val out = s.copy(snapshot =
       Snapshot(target, if (live == null) seed.snapshot.files else live.values.toVector))
     if (!cached.exists(_.snapshot.version > target))
-      stateCache.put(key, (versionStamp(table, target), out))
+      stateCache.put(table, (), versionStamp(table, target), out)
     out
   }
 
@@ -727,7 +684,7 @@ object TxLog {
 
   /** Stamp of `table`'s commit.json at `v` — (-1, -1) when unreadable
     * (a vanished log), which can never equal a real stamp. */
-  private def versionStamp(table: Path, v: Long): (Long, Long) =
+  private[ops] def versionStamp(table: Path, v: Long): (Long, Long) =
     try commitStamp(versionDir(table, v).resolve("commit.json"))
     catch { case _: java.io.IOException => (-1L, -1L) }
 
@@ -1073,7 +1030,7 @@ object TxLog {
         else readUtf8(markerDir.resolve("outcome"))
       if (outcome != "committed") throw new IllegalStateException(
         "transact: aborted by a lease-expiry resolver before the decision landed")
-      txnOutcomes.put(markerRef, "committed")
+      actions.foreach(x => txnOutcomes.put(x._1.table, markerRef, (), "committed"))
       // replicate the decision into EVERY participant's own log before
       // returning: a transaction that completed can then never be
       // retroactively voided by the marker-hosting table being dropped,
@@ -1809,12 +1766,21 @@ object TxLog {
     phys(out, table).write.mode("overwrite").parquet(stage.toString)
     enforceConstraintsStaged(spark, table, stage)
     val adds = promoteStaged(spark, stage, table, statsCol)
-    val base = snapshotAt(table)
+    val base = overwriteBase(table)
     commitRetry(table, "overwrite", adds, base.files.map(_.path),
       schema = Some(validateSchema(tableSchema(table), df.schema, allowEvolution = false))) {
       case Some(s) => s.version == base.version
       case None => base.version == -1L
     }
+  }
+
+  /** The live set an overwrite replaces: the head snapshot behind the
+    * reader gate, or version -1 with no files when the log is empty (the
+    * overwrite then creates the table). */
+  private def overwriteBase(table: Path): Snapshot = {
+    val s = stateOf(table, None)
+    requireReadable(table, s.snapshot.version, s.protocol)
+    s.snapshot
   }
 
   /** The clustered writers' shared staging: shuffle `df` (logical
@@ -1860,7 +1826,7 @@ object TxLog {
     validateSchema(tableSchema(table), df.schema, allowEvolution = false): Unit
     val adds = writeClustered(spark, df, table, statsCol, clusterCol, nClusters,
       constrained = true)
-    val base = snapshotAt(table)
+    val base = overwriteBase(table)
     commitRetry(table, "overwrite", adds, base.files.map(_.path),
       schema = Some(validateSchema(tableSchema(table), df.schema, allowEvolution = false)),
       extra = propsExtra(props)) {
@@ -1934,7 +1900,7 @@ object TxLog {
     Files.createDirectories(table)
     validateSchema(tableSchema(table), df.schema, allowEvolution = false): Unit
     val adds = stagePartitioned(spark, df, table, partCols, statsCol, clusterCol, nParts)
-    val base = snapshotAt(table)
+    val base = overwriteBase(table)
     commitRetry(table, "overwrite", adds, base.files.map(_.path),
       schema = Some(validateSchema(tableSchema(table), df.schema, allowEvolution = false))) {
       case Some(s) => s.version == base.version
@@ -3043,12 +3009,11 @@ object TxLog {
   }
 
   /** Recursive delete for callers cleaning up whole table directories
-    * (e.g. temp tables built inside gated queries). */
+    * (e.g. temp tables built inside gated queries). A table re-created
+    * under `p` is a new incarnation, so every cached entry of a table
+    * under `p` is dropped ([[StampedCache.dropUnder]]). */
   def deleteTree(p: Path): Unit = {
     deleteRecursively(p)
-    // a table recreated at this path is a NEW incarnation: a cached
-    // state from the old one must not seed its fold
-    val prefix = p.toAbsolutePath.toString
-    stateCache.keySet.removeIf(k => k == prefix || k.startsWith(prefix + "/"))
+    StampedCache.dropUnder(p)
   }
 }

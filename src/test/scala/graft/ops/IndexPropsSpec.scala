@@ -175,7 +175,7 @@ class IndexPropsSpec extends SparkSpec {
       marks += heads
     }
     // cold: every version folded again from checkpoints and commits
-    TxLog.forgetTxnOutcomesForTest()
+    StampedCache.clearAllForTest()
     TxLog.versions(index).foreach(v => checkVersion(index, v, expect(v), s"seed $seed, cold"))
     assert(dictChecks > 0, "the dictionary invariant never applied")
     assert(Seq("increment", "prune", "maintain", "forget", "clone", "restore").forall(done.contains),

@@ -210,13 +210,13 @@ class LogFoldSpec extends SparkSpec {
       // time travel with the head cached
       vs.foreach(v => check(t, v, s"time travel, seed $seed"))
       // cold: every cache dropped before each read
-      vs.foreach { v => TxLog.forgetTxnOutcomesForTest(); check(t, v, s"cold, seed $seed") }
-      TxLog.forgetTxnOutcomesForTest()
+      vs.foreach { v => StampedCache.clearAllForTest(); check(t, v, s"cold, seed $seed") }
+      StampedCache.clearAllForTest()
       checkBatches(t, nextBatch + 1, s"cold, seed $seed")
       // incremental across checkpoint boundaries: a cold early state is
       // the base the head is folded on
       Seq(0L, 9L, 15L, 31L).foreach { e =>
-        TxLog.forgetTxnOutcomesForTest()
+        StampedCache.clearAllForTest()
         check(t, e, s"early base, seed $seed")
         check(t, vs.last, s"head over base v$e, seed $seed")
       }
@@ -228,7 +228,7 @@ class LogFoldSpec extends SparkSpec {
       assert(TxLog.partitionColsOf(c) == TxLog.partitionColsOf(t))
       TxLog.setProps(c, Map.empty, Seq("clone-only.src")): Unit
       TxLog.versions(c).foreach(v => check(c, v, s"clone, seed $seed"))
-      TxLog.forgetTxnOutcomesForTest()
+      StampedCache.clearAllForTest()
       TxLog.versions(c).foreach(v => check(c, v, s"clone cold, seed $seed"))
       assert(!TxLog.sourcesAt(t).contains("clone-only.src"))
     } finally {
@@ -260,11 +260,11 @@ class LogFoldSpec extends SparkSpec {
       node.remove("partitionCols"): Unit
       Files.write(ck, om.writeValueAsBytes(node))
       (ckv to 22L).foreach { at =>
-        TxLog.forgetTxnOutcomesForTest()
+        StampedCache.clearAllForTest()
         check(t, at, s"v$ckv stripped")
         assert(TxLog.partitionColsOf(t, Some(at)) == Seq("lang"))
       }
-      TxLog.forgetTxnOutcomesForTest()
+      StampedCache.clearAllForTest()
       assert(TxLog.isBatchCommitted(t, 121L) && !TxLog.isBatchCommitted(t, 122L),
         s"watermark lost after stripping v$ckv")
     }

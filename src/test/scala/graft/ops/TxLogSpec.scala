@@ -910,6 +910,23 @@ class TxLogSpec extends SparkSpec {
     assert(v == TxLog.latestVersion(t2))
   }
 
+  test("txlog: each overwrite writer creates a table at a fresh path as an overwrite v0") {
+    val df = idsDf(0L to 9L)
+    val writers: Seq[(String, Path => Long)] = Seq(
+      "overwrite" -> (t => TxLog.overwrite(spark, df, t, "doc_id")),
+      "overwriteClustered" -> (t =>
+        TxLog.overwriteClustered(spark, df, t, "doc_id", col("doc_id") % 2, 2)),
+      "overwritePartitioned" -> (t => TxLog.overwritePartitioned(spark,
+        df.withColumn("part", col("doc_id") % 3), t, Seq("part"), "doc_id")))
+    writers.foreach { case (name, write) =>
+      val t = freshTable()
+      assert(write(t) == 0L, name)
+      assert(TxLog.history(t).map(h => (h._1, h._2)) == Seq((0L, "overwrite")), name)
+      assert(TxLog.readAt(spark, t).collect().map(_.getAs[Long]("doc_id")).sorted.toSeq ==
+        (0L to 9L), name)
+    }
+  }
+
   test("protocol: pre-feature logs are Empty; DV use auto-declares in the SAME commit") {
     import spark.implicits._
     val t = freshTable()

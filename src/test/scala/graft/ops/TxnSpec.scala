@@ -335,7 +335,7 @@ class TxnSpec extends SparkSpec {
       "precondition: the marker must live in the first participant's log")
     // drop the marker-hosting table entirely, then force COLD resolution
     deleteRec(a)
-    TxLog.forgetTxnOutcomesForTest()
+    StampedCache.clearAllForTest()
     // before the outcome-replication fix, resolution fell back to the
     // vanished marker, decided 'aborted', and the transferred rows
     // silently vanished from the surviving table
@@ -373,7 +373,7 @@ class TxnSpec extends SparkSpec {
     assert(reclaimed.exists(_.startsWith("_txnout/")), reclaimed.toString)
     assert(replicas().isEmpty, "the folded replica must be reclaimed")
     deleteRec(a)
-    TxLog.forgetTxnOutcomesForTest()
+    StampedCache.clearAllForTest()
     (a, b)
   }
 
