@@ -2,7 +2,7 @@ package graft.ops
 
 import java.nio.file.Path
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,9 +22,10 @@ import org.apache.spark.sql.functions._
   *                   assignments commit — same contract as TextIndex:
   *                   maintenance REFUSES a legacy index without it
   *                   rather than guess and corrupt. Its source files
-  *                   ([[TxLog.sourcesAt]]) are the corpus watermark
-  *                   (files already assigned), each increment's names
-  *                   riding its assignments commit.
+  *                   are the corpus watermark of
+  *                   [[DerivedIndex.pending]] (files already assigned),
+  *                   each increment's names riding its assignments
+  *                   commit.
   *   - `<ix>_cent`   the trained coarse quantizer `(cent_id, cent_emb)`,
   *                   corpus-scaled C, seeded + one integer-quantized
   *                   Lloyd update (bit-deterministic: exact int64 sums,
@@ -58,7 +59,7 @@ object AnnIndex {
 
   private def centDir(index: Path): Path = index.resolveSibling(index.getFileName + "_cent")
   private def cbDir(index: Path): Path = index.resolveSibling(index.getFileName + "_cb")
-  private def codesDir(index: Path): Path = index.resolveSibling(index.getFileName + "_codes")
+  private[ops] def codesDir(index: Path): Path = index.resolveSibling(index.getFileName + "_codes")
 
   /** The PQ sibling's fixed knobs — knn06's contract (64 dims padded,
     * 8 sub-quantizers, 2 Lloyd iterations; the clustered write lays
@@ -163,67 +164,53 @@ object AnnIndex {
     }
   }
 
-  /** Assign every live corpus file not yet in the watermark: the first
-    * call TRAINS the coarse quantizer on its batch and IS the build;
-    * later calls assign against the persisted centroids (one shared
-    * rule, so the index cannot drift) and land as ACID appends, one
-    * file per touched list. Idempotent and compaction-proof (id
-    * anti-join). Returns newly indexed vector count. */
+  /** Assign the increment [[DerivedIndex.pending]] finds, keyed on the
+    * id column: the first call TRAINS the coarse quantizer on its batch
+    * and IS the build; later calls assign against the persisted
+    * centroids (one shared rule, so the index cannot drift) and land as
+    * ACID appends, one file per touched list ([[DerivedIndex.commit]]).
+    * The arguments must match the recorded binding
+    * ([[DerivedIndex.bind]]). Returns newly indexed vector count. */
   def ensureIndexed(spark: SparkSession, corpus: Path, index: Path,
       idCol: String = "vec_id", embCol: String = "embedding",
       nClusters: Int = 8): Long = Jobs.labeled(spark, "ann ensureIndexed") {
-    import spark.implicits._
     graft.functions.VectorFunctions.registerAll(spark)
-    val bound = binding(index)
-    bound.foreach { case (i0, e0, n0) =>
-      require(i0 == idCol && e0 == embCol && n0 == nClusters,
-        s"index at $index is bound to (id=$i0, emb=$e0, clusters=$n0); " +
-          s"ensureIndexed called with ($idCol, $embCol, $nClusters)")
-    }
     val bind = Map("id_col" -> idCol, "emb_col" -> embCol, "n_clusters" -> nClusters.toString)
-    // a legacy index gets the binding on any call; a fresh one's rides
-    // its first commit
-    val built = TxLog.versions(index).nonEmpty
-    if (built && bound.isEmpty) TxLog.setProps(index, bind): Unit
-    val snap = TxLog.snapshotAt(corpus)
-    val indexed = TxLog.sourcesAt(index)
-    val newFiles = snap.files.filterNot(f => indexed(f.path))
-    if (newFiles.isEmpty) return 0L
-    // gated on the assignments, not the watermark (TextIndex.ensureIndexed)
-    val hasRows = built && TxLog.snapshotAt(index).files.nonEmpty
-    val vecs0 = TxLog.readFiles(spark, corpus, newFiles)
-    val vecs =
-      if (!hasRows) vecs0
-      else vecs0.join(
-        TxLog.readAt(spark, index).select(col(idCol)).distinct(),
-        Seq(idCol), "left_anti")
+    val built = DerivedIndex.bind(index, bind, "ensureIndexed")
+    val inc = DerivedIndex.pending(spark, corpus, index, idCol)(identity).getOrElse(return 0L)
+    val vecs = inc.rows
     val cent =
       if (TxLog.versions(centDir(index)).isEmpty) {
         val c = trainCentroids(spark, vecs, idCol, embCol).localCheckpoint(true)
         TxLog.append(spark, c, centDir(index), "cent_id", nParts = 1): Unit
         c
       } else TxLog.readAt(spark, centDir(index))
-    // the assigned count is OBSERVED during the checkpoint pass — no
-    // separate post-checkpoint count job (optimization r17; an empty
-    // observed map can only mean a zero-partition empty plan)
-    val obs = new org.apache.spark.sql.Observation
-    val assigned = assignAll(vecs, cent, idCol, embCol)
+    // the batch's and the assigned counts are both OBSERVED during the
+    // checkpoint pass — no separate count job (optimization r17)
+    val seen = new Observation
+    val obs = new Observation
+    val assigned = assignAll(vecs.observe(seen, count(lit(1)).as("n")), cent, idCol, embCol)
       .observe(obs, count(lit(1)).as("n"))
       .localCheckpoint(true)
-    val n = obs.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
+    val n = DerivedIndex.observed(obs, "n")
     // fail LOUDLY before the watermark advances: a degenerate build
     // (zero centroids trained, or an assignment that dropped every
     // vector) must not mark the corpus files indexed — that would leave
-    // an index permanently serving nothing while claiming coverage
-    require(n > 0 || vecs.isEmpty,
+    // an index permanently serving nothing while claiming coverage.
+    // With no centroid, adaptive execution drops the batch's side of the
+    // empty join and its count is never observed: the batch is read again
+    lazy val batchEmpty =
+      if (TxLog.snapshotAt(centDir(index)).files.exists(_.rows > 0))
+        DerivedIndex.observed(seen, "n") == 0
+      else vecs.isEmpty
+    require(n > 0 || batchEmpty,
       s"ANN index build at $index assigned 0 of the batch's vectors " +
         "(zero trained centroids?) — refusing to advance the watermark")
-    val props = if (built) Map.empty[String, String] else bind
-    val names = newFiles.map(_.path)
-    if (n == 0) TxLog.setProps(index, props, names): Unit
-    else TxLog.appendClustered(spark, assigned, index,
-      "cent_id", clusterCol = col("cent_id"), nClusters = nClusters,
-      props = props, sources = names): Unit
+    DerivedIndex.commit(index, inc, if (built) Map.empty else bind, n) { (props, names) =>
+      TxLog.appendClustered(spark, assigned, index,
+        "cent_id", clusterCol = col("cent_id"), nClusters = nClusters,
+        props = props, sources = names): Unit
+    }
     n
   }
 
@@ -260,14 +247,13 @@ object AnnIndex {
     p.get("id_col").map(id => (id, p("emb_col")))
   }
 
-  /** PQ-encode every live corpus file not yet in the codes watermark —
-    * the `pq => true` half of `CALL ann_index` (round-15 verdict #5:
-    * the knn06 four-table layout folded under the sibling convention).
-    * First call TRAINS the codebook on its batch (Pq.model — rank-
-    * seeded k-means per sub-space, knn06's knobs) and IS the build;
-    * later calls encode against the persisted codebook (a trained
-    * artifact never retrains — old codes stay valid). Watermark diff +
-    * id anti-join: idempotent under redelivery and compaction-proof.
+  /** PQ-encode the increment [[DerivedIndex.pending]] finds for the
+    * codes table — the `pq => true` half of `CALL ann_index` (round-15
+    * verdict #5: the knn06 four-table layout folded under the sibling
+    * convention). First call TRAINS the codebook on its batch (Pq.model
+    * — rank-seeded k-means per sub-space, knn06's knobs) and IS the
+    * build; later calls encode against the persisted codebook (a trained
+    * artifact never retrains — old codes stay valid).
     * The assignments half ([[ensureIndexed]]) and this half advance as
     * separate idempotent commits: a crash between them re-converges on
     * the next call (the streaming twin knn07 shows the one-transaction
@@ -275,65 +261,41 @@ object AnnIndex {
   def ensurePq(spark: SparkSession, corpus: Path, index: Path,
       idCol: String = "vec_id", embCol: String = "embedding"): Long =
       Jobs.labeled(spark, "ann ensurePq") {
-    import spark.implicits._
     graft.functions.VectorFunctions.registerAll(spark)
-    val bound = pqBinding(index)
-    bound.foreach { case (i0, e0) =>
-      require(i0 == idCol && e0 == embCol,
-        s"PQ sibling at ${codesDir(index)} is bound to (id=$i0, emb=$e0); " +
-          s"ensurePq called with ($idCol, $embCol)")
-    }
     val bind = Map("id_col" -> idCol, "emb_col" -> embCol, "dims" -> PqDims.toString,
       "m" -> PqM.toString)
-    val built = TxLog.versions(codesDir(index)).nonEmpty
-    if (built && bound.isEmpty) TxLog.setProps(codesDir(index), bind): Unit
-    val snap = TxLog.snapshotAt(corpus)
-    val coded = TxLog.sourcesAt(codesDir(index))
-    val newFiles = snap.files.filterNot(f => coded(f.path))
-    if (newFiles.isEmpty) return 0L
-    // gated on the codes, not the watermark (TextIndex.ensureIndexed)
-    val hasCodes = built && TxLog.snapshotAt(codesDir(index)).files.nonEmpty
-    val vecs0 = TxLog.readFiles(spark, corpus, newFiles)
-    // the anti-joined increment feeds the count AND the encode/train —
+    val built = DerivedIndex.bind(codesDir(index), bind, "ensurePq")
+    val inc = DerivedIndex.pending(spark, corpus, codesDir(index), idCol)(identity)
+      .getOrElse(return 0L)
+    // an anti-joined increment feeds the count AND the encode/train —
     // checkpoint it so the codes-table scan + anti-join run once (a
-    // fresh build's vecs is a bare parquet read: nothing to save); the
+    // fresh build's rows are a bare parquet read: nothing to save); the
     // increment count rides the checkpoint pass as an observed metric
-    val (vecs, n) =
-      if (!hasCodes) { val v = vecs0; (v, v.count()) }
-      else {
-        val obs = new org.apache.spark.sql.Observation
-        val v = vecs0.join(
-            TxLog.readAt(spark, codesDir(index)).select(col(idCol)).distinct(),
-            Seq(idCol), "left_anti")
-          .observe(obs, count(lit(1)).as("n"))
-          .localCheckpoint(true)
-        (v, obs.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L))
-      }
-    val props = if (built) Map.empty[String, String] else bind
-    val names = newFiles.map(_.path)
-    if (n == 0) TxLog.setProps(codesDir(index), props, names): Unit
-    else {
-      val codes =
-        if (TxLog.versions(cbDir(index)).isEmpty) {
-          val (codes0, cb) = Pq.model(vecs, idCol, embCol,
-            dims = PqDims, m = PqM, k = pqKOf(n), iters = PqIters)
-          val cbMat = cb.localCheckpoint(true)
-          require(cbMat.count() > 0,
-            s"PQ codebook training at ${cbDir(index)} yielded 0 codewords " +
-              "on a nonempty batch — refusing to advance the watermark")
-          TxLog.append(spark, cbMat, cbDir(index), "cid", nParts = 1): Unit
-          codes0
-        } else Pq.encode(vecs, TxLog.readAt(spark, cbDir(index)),
-          idCol, embCol, dims = PqDims, m = PqM)
-      TxLog.appendClustered(spark, codes, codesDir(index), idCol,
-        clusterCol = col("sub"), nClusters = PqSubClusters,
-        props = props, sources = names): Unit
+    val obs = new Observation
+    val vecs =
+      if (!inc.antiJoined) inc.rows
+      else inc.rows.observe(obs, count(lit(1)).as("n")).localCheckpoint(true)
+    val n = if (!inc.antiJoined) vecs.count() else DerivedIndex.observed(obs, "n")
+    DerivedIndex.commit(codesDir(index), inc, if (built) Map.empty else bind, n) {
+      (props, names) =>
+        val codes =
+          if (TxLog.versions(cbDir(index)).isEmpty) {
+            val (codes0, cb) = Pq.model(vecs, idCol, embCol,
+              dims = PqDims, m = PqM, k = pqKOf(n), iters = PqIters)
+            val cbMat = cb.localCheckpoint(true)
+            require(cbMat.count() > 0,
+              s"PQ codebook training at ${cbDir(index)} yielded 0 codewords " +
+                "on a nonempty batch — refusing to advance the watermark")
+            TxLog.append(spark, cbMat, cbDir(index), "cid", nParts = 1): Unit
+            codes0
+          } else Pq.encode(vecs, TxLog.readAt(spark, cbDir(index)),
+            idCol, embCol, dims = PqDims, m = PqM)
+        TxLog.appendClustered(spark, codes, codesDir(index), idCol,
+          clusterCol = col("sub"), nClusters = PqSubClusters,
+          props = props, sources = names): Unit
     }
     n
   }
-
-  final case class MaintainReport(vecsIndexed: Long, filesBefore: Long,
-      filesAfter: Long, dvsBefore: Long, dvsAfter: Long, reclaimed: Long)
 
   /** One idempotent pass returning the index to the freshly-built
     * shape: (1) assign corpus files not yet in the watermark (the
@@ -344,7 +306,7 @@ object AnnIndex {
     * built; (4) vacuum every sibling. The trained quantizer is never
     * retrained — serving through the rewrite is row-identical. */
   def maintain(spark: SparkSession, corpus: Path, index: Path,
-      vacuumKeep: Int = 1, vacuumMinAgeMs: Long = 0L): MaintainReport = {
+      vacuumKeep: Int = 1, vacuumMinAgeMs: Long = 0L): DerivedIndex.MaintainReport = {
     val (idCol, embCol, nClusters) = binding(index).getOrElse {
       if (TxLog.versions(index).isEmpty) ("vec_id", "embedding", 8) // fresh: maintain IS the build
       else throw new IllegalStateException(
@@ -354,7 +316,6 @@ object AnnIndex {
     }
     val indexedNew = ensureIndexed(spark, corpus, index, idCol, embCol, nClusters)
     val snap0 = TxLog.snapshotAt(index)
-    val dvs0 = snap0.files.count(_.dv.isDefined).toLong
     if (snap0.files.nonEmpty)
       TxLog.compactClustered(spark, index, "cent_id",
         clusterCol = col("cent_id"), nClusters = nClusters): Unit
@@ -369,15 +330,9 @@ object AnnIndex {
         TxLog.compactClustered(spark, codesDir(index), pqId,
           clusterCol = col("sub"), nClusters = PqSubClusters): Unit
     }
-    val reclaimed = Seq(index, centDir(index), cbDir(index), codesDir(index))
-      .map { t =>
-        if (TxLog.versions(t).isEmpty) 0
-        else TxLog.vacuum(t, keepVersions = math.max(1, vacuumKeep),
-          minAgeMs = vacuumMinAgeMs).size
-      }.sum.toLong
-    val snap1 = TxLog.snapshotAt(index)
-    MaintainReport(indexedNew, snap0.files.size.toLong, snap1.files.size.toLong,
-      dvs0, snap1.files.count(_.dv.isDefined).toLong, reclaimed)
+    DerivedIndex.report(indexedNew, snap0, index,
+      DerivedIndex.vacuum(Seq(index, centDir(index), cbDir(index), codesDir(index)),
+        vacuumKeep, vacuumMinAgeMs))
   }
 
   /** The same cure for the IVFADC pair (knn06's four tables): the
@@ -396,10 +351,7 @@ object AnnIndex {
     if (TxLog.snapshotAt(codes).files.nonEmpty)
       TxLog.compactClustered(spark, codes, "vec_id",
         clusterCol = col("sub"), nClusters = subClusters): Unit
-    Seq(assignments, codes).foreach { t =>
-      TxLog.vacuum(t, keepVersions = math.max(1, vacuumKeep),
-        minAgeMs = vacuumMinAgeMs): Unit
-    }
+    DerivedIndex.vacuum(Seq(assignments, codes), vacuumKeep, vacuumMinAgeMs): Unit
     (TxLog.snapshotAt(assignments).files.size.toLong,
       TxLog.snapshotAt(codes).files.size.toLong)
   }

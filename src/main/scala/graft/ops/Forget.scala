@@ -42,18 +42,16 @@ object Forget {
       keysForgotten: Long,
       postingsDeleted: Long)
 
-  /** Discovered sibling participants of `corpus` under `base`, with
-    * each one's key column: the text index keys on the cast `doc_id`
-    * postings column; the ANN index (and its PQ codes sibling) keys on
-    * the id column its binding property records. */
-  private def siblings(spark: SparkSession, base: Path,
-      name: String): Seq[(Path, String)] = {
+  /** The live participants among the text index `tix`, the ANN index
+    * `aix` and their siblings, with each one's key column: the text
+    * index keys on the cast `doc_id` postings column; the ANN index (and
+    * its PQ codes sibling) keys on the id column its binding property
+    * records. */
+  private def siblings(tix: Path, aix: Path): Seq[(Path, String)] = {
     def live(p: Path): Boolean =
       Files.isDirectory(p.resolve("_graft_log")) && TxLog.versions(p).nonEmpty
-    val tix = base.resolve(s"${name}_text_ix")
-    val pos = base.resolve(s"${name}_text_ix_pos")
-    val aix = base.resolve(s"${name}_ann_ix")
-    val codes = base.resolve(s"${name}_ann_ix_codes")
+    val pos = TextIndex.posDir(tix)
+    val codes = AnnIndex.codesDir(aix)
     val annId = if (live(aix)) AnnIndex.boundIdCol(aix) else None
     (if (live(tix)) Seq((tix, "doc_id")) else Nil) ++
       (if (live(pos)) Seq((pos, "doc_id")) else Nil) ++
@@ -74,8 +72,8 @@ object Forget {
     // one deterministic key set feeds every participant
     val k = keys.select(col(keyCol)).distinct().localCheckpoint(true)
     val nKeys = k.count()
-    val parts = siblings(spark, base, tableName)
     val tix = base.resolve(s"${tableName}_text_ix")
+    val parts = siblings(tix, base.resolve(s"${tableName}_ann_ix"))
     val ops: Seq[TxLog.TxnOp] =
       TxLog.TxnDeleteMor(corpus, k, keyCol) +:
         parts.map { case (table, idCol) =>

@@ -3,7 +3,7 @@ package graft.ops
 import java.nio.file.Path
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
@@ -24,9 +24,9 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   *    corpus binding `id_col`, `text_col`, `n_clusters`, set by the
   *    first postings commit. A crash can never leave them disagreeing
   *    with the postings of any version;
-  *    The postings log's source files ([[TxLog.sourcesAt]]) are the
-  *    indexed corpus files, the incremental-maintenance watermark: each
-  *    increment's names ride the postings commit that indexes them;
+  *    The postings log's source files are the indexed corpus files,
+  *    the watermark of [[DerivedIndex.pending]]: each increment's names
+  *    ride the postings commit that indexes them;
   *  - `<index>_tstats`: the term dictionary [[searchBm25BlockMax]]
   *    prunes with; its `refreshed_at` property is the index's
   *    `n_deleted` as of the postings its exact rebuild read, and its
@@ -54,11 +54,11 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   * Spark: it is the independent exact reference the others are checked
   * against.
   *
-  * Maintenance: [[ensureIndexed]] indexes corpus files not yet in the
-  * watermark, anti-joined on doc_id against the already-indexed docs so
-  * it is IDEMPOTENT under redelivery and correct across corpus
-  * compaction (a rewritten file re-presents old docs; the guard keeps
-  * their postings single). [[pruneDeleted]] merge-on-read deletes the
+  * Maintenance: [[ensureIndexed]] and [[ensurePositional]] index the
+  * increment [[DerivedIndex.pending]] finds, keyed on doc_id, and
+  * publish it through [[DerivedIndex.commit]]: idempotent under
+  * redelivery and correct across corpus compaction. [[pruneDeleted]]
+  * merge-on-read deletes the
   * postings of removed documents (churn-sized — the caller knows its
   * deleted keys, the GDPR flow). All document-granular: corpus
   * compaction never invalidates postings the way it invalidates
@@ -72,7 +72,7 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   * / pruneDeleted / maintain) assumes a SINGLE maintainer per index —
   * the standard shape for derived-artifact jobs (one stream, one cron).
   * Within that contract every entry point is idempotent under crash
-  * and redelivery (watermark diff + doc_id anti-join; prune no-ops on
+  * and redelivery ([[DerivedIndex.pending]]; prune no-ops on
   * already-pruned keys). Two maintainers racing the SAME index could
   * each observe the pre-append watermark and double-index a file —
   * serialize them upstream (the streaming twins do: one query, ordered
@@ -151,12 +151,12 @@ object TextIndex {
     }
   }
 
-  /** Index every live corpus file not yet in the watermark: postings
+  /** Index the increment [[DerivedIndex.pending]] finds: postings
     * range-clustered by term_hash with the statistics and the files'
-    * names in the same commit, then the dictionary slice. New files with
-    * no new docs (a corpus compaction) record their names in one
-    * data-less index commit. Returns the number of newly indexed
-    * documents. First call on an empty index IS the build.
+    * names in the same commit ([[DerivedIndex.commit]]), then the
+    * dictionary slice. Returns the number of newly indexed documents.
+    * First call on an empty index IS the build; the arguments must match
+    * the binding the index records ([[DerivedIndex.bind]]).
     *
     * Each postings commit that adds rows advances the index's
     * `increments` property, and each dictionary commit records the
@@ -168,56 +168,27 @@ object TextIndex {
   def ensureIndexed(spark: SparkSession, corpus: Path, index: Path,
       idCol: String = "doc_id", textCol: String = "text",
       nClusters: Int = 8): Long = Jobs.labeled(spark, "text ensureIndexed") {
-    // args-vs-binding consistency: an index already bound to one
-    // (id, text, clusters) triple must not ingest under another
-    val bound = binding(index)
-    bound.foreach { case (i0, t0, n0) =>
-      require(i0 == idCol && t0 == textCol && n0 == nClusters,
-        s"index at $index is bound to (id=$i0, text=$t0, clusters=$n0); " +
-          s"ensureIndexed called with ($idCol, $textCol, $nClusters)")
-    }
     val bind = Map("id_col" -> idCol, "text_col" -> textCol, "n_clusters" -> nClusters.toString)
-    val built = TxLog.versions(index).nonEmpty
-    val st0 = if (built) scalarsAt(index) else Scalars(0L, 0L, 0L, 0L)
-    // backfill the binding even on a no-op call, so a legacy index (no
-    // binding property) becomes maintainable after one explicit
-    // ensureIndexed with its original arguments. A fresh index's
-    // binding rides its first commit
-    if (built && bound.isEmpty) TxLog.setProps(index, bind): Unit
-    // the anti-join gate is the postings, not the watermark: an index
-    // built before its names rode its commits has postings and no
-    // sources, and its first call here re-presents every corpus file
-    lazy val hasPostings = built && TxLog.snapshotAt(index).files.nonEmpty
+    val st0 = if (TxLog.versions(index).nonEmpty) scalarsAt(index) else Scalars(0L, 0L, 0L, 0L)
+    val built = DerivedIndex.bind(index, bind, "ensureIndexed")
     val hadDict = TxLog.versions(tstatsDir(index)).nonEmpty
     val dictBehind = built && (
       if (hadDict) TxLog.propsAt(tstatsDir(index)).get("increments").fold(0L)(_.toLong) !=
         st0.increments
-      else hasPostings)
+      else TxLog.snapshotAt(index).files.nonEmpty)
     if (dictBehind) rebuildDictionary(spark, index, TxLog.latestVersion(index), -1L, nClusters)
-    val snap = TxLog.snapshotAt(corpus)
-    val indexed = TxLog.sourcesAt(index)
-    val newFiles = snap.files.filterNot(f => indexed(f.path))
-    if (newFiles.isEmpty) return 0L
-    val docs = TxLog.readFiles(spark, corpus, newFiles)
-    // idempotency + compaction correctness: a rewritten file re-presents
-    // docs the index already carries — their postings must stay single.
-    // The anti-join runs at DOC level, BEFORE the explode (optimization
+    // the anti-join runs at DOC level, BEFORE the explode (optimization
     // r17, guide §3.3 "join first on the un-exploded key and explode
-    // after"): the old posting-level join shuffled |new postings| rows
-    // where |new docs| carries the same decision.
-    val docRows0 = docs.select(col(idCol).cast("long").as("doc_id"),
-      split(col(textCol), " ").as("__ws"))
-    val docRows =
-      if (!hasPostings) docRows0
-      else docRows0.join(
-        TxLog.readAt(spark, index).select(col("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
+    // after"): a posting-level join would shuffle |new postings| rows
+    // where |new docs| carries the same decision
+    val inc = DerivedIndex.pending(spark, corpus, index, "doc_id")(words(idCol, textCol))
+      .getOrElse(return 0L)
     // (n_new, len_new) OBSERVED during the checkpoint pass (one live row
     // per doc_id in a snapshot — the TxLog append invariant — so the
     // doc-level count/sum equal the old per-doc aggregate), replacing a
     // separate post-checkpoint aggregation job
-    val obs = new org.apache.spark.sql.Observation
-    val fresh = docRows
+    val obs = new Observation
+    val fresh = inc.rows
       .select(col("doc_id"), size(col("__ws")).as("dl"), col("__ws"))
       .observe(obs, count(lit(1)).as("n"),
         coalesce(sum(col("dl")), lit(0L)).as("len"))
@@ -228,18 +199,11 @@ object TextIndex {
         col("doc_id"), col("tf"), col("dl"))
     // the fresh postings feed the clustered write AND the dictionary agg
     val mat = fresh.localCheckpoint(true)
-    // an all-anti-joined increment (compaction redelivery) can coalesce
-    // to a ZERO-partition plan under AQE: no task runs, so the observed
-    // map comes back empty — which can only mean zero rows
-    val om = obs.get
-    val nNew = om.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
-    val lenNew = om.get("len").map(_.asInstanceOf[Long]).getOrElse(0L)
+    val nNew = DerivedIndex.observed(obs, "n")
     val props = (if (built) Map.empty[String, String] else bind) ++ Map(
       "n_docs" -> (st0.nDocs + nNew).toString,
-      "total_len" -> (st0.totalLen + lenNew).toString)
-    val names = newFiles.map(_.path)
-    if (nNew == 0) TxLog.setProps(index, props, names): Unit
-    else {
+      "total_len" -> (st0.totalLen + DerivedIndex.observed(obs, "len")).toString)
+    DerivedIndex.commit(index, inc, props, nNew) { (props, names) =>
       val increments = "increments" -> (st0.increments + 1).toString
       val pv = TxLog.appendClustered(spark, mat, index, "term_hash",
         clusterBucket(nClusters), nClusters, props = props + increments, sources = names)
@@ -261,6 +225,11 @@ object TextIndex {
     }
     nNew
   }
+
+  /** The corpus rows a text increment tokenizes: the id cast to the
+    * postings' `doc_id` and the whitespace-split words. */
+  private def words(idCol: String, textCol: String)(docs: DataFrame): DataFrame =
+    docs.select(col(idCol).cast("long").as("doc_id"), split(col(textCol), " ").as("__ws"))
 
   /** Replace the dictionary (create it, when missing) with one slice per
     * term from all live postings at version `v`, bound to `sliceVer` (-1 = unbound: block-max
@@ -458,9 +427,10 @@ object TextIndex {
     * total at most [[DriverServeBytes]] ([[servesOnDriver]]), every read
     * above goes through [[TxLog.readLocal]] and the ranking through
     * [[bm25RankLocal]], and the k rows come back as a local relation —
-    * zero Spark jobs, the call plus its collect included. A stale call
-    * ranks the complete lists its df recount already read. Otherwise the
-    * same plan runs as Spark reads and [[bm25Rank]]. Dictionary misses
+    * zero Spark jobs, the call plus its collect included. Otherwise the
+    * same plan runs as Spark reads and [[bm25Rank]]. A stale call, on
+    * either path, ranks the complete lists its df recount read, so it
+    * reads each query term's postings files once. Dictionary misses
     * are always read on the driver (a few footer-pruned rows). Unit
     * selection, file choice and the report are the same either way. */
   def searchBm25BlockMax(spark: SparkSession, index: Path, terms: Seq[String],
@@ -509,7 +479,6 @@ object TextIndex {
           }
       }
     }.map(d => U(d.term, termHash(d.term), d.df, d.bound, d.pairs, d.ver))
-    def postings(t: String) = pointRead(spark, index, snap.version, t)
     // the driver path's postings of one term in `files`, DVs applied
     def readPostings(t: String, h: Long, files: Seq[TxLog.AddFile]): Vector[Posting] =
       TxLog.readLocal(spark, index, files, Seq("term", "doc_id", "tf", "dl"),
@@ -523,18 +492,20 @@ object TextIndex {
     val refreshedAt = TxLog.propsAt(tstatsDir(index), Some(dictVer))
       .get("refreshed_at").fold(-1L)(_.toLong)
     val stale = sc.nDeleted != refreshedAt || snap.files.exists(_.dv.isDefined)
-    // stale driver path: each term's live pruned list, read once for
-    // the df recount, θ̂ and the ranking
+    // stale: each term's live pruned list, read ONCE for the df
+    // recount, θ̂ and the ranking — on the driver as postings, through
+    // Spark into the block store
     lazy val fullLists: Map[String, Vector[Posting]] = distinct.map { t =>
       val h = termHash(t)
       t -> readPostings(t, h, TxLog.pruneFiles(snap, h, h))
     }.toMap
+    lazy val fullRel = distinct.map(t => pointRead(spark, index, snap.version, t))
+      .reduce(_ unionByName _).localCheckpoint(true)
     val dfExact: Map[String, Long] =
       if (!stale) units.groupBy(_.term).view.mapValues(_.map(_.df).sum).toMap
       else if (onDriver)
         fullLists.collect { case (t, ps) if ps.nonEmpty => t -> ps.size.toLong }
-      else distinct.map(postings).reduce(_ unionByName _)
-        .groupBy(col("term")).agg(count(lit(1)).as("df"))
+      else fullRel.groupBy(col("term")).agg(count(lit(1)).as("df"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val live = units.filter(u => dfExact.getOrElse(u.term, 0L) > 0)
     val filesFull = distinct.map(t =>
@@ -562,7 +533,7 @@ object TextIndex {
         val top = live.minBy(u => (-(idf(u.term) * u.bound), u.term, u.ver))
         if (onDriver) kth(bm25RankLocal(fullLists(top.term), dfLive, nDocs, avgdl, k))
         else {
-          val row = bm25Rank(postings(top.term), dfRel, stDf, k)
+          val row = bm25Rank(fullRel.filter(col("term") === top.term), dfRel, stDf, k)
             .agg(count(lit(1)).as("n"), coalesce(min(col("score")), lit(0.0)).as("kth"))
             .head
           if (row.getLong(0) < k) Double.NegativeInfinity else row.getDouble(1)
@@ -657,6 +628,7 @@ object TextIndex {
         ranked.map { case (id, s) => org.apache.spark.sql.Row(id, s) }.asJava, RankSchema),
         report)
     }
+    if (stale) return (bm25Rank(fullRel, dfRel, stDf, k), report)
     def postsIn(t: String, h: Long, fs: Seq[TxLog.AddFile]) =
       TxLog.readFiles(spark, index, fs)
         .filter(col("term_hash") === h && col("term") === lit(t))
@@ -695,9 +667,10 @@ object TextIndex {
     * 357 vs 246 ms), and from 2.8 MB on Spark won every query (7.2 MB:
     * 1,915 vs 794 ms): the driver decodes every row on one thread while
     * Spark's cost stays near its fixed job overhead. On a stale index the driver still won
-    * at 19 MB (2,100 vs 3,120 ms), since Spark reads the lists once for
-    * the df recount and again for the ranking; the one limit keeps to
-    * the fresh crossover. The crossover was measured while every
+    * at 19 MB (2,100 vs 3,120 ms), when Spark read the lists once for
+    * the df recount and again for the ranking; it now reads them once,
+    * and that crossover has not been measured again. The one limit
+    * keeps to the fresh crossover. The crossover was measured while every
     * driver-side parquet open still parsed Hadoop's default
     * configuration, a fixed cost per file that [[ParquetOpen]] has since
     * removed; the limit has not been measured again. */
@@ -735,53 +708,39 @@ object TextIndex {
     spark.createDataFrame(rows.map(_._3).toSeq.asJava, schema)
   }
 
-  private def posDir(index: Path): Path = index.resolveSibling(index.getFileName + "_pos")
+  private[ops] def posDir(index: Path): Path = index.resolveSibling(index.getFileName + "_pos")
 
   /** POSITIONAL postings — the OPTIONAL sibling table phrase queries
     * need: one row per term OCCURRENCE (term_hash, term, doc_id, pos),
     * range-clustered by term_hash like the frequency postings, with
-    * its own watermark (the `_pos` log's source files) under the same
-    * diff + doc_id-anti-join discipline (idempotent under redelivery,
-    * compaction-proof).
+    * its own watermark (the `_pos` log's source files), kept by the same
+    * [[DerivedIndex.pending]] / [[DerivedIndex.commit]] increment.
     * Kept separate from [[ensureIndexed]]'s table so BM25 serving
     * never pays the ~dl-times-larger occurrence rows. */
   def ensurePositional(spark: SparkSession, corpus: Path, index: Path,
       idCol: String = "doc_id", textCol: String = "text",
       nClusters: Int = 8): Long = {
     val pd = posDir(index)
-    val snap = TxLog.snapshotAt(corpus)
-    val indexed = TxLog.sourcesAt(pd)
-    val newFiles = snap.files.filterNot(f => indexed(f.path))
-    if (newFiles.isEmpty) return 0L
-    // gated on the postings, as in ensureIndexed
-    val hasPostings = TxLog.versions(pd).nonEmpty && TxLog.snapshotAt(pd).files.nonEmpty
-    val docs = TxLog.readFiles(spark, corpus, newFiles)
     // doc-level anti-join before the posexplode (guide §3.3): the
     // idempotency decision needs |new docs| rows, not |new occurrences|
-    val docRows0 = docs.select(col(idCol).cast("long").as("doc_id"),
-      split(col(textCol), " ").as("__ws"))
-    val docRows =
-      if (!hasPostings) docRows0
-      else docRows0.join(
-        TxLog.readAt(spark, pd).select(col("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
+    val inc = DerivedIndex.pending(spark, corpus, pd, "doc_id")(words(idCol, textCol))
+      .getOrElse(return 0L)
     // one tokenize pass: the occurrence rows feed the clustered write,
     // and the new-doc count is OBSERVED during the same checkpoint pass
     // (one live row per doc_id — the TxLog append invariant — so the
     // doc-level count equals the old post-checkpoint distinct count)
-    val obs = new org.apache.spark.sql.Observation
-    val fresh = docRows
+    val obs = new Observation
+    val mat = inc.rows
       .observe(obs, count(lit(1)).as("n"))
       .select(col("doc_id"), posexplode(col("__ws")).as(Seq("pos", "term")))
       .select(xxhash64(col("term")).as("term_hash"), col("term"),
         col("doc_id"), col("pos"))
-    val mat = fresh.localCheckpoint(true)
-    // empty observed map = zero-partition empty plan (see ensureIndexed)
-    val nNew = obs.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
-    val names = newFiles.map(_.path)
-    if (nNew == 0) TxLog.setProps(pd, Map.empty, names): Unit
-    else TxLog.appendClustered(spark, mat, pd, "term_hash",
-      clusterBucket(nClusters), nClusters, sources = names): Unit
+      .localCheckpoint(true)
+    val nNew = DerivedIndex.observed(obs, "n")
+    DerivedIndex.commit(pd, inc, Map.empty, nNew) { (_, names) =>
+      TxLog.appendClustered(spark, mat, pd, "term_hash",
+        clusterBucket(nClusters), nClusters, sources = names): Unit
+    }
     nNew
   }
 
@@ -898,11 +857,6 @@ object TextIndex {
       .withColumn("slice_ver", lit(sliceVer))
   }
 
-  /** What [[maintain]] did: docs newly indexed, postings files and DV
-    * sidecars before/after the re-cluster, dead files reclaimed. */
-  final case class MaintainReport(docsIndexed: Long, filesBefore: Long,
-    filesAfter: Long, dvsBefore: Long, dvsAfter: Long, reclaimed: Long)
-
   /** Index LIFECYCLE maintenance — the bloom index's vacuum discipline
     * applied to the postings. A long-lived index degrades two ways:
     * every incremental [[ensureIndexed]] appends its OWN clustered
@@ -910,9 +864,8 @@ object TextIndex {
     * lookup pays ~one file per increment), and [[pruneDeleted]] leaves
     * DV sidecars whose anti-join every read replays. This folds both
     * back to the freshly-built shape:
-    *   1. index corpus files not yet in the watermark (the binding
-    *      properties supply the id/text columns; the doc_id anti-join
-    *      keeps a compaction-rewritten corpus from doubling postings);
+    *   1. index the increment (the binding properties supply the
+    *      id/text columns; [[ensureIndexed]]);
     *   2. re-cluster ALL postings into nClusters range-DISJOINT files
     *      with DVs folded in (one distributed compactClustered job,
     *      one atomic commit — readers never block), restoring the
@@ -924,7 +877,7 @@ object TextIndex {
     * rows, new layout) — TextIndexSpec pins it, gate tix05 proves the
     * per-term file count returns to the clustered bound. */
   def maintain(spark: SparkSession, corpus: Path, index: Path,
-      vacuumKeep: Int = 1, vacuumMinAgeMs: Long = 0L): MaintainReport = {
+      vacuumKeep: Int = 1, vacuumMinAgeMs: Long = 0L): DerivedIndex.MaintainReport = {
     val (idCol, textCol, nClusters) = binding(index).getOrElse {
       if (TxLog.versions(index).isEmpty) ("doc_id", "text", 8) // fresh index: maintain IS the build
       else throw new IllegalStateException(
@@ -934,7 +887,6 @@ object TextIndex {
     }
     val indexedNew = ensureIndexed(spark, corpus, index, idCol, textCol, nClusters)
     val snap0 = TxLog.snapshotAt(index)
-    val dvs0 = snap0.files.count(_.dv.isDefined).toLong
     // NOTE (optimization r17): the compaction scan + the dictionary
     // rebuild's scan below are a deliberate TWO sequential parquet
     // passes over the postings. Fusing them through one
@@ -964,15 +916,9 @@ object TextIndex {
         TxLog.compactClustered(spark, posDir(index), "term_hash",
           clusterBucket(nClusters), nClusters): Unit
     }
-    val reclaimed = Seq(index, tstatsDir(index), posDir(index))
-      .map { t =>
-        if (TxLog.versions(t).isEmpty) 0
-        else TxLog.vacuum(t, keepVersions = math.max(1, vacuumKeep),
-          minAgeMs = vacuumMinAgeMs).size
-      }.sum.toLong
-    val snap1 = TxLog.snapshotAt(index)
-    MaintainReport(indexedNew, snap0.files.size.toLong, snap1.files.size.toLong,
-      dvs0, snap1.files.count(_.dv.isDefined).toLong, reclaimed)
+    DerivedIndex.report(indexedNew, snap0, index,
+      DerivedIndex.vacuum(Seq(index, tstatsDir(index), posDir(index)), vacuumKeep,
+        vacuumMinAgeMs))
   }
 
   /** One dictionary slice's facts for one term (the [[dictCache]]

@@ -39,7 +39,12 @@ class AnnIndexSpec extends SparkSpec {
     assert(AnnIndex.ensureIndexed(spark, corpus, index) == 0L) // idempotent
     // compaction rewrites corpus files under new names — no re-index
     TxLog.compact(spark, corpus, "vec_id")
-    assert(AnnIndex.ensureIndexed(spark, corpus, index) == 0L)
+    var redelivered = -1L
+    val jobs = jobsDuring { redelivered = AnnIndex.ensureIndexed(spark, corpus, index) }
+    assert(redelivered == 0L)
+    // the batch's row count rides the assignment pass; reading the
+    // anti-joined batch again to test it for rows costs 3 more jobs
+    assert(jobs <= 8, s"a compaction redelivery ran $jobs Spark jobs")
     val before = sortedRows(index)
     assert(AnnIndex.maxFilesPerCent(spark, index) > 1)
     val rep = AnnIndex.maintain(spark, corpus, index)
@@ -63,11 +68,26 @@ class AnnIndexSpec extends SparkSpec {
     // new vectors after the deletes: maintain picks them up too
     TxLog.append(spark, vecs(80L to 99L), corpus, "vec_id", nParts = 1)
     val rep = AnnIndex.maintain(spark, corpus, index)
-    assert(rep.vecsIndexed == 20L)
+    assert(rep.rowsIndexed == 20L)
     assert(rep.dvsBefore > 0 && rep.dvsAfter == 0)
     val ids = TxLog.readAt(spark, index).select("vec_id")
       .collect().map(_.getLong(0)).toSet
     assert(ids == ((0L to 99L).toSet -- Set(13L, 37L, 61L)))
+  }
+
+  test("a degenerate build (no centroid trained) is refused and leaves the watermark as it was") {
+    val base = Files.createTempDirectory("graft_annix5")
+    val corpus = base.resolve("corpus")
+    val index = base.resolve("ix")
+    // null embeddings quantize to nothing: zero centroids, zero assigned
+    TxLog.append(spark, vecs(0L to 19L).withColumn("embedding", lit(null).cast("array<float>")),
+      corpus, "vec_id", nParts = 1)
+    // and again on redelivery, now against the empty stored centroids
+    (1 to 2).foreach { _ =>
+      val ex = intercept[IllegalArgumentException](AnnIndex.ensureIndexed(spark, corpus, index))
+      assert(ex.getMessage.contains("refusing to advance the watermark"), ex.getMessage)
+      assert(TxLog.versions(index).isEmpty)
+    }
   }
 
   test("binding contracts: mismatch refused, legacy index refuses maintain, backfill restores") {
@@ -96,7 +116,7 @@ class AnnIndexSpec extends SparkSpec {
       .withColumnRenamed("vec_id", "id").withColumnRenamed("embedding", "emb"),
       corpus, "id", nParts = 1)
     val rep = AnnIndex.maintain(spark, corpus, legacy)
-    assert(rep.vecsIndexed == 10L)
+    assert(rep.rowsIndexed == 10L)
     assert(AnnIndex.maxFilesPerCent(spark, legacy) == 1)
   }
 

@@ -1,11 +1,16 @@
 package graft.ops
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 
@@ -18,8 +23,9 @@ import graft.SparkSpec
   * the serving path distinguishes: fresh, stale after `pruneDeleted`,
   * deletion vectors from a direct `deleteMor` on the index, maintained,
   * and a compacted index whose dictionary slices all name files
-  * rewritten since. */
-class BlockMaxServeSpec extends SparkSpec {
+  * rewritten since. A stale call through Spark reads each query term's
+  * postings files once. */
+class BlockMaxServeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val Vocab = 40
   private val Ghost = "zz_ghost"
@@ -110,5 +116,53 @@ class BlockMaxServeSpec extends SparkSpec {
     increment()
     TxLog.compact(spark, index, "term_hash"): Unit
     check("slices rewritten since", index, r)
+  }
+
+  /** Scans of each postings file of `index` (by file name) by the Spark
+    * queries `body` runs: every file-source scan of every executed plan,
+    * adaptive stages and subqueries included. */
+  private def postingsScans(index: Path)(body: => Unit): Map[String, Int] = {
+    val scanned = new ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        collectWithSubqueries(qe.executedPlan) { case s: FileSourceScanExec => s }
+          .flatMap(_.relation.location.inputFiles).foreach(scanned.add)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    jobsDuring(()): Unit // delivers the events of earlier queries first
+    spark.listenerManager.register(listener)
+    try jobsDuring(body): Unit finally spark.listenerManager.unregister(listener)
+    scanned.asScala.toSeq.filter(_.contains(s"/${index.getFileName}/"))
+      .map(f => f.substring(f.lastIndexOf('/') + 1)).groupBy(identity)
+      .view.mapValues(_.size).toMap
+  }
+
+  test("a stale call through Spark reads each query term's postings files once") {
+    import spark.implicits._
+    val r = new Random(7)
+    val base = Files.createTempDirectory("graft_bms_scans")
+    val corpus = base.resolve("corpus")
+    val index = base.resolve("ix")
+    (0 until 3).foreach { i =>
+      TxLog.append(spark, docs(r, i * 60L, 60), corpus, "doc_id", nParts = 2)
+      TextIndex.ensureIndexed(spark, corpus, index): Unit
+    }
+    val gone = Seq(5L, 61L, 130L).toDF("doc_id")
+    TxLog.deleteMor(spark, corpus, gone, "doc_id"): Unit
+    TextIndex.pruneDeleted(spark, index, gone): Unit
+    val snap = TxLog.snapshotAt(index)
+    for (terms <- Seq(Seq("w0"), Seq("w1", "w7", Ghost), Seq("w2", "w15", "w30")); k <- Seq(1, 10)) {
+      var served: Served = null
+      val scans = postingsScans(index) { served = blockMax(index, terms, k, viaSpark = true) }
+      assert(served.report.dfRecounted, s"$terms: the index is not stale")
+      // one scan of a file per query term whose hash range it holds
+      val lists = terms.distinct.flatMap { t =>
+        val h = TextIndex.termHash(t)
+        TxLog.pruneFiles(snap, h, h).map(f => f.path.substring(f.path.lastIndexOf('/') + 1))
+      }.groupBy(identity).view.mapValues(_.size).toMap
+      assert(scans == lists, s"$terms, k=$k: postings scans $scans, lists $lists")
+      assert(served.rows == TextIndex.searchBm25(spark, index, terms, k).collect().toSeq,
+        s"$terms, k=$k: ranking differs from searchBm25")
+    }
   }
 }

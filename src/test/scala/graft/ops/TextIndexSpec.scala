@@ -67,26 +67,54 @@ class TextIndexSpec extends SparkSpec {
   private def liveFiles(corpus: Path): Set[String] = TxLog.snapshotAt(corpus).files.map(_.path).toSet
 
   test("ensureIndexed is idempotent and survives corpus compaction without doubling postings") {
+    // every increment writer over one corpus (doc_id, text, embedding):
+    // the derived table each one keeps, and the call
     val base = Files.createTempDirectory("graft_tix2")
     val corpus = base.resolve("corpus")
     val index = base.resolve("ix")
-    TxLog.append(spark, corpusDf(0L to 49L), corpus, "doc_id", nParts = 2)
-    assert(TextIndex.ensureIndexed(spark, corpus, index) == 50L)
-    assert(TextIndex.ensureIndexed(spark, corpus, index) == 0L)
-    val before = TxLog.readAt(spark, index).count()
+    val ann = base.resolve("aix")
+    val writers: Seq[(Path, () => Long)] = Seq(
+      index -> (() => TextIndex.ensureIndexed(spark, corpus, index)),
+      base.resolve("ix_pos") -> (() => TextIndex.ensurePositional(spark, corpus, index)),
+      ann -> (() => AnnIndex.ensureIndexed(spark, corpus, ann, idCol = "doc_id")),
+      base.resolve("aix_codes") -> (() => AnnIndex.ensurePq(spark, corpus, ann, idCol = "doc_id")))
+    def name(t: Path) = t.getFileName.toString
+    TxLog.append(spark, corpusDf(0L to 49L).withColumn("embedding",
+        expr("transform(sequence(0, 63), d -> cast((doc_id * (d + 3)) % 17 as float))")),
+      corpus, "doc_id", nParts = 2)
+    writers.foreach { case (t, w) => assert(w() == 50L, name(t)) }
+    writers.foreach { case (t, w) => assert(w() == 0L, name(t)) }
+    val rows = writers.map { case (t, _) => t -> TxLog.readAt(spark, t).count() }.toMap
     // compaction rewrites every corpus file under new names — the
-    // watermark sees "new" files, the doc_id anti-join keeps postings single
+    // watermark sees "new" files, the id anti-join keeps rows single
     TxLog.compact(spark, corpus, "doc_id")
     val h0 = heads(base)
-    assert(TextIndex.ensureIndexed(spark, corpus, index) == 0L)
-    assert(TxLog.readAt(spark, index).count() == before)
-    // the names ride exactly one data-less index commit, and nothing else moves
+    writers.foreach { case (t, w) => assert(w() == 0L, name(t)) }
+    // the names ride exactly one data-less commit per derived table, and
+    // nothing else moves
     val h1 = heads(base)
-    assert(h1 == h0 + ("ix" -> (h0("ix") + 1L)))
-    assert(TxLog.addsAt(index, h1("ix")).isEmpty)
-    assert(liveFiles(corpus).subsetOf(TxLog.sourcesAt(index)))
-    assert(TextIndex.ensureIndexed(spark, corpus, index) == 0L)
+    assert(h1 == h0 ++ writers.map { case (t, _) => name(t) -> (h0(name(t)) + 1L) })
+    writers.foreach { case (t, _) =>
+      val v = h1(name(t))
+      assert(TxLog.addsAt(t, v).isEmpty, name(t))
+      assert(TxLog.sourcesAt(t, Some(v)) -- TxLog.sourcesAt(t, Some(v - 1)) == liveFiles(corpus),
+        name(t))
+      assert(liveFiles(corpus).subsetOf(TxLog.sourcesAt(t)), name(t))
+      assert(TxLog.readAt(spark, t).count() == rows(t), name(t))
+    }
+    writers.foreach { case (t, w) => assert(w() == 0L, name(t)) }
     assert(heads(base) == h1, "a second call committed")
+    // a binding argument other than the recorded one is refused by name
+    // (the positional sibling records no binding), and nothing commits
+    def refused(key: String)(call: => Long): Unit = {
+      val ex = intercept[IllegalArgumentException](call)
+      assert(ex.getMessage.contains(key), ex.getMessage)
+    }
+    refused("text_col")(TextIndex.ensureIndexed(spark, corpus, index, textCol = "body"))
+    refused("n_clusters")(AnnIndex.ensureIndexed(spark, corpus, ann, idCol = "doc_id",
+      nClusters = 4))
+    refused("id_col")(AnnIndex.ensurePq(spark, corpus, ann))
+    assert(heads(base) == h1, "a refused call committed")
   }
 
   test("an index whose postings predate its watermark catches up in one call, postings single") {
@@ -152,7 +180,7 @@ class TextIndexSpec extends SparkSpec {
     val servedBefore = TextIndex.searchBm25(spark, index, Seq("gamma", "rareword"), 20)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val rep = TextIndex.maintain(spark, corpus, index)
-    assert(rep.docsIndexed == 0L)
+    assert(rep.rowsIndexed == 0L)
     val after = TextIndex.filesForTerm(spark, index, "alpha")
     assert(after == 1, s"re-cluster should restore the one-file seek, got $after")
     val servedAfter = TextIndex.searchBm25(spark, index, Seq("gamma", "rareword"), 20)
@@ -176,7 +204,7 @@ class TextIndexSpec extends SparkSpec {
     // new corpus files since the last ensureIndexed: maintain indexes them
     TxLog.append(spark, corpusDf(60L to 79L), corpus, "doc_id", nParts = 1)
     val rep = TextIndex.maintain(spark, corpus, index)
-    assert(rep.docsIndexed == 20L)
+    assert(rep.rowsIndexed == 20L)
     assert(rep.dvsBefore >= 1L && rep.dvsAfter == 0L,
       s"DVs should fold: before=${rep.dvsBefore} after=${rep.dvsAfter}")
     val ids = TextIndex.searchBm25(spark, index, Seq("rareword"), 80)
@@ -311,7 +339,7 @@ class TextIndexSpec extends SparkSpec {
       .withColumnRenamed("doc_id", "id").withColumnRenamed("text", "body"),
       corpus, "id", nParts = 1)
     val rep = TextIndex.maintain(spark, corpus, legacy)
-    assert(rep.docsIndexed == 5L)
+    assert(rep.rowsIndexed == 5L)
     assert(TextIndex.searchBm25(spark, legacy, Seq("rareword"), 30)
       .collect().map(_.getLong(0)).toSet == Set(0L, 7L, 14L))
   }
