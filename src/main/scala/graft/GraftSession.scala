@@ -43,6 +43,10 @@ object GraftSession {
     // frees the name "avro" for graft's DSv2 source; runtime conf, so it
     // also applies to a reused (getOrCreate) session
     graft.sources.AvroDataSource.enable(spark)
+    // Every write task deserializes its job's Hadoop conf, whose ~1,100
+    // default keys each ship their source file as a GZIP stream; base confs
+    // without sources make every per-job copy small. Values are unchanged.
+    org.apache.spark.sql.graft.HadoopConfShims.stripProvenance(spark)
     spark
   }
 }

@@ -126,11 +126,11 @@ object AnnIndex {
     * index row is the corpus row + its home list). Flat broadcast rank
     * below Ann.TwoLevelMinCentroids; coarse→fine sqrt(C) decomposition
     * above it (same crossover as graft.ops.Ann, which owns the
-    * fixed-schema variant the sim gates pin). */
-  private[ops] def assignAll(vecs: DataFrame, cent: DataFrame,
+    * fixed-schema variant the sim gates pin). `c` is `cent`'s row count,
+    * which the caller knows from the log. */
+  private[ops] def assignAll(vecs: DataFrame, cent: DataFrame, c: Long,
       idCol: String, embCol: String): DataFrame = {
     val keep = vecs.columns.map(col)
-    val c = cent.count()
     if (c <= Ann.TwoLevelMinCentroids) {
       val w = Window.partitionBy(col(idCol))
         .orderBy(col("__a_cos").desc, col("cent_id").asc)
@@ -185,11 +185,16 @@ object AnnIndex {
         TxLog.append(spark, c, centDir(index), "cent_id", nParts = 1): Unit
         c
       } else TxLog.readAt(spark, centDir(index))
+    // the live centroid count, from the log's file stats: no count job
+    val nCent = TxLog.snapshotAt(centDir(index)).files.map { f =>
+      f.rows - TxLog.dvKeysFor(centDir(index), f).fold(0)(_._2.size)
+    }.sum
     // the batch's and the assigned counts are both OBSERVED during the
     // checkpoint pass — no separate count job (optimization r17)
     val seen = new Observation
     val obs = new Observation
-    val assigned = assignAll(vecs.observe(seen, count(lit(1)).as("n")), cent, idCol, embCol)
+    val assigned = assignAll(vecs.observe(seen, count(lit(1)).as("n")), cent, nCent,
+      idCol, embCol)
       .observe(obs, count(lit(1)).as("n"))
       .localCheckpoint(true)
     val n = DerivedIndex.observed(obs, "n")
@@ -200,8 +205,7 @@ object AnnIndex {
     // With no centroid, adaptive execution drops the batch's side of the
     // empty join and its count is never observed: the batch is read again
     lazy val batchEmpty =
-      if (TxLog.snapshotAt(centDir(index)).files.exists(_.rows > 0))
-        DerivedIndex.observed(seen, "n") == 0
+      if (nCent > 0) DerivedIndex.observed(seen, "n") == 0
       else vecs.isEmpty
     require(n > 0 || batchEmpty,
       s"ANN index build at $index assigned 0 of the batch's vectors " +
