@@ -414,16 +414,6 @@ object VectorFunctions {
     }
   }
 
-  def vectorDot(spark: SparkSession, a: Column, b: Column): Column = {
-    registerAll(spark)
-    org.apache.spark.sql.functions.call_function("vector_dot", a, b)
-  }
-
-  def vectorCosine(spark: SparkSession, a: Column, b: Column): Column = {
-    registerAll(spark)
-    org.apache.spark.sql.functions.call_function("vector_cosine", a, b)
-  }
-
   def nearestCid(spark: SparkSession, q: Column, cs: Column): Column = {
     registerAll(spark)
     org.apache.spark.sql.functions.call_function("nearest_cid", q, cs)

@@ -218,11 +218,6 @@ object AnnIndex {
     n
   }
 
-  /** Files a single list's probe must touch — the pruning-power audit,
-    * decided from driver metadata alone, no data read. */
-  def filesForCent(index: Path, centId: Long): Int =
-    TxLog.pruneFilesOn(TxLog.snapshotAt(index), "cent_id", centId, centId).size
-
   /** Max files-per-probe over every trained list — centroid-count-sized
     * driver work (C stats lookups on one snapshot). After [[maintain]]
     * this is exactly 1: the clustered bound. */

@@ -222,7 +222,6 @@ object BiffXls {
   private final class Cursor(b: Array[Byte], segs: Vector[Rec], path: String) {
     private var seg = 0
     private var pos = 0
-    def atBoundary: Boolean = pos == segs(seg).len && seg + 1 < segs.size
     private def ensure(): Unit = {
       var guard = 0
       while (pos >= segs(seg).len && seg + 1 < segs.size) {

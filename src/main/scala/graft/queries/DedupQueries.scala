@@ -490,9 +490,7 @@ object DedupQueries {
       // SHARED per-JVM artifact (er06 pins the identical set; deriving
       // it twice measured the same registry scan twice)
       val stop = erStopPinned(spark, dir)
-      erCleanupHook
-      val table = Files.createTempDirectory("graft_er").resolve("links05")
-      erLinksTables.put(s"er05:$dir:${table.getParent}", table): Unit
+      val table = SharedBases.tempDir("graft_er").resolve("links05")
       // nParts = 0: the pair relation leaves its aggregate already in
       // post-shuffle layout — the old repartition(defaultParallelism)
       // forced one more full exchange of every pair PLUS the round-robin
@@ -546,12 +544,10 @@ object DedupQueries {
       val isNew = col("doc_id") % 10 === 7
       // the SAME pinned stop set er05 builds with — shared per-JVM
       val stop = erStopPinned(spark, dir)
-      erCleanupHook
-      val work = Files.createTempDirectory("graft_er")
+      val work = SharedBases.tempDir("graft_er")
       val links = work.resolve("links06")
       val bronze = work.resolve("bronze06")
       val seen = work.resolve("seen06")
-      erLinksTables.put(s"er06:$dir:$work", links): Unit
       def dtOf(names: DataFrame) = erTris(
         names.select(col("doc_id").as("dirty_id"), col("dname")), "dirty_id", "dname")
       def ctOf(names: DataFrame) = erTris(
@@ -813,47 +809,28 @@ object DedupQueries {
   // relation — trained/derived once per JVM and shared read-only
   // (localCheckpointed); each gate still proves ITS maintained table
   // multiset-equal to this reference in-engine.
-  private val erRefMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** The pinned stop set over the er05/er06 base registry (clean docs
     * with doc_id % 10 != 7 of the % 3 = 0 sub-corpus). */
   private def erStopPinned(spark: SparkSession, dir: String): DataFrame =
-    erRefMemo.computeIfAbsent(s"erstop:$dir", { _ =>
-      SharedBases.timedBuild("erstop") {
-        val base = erBase(spark, dir).filter(col("doc_id") % 3 === 0)
-        val cleanOld = base.filter(col("doc_id") % 10 =!= 7)
-        val ctOld = erTris(cleanOld.withColumnRenamed("doc_id", "clean_id"),
-          "clean_id", "name")
-        erStop(ctOld, cleanOld.agg(count(lit(1)).as("n_clean")))
-      }
-    })
+    SharedBases.memo(s"erstop:$dir") {
+      val base = erBase(spark, dir).filter(col("doc_id") % 3 === 0)
+      val cleanOld = base.filter(col("doc_id") % 10 =!= 7)
+      val ctOld = erTris(cleanOld.withColumnRenamed("doc_id", "clean_id"),
+        "clean_id", "name")
+      erStop(ctOld, cleanOld.agg(count(lit(1)).as("n_clean")))
+    }
 
   /** The full-rebuild reference links over the % 3 = 0 sub-corpus with
     * the pinned stop set — er05's `full` and er06's `full` verbatim. */
-  private def erFullLinksRef(spark: SparkSession, dir: String): DataFrame = {
-    // resolved OUTSIDE the computeIfAbsent below: a mapping function
-    // must not re-enter the map (ConcurrentHashMap contract)
-    val stop = erStopPinned(spark, dir)
-    erRefMemo.computeIfAbsent(s"erfull:$dir", { _ =>
-      SharedBases.timedBuild("erfull") {
-        val base = erBase(spark, dir).filter(col("doc_id") % 3 === 0)
-        val dirty = erDirty(base)
-        val ctAll = erTris(base.withColumnRenamed("doc_id", "clean_id"),
-          "clean_id", "name")
-        val dtAll = erTris(dirty, "dirty_id", "dname")
-        erScore(dtAll, ctAll, stop).localCheckpoint(true)
-      }
-    })
-  }
-
-  // one persisted links table per corpus dir, built on first use and
-  // reclaimed by a JVM shutdown hook
-  private val erLinksTables = new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  private lazy val erCleanupHook: Unit = Runtime.getRuntime.addShutdownHook(
-    new Thread(() => erLinksTables.values.forEach { p =>
-      try TxLog.deleteTree(p.getParent) catch { case _: Throwable => () }
-    }))
+  private def erFullLinksRef(spark: SparkSession, dir: String): DataFrame =
+    SharedBases.memo(s"erfull:$dir") {
+      val base = erBase(spark, dir).filter(col("doc_id") % 3 === 0)
+      val dirty = erDirty(base)
+      val ctAll = erTris(base.withColumnRenamed("doc_id", "clean_id"),
+        "clean_id", "name")
+      val dtAll = erTris(dirty, "dirty_id", "dname")
+      erScore(dtAll, ctAll, erStopPinned(spark, dir)).localCheckpoint(true)
+    }
 
   /** The scored ER candidate pairs (dirty_id, clean_id, jaccard) —
     * shared by er01 (best-per-dirty pair report), er02 (entity
@@ -874,20 +851,15 @@ object DedupQueries {
     * never old-x-old rescoring), disk round-trip — is gated end-to-end
     * by er05 against both the full rebuild and the DuckDB oracle. */
   private def erPairs(spark: SparkSession, dir: String): DataFrame = {
-    val table = erLinksTables.computeIfAbsent(dir, _ => {
-      erCleanupHook
-      SharedBases.timedBuild("erlinks") {
-        val t = Files.createTempDirectory("graft_er").resolve("links")
-        // nParts = 0 (the er05 rationale): the scored pairs leave their
-        // aggregate already parallel — the old
-        // repartition(defaultParallelism) re-exchanged the FULL pair
-        // relation (plus round-robin's local sort) just to rename its
-        // partitioning after a local-core-count constant
-        TxLog.append(spark, erPairsDerive(spark, dir), t, "dirty_id"): Unit
-        t
-      }
-    })
-    TxLog.readAt(spark, table)
+    val fam = SharedBases.base(spark, s"erlinks:$dir") { b =>
+      // nParts = 0 (the er05 rationale): the scored pairs leave their
+      // aggregate already parallel — the old
+      // repartition(defaultParallelism) re-exchanged the FULL pair
+      // relation (plus round-robin's local sort) just to rename its
+      // partitioning after a local-core-count constant
+      TxLog.append(spark, erPairsDerive(spark, dir), b.resolve("links"), "dirty_id"): Unit
+    }
+    TxLog.readAt(spark, fam.resolve("links"))
   }
 
   // lazy: referenced from `defs`, which is declared earlier in this object

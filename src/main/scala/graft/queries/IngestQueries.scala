@@ -29,7 +29,7 @@ object IngestQueries {
       spark: SparkSession,
       key: String,
       rules: Seq[IngestionConfigRule])(write: Path => Unit): DataFrame = {
-    val base = Files.createTempDirectory("graft_ing")
+    val base = SharedBases.tempDir("graft_ing")
     val bucket = "data-ingestion-bucket"
     val filePath = base.resolve(bucket).resolve(key)
     Files.createDirectories(filePath.getParent)
@@ -95,7 +95,7 @@ object IngestQueries {
     * directory; the one part file is moved to the fixture path). */
   private def writeSparkFormat(spark: SparkSession, fmt: String, p: Path,
       build: SparkSession => DataFrame): Unit = {
-    val tmp = Files.createTempDirectory("graft_fmt")
+    val tmp = SharedBases.tempDir("graft_fmt")
     build(spark).coalesce(1).write.format(fmt).mode("overwrite").save(tmp.resolve("out").toString)
     val listing = Files.list(tmp.resolve("out"))
     val part = try listing.filter(f =>
@@ -190,7 +190,7 @@ object IngestQueries {
     // S8 via DataSource V2: many-file XLSX directory read (one partition
     // per file, by-name projection across differing headers).
     "ing10_excel_dsv2" -> ((spark: SparkSession, _: String) => {
-      val dir = Files.createTempDirectory("graft_dsv2")
+      val dir = SharedBases.tempDir("graft_dsv2")
       writeXlsx(dir.resolve("a.xlsx"), Seq(Seq("name", "age"), Seq("Alice", "28")))
       writeXlsx(dir.resolve("b.xlsx"), Seq(Seq("age", "name"), Seq("31", "Bob")))
       spark.read.format("xlsx").load(dir.toString)
@@ -204,7 +204,7 @@ object IngestQueries {
     // actual deployment path (couchdb/data_repo.rs:23-59) end-to-end.
     "ing11_couchdb_wire" -> ((spark: SparkSession, _: String) => {
       import spark.implicits._
-      val base = Files.createTempDirectory("graft_couch")
+      val base = SharedBases.tempDir("graft_couch")
       val bucket = "data-ingestion-bucket"
       val filePath = base.resolve(bucket).resolve("data").resolve("test.csv")
       Files.createDirectories(filePath.getParent)
@@ -338,7 +338,7 @@ object IngestQueries {
     // the Avro codec surfaces as a hash mismatch.
     "ing19_avro_roundtrip" -> ((spark: SparkSession, dir: String) => {
       graft.sources.AvroDataSource.enable(spark)
-      val out = Files.createTempDirectory("graft_avro_rt").resolve("docs")
+      val out = SharedBases.tempDir("graft_avro_rt").resolve("docs")
       spark.read.parquet(s"$dir/documents.parquet")
         .repartition(4)
         .write.format("avro").mode("overwrite").save(out.toString)
@@ -368,7 +368,7 @@ object IngestQueries {
     // Scan-local (the capture happens inside the CSV reader's codegen) —
     // no second pass over the file.
     "ing14_bad_records" -> ((spark: SparkSession, _: String) => {
-      val dir = Files.createTempDirectory("graft_bad")
+      val dir = SharedBases.tempDir("graft_bad")
       val p = dir.resolve("mixed.csv")
       Files.writeString(p,
         "name,age,city\nJohn,30,NYC\nBADLINE-ONLY-ONE-FIELD\nJane,25,LA\n")
@@ -393,7 +393,7 @@ object IngestQueries {
     // evolution. Footer-only schema merge, no data rewrite.
     "ing15_schema_evolution" -> ((spark: SparkSession, _: String) => {
       import spark.implicits._
-      val dir = Files.createTempDirectory("graft_evo")
+      val dir = SharedBases.tempDir("graft_evo")
       Seq(("Alice", 100L)).toDF("name", "value")
         .write.parquet(dir.resolve("drop=1").toString)
       Seq(("Bob", 200L, "eu-west")).toDF("name", "value", "region")
@@ -413,7 +413,7 @@ object IngestQueries {
     // SinkFactory exactly as DATABASE_TYPE=mongodb + MONGODB_URI would.
     "ing16_mongodb_wire" -> ((spark: SparkSession, _: String) => {
       import spark.implicits._
-      val base = Files.createTempDirectory("graft_mongo")
+      val base = SharedBases.tempDir("graft_mongo")
       val bucket = "data-ingestion-bucket"
       val filePath = base.resolve(bucket).resolve("data").resolve("test.csv")
       Files.createDirectories(filePath.getParent)
@@ -446,7 +446,7 @@ object IngestQueries {
     // migration.js: an OP_MSG insert of the rule documents.
     "ing17_mongodb_config" -> ((spark: SparkSession, _: String) => {
       import spark.implicits._
-      val base = Files.createTempDirectory("graft_mcfg")
+      val base = SharedBases.tempDir("graft_mcfg")
       val bucket = "data-ingestion-bucket"
       val filePath = base.resolve(bucket).resolve("data").resolve("test_no_headers.csv")
       Files.createDirectories(filePath.getParent)
@@ -533,7 +533,7 @@ object IngestQueries {
     // K4: audit log lifecycle — success and failure paths both recorded.
     "ing09_audit_log" -> ((spark: SparkSession, _: String) => {
       import spark.implicits._
-      val base = Files.createTempDirectory("graft_log")
+      val base = SharedBases.tempDir("graft_log")
       val bucket = "data-ingestion-bucket"
       Files.createDirectories(base.resolve(bucket).resolve("data"))
       Files.writeString(base.resolve(bucket).resolve("data/test.csv"), csvFixture)

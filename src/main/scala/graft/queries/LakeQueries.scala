@@ -49,21 +49,8 @@ object LakeQueries {
       col("doc_id").cast("bigint").as("doc_id"), col("text"), col("lang"),
       col("source"), col("n_chars").cast("bigint").as("n_chars"))
 
-  // every query builds its table in a fresh temp dir; a single JVM
-  // shutdown hook reclaims them all, so repeated sweeps (bench passes,
-  // scale factors) don't accumulate unbounded parquet under /tmp
-  private val tmpDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
-  private lazy val cleanupHook: Unit = Runtime.getRuntime.addShutdownHook(
-    new Thread(() => tmpDirs.forEach { p =>
-      try TxLog.deleteTree(p) catch { case _: Throwable => () }
-    }))
-
-  private def freshTable(): Path = {
-    cleanupHook
-    val d = Files.createTempDirectory("graft_tx")
-    tmpDirs.add(d)
-    d.resolve("tbl")
-  }
+  // every query builds its table in a fresh temp dir, deleted at JVM exit
+  private def freshTable(): Path = SharedBases.tempDir("graft_tx").resolve("tbl")
 
   /** max(doc_id)+1 — the equal-width denominator (1-row control-plane
     * agg, same role as zorder01's zmax). */
@@ -668,8 +655,7 @@ object LakeQueries {
       TxLog.append(spark, d.filter(col("doc_id") % 3 === 1), table, "doc_id", nParts = 2)
       TxLog.compact(spark, table, "doc_id", nParts = 1)
       TxLog.append(spark, d.filter(col("doc_id") % 3 === 2), table, "doc_id", nParts = 2)
-      val ckpt = Files.createTempDirectory("graft_tx16_ckpt")
-      tmpDirs.add(ckpt)
+      val ckpt = SharedBases.tempDir("graft_tx16_ckpt")
       val sink = s"tx16_sink_${math.abs(table.hashCode().toLong)}"
       val q = spark.readStream.format("graft-lake")
         .option("skipChangeCommits", "true")
@@ -701,8 +687,7 @@ object LakeQueries {
       (0 until 3).foreach { i =>
         TxLog.append(spark, d.filter(col("doc_id") % 3 === i), bronze, "doc_id", nParts = 2)
       }
-      val ckpt = Files.createTempDirectory("graft_tx17_ckpt")
-      tmpDirs.add(ckpt)
+      val ckpt = SharedBases.tempDir("graft_tx17_ckpt")
       val q = spark.readStream.format("graft-lake")
         .option("maxVersionsPerBatch", "1") // one bronze commit per micro-batch
         .load(bronze.toString)
@@ -741,8 +726,7 @@ object LakeQueries {
       TxLog.mergeMor(spark, src,
         d.filter(col("doc_id") % 10 === 8).withColumn("n_chars", col("n_chars") + 1000L),
         "doc_id", "doc_id")
-      val ckpt = Files.createTempDirectory("graft_tx18_ckpt")
-      tmpDirs.add(ckpt)
+      val ckpt = SharedBases.tempDir("graft_tx18_ckpt")
       val q = spark.readStream.format("graft-lake")
         .option("readChangeFeed", "true")
         .option("maxVersionsPerBatch", "1")
@@ -1092,8 +1076,7 @@ object LakeQueries {
            |WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *""".stripMargin)
       spark.sql(s"UPDATE $cat.tbl SET n_chars = n_chars * 3 WHERE lang = 'de'")
       spark.sql(s"DELETE FROM $cat.tbl WHERE doc_id % 17 = 6") // non-translatable: row-level
-      val ckpt = Files.createTempDirectory("graft_sql14_ckpt")
-      tmpDirs.add(ckpt)
+      val ckpt = SharedBases.tempDir("graft_sql14_ckpt")
       val q = spark.readStream.format("graft-lake")
         .option("readChangeFeed", "true")
         .option("maxVersionsPerBatch", "1")
@@ -1564,8 +1547,7 @@ object LakeQueries {
       TxLog.mergeCow(spark, src,
         d.filter(col("doc_id") % 10 === 8).withColumn("n_chars", col("n_chars") + 1000L),
         "doc_id", "doc_id")
-      val ckpt = Files.createTempDirectory("graft_tx20_ckpt")
-      tmpDirs.add(ckpt)
+      val ckpt = SharedBases.tempDir("graft_tx20_ckpt")
       val q = spark.readStream.format("graft-lake")
         .option("readChangeFeed", "true")
         .option("maxVersionsPerBatch", "1")
@@ -1695,8 +1677,7 @@ object LakeQueries {
       // two arrival commits, one micro-batch each
       TxLog.append(spark, d.filter(col("doc_id") % 4 === 1), table, "doc_id", nParts = 2)
       TxLog.append(spark, d.filter(col("doc_id") % 4 === 3), table, "doc_id", nParts = 2)
-      val ckpt = Files.createTempDirectory("graft_blix3_ckpt")
-      tmpDirs.add(ckpt)
+      val ckpt = SharedBases.tempDir("graft_blix3_ckpt")
       val q = spark.readStream.format("graft-lake")
         .option("maxVersionsPerBatch", "1")
         .load(table.toString)
@@ -1737,8 +1718,7 @@ object LakeQueries {
       // two arrival commits, one micro-batch each
       TxLog.append(spark, d.filter(col("doc_id") % 4 === 1), corpus, "doc_id", nParts = 2)
       TxLog.append(spark, d.filter(col("doc_id") % 4 === 3), corpus, "doc_id", nParts = 2)
-      val ckpt = Files.createTempDirectory("graft_tix3_ckpt")
-      tmpDirs.add(ckpt)
+      val ckpt = SharedBases.tempDir("graft_tix3_ckpt")
       val q = spark.readStream.format("graft-lake")
         .option("maxVersionsPerBatch", "1")
         .load(corpus.toString)
@@ -1990,8 +1970,7 @@ object LakeQueries {
         d.filter(col("doc_id") % 11 === 3).select("doc_id"), "doc_id"): Unit
       TxLog.deleteMor(spark, corpus,
         d.filter(col("doc_id") % 13 === 7).select("doc_id"), "doc_id"): Unit
-      val ckpt = Files.createTempDirectory("graft_tix6_ckpt")
-      tmpDirs.add(ckpt)
+      val ckpt = SharedBases.tempDir("graft_tix6_ckpt")
       val q = spark.readStream.format("graft-lake")
         .option("readChangeFeed", "true")
         .option("maxVersionsPerBatch", "1")
@@ -2183,8 +2162,7 @@ object LakeQueries {
       val index = fam.resolve("tbl_text_ix")
       TxLog.append(spark, d.filter(col("doc_id") % 4 === 1), corpus, "doc_id", nParts = 2)
       TxLog.append(spark, d.filter(col("doc_id") % 4 === 3), corpus, "doc_id", nParts = 2)
-      val ckpt = Files.createTempDirectory("graft_tix9_ckpt")
-      tmpDirs.add(ckpt)
+      val ckpt = SharedBases.tempDir("graft_tix9_ckpt")
       val q = spark.readStream.format("graft-lake")
         .option("maxVersionsPerBatch", "1")
         .load(corpus.toString)
@@ -2228,8 +2206,7 @@ object LakeQueries {
       // index tables' prunes per micro-batch
       TxLog.deleteMor(spark, corpus,
         kept.filter(col("doc_id") % 19 === 3).select("doc_id"), "doc_id"): Unit
-      val ckpt = Files.createTempDirectory("graft_c09_ckpt")
-      tmpDirs.add(ckpt)
+      val ckpt = SharedBases.tempDir("graft_c09_ckpt")
       val q = spark.readStream.format("graft-lake")
         .option("readChangeFeed", "true")
         .option("maxVersionsPerBatch", "1")
@@ -2533,8 +2510,7 @@ object LakeQueries {
       TxLog.append(spark, d0.filter(col("doc_id") % 5 === 0)
         .withColumn("doc_id", col("doc_id") + lit(span)), corr, "doc_id", nParts = 1)
       def drain(): Unit = {
-        val ckpt = Files.createTempDirectory("graft_tx24_ckpt")
-        tmpDirs.add(ckpt)
+        val ckpt = SharedBases.tempDir("graft_tx24_ckpt")
         val q = spark.readStream.format("graft-lake")
           .option("maxVersionsPerBatch", "1")
           .load(corr.toString)

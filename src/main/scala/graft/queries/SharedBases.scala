@@ -6,125 +6,123 @@ import org.apache.spark.sql.SparkSession
 
 import graft.ops.TxLog
 
-/** Cross-gate SHARED BUILD FAMILIES (optimization round 16, guide §1.2
-  * step 1: "don't compute things you throw away").
+/** The query layer's one memo and one temp-dir registry.
   *
-  * Several lifecycle gates open with the IDENTICAL deterministic build —
-  * e.g. tix01/tix04/tix06/sql24 all append the same two corpus halves
-  * and run the same one-shot text-index build before their distinct
-  * phases begin. Re-running that build once per gate (and once per bench
-  * pass) measures the same bytes being recomputed, not the operator
-  * under test. This extends the round-15 `ivfPqMemo` discipline
-  * (SimilarityQueries.buildLakeIvfPq, judged green twice) to every build
-  * shared by two or more gates: the canonical family builds ONCE per
-  * (key, corpus dir) per JVM, and
+  * Several gates open with the IDENTICAL deterministic build — e.g.
+  * tix01/tix04/tix06/sql24 all append the same two corpus halves and
+  * run the same one-shot text-index build before their distinct phases
+  * begin. Re-running that build once per gate (and once per bench pass)
+  * measures the same bytes being recomputed, not the operator under
+  * test. So every build shared by two or more gates goes through
+  * [[memo]]: it runs ONCE per key per JVM (keys name the corpus dir),
+  * and its wall time is charged to the family named by the key's
+  * prefix before ':', which graft.Bench reports as `__family_<name>`.
   *
-  *  - read-only consumers (search/serve gates) read the canonical
-  *    tables directly — they never mutate, so isolation is free;
-  *  - mutating consumers (delete/maintain/stream gates) receive a fresh
-  *    ZERO-COPY CLONE of the whole family (TxLog.cloneTable hardlinks —
-  *    one inode per shared data file, no bytes move), so their commits,
-  *    compactions and vacuums touch only their own log and links.
+  *  - [[memo]] holds any shared artifact: a localCheckpointed frame
+  *    (knn graph, PQ model, ER references), a count, or a FAMILY base
+  *    directory ([[base]]).
+  *  - [[tempDir]] is the one place a gate gets scratch space; one JVM
+  *    shutdown hook deletes every dir it handed out.
   *
-  * Nothing persists across JVMs: the memo is process-local, the tables
-  * live under fresh temp dirs reclaimed by a shutdown hook, and every
-  * bench/oracle invocation recomputes the builds from the parquet
-  * inputs. A FAMILY is a base directory holding the corpus table and
-  * every sibling artifact under their canonical names (`tbl`,
-  * `tbl_text_ix`, `tbl_text_ix_tstats`, ...), so sibling resolution and
-  * catalog registration work identically on the canonical base and on
-  * any clone.
+  * A FAMILY is a base directory holding the corpus table and every
+  * sibling artifact under their canonical names (`tbl`, `tbl_text_ix`,
+  * `tbl_text_ix_tstats`, ...), so sibling resolution and catalog
+  * registration work identically on the canonical base and on any
+  * clone. Read-only consumers (search/serve gates) read the canonical
+  * tables directly; mutating consumers (delete/maintain/stream gates)
+  * receive a fresh ZERO-COPY CLONE of the whole family ([[cloned]]:
+  * TxLog.cloneTable hardlinks, no bytes move), so their commits,
+  * compactions and vacuums touch only their own log and links.
+  *
+  * Nothing persists across JVMs: every bench/oracle invocation
+  * recomputes the builds from the parquet inputs.
   */
 private[graft] object SharedBases {
 
-  private val tmpDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
   private lazy val cleanupHook: Unit = Runtime.getRuntime.addShutdownHook(
-    new Thread(() => tmpDirs.forEach { p =>
+    new Thread(() => tempDirs.forEach { p =>
       try TxLog.deleteTree(p) catch { case _: Throwable => () }
     }))
 
-  private def freshBase(): Path = {
+  /** A fresh temp dir under `prefix`, deleted at JVM exit. */
+  def tempDir(prefix: String): Path = {
     cleanupHook
-    val d = Files.createTempDirectory("graft_shared")
-    tmpDirs.add(d)
+    val d = Files.createTempDirectory(prefix)
+    tempDirs.add(d)
     d
   }
 
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, Path]()
+  // The memo, the build-time accounting and the frame stack below are
+  // all guarded by one lock, `memoized`'s monitor: builds run one at a
+  // time, and a nested build runs on the thread that holds the lock.
+  private val memoized =
+    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
-  // ---- HONEST BENCH ACCOUNTING (optimization r17, VERDICT r16 item 3):
-  // each shared build's wall-clock is recorded under a short family name
-  // so graft.Bench can emit it as its own `__family_<name>` entry — the
-  // build cost no longer escapes the reported total via MIN-over-passes
-  // (pass 1 of the first consumer pays it; its memo-hit rerun became the
+  // Each shared build's wall-clock is recorded under its family name
+  // so graft.Bench can emit it as its own `__family_<name>` entry: the
+  // build cost does not escape the reported total via MIN-over-passes
+  // (pass 1 of the first consumer pays it; its memo-hit rerun is the
   // MIN). Per-JVM, reset never: a family builds once per JVM.
-  private val buildSecs =
-    new java.util.concurrent.ConcurrentHashMap[String, Double]()
+  private val buildSecs = scala.collection.mutable.Map.empty[String, Double]
+  private val frames = new java.util.ArrayDeque[Array[Double]]()
 
-  /** Time `f` and account it to family `name` (names are sanitized to
-    * the part before the first ':' so corpus dirs don't leak in). Used
-    * by [[base]] and by the sibling memo builders (knn graph, IVF-PQ,
-    * ER references) that predate SharedBases.
+  /** Time `f` and account it to family `name` (the part of the key
+    * before the first ':', so corpus dirs don't leak in).
     *
-    * NESTING-AWARE (optimization r17): family builds compose (ivfpq_full
-    * triggers ivfpq_base, ab1 builds from ab0, erfull needs erstop) —
-    * a naive wall-clock per frame charged the inner build to BOTH
-    * entries, inflating the bench total by the sum of every nested
-    * build (~10 s at sf0.1). Each frame now records its OWN time
-    * (wall − nested children); a child's full wall is charged to the
-    * parent's child-accumulator, so Σ __family_* equals the true
-    * combined build wall-clock. */
-  private val tlChild = new ThreadLocal[java.util.ArrayDeque[Array[Double]]] {
-    override def initialValue(): java.util.ArrayDeque[Array[Double]] =
-      new java.util.ArrayDeque[Array[Double]]()
-  }
-
-  def timedBuild[T](name: String)(f: => T): T = {
-    val stack = tlChild.get()
-    stack.push(Array(0.0))
+    * NESTING-AWARE: builds compose (ivfpq_full clones ivfpq_base, ab1
+    * builds from ab0, erfull needs erstop). Each frame records its OWN
+    * time (wall − nested children); a child's full wall is charged to
+    * the parent's frame, so Σ __family_* equals the true combined
+    * build wall-clock rather than counting a nested build in both
+    * entries. */
+  private def timedBuild[T](key: String)(f: => T): T = {
+    frames.push(Array(0.0))
     val t0 = System.nanoTime()
     try f
     finally {
       val sec = (System.nanoTime() - t0) / 1e9
-      val childSec = stack.pop()(0)
-      if (!stack.isEmpty) stack.peek()(0) += sec
-      buildSecs.merge(name.takeWhile(_ != ':'),
-        math.max(0.0, sec - childSec),
-        (a: Double, b: Double) => a + b): Unit
+      val childSec = frames.pop()(0)
+      if (!frames.isEmpty) frames.peek()(0) += sec
+      val name = key.takeWhile(_ != ':')
+      buildSecs(name) = buildSecs.getOrElse(name, 0.0) + math.max(0.0, sec - childSec)
     }
   }
 
   /** Seconds spent building each shared family this JVM (for Bench). */
-  def familyBuildSeconds: Map[String, Double] = {
-    import scala.jdk.CollectionConverters._
-    buildSecs.asScala.toMap
-  }
+  def familyBuildSeconds: Map[String, Double] =
+    memoized.synchronized(buildSecs.toMap)
 
-  /** The canonical (never-mutated) family for `key`, building it on
-    * first use. Callers must treat the returned base as READ-ONLY.
-    * NOT computeIfAbsent: family builds compose (ab1 builds from ab0),
-    * and a ConcurrentHashMap mapping function must not re-enter the
-    * map — a reentrant lock + double-check does the same job safely. */
-  def base(spark: SparkSession, key: String)(build: Path => Unit): Path = {
-    val hit = memo.get(key)
-    if (hit != null) return hit
-    memo.synchronized {
-      val again = memo.get(key)
-      if (again != null) return again
-      val b = freshBase()
-      timedBuild(key)(build(b))
-      memo.put(key, b)
-      b
+  /** The value for `key`, running `build` (timed under the key's family)
+    * on first use. Builds may nest: one reentrant lock plus a
+    * double-check, never `computeIfAbsent`, whose mapping function must
+    * not touch the map. A build that throws stores nothing, so the next
+    * call retries it. */
+  def memo[T](key: String)(build: => T): T = {
+    val hit = memoized.get(key)
+    if (hit != null) hit.asInstanceOf[T]
+    else memoized.synchronized {
+      val again = memoized.get(key)
+      if (again != null) again.asInstanceOf[T]
+      else {
+        val v = timedBuild(key)(build)
+        memoized.put(key, v.asInstanceOf[AnyRef])
+        v
+      }
     }
   }
+
+  /** The canonical (never-mutated) family for `key`, built into a fresh
+    * temp dir on first use. Callers must treat it as READ-ONLY. */
+  def base(spark: SparkSession, key: String)(build: Path => Unit): Path =
+    memo(key) { val b = tempDir("graft_shared"); build(b); b }
 
   /** A fresh zero-copy clone of a canonical family base: every TxLog
     * table under it is hardlink-cloned under the same name into a new
     * base dir. The clone diverges independently — mutating gates use
     * this. */
   def cloned(spark: SparkSession, src: Path): Path = {
-    val dst = freshBase()
+    val dst = tempDir("graft_shared")
     cloneInto(spark, src, dst)
     dst
   }

@@ -107,9 +107,6 @@ object Scram {
   def clientFirstBare(user: String, clientNonce: String): String =
     s"n=${escapeUsername(user)},r=$clientNonce"
 
-  def clientFirstMessage(user: String, clientNonce: String): String =
-    Gs2Header + clientFirstBare(user, clientNonce)
-
   /** Everything the client derives once it has the server-first reply.
     * `proofB64` goes in the client-final `p=`; `serverSignatureB64` is
     * what a genuine server must echo back in `v=`. */
