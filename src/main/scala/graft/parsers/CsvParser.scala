@@ -1,12 +1,10 @@
 package graft.parsers
 
-import org.apache.hadoop.fs.Path
-import org.apache.hadoop.mapreduce.TaskAttemptID
-import org.apache.hadoop.mapreduce.lib.input.{FileSplit, LineRecordReader}
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import com.univocity.parsers.csv.{CsvParser => UnivocityParser}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.csv.CSVOptions
-import org.apache.spark.sql.execution.datasources.csv.{CSVUtils, TextInputCSVDataSource}
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.domain.ParserConfig
 import graft.ports.RecordParser
@@ -36,7 +34,7 @@ object CsvParser extends RecordParser {
     * count of the first physical line. Spark's own header inference and a
     * `limit(1)` probe each launched a job per file — a large part of a
     * small drop's wall time — just to read that line. The scan then runs
-    * with the schema given, so it is the only job. `path` names one file. */
+    * with the schema given, so it is the only job. */
   override def parse(spark: SparkSession, path: String, config: Option[ParserConfig]): DataFrame = {
     val delimiter = config.flatMap(_.delimiter).getOrElse(",")
     val customHeaders = config.flatMap(_.headers)
@@ -51,35 +49,23 @@ object CsvParser extends RecordParser {
       case Some(headers) =>
         // Width of the first line decides how many column_{i} overflow
         // names we need (FAILFAST rejects ragged rows anyway).
-        val width = withLines(spark, path)(_.nextOption()).map(countFields(_, delimiter)).getOrElse(0)
+        val width = DriverFile.withLines(spark, path)(_.nextOption())
+          .map(line => countFields(line.toString, delimiter)).getOrElse(0)
         val names = headers ++ (headers.size until width).map(i => s"column_$i")
         StructType(names.map(n => StructField(n, StringType, nullable = true)))
       case None =>
+        // TextInputCSVDataSource.inferFromDataset with inferSchema=false:
+        // the de-duplicated first row, or no columns for an empty file
         val csvOptions = new CSVOptions(options, columnPruning = true,
           spark.conf.get("spark.sql.session.timeZone"))
-        val first = withLines(spark, path)(lines =>
-          CSVUtils.filterCommentAndEmpty(lines, csvOptions).nextOption())
-        TextInputCSVDataSource.inferFromDataset(
-          spark, spark.emptyDataset[String](Encoders.STRING), first, csvOptions)
+        val first = DriverFile.withLines(spark, path)(lines =>
+          CSVUtils.filterCommentAndEmpty(lines.map(_.toString), csvOptions).nextOption())
+        val header = first.flatMap(l => Option(new UnivocityParser(csvOptions.asParserSettings).parseLine(l)))
+          .map(CSVUtils.makeSafeHeader(_, SQLConf.get.caseSensitiveAnalysis, csvOptions))
+          .getOrElse(Array.empty[String])
+        StructType(header.map(StructField(_, StringType, nullable = true)))
     }
     spark.read.options(options).schema(schema).csv(path)
-  }
-
-  /** The lines of a file as Spark's text scan splits them (LF, CR or CRLF;
-    * a leading UTF-8 BOM dropped), read on the driver through the Hadoop
-    * FS. The codec comes from the file name (`CompressionCodecFactory`),
-    * so `.csv.gz` reads like `.csv`. Only the lines `f` pulls are read. */
-  private def withLines[T](spark: SparkSession, path: String)(f: Iterator[String] => T): T = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new Path(path)
-    val len = p.getFileSystem(conf).getFileStatus(p).getLen
-    val reader = new LineRecordReader()
-    try {
-      reader.initialize(new FileSplit(p, 0, len, Array.empty[String]),
-        new TaskAttemptContextImpl(conf, new TaskAttemptID()))
-      f(Iterator.continually(reader.nextKeyValue()).takeWhile(identity)
-        .map(_ => reader.getCurrentValue.toString))
-    } finally reader.close()
   }
 
   /** RFC-4180 field count: delimiters inside double-quoted fields don't

@@ -45,7 +45,8 @@ object ExcelParser extends RecordParser {
           val cells = r.take(headers.size).padTo(headers.size, null)
           Row.fromSeq(cells)
         }
-        spark.createDataFrame(spark.sparkContext.parallelize(data), schema)
+        // one partition: a bounded sheet lands as one file, not one per core
+        spark.createDataFrame(spark.sparkContext.parallelize(data, numSlices = 1), schema)
     }
   }
 

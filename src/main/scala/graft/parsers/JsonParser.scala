@@ -2,6 +2,7 @@ package graft.parsers
 
 import com.fasterxml.jackson.core.{JsonFactory, JsonProcessingException, JsonToken}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.json.GraftJsonSchema
 import graft.domain.ParserConfig
 import graft.domain.IngestionError.ParseError
 import graft.ports.RecordParser
@@ -19,6 +20,13 @@ import graft.ports.RecordParser
   * `_corrupt_record`), so the fallback checks the text first: only one
   * well-formed top-level scalar or array of scalars is wrapped; anything
   * else fails with a ParseError.
+  *
+  * Jobs: a file that fits in one scan split (`DriverFile.fitsOneSplit`)
+  * is the case Spark infers in one task. Its schema comes from Spark's
+  * own inferrer run on the driver over the decompressed stream
+  * (`GraftJsonSchema.inferDocument`), the scan runs with that schema, and
+  * the scalar fallback reads the text on the driver too, so the sink's
+  * write is the only job. A larger file keeps Spark's inference job.
   */
 object JsonParser extends RecordParser {
 
@@ -28,31 +36,27 @@ object JsonParser extends RecordParser {
     * top-level-scalar document. */
   val MaxScalarBytes: Long = 16L * 1024 * 1024
 
+  private val MultiLine = Map("multiLine" -> "true")
+
   override def parse(spark: SparkSession, path: String, config: Option[ParserConfig]): DataFrame = {
-    val df = spark.read.option("multiLine", "true").json(path)
-    val cols = df.schema.fieldNames
-    if (cols.sameElements(Array("_corrupt_record")) || cols.isEmpty) {
-      // Top-level scalar or scalar array: re-read as json with a value wrap.
-      // globStatus (not getContentSummary) so glob paths — which the
-      // textFile read below accepts — size correctly instead of throwing.
-      val hPath = new org.apache.hadoop.fs.Path(path)
-      val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val matched = Option(fs.globStatus(hPath)).map(_.toSeq).getOrElse(Seq.empty)
-      val size =
-        if (matched.isEmpty) fs.getContentSummary(hPath).getLength // preserve FileNotFound semantics
-        else matched.map(st =>
-          if (st.isDirectory) fs.getContentSummary(st.getPath).getLength else st.getLen).sum
+    val schema =
+      if (DriverFile.fitsOneSplit(spark, path))
+        GraftJsonSchema.inferDocument(MultiLine, () => DriverFile.open(spark, path))
+      else spark.read.options(MultiLine).json(path).schema
+    if (schema.fieldNames.sameElements(Array("_corrupt_record")) || schema.isEmpty) {
+      // Top-level scalar or scalar array: the text itself, wrapped as `value`.
+      val size = DriverFile.status(spark, path).getLen
       if (size > MaxScalarBytes)
         throw new IllegalArgumentException(
           s"json scalar fallback refuses $path: $size bytes > $MaxScalarBytes " +
             "(not a top-level-scalar document; would buffer on the driver)")
-      import spark.implicits._
-      val raw = spark.read.textFile(path).collect().mkString("\n").trim
+      val raw = DriverFile.withLines(spark, path)(_.map(_.toString).mkString("\n")).trim
       if (!isScalarDocument(raw))
         throw ParseError(s"$path is malformed JSON, or JSON that is neither objects " +
           "nor a top-level scalar or array of scalars")
+      import spark.implicits._
       Seq(raw).toDF("value")
-    } else df
+    } else spark.read.options(MultiLine).schema(schema).json(path)
   }
 
   private val jsonFactory = new JsonFactory()

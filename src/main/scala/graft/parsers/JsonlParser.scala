@@ -1,6 +1,7 @@
 package graft.parsers
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.json.GraftJsonSchema
 import graft.domain.ParserConfig
 import graft.ports.RecordParser
 
@@ -14,9 +15,17 @@ import graft.ports.RecordParser
   * preserved; blank lines are skipped; a malformed line lands in
   * Spark's corrupt-record column rather than failing the file (the
   * PERMISSIVE lake discipline, same rationale as ing14).
+  *
+  * A file that fits in one scan split (`DriverFile.fitsOneSplit`) is the
+  * case Spark infers in one task: its lines are read on the driver and
+  * typed by Spark's own inferrer (`GraftJsonSchema.inferLines`), and the
+  * scan runs with that schema, so the sink's write is the only job. A
+  * larger file keeps Spark's inference job, whose tasks split the file.
   */
 object JsonlParser extends RecordParser {
 
   override def parse(spark: SparkSession, path: String, config: Option[ParserConfig]): DataFrame =
-    spark.read.json(path)
+    if (DriverFile.fitsOneSplit(spark, path))
+      spark.read.schema(DriverFile.withLines(spark, path)(GraftJsonSchema.inferLines(Map.empty, _))).json(path)
+    else spark.read.json(path)
 }

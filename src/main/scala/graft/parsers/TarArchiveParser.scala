@@ -102,6 +102,8 @@ object TarArchiveParser extends RecordParser {
             val flat = s"e${entries.size}-" + name.replace('/', '_')
             val dst = scratch.resolve(flat)
             val out = Files.newOutputStream(dst)
+            // registered after the dir, so deleted before it at exit
+            dst.toFile.deleteOnExit()
             val buf = new Array[Byte](64 * 1024)
             var left = size
             try {

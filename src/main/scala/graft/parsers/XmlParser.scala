@@ -1,6 +1,7 @@
 package graft.parsers
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.xml.GraftXmlSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.domain.ParserConfig
@@ -18,18 +19,26 @@ import graft.ports.RecordParser
   * Uses Spark 4's native XML source with attributePrefix="" to merge
   * attributes, then casts every leaf to string (the reference emitted
   * strings only) and flattens one struct level for nested children.
+  *
+  * Jobs: a file that fits in one scan split (`DriverFile.fitsOneSplit`)
+  * is the case Spark infers in one task. Its schema comes from Spark's
+  * own record inferrer run on the driver over the decompressed stream
+  * (`GraftXmlSchema.infer`), and the scan runs with that schema, so the
+  * sink's write is the only job. A larger file keeps Spark's inference
+  * job.
   */
 object XmlParser extends RecordParser {
 
   val RowTag = "record"
 
+  private[parsers] val Options = Map("rowTag" -> RowTag, "attributePrefix" -> "", "valueTag" -> "_value")
+
   override def parse(spark: SparkSession, path: String, config: Option[ParserConfig]): DataFrame = {
-    val raw = spark.read
-      .format("xml")
-      .option("rowTag", RowTag)
-      .option("attributePrefix", "")
-      .option("valueTag", "_value")
-      .load(path)
+    val reader = spark.read.format("xml").options(Options)
+    val inferred =
+      if (DriverFile.fitsOneSplit(spark, path)) GraftXmlSchema.infer(Options, () => DriverFile.open(spark, path))
+      else None
+    val raw = inferred.fold(reader.load(path))(reader.schema(_).load(path))
 
     if (raw.schema.isEmpty)
       throw ParseError(s"no <$RowTag> elements found in $path")

@@ -35,6 +35,10 @@ import graft.ports.RecordParser
   * Every row carries `source_entry` (the entry name inside the archive)
   * so per-entry lineage survives the union — the T3/T4 enrichment
   * discipline applied inside the container.
+  *
+  * The returned DataFrame reads the scratch files lazily, so they are
+  * deleted at JVM exit: the dir and then each entry are registered with
+  * `deleteOnExit`, which deletes in reverse order, entries before the dir.
   */
 object ZipArchiveParser extends RecordParser {
 
@@ -68,6 +72,8 @@ object ZipArchiveParser extends RecordParser {
           val flat = s"e${entries.size}-" + e.getName.replace('/', '_')
           val dst = scratch.resolve(flat)
           val out = Files.newOutputStream(dst)
+          // registered after the dir, so deleted before it at exit
+          dst.toFile.deleteOnExit()
           val buf = new Array[Byte](64 * 1024)
           var entryBytes = 0L
           try {

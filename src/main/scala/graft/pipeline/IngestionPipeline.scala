@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import java.sql.Timestamp
+import scala.collection.immutable.ListMap
 import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -69,9 +70,10 @@ final class IngestionPipeline(
   }
 
   /** T3 + T4: stamp file_name ("bucket/key", ingestion_service.rs:85-87)
-    * and log_id (mongodb/data_repo.rs:37-39) on every row. Literal columns
-    * are free at scale (constant-folded, no shuffle). */
+    * and log_id (mongodb/data_repo.rs:37-39) on every row, in that order;
+    * a parsed column of either name is replaced in place. Literal columns
+    * are free at scale (constant-folded, no shuffle), and one
+    * `withColumns` builds and analyzes one plan, not one per column. */
   def enrich(df: DataFrame, file: FileToProcess, logId: String): DataFrame =
-    df.withColumn("file_name", lit(file.fileName))
-      .withColumn("log_id", lit(logId))
+    df.withColumns(ListMap("file_name" -> lit(file.fileName), "log_id" -> lit(logId)))
 }

@@ -18,7 +18,9 @@ trait FileSource {
   def resolve(file: FileToProcess): String
 }
 
-/** Parses one file into a DataFrame. reference port: ports.rs:11-14. */
+/** Parses one file into a DataFrame. reference port: ports.rs:11-14.
+  * `path` names one file, never a directory or a glob: parsers read its
+  * header, schema or size on the driver before the scan. */
 trait RecordParser {
   def parse(spark: SparkSession, path: String, config: Option[ParserConfig]): DataFrame
 }

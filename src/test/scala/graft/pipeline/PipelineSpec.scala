@@ -287,4 +287,16 @@ class PipelineSpec extends SparkSpec {
     assertThrows[IngestionError.DatabaseError](
       logs.updateLog("nope", new java.sql.Timestamp(0), IngestionStatus.Success, None))
   }
+
+  test("enrich: file_name then log_id, a parsed column of either name replaced in place") {
+    val (_, pipeline, _, _) = freshPipeline()
+    import spark.implicits._
+    val parsed = Seq(("a", "parsed")).toDF("x", "file_name")
+    val out = pipeline.enrich(parsed, FileToProcess("b", "k.csv"), "log-1")
+    assert(out.columns.toSeq == Seq("x", "file_name", "log_id"))
+    assert(out.collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq ==
+      Seq(("a", "b/k.csv", "log-1")))
+    assert(pipeline.enrich(Seq("a").toDF("x"), FileToProcess("b", "k.csv"), "log-1").columns.toSeq ==
+      Seq("x", "file_name", "log_id"))
+  }
 }
