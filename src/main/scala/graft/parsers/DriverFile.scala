@@ -13,8 +13,8 @@ import org.apache.spark.sql.execution.datasources.{CodecStreams, FilePartition, 
 
 /** One input file read on the driver as Spark's file scan reads it. Every
   * parser's `path` names one file (the pipeline and the archive parsers
-  * pass one), so a small drop's header, schema or line count comes from
-  * here, with no Spark job before the scan that writes it. */
+  * pass one), so a drop's CSV header or JSON/XML schema comes from here,
+  * with no Spark job before the scan that writes it. */
 private[parsers] object DriverFile {
 
   /** The file's length and metadata, from the Hadoop file system. */
@@ -23,9 +23,11 @@ private[parsers] object DriverFile {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
   }
 
-  /** True when Spark scans the file in one split: it is no longer than
-    * `FilePartition.maxSplitBytes` computed for this file alone. Spark then
-    * infers its schema in one task, and it is read by one scan partition. */
+  /** True when a line-split scan (text, JSON lines) reads the file in one
+    * split: it is no longer than `FilePartition.maxSplitBytes` computed for
+    * this file alone. Spark then infers its schema in one task, and it is
+    * read by one scan partition. Whole-file (multiLine) readers never split
+    * a file, so they need no such bound. */
   def fitsOneSplit(spark: SparkSession, path: String): Boolean = {
     val st = status(spark, path)
     st.getLen <= FilePartition.maxSplitBytes(spark, Seq(PartitionDirectory(InternalRow.empty, Array(st))))

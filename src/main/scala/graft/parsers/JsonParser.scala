@@ -21,12 +21,12 @@ import graft.ports.RecordParser
   * well-formed top-level scalar or array of scalars is wrapped; anything
   * else fails with a ParseError.
   *
-  * Jobs: a file that fits in one scan split (`DriverFile.fitsOneSplit`)
-  * is the case Spark infers in one task. Its schema comes from Spark's
-  * own inferrer run on the driver over the decompressed stream
-  * (`GraftJsonSchema.inferDocument`), the scan runs with that schema, and
-  * the scalar fallback reads the text on the driver too, so the sink's
-  * write is the only job. A larger file keeps Spark's inference job.
+  * Jobs: the multiLine reader never splits a file (its input format is
+  * not splittable), so Spark infers each file whole, in one task, at any
+  * size. The same inferrer runs on the driver over the decompressed
+  * stream instead (`GraftJsonSchema.inferDocument`), the scan runs with
+  * that schema, and the scalar fallback reads the text on the driver too,
+  * so the sink's write is the only job.
   */
 object JsonParser extends RecordParser {
 
@@ -39,10 +39,7 @@ object JsonParser extends RecordParser {
   private val MultiLine = Map("multiLine" -> "true")
 
   override def parse(spark: SparkSession, path: String, config: Option[ParserConfig]): DataFrame = {
-    val schema =
-      if (DriverFile.fitsOneSplit(spark, path))
-        GraftJsonSchema.inferDocument(MultiLine, () => DriverFile.open(spark, path))
-      else spark.read.options(MultiLine).json(path).schema
+    val schema = GraftJsonSchema.inferDocument(MultiLine, () => DriverFile.open(spark, path))
     if (schema.fieldNames.sameElements(Array("_corrupt_record")) || schema.isEmpty) {
       // Top-level scalar or scalar array: the text itself, wrapped as `value`.
       val size = DriverFile.status(spark, path).getLen

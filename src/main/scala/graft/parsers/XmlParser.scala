@@ -20,25 +20,24 @@ import graft.ports.RecordParser
   * attributes, then casts every leaf to string (the reference emitted
   * strings only) and flattens one struct level for nested children.
   *
-  * Jobs: a file that fits in one scan split (`DriverFile.fitsOneSplit`)
-  * is the case Spark infers in one task. Its schema comes from Spark's
-  * own record inferrer run on the driver over the decompressed stream
-  * (`GraftXmlSchema.infer`), and the scan runs with that schema, so the
-  * sink's write is the only job. A larger file keeps Spark's inference
-  * job.
+  * Jobs: the reader is multiLine (the XML source's default), whose input
+  * format never splits a file, so Spark infers each file whole, in one
+  * task, at any size. The same record inferrer runs on the driver over
+  * the decompressed stream instead (`GraftXmlSchema.infer`), and the scan
+  * runs with that schema, so the sink's write is the only job. The
+  * options pin the current XML parser, the one that inference follows.
   */
 object XmlParser extends RecordParser {
 
   val RowTag = "record"
 
-  private[parsers] val Options = Map("rowTag" -> RowTag, "attributePrefix" -> "", "valueTag" -> "_value")
+  private[parsers] val Options = Map("rowTag" -> RowTag, "attributePrefix" -> "", "valueTag" -> "_value",
+    "useLegacyXMLParser" -> "false")
 
   override def parse(spark: SparkSession, path: String, config: Option[ParserConfig]): DataFrame = {
-    val reader = spark.read.format("xml").options(Options)
-    val inferred =
-      if (DriverFile.fitsOneSplit(spark, path)) GraftXmlSchema.infer(Options, () => DriverFile.open(spark, path))
-      else None
-    val raw = inferred.fold(reader.load(path))(reader.schema(_).load(path))
+    val raw = spark.read.format("xml").options(Options)
+      .schema(GraftXmlSchema.infer(Options, () => DriverFile.open(spark, path)))
+      .load(path)
 
     if (raw.schema.isEmpty)
       throw ParseError(s"no <$RowTag> elements found in $path")

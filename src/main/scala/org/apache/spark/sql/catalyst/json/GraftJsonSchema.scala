@@ -14,8 +14,10 @@ import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType
   * instead of in a Spark job. `JsonInferSchema.infer` maps each record to
   * a type with `inferField`, reduces a partition's types with
   * `compatibleRootType`, folds the partition results on the driver and
-  * canonicalizes the root. For a file Spark reads in one task, this runs
-  * those same steps in the same order over the same records, so the
+  * canonicalizes the root. For a file Spark reads in one task (a
+  * multiLine file at any size, since that reader never splits a file; a
+  * line-split file no longer than one split), this runs those same steps
+  * in the same order over the same records, so the
   * schema is the one `spark.read.json` would infer. The options are built
   * as `JsonFileFormat.inferSchema` builds them; records are read as UTF-8
   * (no `encoding` option). Package-placed to reach the `private[json]`

@@ -5,7 +5,7 @@ import java.util.zip.GZIPOutputStream
 
 import scala.util.Try
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, Row}
 import org.apache.spark.sql.catalyst.json.GraftJsonSchema
 import org.apache.spark.sql.catalyst.xml.GraftXmlSchema
 import org.apache.spark.sql.types.StructType
@@ -13,12 +13,14 @@ import org.apache.spark.sql.types.StructType
 import graft.SparkSpec
 import graft.ports.RecordParser
 
-/** The JSON, JSONL and XML parsers infer a one-split file's schema on the
-  * driver with Spark's own inferrers, then scan with that schema. Below
-  * the split bound, `parse` runs no Spark job and its schema, rows or
-  * error equal those of the same file read above the bound (a lowered
-  * `spark.sql.files.maxPartitionBytes`), where Spark's inference job
-  * runs. The driver schema also equals the one Spark's reader infers. */
+/** The JSON, JSONL and XML parsers infer a file's schema on the driver
+  * with Spark's own inferrers, then scan with that schema. Below the split
+  * bound, `parse` runs no Spark job, and the driver's schema and scanned
+  * rows equal those of Spark's reader with its own inference. Above the
+  * bound (a lowered `spark.sql.files.maxPartitionBytes`), a JSONL file
+  * goes through Spark's inference job and `parse` returns the same schema,
+  * rows or error. JSON and XML are read whole by a reader that never
+  * splits a file, so they run no job above the bound either. */
 class ParserPlanSpec extends SparkSpec {
 
   private val LoweredBound = "16"
@@ -73,18 +75,22 @@ class ParserPlanSpec extends SparkSpec {
     "value tag with mixed types" ->
       """<data><record id="1">text<b>1</b></record><record id="2">5<b>x</b></record></data>""")
 
-  /** The schema Spark's reader infers, and the driver's, for one file. */
-  private def schemas(fmt: String, path: String): (Try[StructType], Try[StructType]) = fmt match {
-    case "jsonl" =>
-      (Try(spark.read.json(path).schema),
-        Try(DriverFile.withLines(spark, path)(GraftJsonSchema.inferLines(Map.empty, _))))
-    case "json" =>
-      val multiLine = Map("multiLine" -> "true")
-      (Try(spark.read.options(multiLine).json(path).schema),
-        Try(GraftJsonSchema.inferDocument(multiLine, () => DriverFile.open(spark, path))))
-    case "xml" =>
-      (Try(spark.read.format("xml").options(XmlParser.Options).load(path).schema),
-        Try(GraftXmlSchema.infer(XmlParser.Options, () => DriverFile.open(spark, path)).get))
+  /** Spark's reader with its own inference, and with the driver's schema:
+    * the schema of each, and its rows, for one file (None where it fails). */
+  private def readers(fmt: String, path: String): Seq[(Option[StructType], Option[Seq[Row]])] = {
+    def read(r: DataFrameReader => DataFrame, driverSchema: => StructType) =
+      Seq(Try(r(spark.read)), Try(driverSchema).flatMap(s => Try(r(spark.read.schema(s)))))
+        .map(df => (df.map(_.schema).toOption, df.flatMap(d => Try(d.collect().toSeq)).toOption))
+    fmt match {
+      case "jsonl" =>
+        read(_.json(path), DriverFile.withLines(spark, path)(GraftJsonSchema.inferLines(Map.empty, _)))
+      case "json" =>
+        val multiLine = Map("multiLine" -> "true")
+        read(_.options(multiLine).json(path), GraftJsonSchema.inferDocument(multiLine, () => DriverFile.open(spark, path)))
+      case "xml" =>
+        read(_.format("xml").options(XmlParser.Options).load(path),
+          GraftXmlSchema.infer(XmlParser.Options, () => DriverFile.open(spark, path)))
+    }
   }
 
   private val corpus =
@@ -95,14 +101,14 @@ class ParserPlanSpec extends SparkSpec {
     test(s"$fmt ${if (gzip) "gzip " else ""}$name: no job below the split bound, Spark's result") {
       val path = file(s"t.$fmt", body, gzip)
       val (driverJobs, driver) = run(parser, path)
-      val (sparkJobs, viaSpark) = withMaxPartitionBytes(LoweredBound)(run(parser, path))
+      val (aboveJobs, above) = withMaxPartitionBytes(LoweredBound)(run(parser, path))
       assert(driverJobs == 0)
-      if (Files.size(java.nio.file.Paths.get(path)) > LoweredBound.toLong)
-        assert(sparkJobs >= 1, "above the bound, Spark's inference job runs")
-      assert(driver == viaSpark)
-      val (reader, onDriver) = schemas(fmt, path)
-      assert(reader.toOption == onDriver.toOption)
-      assert(reader.isSuccess == onDriver.isSuccess)
+      if (fmt != "jsonl") assert(aboveJobs == 0, "a whole-file reader has no split bound")
+      else if (Files.size(java.nio.file.Paths.get(path)) > LoweredBound.toLong)
+        assert(aboveJobs >= 1, "above the bound, Spark's inference job runs")
+      assert(driver == above)
+      val Seq(inferred, onDriver) = readers(fmt, path)
+      assert(inferred == onDriver)
     }
 
   test("the split bound is Spark's one-file maxSplitBytes") {
